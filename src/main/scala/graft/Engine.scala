@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session + testdata helpers shared by Verify / Bench / tests.
+/** Session + testdata helpers shared by Verify, the kbbench benchmark and tests.
   *
   * Config choices target the driver's `local[32]` single-JVM harness while
   * staying cluster-shaped: shuffle partitions sized to the parallelism (not
@@ -59,8 +59,7 @@ object Engine {
       // `NonFateSharingLoadingCache` as the single largest blocked state.
       // Sized to hold the whole surface; entries are soft-referenced
       // bytecode, so the ceiling costs nothing when memory is tight.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       // wide array columns (768-d embeddings) make the default 4096-row
       // columnar batch a ~25 MB/task transient; at 32 task slots that is
       // ~800 MB of read buffers before any compute, enough to OOM the

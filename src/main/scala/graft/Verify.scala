@@ -10,8 +10,8 @@ object Verify {
     // optional filter: run only the named queries (dev iteration; the
     // driver always runs the full sweep)
     val only = args.drop(2).toSet
-    // one shared builder (Engine.session) — hand-rolled copies here and in
-    // Bench had already drifted (this one was missing AQE)
+    // one shared builder (Engine.session) — a hand-rolled copy here had
+    // drifted from it (it was missing AQE)
     val spark = Engine.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[String] =

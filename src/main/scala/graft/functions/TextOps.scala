@@ -609,7 +609,7 @@ object TextOps {
     * pair frames once. The trade is memory for recompute: checkpoint
     * blocks are UNEVICTABLE storage, so on memory-tight executors they
     * crowd the unified pool until a downstream aggregation can't acquire
-    * its first page (ScaleBench's 512 MB lowmem tier measured exactly
+    * its first page (the 512 MB lowmem tier in SCALE.md measured exactly
     * that — AGGREGATE_OUT_OF_MEMORY at 16 MB/task with materialize=true,
     * clean external-sort completion with false). Default false is the
     * safe side; turn it on when the executor has storage headroom.

@@ -111,7 +111,7 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   * s = max|v_i|, zero vectors → all-zero codes. The declarative HOF form
   * ([[graft.operators.Quant.sq8CodesHof]]) pays an interpreted boxed lambda
   * per ELEMENT (3 HOFs × dim × rows closure calls — ~90 s to quantize
-  * 100k×768-d, measured by the 768-d ScaleBench tier); this expression is
+  * 100k×768-d, measured by the 768-d tier in SCALE.md); this expression is
   * one codegen'd loop (~1 s at the same shape). NaN components propagate
   * exactly like the declarative form (scale NaN → every code 0 via the
   * double→int cast of NaN).

@@ -219,7 +219,7 @@ object Ivf {
         if (total <= fitBudget) withVec
         else withVec.sample(withReplacement = false, fitBudget.toDouble / total, seed)
       // maxIter 10, not the MLlib default 20: measured at the reference's
-      // 768-d shape (IvfBuildProbe), Lloyd's converges by ~iteration 5 on a
+      // 768-d shape, Lloyd's converges by ~iteration 5 on a
       // 256/list sample — identical list count, balance (max/mean 3.93) and
       // recall@10, at 1.8× less fit time. kmeans|| init is kept over random
       // init deliberately: random fits 1.6× faster still but leaves empty

@@ -42,7 +42,7 @@ object Quant {
   /** Declarative HOF reference implementation — the ScalaCheck parity
     * oracle for [[graft.functions.Sq8]] (and the 1:1 shape the DuckDB
     * oracle SQL mirrors). Two hazards make it unfit for the hot path,
-    * both measured by the 768-d ScaleBench tier: interpreted per-element
+    * both measured by the 768-d tier in SCALE.md: interpreted per-element
     * lambdas (3 HOFs × dim boxed closure calls per row), and — if the
     * scale expression is referenced inside the per-element lambda rather
     * than bound once — O(dim²) re-evaluation per row.
@@ -59,7 +59,7 @@ object Quant {
     * against a raw float query (norm ~1) degenerates to ranking by
     * centroid NORM: the −2·q·c term that carries the direction signal is
     * orders of magnitude under the ‖c‖² term. Measured, not hypothetical —
-    * the 768-d/100k ScaleBench tier's 50%-filtered probe (62 of 316 lists)
+    * the 768-d/100k tier's 50%-filtered probe in SCALE.md (62 of 316 lists)
     * recalled 0/10 with float routing and ≥8/10 with the query mapped into
     * the same code space first. Pass this as `routeVec` to [[Ivf.search]];
     * SCORING should stay float-precision (asymmetric, the scale cancels

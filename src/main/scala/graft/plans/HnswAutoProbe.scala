@@ -57,8 +57,7 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Same recall trade as [[Hnsw.searchIndex]] (beam width
   * `spark.graft.hnsw.efSearch`, default 64; filtered-branch cap
-  * `spark.graft.hnsw.maxEf`, default 4096; optional estimate-scan skip
-  * `spark.graft.hnsw.selectivityHint`), so it is OPT-IN:
+  * `spark.graft.hnsw.maxEf`, default 4096), so it is OPT-IN:
   * `spark.graft.hnsw.autoProbe=true`. Registered via
   * [[graft.GraftExtensions]] (spark-submit) or
   * `spark.experimental.extraOptimizations` (live session).
@@ -71,8 +70,6 @@ case class HnswAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
     spark.conf.getOption("spark.graft.hnsw.efSearch").map(_.toInt).getOrElse(64)
   private def maxEf: Int =
     spark.conf.getOption("spark.graft.hnsw.maxEf").map(_.toInt).getOrElse(4096)
-  private def selectivityHint: Double =
-    spark.conf.getOption("spark.graft.hnsw.selectivityHint").map(_.toDouble).getOrElse(Double.NaN)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan
@@ -138,7 +135,7 @@ case class HnswAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
               val payload = store.select(payloadAttrs.map(a => GraftBridge.column(a)): _*)
               Hnsw.searchIndex(store, qv.toSeq, "id", k, efSearch,
                 filters = ps.map(GraftBridge.column),
-                payload = payload, maxEf = maxEf, selectivityHint = selectivityHint)
+                payload = payload, maxEf = maxEf)
             case (_, Some(h)) =>
               // metadata payload. searchIndex reads its key by NAME
               // ("id") while the filters are bound by exprId, so the
@@ -156,7 +153,7 @@ case class HnswAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
               val payload = GraftBridge.ofRows(spark, h.payloadRel).select(payloadCols: _*)
               Hnsw.searchIndex(store, qv.toSeq, "id", k, efSearch,
                 filters = fs.map(GraftBridge.column),
-                payload = payload, maxEf = maxEf, selectivityHint = selectivityHint)
+                payload = payload, maxEf = maxEf)
           }
           val hplan            = GraftBridge.optimized(hits)
           val Seq(hId, hScore) = hplan.output.take(2)

@@ -26,11 +26,11 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * 131-170`, and a fixed-width probe under a selective predicate keeps
   * only `sel` of the probed mass: recall cliff): when user predicates sit
   * between the sort and the relation, the probe width widens to
-  * `ceil(nProbe/sel)` (sel from the gate's shared one-aggregate estimate,
-  * or `spark.graft.ivf.selectivityHint`), and once the widened probe
-  * reaches nList the rule DECLINES — the user's own plan IS the exact
-  * branch (brute-force over the filtered store), strictly cheaper than a
-  * prune that reads everything anyway. Because this rule only INJECTS a
+  * `ceil(nProbe/sel)` (sel from the gate's shared one-aggregate
+  * estimate), and once the widened probe reaches nList the rule
+  * DECLINES — the user's own plan IS the exact branch (brute-force over
+  * the filtered store), strictly cheaper than a prune that reads
+  * everything anyway. Because this rule only INJECTS a
   * filter, user predicates always survive verbatim on either path; the
   * gate merely picks the width, exactly like the explicit
   * `Ivf.search(filters = …)` call.
@@ -53,8 +53,6 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
     spark.conf.getOption("spark.graft.ivf.autoProbe").exists(_.toBoolean)
   private def nProbe: Int =
     spark.conf.getOption("spark.graft.ivf.nProbe").map(_.toInt).getOrElse(4)
-  private def selectivityHint: Double =
-    spark.conf.getOption("spark.graft.ivf.selectivityHint").map(_.toDouble).getOrElse(Double.NaN)
   // round 16: geometry-aware base width — when set, the injected probe's
   // BASE width is [[Ivf.Model.adaptiveProbeLists]]' margin rule (tight
   // queries probe few lists, boundary queries widen) instead of the fixed
@@ -161,7 +159,7 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
   ): Option[Int] = {
     def widthFrom(frame: org.apache.spark.sql.DataFrame, preds: Seq[Expression]): Int = {
       val sel = Search.estimatedSelectivity(
-        frame, preds.map(GraftBridge.column).reduce(_ && _), selectivityHint)
+        frame, preds.map(GraftBridge.column).reduce(_ && _), Double.NaN)
       if (sel == 0d) nList // nothing passes — decline, exact plan returns empty for free
       else math.min(math.ceil(base.toDouble / sel), nList.toDouble).toInt
     }
@@ -188,24 +186,17 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
             // candidate mass without leaving a predicate to measure, and
             // the payload-ratio denominator would read them as sel 1.0
             // and keep the unwidened probe. The store count is a
-            // metadata-weight parquet job; the hint skips both scans.
+            // metadata-weight parquet job.
+            Search.gateDecisions.incrementAndGet()
+            val preds = if (h.preds.nonEmpty) h.preds else Seq(IsNotNull(h.payloadKey))
+            val attrs = (h.payloadKey +: preds.flatMap(_.references)
+              .filter(_.exprId != h.payloadKey.exprId)).distinct
+            val allowed = GraftBridge.ofRows(spark, h.payloadRel)
+              .select(attrs.map(a => GraftBridge.column(a)): _*)
+              .where(preds.map(GraftBridge.column).reduce(_ && _)).count().toDouble
             val sel =
-              if (!selectivityHint.isNaN) {
-                require(selectivityHint > 0d && selectivityHint <= 1d,
-                  s"selectivityHint must be in (0, 1]: $selectivityHint")
-                Search.gateDecisions.incrementAndGet()
-                selectivityHint
-              } else {
-                Search.gateDecisions.incrementAndGet()
-                val preds = if (h.preds.nonEmpty) h.preds else Seq(IsNotNull(h.payloadKey))
-                val attrs = (h.payloadKey +: preds.flatMap(_.references)
-                  .filter(_.exprId != h.payloadKey.exprId)).distinct
-                val allowed = GraftBridge.ofRows(spark, h.payloadRel)
-                  .select(attrs.map(a => GraftBridge.column(a)): _*)
-                  .where(preds.map(GraftBridge.column).reduce(_ && _)).count().toDouble
-                if (allowed == 0d) 0d
-                else math.min(allowed / GraftBridge.ofRows(spark, rel).count().toDouble, 1d)
-              }
+              if (allowed == 0d) 0d
+              else math.min(allowed / GraftBridge.ofRows(spark, rel).count().toDouble, 1d)
             if (sel == 0d) Some(nList) // nothing passes — decline, exact plan is free
             else Some(math.min(math.ceil(base.toDouble / sel), nList.toDouble).toInt)
           }

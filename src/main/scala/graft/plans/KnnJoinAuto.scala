@@ -36,8 +36,8 @@ import org.apache.spark.sql.types._
   * Same recall trade and OPT-IN story as the single-query rules — each
   * family's own flag+knobs govern its batch form too
   * (`spark.graft.{ivf,hnsw,pq}.autoProbe`, widths
-  * `ivf.nProbe`/`hnsw.efSearch`+`hnsw.maxEf`/`pq.nProbe`+`pq.refine`,
-  * `*.selectivityHint`), so a SQL user gets the identical implicit-index
+  * `ivf.nProbe`/`hnsw.efSearch`+`hnsw.maxEf`/`pq.nProbe`+`pq.refine`),
+  * so a SQL user gets the identical implicit-index
   * behavior whether they write one query or a batch. A fourth, EXACT
   * fallback (`spark.graft.knnJoin.bruteAuto`) substitutes
   * [[graft.operators.Search.knnJoin]] for corpora with no index at all —
@@ -117,7 +117,6 @@ case class KnnJoinAuto(spark: SparkSession) extends Rule[LogicalPlan] {
   private def conf(key: String): Option[String] = spark.conf.getOption(key)
   private def flag(key: String): Boolean        = conf(key).exists(_.toBoolean)
   private def intOf(key: String, d: Int): Int   = conf(key).map(_.toInt).getOrElse(d)
-  private def hintOf(key: String): Double       = conf(key).map(_.toDouble).getOrElse(Double.NaN)
 
   private def anyEnabled: Boolean =
     flag("spark.graft.ivf.autoProbe") || flag("spark.graft.hnsw.autoProbe") ||
@@ -430,7 +429,6 @@ case class KnnJoinAuto(spark: SparkSession) extends Rule[LogicalPlan] {
         pqOpt: Option[PerQuery],
         qv: AttributeReference,
         storeIdName: String,
-        userHint: Double,
         call: (DataFrame, Seq[org.apache.spark.sql.Column], DataFrame, String, Double) => DataFrame,
     ): () => DataFrame = () => {
       val filtersBase = filtersBaseOf(hydOpt, preds)
@@ -456,25 +454,22 @@ case class KnnJoinAuto(spark: SparkSession) extends Rule[LogicalPlan] {
           // count/count(when) scan, so each group's decision and widening
           // are bit-identical; the values are still computed fresh from
           // the store every run, nothing is memoized). Groups whose count
-          // is 0 fall back to the family's own scan (a hint must be > 0),
-          // and a user-configured selectivityHint wins untouched.
-          val hintByKey: Map[String, Double] =
-            if (!userHint.isNaN) Map.empty
-            else {
-              import org.apache.spark.sql.functions.{count, lit, when}
-              val (p, _) = payloadFrame
-              val row = p.agg(count(lit(1)),
-                pq.groups.map { case (_, fs) => count(when(fs.reduce(_ && _), lit(1))) }: _*).head()
-              val total = row.getLong(0)
-              pq.groups.zipWithIndex.map { case ((key, _), i) =>
-                val a = row.getLong(i + 1)
-                key -> (if (a == 0L || total == 0L) Double.NaN else a.toDouble / total.toDouble)
-              }.toMap
-            }
+          // is 0 fall back to the family's own scan (a hint must be > 0).
+          val hintByKey: Map[String, Double] = {
+            import org.apache.spark.sql.functions.{count, lit, when}
+            val (p, _) = payloadFrame
+            val row = p.agg(count(lit(1)),
+              pq.groups.map { case (_, fs) => count(when(fs.reduce(_ && _), lit(1))) }: _*).head()
+            val total = row.getLong(0)
+            pq.groups.zipWithIndex.map { case ((key, _), i) =>
+              val a = row.getLong(i + 1)
+              key -> (if (a == 0L || total == 0L) Double.NaN else a.toDouble / total.toDouble)
+            }.toMap
+          }
           graft.operators.Search.perQueryFilteredKeyed(pq.queries, "__gpred", pq.groups,
             (key, qs, fs) => run(qs.select(col("__gqid"), col("__gqv")), fs,
-              hintByKey.getOrElse(key, userHint)))
-        case _ => run(queriesDf(qv), filtersBase.map(GraftBridge.column), userHint)
+              hintByKey.getOrElse(key, Double.NaN)))
+        case _ => run(queriesDf(qv), filtersBase.map(GraftBridge.column), Double.NaN)
       }
     }
 
@@ -502,7 +497,6 @@ case class KnnJoinAuto(spark: SparkSession) extends Rule[LogicalPlan] {
       pqOpt <- if (pairs.isEmpty) Some(Option.empty[PerQuery])
                else perQueryOf(pairs, querySide, partKey, qv, filtersBaseOf(hydOpt, preds)).map(Some(_))
     } yield Fam(idAttr, assemble(rel, idAttr, preds, hydOpt, pairs, pqOpt, qv, "id",
-      hintOf("spark.graft.hnsw.selectivityHint"),
       (qs, fs, p, pid, hint) =>
         if (fs.isEmpty)
           Hnsw.knnJoin(GraftBridge.ofRows(spark, rel), qs, "__gqv", "__gqid", k,
@@ -544,7 +538,6 @@ case class KnnJoinAuto(spark: SparkSession) extends Rule[LogicalPlan] {
       pqOpt <- if (pairs.isEmpty) Some(Option.empty[PerQuery])
                else perQueryOf(pairs, querySide, partKey, qv, filtersBaseOf(hydOpt, preds)).map(Some(_))
     } yield Fam(idAttr, assemble(rel, idAttr, preds, hydOpt, pairs, pqOpt, qv, idCol,
-      hintOf("spark.graft.pq.selectivityHint"),
       (qs, fs, p, pid, hint) => {
         val nProbe = intOf("spark.graft.pq.nProbe", 4)
         val refine = intOf("spark.graft.pq.refine", 4)
@@ -591,7 +584,6 @@ case class KnnJoinAuto(spark: SparkSession) extends Rule[LogicalPlan] {
       pqOpt <- if (pairs.isEmpty) Some(Option.empty[PerQuery])
                else perQueryOf(pairs, querySide, partKey, qv, filtersBaseOf(hydOpt, preds)).map(Some(_))
     } yield Fam(idAttr, assemble(rel, idAttr, preds, hydOpt, pairs, pqOpt, qv, idAttr.name,
-      hintOf("spark.graft.ivf.selectivityHint"),
       (qs, fs, p, pid, hint) => {
         val nProbe = intOf("spark.graft.ivf.nProbe", 4)
         if (fs.isEmpty)

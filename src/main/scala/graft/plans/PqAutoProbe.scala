@@ -36,11 +36,11 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Same recall trade as the explicit call, so OPT-IN:
   * `spark.graft.pq.autoProbe=true`; probe width `spark.graft.pq.nProbe`
-  * (default 4), re-rank pool `spark.graft.pq.refine` (default 4),
-  * optional `spark.graft.pq.selectivityHint`. When both this rule and
-  * [[IvfAutoProbe]] are registered ([[graft.GraftExtensions]] injects
-  * this one FIRST), the IVF rule declines PQ floats stores while this
-  * rule is enabled, so the two never fight over the same scan.
+  * (default 4), re-rank pool `spark.graft.pq.refine` (default 4). When
+  * both this rule and [[IvfAutoProbe]] are registered
+  * ([[graft.GraftExtensions]] injects this one FIRST), the IVF rule
+  * declines PQ floats stores while this rule is enabled, so the two never
+  * fight over the same scan.
   */
 object PqAutoProbe {
   /** Per-(session, store) cache of the reopened store — the 768-d tier
@@ -144,8 +144,6 @@ case class PqAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
     spark.conf.getOption("spark.graft.pq.nProbe").map(_.toInt).getOrElse(4)
   private def refine: Int =
     spark.conf.getOption("spark.graft.pq.refine").map(_.toInt).getOrElse(4)
-  private def selectivityHint: Double =
-    spark.conf.getOption("spark.graft.pq.selectivityHint").map(_.toDouble).getOrElse(Double.NaN)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan
@@ -238,7 +236,7 @@ case class PqAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
               Pq.searchIvfPq(codes, floats, stored.model, pqm, relVec.name, idCol,
                 qv.toSeq, k, nProbe, refine,
                 filters = ps.map(GraftBridge.column),
-                payload = payload, payloadIdCol = idCol, selectivityHint = selectivityHint)
+                payload = payload, payloadIdCol = idCol)
             case (_, Some(h)) =>
               // a predicate-free hydration gates on IsNotNull(key) so the
               // semi-join still enforces the inner join's row set
@@ -250,8 +248,7 @@ case class PqAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
               Pq.searchIvfPq(codes, floats, stored.model, pqm, relVec.name, idCol,
                 qv.toSeq, k, nProbe, refine,
                 filters = fs.map(GraftBridge.column),
-                payload = payload, payloadIdCol = h.payloadKey.name,
-                selectivityHint = selectivityHint)
+                payload = payload, payloadIdCol = h.payloadKey.name)
           }
           val pruned = hits.select(
             org.apache.spark.sql.functions.col(idCol),

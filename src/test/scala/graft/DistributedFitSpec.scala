@@ -77,7 +77,7 @@ class DistributedFitSpec extends AnyFunSuite {
 
   /** 768-d corpus with 3 orthogonal, widely separated latent clusters and
     * planted exact duplicates (id ≡ 1 mod 50 copies id−1) — the shape the
-    * row-cap crossover claims must hold at (ScaleBench's d768 tier prices
+    * row-cap crossover claims must hold at (SCALE.md's d768 tier priced
     * it; this pins the SEMANTICS either side of the cap).
     */
   private lazy val df768 = {

@@ -262,9 +262,14 @@ class IvfSpec extends AnyFunSuite {
       // BROAD metadata predicate (sel 0.8): widened to ceil(2/0.8) = 3
       // lists, injected; the user's own join + filter still execute, so
       // values equal the explicit payload-carrier search at width 3
+      val before = Search.gateDecisions.get()
       val broad = hydTopK(Seq(col("grp") < 8))
+      val broadPlan = TestSpark.formattedPlan(broad)
+      // planning one hydrated filtered query makes exactly one gate decision
+      val decisions = Search.gateDecisions.get() - before
+      assert(decisions == 1, s"expected 1 gate decision for one hydrated query, got $decisions")
       val pf = "list_id#?\\d* IN \\(([^)]*)\\)".r
-        .findFirstMatchIn(TestSpark.formattedPlan(broad)).map(_.group(1))
+        .findFirstMatchIn(broadPlan).map(_.group(1))
       assert(pf.exists(_.split(",").length == 3),
         s"metadata predicate must widen the injected probe to 3 lists, got $pf")
       val viaApi = Ivf.search(indexed, model, "vec", "id", qVec, 5, 2,
