@@ -25,8 +25,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // while this rule is enabled.
     ext.injectOptimizerRule(graft.plans.PqAutoProbe.apply)
     // opt-in ANN rewrite (spark.graft.ivf.autoProbe=true): brute-force
-    // cosine top-k over an IVF store becomes a partition-pruned probe
-    ext.injectOptimizerRule(graft.plans.IvfAutoProbe.apply)
+    // cosine top-k over an IVF store becomes a partition-pruned probe.
+    // A PRE-CBO rule (Spark's `Once` batch, after operator optimization
+    // and before the scan push-down that makes the injected filter a
+    // partition filter), so planning one query makes ONE gate decision: in
+    // the fixed-point operator-optimization batches a declined rule leaves
+    // no mark on the plan and re-ran its selectivity job on every pass.
+    ext.injectPreCBORule(graft.plans.IvfAutoProbe.apply)
     // opt-in ANN rewrite (spark.graft.hnsw.autoProbe=true): brute-force
     // cosine top-k over an HNSW store becomes the sharded beam search
     ext.injectOptimizerRule(graft.plans.HnswAutoProbe.apply)

@@ -910,7 +910,7 @@ object Hnsw {
     * loop (stats REPORT "over budget" but nothing asked — the same gap
     * [[Skew.autoAggregate]] closes for shuffle keys). The decision is a
     * pure function of the TOTAL row count, so an independent engine
-    * replays it: `target = ceil(total / rowsPerShard)`, reshard iff
+    * replays it: `target = ⌈total / rowsPerShard⌉`, reshard iff
     * `target != nShards` (an under-provisioned store splits — per-task
     * build memory and graph quality are what the budget bounds; an
     * over-provisioned one merges — the search-side candidate bound is
@@ -962,15 +962,17 @@ object Hnsw {
     * inside the HNSW traversal): pass `filters` (predicates over the
     * `payload` frame, which must carry `idCol` plus the filter columns —
     * the graph store itself holds only ids + vectors). The plan is chosen
-    * by a CARDINALITY GATE, Qdrant's own device:
+    * by [[Search.cardinalityGate]], Qdrant's own device:
     *
     *  1. one column-pruned payload scan estimates selectivity
     *     (total vs pass count in a single aggregate);
     *  2. selective predicates — where the beam width needed to surface
-    *     `efSearch` allowed rows, `ceil(max(efSearch,k)/sel)`, exceeds
-    *     `maxEf` — run EXACT: semi-join the store's (id, vec) rows against
-    *     the allowed ids and brute-force top-k (cheap precisely because few
-    *     rows pass; result is exact by construction, no recall cliff);
+    *     `efSearch` allowed rows, max(efSearch,k) widened by 1/sel,
+    *     exceeds `maxEf` (the gate's cap is `maxEf + 1`) — and predicates
+    *     nothing passes run EXACT: semi-join the store's (id, vec) rows
+    *     against the allowed ids and brute-force top-k (cheap precisely
+    *     because few rows pass; result is exact by construction, no recall
+    *     cliff);
     *  3. broad predicates run the filter-aware beam: allowed ids
     *     semi-join a COLUMN-PRUNED (shard, ord, id) projection of the
     *     store (vectors and adjacency never move through the flag join),
@@ -980,8 +982,8 @@ object Hnsw {
     *     construction. Each shard's traversal passes THROUGH blocked
     *     nodes but admits only allowed ones to its beam
     *     ([[searchGraphFiltered]]), with the beam width oversampled to
-    *     that same `ceil(max(efSearch,k)/sel)` so the expected allowed
-    *     mass in the beam stays ≥ efSearch.
+    *     that same widened width so the expected allowed mass in the beam
+    *     stays ≥ efSearch.
     *
     *     Round-14 note — why this REPLACED the round-13 formulation that
     *     LEFT-JOINED the flags onto the store on (shard, ord): under
@@ -1042,18 +1044,16 @@ object Hnsw {
       "filtered searchIndex needs the payload frame carrying idCol + the filter columns " +
         "(the graph store holds only ids and vectors)")
     val pred = filters.reduce(_ && _)
-    val sel  = Search.estimatedSelectivity(payload, pred, selectivityHint)
-    if (sel == 0d) return Seq.empty[(Long, Double)].toDF(idCol, "score")
-    val needEf = math.ceil(math.max(efSearch, k).toDouble / sel)
+    val gate = Search.cardinalityGate(payload, pred, selectivityHint, math.max(efSearch, k), maxEf + 1L)
     val allowed = payload.where(pred).select(col(idCol).cast("long").as("id"))
-    if (needEf > maxEf) {
+    if (gate.isEmpty) {
       // exact branch: few rows pass, so hydrate just those and scan them
       Search.topK(
         index.select(col("id"), col("vec")).join(allowed, Seq("id"), "left_semi"),
         "vec", "id", queryVec, k)
         .select(col("id").as(idCol), col("score"))
     } else {
-      val efF = needEf.toInt
+      val efF = gate.get
       // UNION DEVICE ([[knnJoin]]'s shape — see the scaladoc's round-14
       // note for why this replaced the flag-JOIN formulation): allowed-node
       // flags are computed on a COLUMN-PRUNED (shard, ord, id) projection
@@ -1121,7 +1121,7 @@ object Hnsw {
     * [[Search.knnJoin]] over the survivors — cheap because few rows
     * pass); broad predicates ride the shard fan-out with narrow
     * (shard, ord) flag rows and per-shard [[searchGraphFiltered]] beams
-    * oversampled to `ceil(max(efSearch,k)/sel)`. One gate decision per
+    * oversampled to max(efSearch,k) widened by 1/sel. One gate decision per
     * BATCH (the predicate is shared), so the estimate scan amortizes
     * across every query — `selectivityHint` skips it entirely.
     */
@@ -1148,23 +1148,20 @@ object Hnsw {
         "filtered knnJoin needs the payload frame carrying payloadIdCol + the filter columns " +
           "(the graph store holds only ids and vectors)")
       val pred = filters.reduce(_ && _)
-      val sel  = Search.estimatedSelectivity(payload, pred, selectivityHint)
-      if (sel == 0d)
-        return Seq.empty[(Long, Long, Double, Int)]
-          .toDF("query_id", "neighbor_id", "score", "rank")
       val allowed = payload.where(pred).select(col(payloadIdCol).cast("long").as("id"))
-      val needEf  = math.ceil(math.max(efSearch, k).toDouble / sel)
-      if (needEf > maxEf)
-        // exact branch: few rows pass — hydrate just those and run the
-        // brute-force batch join over the survivors. Query ids pre-cast to
-        // long so BOTH gate branches emit one schema; Search.knnJoin drops
-        // null-scored rows itself, matching the probe branch's null guard.
-        return Search.knnJoin(
-          queries.select(col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol)),
-          index.select(col("id").cast("long").as("id"), col("vec"))
-            .join(allowed, Seq("id"), "left_semi"),
-          queryVecCol, queryIdCol, "vec", "id", k, excludeSelf)
-      efF = needEf.toInt
+      Search.cardinalityGate(payload, pred, selectivityHint, math.max(efSearch, k), maxEf + 1L) match {
+        case None =>
+          // exact branch: few rows pass — hydrate just those and run the
+          // brute-force batch join over the survivors. Query ids pre-cast to
+          // long so BOTH gate branches emit one schema; Search.knnJoin drops
+          // null-scored rows itself, matching the probe branch's null guard.
+          return Search.knnJoin(
+            queries.select(col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol)),
+            index.select(col("id").cast("long").as("id"), col("vec"))
+              .join(allowed, Seq("id"), "left_semi"),
+            queryVecCol, queryIdCol, "vec", "id", k, excludeSelf)
+        case Some(w) => efF = w
+      }
       // narrow allowed-node flags, same column-pruned semi-join as
       // searchIndex's broad branch — vectors/adjacency never move here
       flagRows = pinnedStore(index)

@@ -454,19 +454,6 @@ object Ivf {
       (df.sparkSession.read.parquet(p), m)
     })
 
-  /** Compact a store fragmented by [[streamInto]] appends: every micro-batch
-    * adds one file per touched list, and a long-lived stream leaves each
-    * list directory with thousands of tiny files — at 100 TB that is a
-    * listing/open-cost problem for every probe. Rewrites the corpus with
-    * ONE shuffle clustered by `list_id` (each output task owns whole lists,
-    * so each list lands as few large files) into a fresh store, preserving
-    * the sidecar, then swaps directories. The swap is delete+rename — a
-    * single-writer maintenance window like the reference's collection reset
-    * (backend/main.py:1046-1076), not a lock-free publish; run it when no
-    * probe is in flight.
-    *
-    * Returns the number of rows compacted.
-    */
   /** Selective-partition recrawl maintenance: drop `removedIds` rows and
     * insert `added` vectors by rewriting ONLY the list partitions either
     * set touches. The incremental-crawl write path ([[Recrawl]]): at
@@ -592,22 +579,6 @@ object Ivf {
     }
   }
 
-  /** Complete a crashed sibling-directory partition swap: any partition
-    * directory still under `tmp` whose live twin under `root` is MISSING
-    * was deleted-but-not-yet-replaced when the writer died — rename it
-    * into place (a deliberately emptied partition never has a replacement
-    * under tmp, so it stays deleted). Then clear the staging dir. Shared
-    * by [[applyDelta]] and [[Hnsw.applyDelta]]'s swap.
-    *
-    * Rename-recovery runs ONLY when `tmp/_SUCCESS` exists — the job-level
-    * commit marker Spark's staging write leaves at the output root. Its
-    * absence means the writer died MID-STAGING (some task outputs
-    * committed, some not): those partition dirs are partial, and renaming
-    * one over a live twin that an earlier batch legitimately emptied
-    * would install partial rows as genuine kept rows, repaired only if
-    * the exact same batch replays. Without the marker the live store is
-    * untouched and the incomplete staging dir is simply cleared.
-    */
   /** Fail LOUDLY — before any live directory is deleted — if the staging
     * write left no `_SUCCESS` marker: [[recoverDeltaSwap]]'s completeness
     * check is built on that marker, and a session configured with
@@ -628,6 +599,22 @@ object Ivf {
           "(recoverDeltaSwap) needs it to tell a completed staging write from a " +
           "partial one; enable mapreduce.fileoutputcommitter.marksuccessfuljobs")
 
+  /** Complete a crashed sibling-directory partition swap: any partition
+    * directory still under `tmp` whose live twin under `root` is MISSING
+    * was deleted-but-not-yet-replaced when the writer died — rename it
+    * into place (a deliberately emptied partition never has a replacement
+    * under tmp, so it stays deleted). Then clear the staging dir. Shared
+    * by [[applyDelta]] and [[Hnsw.applyDelta]]'s swap.
+    *
+    * Rename-recovery runs ONLY when `tmp/_SUCCESS` exists — the job-level
+    * commit marker Spark's staging write leaves at the output root. Its
+    * absence means the writer died MID-STAGING (some task outputs
+    * committed, some not): those partition dirs are partial, and renaming
+    * one over a live twin that an earlier batch legitimately emptied
+    * would install partial rows as genuine kept rows, repaired only if
+    * the exact same batch replays. Without the marker the live store is
+    * untouched and the incomplete staging dir is simply cleared.
+    */
   private[graft] def recoverDeltaSwap(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
@@ -647,6 +634,19 @@ object Ivf {
     }
   }
 
+  /** Compact a store fragmented by [[streamInto]] appends: every micro-batch
+    * adds one file per touched list, and a long-lived stream leaves each
+    * list directory with thousands of tiny files — at 100 TB that is a
+    * listing/open-cost problem for every probe. Rewrites the corpus with
+    * ONE shuffle clustered by `list_id` (each output task owns whole lists,
+    * so each list lands as few large files) into a fresh store, preserving
+    * the sidecar, then swaps directories. The swap is delete+rename — a
+    * single-writer maintenance window like the reference's collection reset
+    * (backend/main.py:1046-1076), not a lock-free publish; run it when no
+    * probe is in flight.
+    *
+    * Returns the number of rows compacted.
+    */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
@@ -811,16 +811,16 @@ object Ivf {
     * query didn't probe). Output: (query_id, neighbor_id, score, rank) like
     * [[Search.knnJoin]].
     *
-    * FILTERED batch search — the cardinality gate, IVF-shaped: `filters`
-    * over `payload` (carrying `payloadIdCol` + the filter columns). The
-    * probe compensates selectivity by WIDENING: nProbe ← ceil(nProbe/sel),
-    * so the expected allowed candidate mass per query is preserved. When
-    * the widened probe would reach (or pass) nList, probing is a full scan
-    * anyway, so the gate routes to the strictly-cheaper EXACT branch —
-    * brute-force [[Search.knnJoin]] over the allowed survivors. On the
-    * probe branch the allowed-id semi-join lands on the CANDIDATE frame
-    * (bounded at |q|·n·nProbe'/nList rows), never on the store. One gate
-    * decision per batch; `selectivityHint` skips the estimate scan.
+    * FILTERED batch search — [[Search.cardinalityGate]], IVF-shaped:
+    * `filters` over `payload` (carrying `payloadIdCol` + the filter
+    * columns). The probe compensates selectivity by WIDENING nProbe by
+    * 1/sel, so the expected allowed candidate mass per query is
+    * preserved. When the widened probe would reach (or pass) nList,
+    * probing is a full scan anyway, so the gate routes to the
+    * strictly-cheaper EXACT branch — brute-force [[Search.knnJoin]] over
+    * the allowed survivors. On the probe branch the allowed-id semi-join
+    * lands on the CANDIDATE frame (bounded at |q|·n·nProbe'/nList rows),
+    * never on the store. One gate decision per batch; `selectivityHint` skips the estimate scan.
     *
     * QUANTIZED stores: each query row routes by ITS OWN vector, so against
     * an index fitted on SQ8 codes the query column must be in the same
@@ -857,21 +857,18 @@ object Ivf {
       require(payload != null,
         "filtered knnJoin needs the payload frame carrying payloadIdCol + the filter columns")
       val pred = filters.reduce(_ && _)
-      val sel  = Search.estimatedSelectivity(payload, pred, selectivityHint)
-      if (sel == 0d)
-        return Seq.empty[(Long, Long, Double, Int)]
-          .toDF("query_id", "neighbor_id", "score", "rank")
-      val widened = math.ceil(nP.toDouble / sel)
-      if (widened >= model.centroids.length)
-        // ids pre-cast to long so both gate branches emit ONE schema (the
-        // probe branch casts through its own select)
-        return Search.knnJoin(
-          queries.select(col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol)),
-          indexed.select(col(idCol).cast("long").as(idCol), col(vecCol)).join(
-            payload.where(pred).select(col(payloadIdCol).cast("long").as("__aid")),
-            col(idCol) === col("__aid"), "left_semi"),
-          queryVecCol, queryIdCol, vecCol, idCol, k, excludeSelf)
-      nP = widened.toInt
+      Search.cardinalityGate(payload, pred, selectivityHint, nP, model.centroids.length) match {
+        case None =>
+          // ids pre-cast to long so both gate branches emit ONE schema (the
+          // probe branch casts through its own select)
+          return Search.knnJoin(
+            queries.select(col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol)),
+            indexed.select(col(idCol).cast("long").as(idCol), col(vecCol)).join(
+              payload.where(pred).select(col(payloadIdCol).cast("long").as("__aid")),
+              col(idCol) === col("__aid"), "left_semi"),
+            queryVecCol, queryIdCol, vecCol, idCol, k, excludeSelf)
+        case Some(w) => nP = w
+      }
       allowed = payload.where(pred)
         .select(col(payloadIdCol).cast("long").as("neighbor_id"))
     }
@@ -935,12 +932,13 @@ object Ivf {
     * candidate budget where the geometry needs it instead of a fixed
     * nProbe everywhere. Filters ride the same cardinality gate, applied
     * PER QUERY to the adaptive base: one shared estimate decision per
-    * batch, then each query's width widens to ceil(base_q/sel); a query
-    * whose widened cut reaches nList probes every list — its rows are
-    * EXACT through the same plan, no separate branch (the batch analog
-    * of searchAdaptive's exact fallback; a per-query plan split would
-    * fan out per QUERY, the scale-killer this family refuses). sel == 0
-    * short-circuits to the empty frame like [[knnJoin]].
+    * batch, then each query's width widens by 1/sel
+    * ([[Search.widenedWidth]]); a query whose widened cut reaches nList
+    * probes every list — its rows are EXACT through the same plan, no
+    * separate branch (the batch analog of searchAdaptive's exact
+    * fallback; a per-query plan split would fan out per QUERY, the
+    * scale-killer this family refuses). sel == 0 is that same every-list
+    * probe, which returns the empty frame.
     */
   def knnJoinAdaptive(
       indexed: DataFrame,
@@ -965,15 +963,12 @@ object Ivf {
     import spark.implicits._
     require(model.centroids.nonEmpty, "knnJoinAdaptive needs a fitted index (empty centroid set)")
     var allowed: DataFrame = null
-    var sel    = Double.NaN
+    var sel    = 1d
     if (filters.nonEmpty) {
       require(payload != null,
         "filtered knnJoinAdaptive needs the payload frame carrying payloadIdCol + the filter columns")
       val pred = filters.reduce(_ && _)
       sel = Search.estimatedSelectivity(payload, pred, selectivityHint)
-      if (sel == 0d)
-        return Seq.empty[(Long, Long, Double, Int)]
-          .toDF("query_id", "neighbor_id", "score", "rank")
       allowed = payload.where(pred)
         .select(col(payloadIdCol).cast("long").as("neighbor_id"))
     }
@@ -983,11 +978,10 @@ object Ivf {
       queries.select(col(queryIdCol).cast("long").as("query_id"), asDouble(col(queryVecCol)).as("__qv")))
       .as[(Long, Seq[Double])]
       .flatMap { case (qid, v) =>
-        val m    = bcModel.value
-        val base = m.adaptiveProbeLists(v, mF, minF, maxF).length
-        val w =
-          if (selF.isNaN) base
-          else math.min(math.ceil(base.toDouble / selF), m.centroids.length.toDouble).toInt
+        val m     = bcModel.value
+        val nList = m.centroids.length
+        val base  = m.adaptiveProbeLists(v, mF, minF, maxF).length
+        val w     = Search.widenedWidth(base, selF, nList).getOrElse(nList)
         m.adaptiveProbeLists(v, mF, w, w).iterator.map(l => (qid, v, l))
       }
       .toDF("query_id", "__qv", "list_id")
@@ -1004,8 +998,8 @@ object Ivf {
     * filtered k-NN — backend/vector_db.py:131-170): a fixed-width probe
     * under a selective predicate reads nProbe/nList of the corpus but
     * keeps only `sel` of it, so the filtered candidate mass collapses and
-    * recall falls off a cliff. The gate WIDENS the probe to
-    * `ceil(nProbe/sel)` — expected allowed mass per probe preserved — and
+    * recall falls off a cliff. [[Search.cardinalityGate]] WIDENS the probe
+    * by 1/sel — expected allowed mass per probe preserved — and
     * when the widened probe reaches nList (probing everything anyway, so
     * pruning buys nothing) routes to the strictly-cheaper EXACT branch:
     * brute-force [[Search.topK]] over the allowed survivors, exact by
@@ -1050,20 +1044,16 @@ object Ivf {
     var storeFilters: Seq[Column] = Nil
     if (filters.nonEmpty) {
       val pred = filters.reduce(_ && _)
-      val sel  = Search.estimatedSelectivity(
-        if (payload == null) indexed else payload, pred, selectivityHint)
-      // ceil(nP/0) = Infinity >= nList, so the nothing-passes case rides
-      // the exact branch and returns empty with the right schema for free
-      val widened = if (sel == 0d) Double.PositiveInfinity else math.ceil(nP.toDouble / sel)
-      val gatedStore =
-        if (payload == null) indexed
-        else indexed.join(
-          payload.where(pred).select(col(payloadIdCol).as("__aid")),
-          col(idCol) === col("__aid"), "left_semi")
-      if (widened >= model.centroids.length)
-        return Search.topK(gatedStore, vecCol, idCol, queryVec, k,
-          if (payload == null) filters else Nil)
-      nP = widened.toInt
+      Search.cardinalityGate(
+        if (payload == null) indexed else payload, pred, selectivityHint, nP, model.centroids.length) match {
+        case None =>
+          return Search.topK(
+            if (payload == null) indexed
+            else indexed.join(payload.where(pred).select(col(payloadIdCol).as("__aid")),
+              col(idCol) === col("__aid"), "left_semi"),
+            vecCol, idCol, queryVec, k, if (payload == null) filters else Nil)
+        case Some(w) => nP = w
+      }
       if (payload == null) storeFilters = filters
       else allowed = payload.where(pred).select(col(payloadIdCol).as("__aid"))
     }
@@ -1109,14 +1099,11 @@ object Ivf {
     var lists = model.adaptiveProbeLists(rv, margin, minProbe, maxProbe)
     if (filters.nonEmpty && lists.nonEmpty) {
       val pred = filters.reduce(_ && _)
-      val sel  = Search.estimatedSelectivity(indexed, pred, selectivityHint)
-      val widened =
-        if (sel == 0d) Double.PositiveInfinity
-        else math.ceil(lists.length.toDouble / sel)
-      if (widened >= model.centroids.length)
-        return Search.topK(indexed, vecCol, idCol, queryVec, k, filters)
-      if (widened > lists.length)
-        lists = model.adaptiveProbeLists(rv, margin, widened.toInt, widened.toInt)
+      Search.cardinalityGate(indexed, pred, selectivityHint, lists.length, model.centroids.length) match {
+        case None => return Search.topK(indexed, vecCol, idCol, queryVec, k, filters)
+        case Some(w) if w > lists.length => lists = model.adaptiveProbeLists(rv, margin, w, w)
+        case _ => ()
+      }
     }
     Search.topK(
       indexed.where(col("list_id").isin(lists: _*)),

@@ -467,16 +467,16 @@ object Pq {
     * store is exactly what a 100 TB deployment runs it on): `filters` are
     * predicates over `payload` (carrying `payloadIdCol` + the filter
     * columns — the code store holds only ids and codes). The probe
-    * compensates selectivity by WIDENING (nProbe ← ceil(nProbe/sel), so
-    * the expected allowed candidate mass is preserved), with the
-    * allowed-id semi-join landing on the PRUNED code scan BEFORE the ADC
-    * top-k·refine cut — filtering after the cut would silently shrink the
-    * candidate pool instead of the corpus. When the widened probe reaches
-    * nList (a full scan anyway), the gate routes to the strictly-cheaper
-    * EXACT branch: brute-force float-precision [[Search.topK]] over the
-    * allowed survivors — exact by construction, no recall cliff, and it
-    * reads floats only for rows that pass (few, by the gate's own
-    * premise). `sel == 0` degenerates into that exact branch and returns
+    * compensates selectivity by WIDENING ([[Search.cardinalityGate]]:
+    * nProbe by 1/sel, so the expected allowed candidate mass is
+    * preserved), with the allowed-id semi-join landing on the PRUNED code
+    * scan BEFORE the ADC top-k·refine cut — filtering after the cut would
+    * silently shrink the candidate pool instead of the corpus. When the
+    * widened probe reaches nList (a full scan anyway), the gate routes to
+    * the strictly-cheaper EXACT branch: brute-force float-precision
+    * [[Search.topK]] over the allowed survivors — exact by construction,
+    * no recall cliff, and it reads floats only for rows that pass (few,
+    * by the gate's own premise). `sel == 0` degenerates into that exact branch and returns
     * empty for free. `selectivityHint` skips the estimate scan, same
     * contract as the other gates. With `filters` empty the body is the
     * pre-gate implementation verbatim.
@@ -504,16 +504,14 @@ object Pq {
         "filtered searchIvfPq needs the payload frame carrying payloadIdCol + the filter " +
           "columns (the code store holds only ids and codes)")
       val pred = filters.reduce(_ && _)
-      val sel  = Search.estimatedSelectivity(payload, pred, selectivityHint)
-      // ceil(nP/0) = Infinity >= nList: the nothing-passes case rides the
-      // exact branch and returns empty with the right schema for free
-      val widened = if (sel == 0d) Double.PositiveInfinity else math.ceil(nP.toDouble / sel)
       val allowedIds = payload.where(pred).select(col(payloadIdCol).as("__aid"))
-      if (widened >= ivfModel.centroids.length)
-        return Search.topK(
-          floats.join(allowedIds, col(idCol) === col("__aid"), "left_semi"),
-          vecCol, idCol, queryVec, k)
-      nP = widened.toInt
+      Search.cardinalityGate(payload, pred, selectivityHint, nP, ivfModel.centroids.length) match {
+        case None =>
+          return Search.topK(
+            floats.join(allowedIds, col(idCol) === col("__aid"), "left_semi"),
+            vecCol, idCol, queryVec, k)
+        case Some(w) => nP = w
+      }
       allowed = allowedIds
     }
     val lists = ivfModel.probeLists(queryVec, nP)
@@ -591,18 +589,18 @@ object Pq {
         "filtered knnJoinIvfPq needs the payload frame carrying payloadIdCol + the filter " +
           "columns (the code store holds only ids and codes)")
       val pred = filters.reduce(_ && _)
-      val sel  = Search.estimatedSelectivity(payload, pred, selectivityHint)
-      val widened = if (sel == 0d) Double.PositiveInfinity else math.ceil(nP.toDouble / sel)
       val allowedIds = payload.where(pred).select(col(payloadIdCol).cast("long").as("__aid"))
-      if (widened >= ivfModel.centroids.length)
-        // exact branch: brute-force float-precision join over the allowed
-        // survivors — ids pre-cast to long so both branches emit ONE schema
-        return Search.knnJoin(
-          queries.select(col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol)),
-          floats.select(col(idCol).cast("long").as(idCol), col(vecCol)).join(
-            allowedIds, col(idCol) === col("__aid"), "left_semi"),
-          queryVecCol, queryIdCol, vecCol, idCol, k, excludeSelf)
-      nP = widened.toInt
+      Search.cardinalityGate(payload, pred, selectivityHint, nP, ivfModel.centroids.length) match {
+        case None =>
+          // exact branch: brute-force float-precision join over the allowed
+          // survivors — ids pre-cast to long so both branches emit ONE schema
+          return Search.knnJoin(
+            queries.select(col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol)),
+            floats.select(col(idCol).cast("long").as(idCol), col(vecCol)).join(
+              allowedIds, col(idCol) === col("__aid"), "left_semi"),
+            queryVecCol, queryIdCol, vecCol, idCol, k, excludeSelf)
+        case Some(w) => nP = w
+      }
       allowed = allowedIds
     }
     val bcModel = spark.sparkContext.broadcast(ivfModel)

@@ -269,20 +269,59 @@ object Search {
   /** Gate-decision telemetry: bumped once per [[estimatedSelectivity]]
     * call (hinted or measured) — i.e. once per cardinality-gate DECISION.
     * [[perQueryFiltered]]'s contract ("≤ one gate decision per distinct
-    * predicate group, never per query") is asserted against this counter
-    * in the specs; it is monotone and never reset.
+    * predicate group, never per query") and the optimizer rules' "one
+    * decision per planned query" are asserted against this counter in the
+    * specs; it is monotone and never reset.
     */
   private[graft] val gateDecisions = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The filtered-ANN cardinality-gate selectivity, shared by the HNSW and
-    * IVF gates (so the hint contract and the estimate scan cannot drift):
-    * `hint` when given (validated), else ONE column-pruned payload scan —
-    * an action, but it is what picks the plan (Qdrant's estimator does the
-    * same), corpus-proportional only in scan bytes, never in shuffle.
-    * 0.0 means NOTHING passes (callers short-circuit to an empty result).
+  /** The filtered-ANN CARDINALITY GATE, the one policy every IVF, IVF-PQ
+    * and HNSW entry point and [[graft.plans.IvfAutoProbe]] runs (the
+    * reference's canonical query is filtered k-NN, backend/vector_db.py:
+    * 131-183): a fixed-width probe under a predicate passing `sel` of the
+    * rows keeps only `sel` of the probed mass, so the width widens to
+    * `ceil(base/sel)` — expected allowed mass preserved — and once that
+    * reaches `cap` the probe would cover everything anyway, so the caller
+    * takes its EXACT branch (brute force over the allowed survivors).
+    * IVF/PQ pass cap = nList; HNSW, whose beam is exact past `maxEf`,
+    * passes `maxEf + 1`.
+    *
+    * One [[estimatedSelectivity]] per call, so one decision. `Some(width)`
+    * = probe at that width; `None` = exact branch. Nothing passing
+    * (sel 0) is the exact branch too: over zero survivors it returns the
+    * family's empty, well-typed result, and the rule form simply declines.
+    */
+  private[graft] def cardinalityGate(
+      payload: DataFrame,
+      pred: Column,
+      hint: Double,
+      base: Int,
+      cap: Long,
+      population: DataFrame = null,
+  ): Option[Int] =
+    widenedWidth(base, estimatedSelectivity(payload, pred, hint, population), cap)
+
+  /** The gate's pure widening step (no estimate, no decision): `base`
+    * widened by `1/sel`, or `None` once it reaches `cap` or nothing
+    * passes. [[Ivf.knnJoinAdaptive]] applies it per query inside its
+    * fan-out to one batch-wide estimate.
+    */
+  private[graft] def widenedWidth(base: Int, sel: Double, cap: Long): Option[Int] =
+    if (sel == 0d) None
+    else Some(math.ceil(base.toDouble / sel)).filter(_ < cap.toDouble).map(_.toInt)
+
+  /** The gate's selectivity (so the hint contract and the estimate scan
+    * cannot drift between families): `hint` when given (validated), else
+    * ONE column-pruned payload scan — an action, but it is what picks the
+    * plan (Qdrant's estimator does the same), corpus-proportional only in
+    * scan bytes, never in shuffle. With a `population` frame the
+    * denominator is ITS row count (capped at 1) instead of the payload's:
+    * the hydrated rule's metadata table may be pre-filtered, non-covering
+    * or carry null keys, all of which cut candidate mass without leaving
+    * a predicate to measure. 0.0 means NOTHING passes.
     */
   private[graft] def estimatedSelectivity(
-      payload: DataFrame, pred: Column, hint: Double): Double = {
+      payload: DataFrame, pred: Column, hint: Double, population: DataFrame = null): Double = {
     gateDecisions.incrementAndGet()
     if (!hint.isNaN) {
       require(hint > 0d && hint <= 1d, s"selectivityHint must be in (0, 1]: $hint")
@@ -292,7 +331,11 @@ object Search {
         count(lit(1)).as("__n"),
         count(when(pred, lit(1))).as("__a")).head()
       val allowedN = cardRow.getLong(1)
-      if (allowedN == 0L) 0d else allowedN.toDouble / cardRow.getLong(0).toDouble
+      if (allowedN == 0L) 0d
+      else {
+        val n = if (population == null) cardRow.getLong(0) else population.count()
+        math.min(allowedN.toDouble / n.toDouble, 1d)
+      }
     }
   }
 

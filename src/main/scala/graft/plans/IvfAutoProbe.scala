@@ -21,13 +21,13 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * it lands in the scan's `PartitionFilters`: only nProbe/nList of a
   * 100 TB store's files are listed and read.
   *
-  * FILTERED queries get [[Ivf.search]]'s CARDINALITY GATE (round 15 — the
-  * reference's canonical query is filtered k-NN, `backend/vector_db.py:
-  * 131-170`, and a fixed-width probe under a selective predicate keeps
-  * only `sel` of the probed mass: recall cliff): when user predicates sit
-  * between the sort and the relation, the probe width widens to
-  * `ceil(nProbe/sel)` (sel from the gate's shared one-aggregate
-  * estimate), and once the widened probe reaches nList the rule
+  * FILTERED queries get [[Search.cardinalityGate]], the one gate every
+  * ANN entry point runs (round 15 — the reference's canonical query is
+  * filtered k-NN, `backend/vector_db.py:131-170`, and a fixed-width probe
+  * under a selective predicate keeps only `sel` of the probed mass:
+  * recall cliff): when user predicates sit between the sort and the
+  * relation, the probe width widens by 1/sel, and once the widened probe
+  * reaches nList (or nothing passes) the rule
   * DECLINES — the user's own plan IS the exact branch (brute-force over
   * the filtered store), strictly cheaper than a prune that reads
   * everything anyway. Because this rule only INJECTS a
@@ -38,8 +38,14 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * The rewrite trades exactness for recall exactly like [[Ivf.search]], so
   * it is OPT-IN: `spark.graft.ivf.autoProbe=true` (probe width
   * `spark.graft.ivf.nProbe`, default 4). Registered via
-  * [[graft.GraftExtensions]] (spark-submit) or
-  * `spark.experimental.extraOptimizations` (live session).
+  * [[graft.GraftExtensions]] (spark-submit) as a PRE-CBO rule — Spark's
+  * `Once` batch after operator optimization and before the scan
+  * push-down that turns the injected filter into `PartitionFilters` — so
+  * planning one query makes ONE gate decision: in the fixed-point
+  * operator-optimization batches a declined rule leaves no mark on the
+  * plan and re-ran its selectivity job on every pass. A live session can
+  * use `spark.experimental.extraOptimizations`, whose batch reaches its
+  * fixed point after one pass of this rule.
   *
   * Matching is conservative: a global Sort+Limit whose PRIMARY key is
   * descending cosine similarity against a literal query vector (directly
@@ -107,22 +113,21 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
             case None    => math.min(nProbe, model.centroids.length)
           }
           width <- gatedWidth(child, rel, relVec, listAttr, model.centroids.length, scoreId, base)
+          // probing everything — the user's exact plan wins
+          if width < model.centroids.length
         } yield {
-          if (width >= model.centroids.length) orig // probing everything — the user's exact plan wins
-          else {
-            val probes = model.probeLists(qv.toSeq, width)
-            val pruned = child.transformUp {
-              case r: LogicalRelation if r eq rel =>
-                Filter(In(listAttr, probes.map(i => Literal(i))), r)
-            }
-            val newSort = s.copy(child = pruned)
-            GlobalLimit(gl, LocalLimit(ll, proj.map(p => p.copy(child = newSort)).getOrElse(newSort)))
+          val probes = model.probeLists(qv.toSeq, width)
+          val pruned = child.transformUp {
+            case r: LogicalRelation if r eq rel =>
+              Filter(In(listAttr, probes.map(i => Literal(i))), r)
           }
+          val newSort = s.copy(child = pruned)
+          GlobalLimit(gl, LocalLimit(ll, proj.map(p => p.copy(child = newSort)).getOrElse(newSort)))
         }
         rewritten.getOrElse(orig)
     }
 
-  /** [[Ivf.search]]'s cardinality gate in rule form, hydration-aware
+  /** [[Search.cardinalityGate]] in rule form, hydration-aware
     * (round 16). The path from the sort to the relation goes through
     * [[TopKMatch.hydratedPredicates]] — Projects, Filters, and at most
     * ONE `store ⋈ metadata` hydration join:
@@ -133,7 +138,8 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
     *  - hydrated path: the METADATA predicates gate the width, estimated
     *    against the column-pruned metadata leaf (a predicate-free
     *    hydration gates on `IsNotNull(key)` — a non-covering metadata
-    *    table cuts candidate mass too). Unlike the substitution rules,
+    *    table cuts candidate mass too), over the STORE's row count (the
+    *    gate's `population` form). Unlike the substitution rules,
     *    injection needs NO key-uniqueness or id-keyed checks: the user's
     *    join still executes verbatim, the rule only picks the probe
     *    width. Mixing store-column predicates with a hydration declines
@@ -146,7 +152,8 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
     *    only `sel` of the probed mass: the exact recall cliff the gate
     *    exists to prevent. Unaccounted mass now means no pruning.
     *
-    * `None` = decline the injection (the user's exact plan runs).
+    * `None` = decline the injection (the user's exact plan runs): the
+    * shape is refused, or the gate took its exact branch.
     */
   private def gatedWidth(
       child: LogicalPlan,
@@ -157,25 +164,22 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
       scoreId: Option[ExprId],
       base: Int,
   ): Option[Int] = {
-    def widthFrom(frame: org.apache.spark.sql.DataFrame, preds: Seq[Expression]): Int = {
-      val sel = Search.estimatedSelectivity(
-        frame, preds.map(GraftBridge.column).reduce(_ && _), Double.NaN)
-      if (sel == 0d) nList // nothing passes — decline, exact plan returns empty for free
-      else math.min(math.ceil(base.toDouble / sel), nList.toDouble).toInt
-    }
+    def gate(frame: org.apache.spark.sql.DataFrame, preds: Seq[Expression],
+        population: org.apache.spark.sql.DataFrame = null): Option[Int] =
+      Search.cardinalityGate(frame, preds.map(GraftBridge.column).reduce(_ && _), Double.NaN,
+        base, nList, population)
     TopKMatch.hydratedPredicates(child, rel, relVec, scoreId).flatMap { case (storeRaw, hydOpt) =>
       // conjuncts on the vector or list_id columns don't cut candidate
       // mass (the vector feeds the score; list_id guards are the user's
       // own pruning, handled by alreadyPruned) — ignored for gating
-      val (ignorable, gateable) = storeRaw.partition(c =>
+      val gateable = storeRaw.filterNot(c =>
         c.references.exists(a => a.exprId == relVec.exprId || a.exprId == listAttr.exprId))
-      val _ = ignorable
       hydOpt match {
         case None =>
           if (gateable.isEmpty) Some(base)
           else if (!gateable.forall(p => p.references.nonEmpty &&
             p.references.forall(a => rel.outputSet.contains(a)))) None
-          else Some(widthFrom(GraftBridge.ofRows(spark, rel), gateable))
+          else gate(GraftBridge.ofRows(spark, rel), gateable)
         case Some(h) =>
           if (gateable.nonEmpty) None
           else {
@@ -187,18 +191,11 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
             // the payload-ratio denominator would read them as sel 1.0
             // and keep the unwidened probe. The store count is a
             // metadata-weight parquet job.
-            Search.gateDecisions.incrementAndGet()
             val preds = if (h.preds.nonEmpty) h.preds else Seq(IsNotNull(h.payloadKey))
             val attrs = (h.payloadKey +: preds.flatMap(_.references)
               .filter(_.exprId != h.payloadKey.exprId)).distinct
-            val allowed = GraftBridge.ofRows(spark, h.payloadRel)
-              .select(attrs.map(a => GraftBridge.column(a)): _*)
-              .where(preds.map(GraftBridge.column).reduce(_ && _)).count().toDouble
-            val sel =
-              if (allowed == 0d) 0d
-              else math.min(allowed / GraftBridge.ofRows(spark, rel).count().toDouble, 1d)
-            if (sel == 0d) Some(nList) // nothing passes — decline, exact plan is free
-            else Some(math.min(math.ceil(base.toDouble / sel), nList.toDouble).toInt)
+            gate(GraftBridge.ofRows(spark, h.payloadRel).select(attrs.map(a => GraftBridge.column(a)): _*),
+              preds, population = GraftBridge.ofRows(spark, rel))
           }
       }
     }

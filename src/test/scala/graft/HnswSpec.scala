@@ -621,10 +621,10 @@ class HnswSpec extends AnyFunSuite {
       selectivityHint = 0.027)
       .select("id").as[Long].collect().toSeq
     assert(hintedExact == bruteTopFiltered(q, 10, _ % 37 == 0), s"got $hintedExact")
-    // out-of-range hints are rejected up front
-    intercept[IllegalArgumentException] {
+    // out-of-range hints are rejected up front, at either end of (0, 1]
+    for (bad <- Seq(1.5, 0d)) intercept[IllegalArgumentException] {
       Hnsw.searchIndex(idx, q.toSeq, "id", 10,
-        filters = Seq(col("rare")), payload = payloadDf, selectivityHint = 1.5)
+        filters = Seq(col("rare")), payload = payloadDf, selectivityHint = bad)
     }
     ()
   }

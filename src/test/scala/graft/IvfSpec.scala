@@ -306,6 +306,83 @@ class IvfSpec extends AnyFunSuite {
     }
   }
 
+  test("IvfAutoProbe under GraftExtensions: planning one filtered query makes ONE gate decision") {
+    // the shipped registration (spark.sql.extensions=graft.GraftExtensions),
+    // not the specs' extraOptimizations batch: in a fixed-point
+    // operator-optimization batch a declined rule re-ran its selectivity
+    // job on every pass of the batch
+    val dir = java.nio.file.Files.createTempDirectory("ivf_ext").toString + "/store"
+    val (assigned, model) = Ivf.assign(corpus, "vec", 6)
+    Ivf.writeIndexed(assigned, dir, model, "vec")
+    val ext = org.apache.spark.sql.classic.SparkSession.builder()
+      .withExtensions(new GraftExtensions).create()
+    // create() makes the new session active and default; the suites share
+    // the test session
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    ext.conf.set("spark.graft.ivf.autoProbe", "true")
+    ext.conf.set("spark.graft.ivf.nProbe", "2")
+    val store = ext.read.parquet(dir)
+    val meta  = ext.createDataFrame((0L until 300L).map(i => (i, i % 10))).toDF("mid", "grp")
+    def planned(df: org.apache.spark.sql.DataFrame): (String, Long) = {
+      val before = Search.gateDecisions.get()
+      val plan   = TestSpark.formattedPlan(df)
+      (plan, Search.gateDecisions.get() - before)
+    }
+    val probe = "list_id#?\\d* IN \\(([^)]*)\\)".r
+    // injected: sel 0.8 widens the probe to 3 of 6 lists
+    val (injected, d1) = planned(
+      Search.topK(store, "vec", "id", qVec, 5, filters = Seq(col("id") % 10 < 8)))
+    assert(probe.findFirstMatchIn(injected).map(_.group(1)).exists(_.split(",").length == 3),
+      injected.take(1500))
+    assert(d1 == 1, s"injected branch: expected 1 gate decision, got $d1")
+    // declined: sel ~1/70 takes the exact branch, the user's plan runs
+    val (declined, d2) = planned(Search.topK(store, "vec", "id", qVec, 5,
+      filters = Seq(col("id") % 10 === 0, col("id") % 7 === 0)))
+    assert(probe.findFirstIn(declined).isEmpty, declined.take(1500))
+    assert(d2 == 1, s"declined branch: expected 1 gate decision, got $d2")
+    // hydrated and declined: the metadata predicate (sel 0.1) gates the
+    // width past nList (a predicate on the key would be inferred onto the
+    // store too, a shape the rule refuses without deciding)
+    val (hydrated, d3) = planned(Search.topK(store.join(meta, col("id") === col("mid")),
+      "vec", "id", qVec, 5, filters = Seq(col("grp") === 0)))
+    assert(probe.findFirstIn(hydrated).isEmpty, hydrated.take(1500))
+    assert(d3 == 1, s"hydrated declined branch: expected 1 gate decision, got $d3")
+  }
+
+  test("cardinalityGate boundaries: the cap, nothing passing, the hint's range") {
+    val payload = spark.range(10).select(col("id"))
+    val half    = col("id") < 5
+    def decided[T](f: => T): (T, Long) = {
+      val before = Search.gateDecisions.get()
+      val out    = f
+      (out, Search.gateDecisions.get() - before)
+    }
+    // IVF rule, cap = nList: base 2 at sel 0.5 widens to exactly 4 —
+    // a 4-list probe covers everything, so the exact branch
+    assert(decided(Search.cardinalityGate(payload, half, Double.NaN, 2, 4)) == ((None, 1L)))
+    assert(Search.cardinalityGate(payload, half, Double.NaN, 2, 5).contains(4))
+    // HNSW rule, cap = maxEf + 1: a widened beam of exactly maxEf stays
+    // a beam, one past it is exact
+    val maxEf = 4
+    assert(Search.cardinalityGate(payload, half, Double.NaN, 2, maxEf + 1L).contains(maxEf))
+    assert(Search.cardinalityGate(payload, half, Double.NaN, 3, maxEf + 1L).isEmpty)
+    // nothing passes: the exact branch under either cap, even an unbounded one
+    assert(decided(Search.cardinalityGate(payload, col("id") < 0, Double.NaN, 1, Long.MaxValue))
+      == ((None, 1L)))
+    assert(Search.widenedWidth(64, 0d, 4097L).isEmpty)
+    // the population form: 5 allowed of a 20-row store is sel 0.25
+    assert(Search.cardinalityGate(payload, half, Double.NaN, 1, 6,
+      population = spark.range(20).toDF()).contains(4))
+    // a hint picks the width without a scan; outside (0, 1] it is rejected
+    assert(Search.cardinalityGate(payload, half, 0.25, 2, 100).contains(8))
+    for (bad <- Seq(0d, -0.5, 1.5)) {
+      val before = Search.gateDecisions.get()
+      intercept[IllegalArgumentException](Search.cardinalityGate(payload, half, bad, 2, 100))
+      assert(Search.gateDecisions.get() - before == 1)
+    }
+  }
+
   test("IvfAutoProbe: adaptiveMargin makes the injected base width geometry-aware (r16)") {
     // the declarative twin of searchAdaptive: with the margin conf set,
     // the injected probe's base width comes from the centroid-margin rule
