@@ -127,6 +127,38 @@ object Ivf {
   private[graft] def gatedBroadcast(df: DataFrame, rows: Long): DataFrame =
     if (rows <= BroadcastDeltaMaxRows) broadcast(df) else df
 
+  /** What an upsert must know about its delta before it touches the store:
+    * `rows` = rows of removed ∪ added ids (what the broadcast gate sizes;
+    * the distinct id count whenever no id repeats), `gaining` = the lists
+    * an added row lands in.
+    */
+  private[graft] final case class DeltaStats(rows: Long, gaining: Array[Int])
+
+  /** ONE aggregate over the delta's ids, removals and additions tagged
+    * apart, answering every question [[applyDelta]] and [[Pq.applyDelta]]
+    * ask of it. `assigned` is the added rows with their `list_id`,
+    * persisted by the caller: this is its first action, so the caller's
+    * chunk → embed lineage runs here and every later use reads the cache.
+    * Fails on duplicate added ids (no deterministic winner, and two rows
+    * would land under one id) and on added rows with no list (a null
+    * vector has no partition to be swapped into).
+    */
+  private[graft] def deltaStats(removedIds: DataFrame, assigned: DataFrame, idCol: String, op: String): DeltaStats = {
+    val tagged = removedIds.select(col(idCol), lit(null).cast("int").as("list_id"), lit(0L).as("__add"))
+      .union(assigned.select(col(idCol), col("list_id"), lit(1L).as("__add")))
+    val perId = tagged.groupBy(col(idCol))
+      .agg(sum("__add").as("__adds"), count(lit(1)).as("__rows"), max("list_id").as("list_id"))
+    val r = perId.agg(
+      coalesce(max("__adds"), lit(0L)),
+      coalesce(sum("__rows"), lit(0L)),
+      collect_set("list_id"),
+      count_if(col("__adds") > 0 && col("list_id").isNull),
+    ).head()
+    require(r.getLong(0) <= 1, s"$op: duplicate ids within `added` (column $idCol)")
+    require(r.getLong(3) == 0, s"$op: `added` rows with a null vector have no list to land in")
+    DeltaStats(r.getLong(1), r.getSeq[Int](2).toArray)
+  }
+
   /** Append `list_id` = nearest centroid, choosing the scale-appropriate
     * plan: the codegen'd expression for small models, a broadcast +
     * `mapPartitions` JVM loop for large ones. A production IVF sizes
@@ -461,16 +493,21 @@ object Ivf {
     * partitions, and the untouched lists are neither read nor rewritten —
     * the cost is proportional to the churn, not the corpus.
     *
-    * Mechanics: removed rows locate their lists via one column-pruned
-    * (id, list_id) scan semi-joined against the (broadcast, delta-sized)
-    * removal set; added rows assign lists with the SIDECAR's fitted model
-    * (no refit — same contract as [[streamInto]]). The affected lists'
-    * surviving rows plus the assigned additions materialize through an
-    * eager `localCheckpoint` (so the overwrite never reads the files it
-    * replaces), then land via dynamic partition overwrite; lists the
-    * delta emptied entirely have no output partition to overwrite them,
-    * so their directories are deleted explicitly. Readers see per-list
-    * swaps (same non-atomicity class as [[compact]]'s directory swap).
+    * Mechanics: added rows assign lists with the SIDECAR's fitted model
+    * (no refit — same contract as [[streamInto]]) and are persisted before
+    * any action; ONE aggregate over the delta's ids ([[deltaStats]]) then
+    * runs the duplicate guard, sizes the broadcast gate and names the
+    * lists gaining rows. `added` is therefore evaluated exactly once per
+    * call — the caller's chunk → embed lineage runs once, not once per
+    * check. Removed rows locate their lists via one column-pruned
+    * (id, list_id) scan semi-joined against the size-gated removal set.
+    * The affected lists' surviving rows plus the additions are written
+    * ONCE to a staging directory beside the store, and each affected list
+    * directory is then swapped in; a list the delta emptied has no
+    * staged replacement and stays deleted. Readers see per-list swaps
+    * (same non-atomicity class as [[compact]]'s directory swap).
+    * `removedIds` is re-read by each join, so pass a cheap or persisted
+    * frame.
     *
     * `added` rows are UPSERTS (existing rows with the same id drop first),
     * so re-applying a delta is idempotent. `added` must carry `idCol` plus
@@ -484,8 +521,6 @@ object Ivf {
       removedIds: DataFrame,
       added: DataFrame,
       idCol: String,
-      addsDistinct: Boolean = false,
-      maxDeltaRows: Long = -1L,
   ): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val st = readCentroids(path, conf).getOrElse(
@@ -494,55 +529,43 @@ object Ivf {
       throw new IllegalStateException(s"store sidecar at $path records no indexed column"))
     require(added.columns.contains(vecCol),
       s"added frame must carry the store's indexed column '$vecCol' (has: ${added.columns.mkString(", ")})")
-    // intra-batch duplicate ids have no deterministic winner (and would
-    // write two rows under one id) — fail loudly; one delta-sized agg.
-    // A caller whose adds are unique BY CONSTRUCTION (RecrawlStream's
-    // id-keyed batch aggregate) passes addsDistinct to skip the scan.
-    if (!addsDistinct) {
-      val dupAdds = added.groupBy(col(idCol)).count().where(col("count") > 1).limit(1).count()
-      require(dupAdds == 0, s"applyDelta: duplicate ids within `added` (column $idCol)")
-    }
-    // complete any crashed swap BEFORE the store's file listing snapshots
-    // the directory layout
-    locally {
-      val fs0 = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      recoverDeltaSwap(fs0, new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.fs.Path(path + ".delta"), "list_id=")
-    }
-    val store = spark.read.parquet(path)
-    // additions are UPSERTS: any stored row with an added id drops first,
-    // so re-applying a delta (at-least-once batch retry, a caller that
-    // forgot to list changed ids as stale) never duplicates a vector —
-    // and a changed doc whose new vector lands in a DIFFERENT list still
-    // vacates its old one
-    val rem = removedIds.select(col(idCol)).union(added.select(col(idCol))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Size-gate the broadcast: daily-churn deltas are tiny and the hint
-    // keeps the store scan shuffle-free, but a BULK removal (GDPR purge,
-    // domain takedown) makes `rem` corpus-scale — a forced broadcast
-    // there OOMs the driver, where a plain shuffled semi-join merely
-    // costs a shuffle of (id) rows. Same discipline as the
-    // contamination-sweep joins (Dedup.contaminatedIds): hint only what
-    // is measured small. A caller that already knows an upper bound on
-    // the delta size passes it as maxDeltaRows (gating on an over-estimate
-    // only makes the hint more conservative); otherwise the count is one
-    // scan of the persisted delta.
-    val remHint = gatedBroadcast(rem, if (maxDeltaRows >= 0) maxDeltaRows else rem.count())
     val assigned = withListId(added, st.model, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // both delta caches release in a finally: a retried batch (the
+    // the delta cache releases in a finally: a retried batch (the
     // documented at-least-once recovery contract, where a staging-write or
     // swap failure is EXPECTED to be replayed) must not accumulate pinned
     // delta frames across attempts
     try {
+      val delta = deltaStats(removedIds, assigned, idCol, "applyDelta")
+      // complete any crashed swap BEFORE the store's file listing snapshots
+      // the directory layout
+      locally {
+        val fs0 = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
+        recoverDeltaSwap(fs0, new org.apache.hadoop.fs.Path(path),
+          new org.apache.hadoop.fs.Path(path + ".delta"), "list_id=")
+      }
+      val store = spark.read.parquet(path)
+      // additions are UPSERTS: any stored row with an added id drops first,
+      // so re-applying a delta (at-least-once batch retry, a caller that
+      // forgot to list changed ids as stale) never duplicates a vector —
+      // and a changed doc whose new vector lands in a DIFFERENT list still
+      // vacates its old one. Semi and anti joins need no unique keys, so
+      // the removal set is neither deduplicated nor cached.
+      val rem = removedIds.select(col(idCol)).union(assigned.select(col(idCol)))
+      // Size-gate the broadcast: daily-churn deltas are tiny and the hint
+      // keeps the store scan shuffle-free, but a BULK removal (GDPR purge,
+      // domain takedown) makes `rem` corpus-scale — a forced broadcast
+      // there OOMs the driver, where a plain shuffled semi-join merely
+      // costs a shuffle of (id) rows. Same discipline as the
+      // contamination-sweep joins (Dedup.contaminatedIds): hint only what
+      // is measured small.
+      val remHint = gatedBroadcast(rem, delta.rows)
       // affected lists = lists holding a removed id (a column-pruned store
-      // scan against the gated removal set) ∪ lists gaining a row — ONE
-      // bounded-by-nList collect instead of two
-      val affected = store.select(col(idCol), col("list_id"))
+      // scan against the gated removal set) ∪ lists gaining a row
+      val located = store.select(col(idCol), col("list_id"))
         .join(remHint, Seq(idCol), "left_semi")
-        .select("list_id")
-        .union(assigned.select("list_id"))
-        .distinct().collect().map(_.getInt(0)).sorted
+        .select("list_id").distinct().collect().map(_.getInt(0))
+      val affected = (located ++ delta.gaining).distinct.sorted
       if (affected.isEmpty) return 0L
 
       val kept = store
@@ -551,11 +574,8 @@ object Ivf {
       val rewrite = kept
         .unionByName(assigned.select(store.columns.map(col).toIndexedSeq: _*))
       // ONE materialization: write the affected lists' replacement data
-      // BESIDE the store (no lineage conflict with the files being read, so
-      // no localCheckpoint pass doubling the delta's I/O), then swap each
-      // affected list directory in. Same per-list publication unit as a
-      // dynamic partition overwrite; a list the delta emptied simply has no
-      // replacement directory and stays deleted. Crash safety: a kill
+      // BESIDE the store (no lineage conflict with the files being read),
+      // then swap each affected list directory in. Crash safety: a kill
       // between a dst delete and its rename leaves that partition's ONLY
       // copy under `.delta` — the [[recoverDeltaSwap]] pass at the NEXT
       // call's entry (before the store listing and before staging is
@@ -575,7 +595,7 @@ object Ivf {
       fs.delete(tmp, true)
       affected.length.toLong
     } finally {
-      rem.unpersist(); assigned.unpersist()
+      assigned.unpersist()
     }
   }
 

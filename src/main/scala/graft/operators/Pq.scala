@@ -362,7 +362,8 @@ object Pq {
     * list with the STORED centroids and encode with the STORED codebooks
     * (no refit — drift is [[Ivf.maintain]]'s job on the floats store), and
     * only the affected `list_id=` directories of either store are read or
-    * written.
+    * written. `added` is evaluated once: its assignment is persisted and
+    * [[Ivf.deltaStats]]'s one aggregate is its only evaluation.
     *
     * Cross-store ordering: the FLOAT store swaps first. A crash between
     * the two swaps leaves codes one delta stale, which degrades gracefully
@@ -397,14 +398,14 @@ object Pq {
     val (codes, floats, ivfm, pqm) = readStore(spark, root)
     require(added.columns.contains(vecCol),
       s"added frame must carry the store's float column '$vecCol' (has: ${added.columns.mkString(", ")})")
-    val dupAdds = added.groupBy(col(idCol)).count().where(col("count") > 1).limit(1).count()
-    require(dupAdds == 0, s"Pq.applyDelta: duplicate ids within `added` (column $idCol)")
-    // upsert semantics: stored rows with an added id vacate first
-    val rem = removedIds.select(col(idCol)).union(added.select(col(idCol))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val assigned = Ivf.withListId(added.select(col(idCol), col(vecCol)), ivfm, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // the duplicate guard and the lists gaining rows: ONE aggregate, the
+      // only evaluation of `added`
+      val delta = Ivf.deltaStats(removedIds, assigned, idCol, "Pq.applyDelta")
+      // upsert semantics: stored rows with an added id vacate first
+      val rem = removedIds.select(col(idCol)).union(assigned.select(col(idCol)))
       // affected lists: one bounded-by-nList collect. Removed rows are
       // located in BOTH stores, not just floats — after a crash between
       // the floats swap and the codes swap, a replayed batch would find
@@ -413,14 +414,14 @@ object Pq {
       // candidates eating k·refine slots); the codes-side scan makes the
       // replay self-healing at the cost of one column-pruned scan of the
       // narrow code store.
-      val affected = floats.select(col(idCol), col("list_id"))
+      val located = floats.select(col(idCol), col("list_id"))
         .join(rem, Seq(idCol), "left_semi")
         .select("list_id")
         .union(codes.select(col(idCol), col("list_id"))
           .join(rem, Seq(idCol), "left_semi")
           .select("list_id"))
-        .union(assigned.select("list_id"))
-        .distinct().collect().map(_.getInt(0)).sorted
+        .distinct().collect().map(_.getInt(0))
+      val affected = (located ++ delta.gaining).distinct.sorted
       if (affected.isEmpty) return 0L
       val lists = affected.map(Integer.valueOf).toIndexedSeq
 
@@ -453,7 +454,7 @@ object Pq {
       writeVersion(conf, root, readVersion(conf, root).getOrElse(1L) + 1L)
       affected.length.toLong
     } finally {
-      rem.unpersist(); assigned.unpersist()
+      assigned.unpersist()
     }
   }
 

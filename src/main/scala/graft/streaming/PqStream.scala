@@ -50,22 +50,26 @@ object PqStream {
     val w = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (raw: DataFrame, _: Long) =>
+        // applyDelta re-reads its removal ids once per join: the micro-batch
+        // is persisted so the source and the CDC resolution run once
         val batch =
-          if (seqCol != null) HnswStream.lastOpPerId(raw, idCol, seqCol, opCol, deleteOp)
-          else raw
-        if (seqCol == null && opCol != null) {
-          val dup = batch.groupBy(col(idCol)).count().where(col("count") > 1).limit(1).count()
-          require(dup == 0,
-            s"PqStream: id appears more than once in a micro-batch with no seqCol — " +
-              "intra-batch op order is undefined; pass seqCol to resolve")
-        }
-        val (removed, added) =
-          if (opCol == null)
-            (batch.limit(0).select(col(idCol)), batch.select(col(idCol), col(vecCol)))
-          else
-            (batch.where(col(opCol) === deleteOp).select(col(idCol)),
-              batch.where(col(opCol) =!= deleteOp).select(col(idCol), col(vecCol)))
-        Pq.applyDelta(batch.sparkSession, root, removed, added, vecCol, idCol)
+          (if (seqCol != null) HnswStream.lastOpPerId(raw, idCol, seqCol, opCol, deleteOp)
+          else raw).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          if (seqCol == null && opCol != null) {
+            val dup = batch.groupBy(col(idCol)).count().where(col("count") > 1).limit(1).count()
+            require(dup == 0,
+              s"PqStream: id appears more than once in a micro-batch with no seqCol — " +
+                "intra-batch op order is undefined; pass seqCol to resolve")
+          }
+          val (removed, added) =
+            if (opCol == null)
+              (batch.limit(0).select(col(idCol)), batch.select(col(idCol), col(vecCol)))
+            else
+              (batch.where(col(opCol) === deleteOp).select(col(idCol)),
+                batch.where(col(opCol) =!= deleteOp).select(col(idCol), col(vecCol)))
+          Pq.applyDelta(batch.sparkSession, root, removed, added, vecCol, idCol)
+        } finally { batch.unpersist(); () }
         ()
       }
     (if (availableNow) w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()) else w)

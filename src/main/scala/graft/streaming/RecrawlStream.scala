@@ -201,8 +201,8 @@ object RecrawlStream {
         .join(cur, Seq(idCol), "left_semi") // absent ids: no-op
         .persist(lvl)
       try {
-        // the embedded delta is consumed by several applyDelta actions —
-        // persist so the embedder runs ONCE per batch. ONE action then
+        // the embedded delta is consumed by the counts below and by
+        // applyDelta — persist so the embedder runs ONCE per batch. ONE action then
         // materializes BOTH per-batch caches and returns both counts
         // (nUp off the same materialization — embedText is 1:1): the
         // union's two legs run as sibling stages of a single job, keeping
@@ -234,13 +234,9 @@ object RecrawlStream {
         val nextF = scala.concurrent.Future {
           next.write.mode("overwrite").parquet(tmp.toString)
         }(scala.concurrent.ExecutionContext.global)
-        // upsert ids are unique by construction (the batch aggregate keys
-        // on the id) and the delta size is already measured — skip
-        // applyDelta's own duplicate guard and broadcast-gate count
         val touched =
           try Ivf.applyDelta(spark, indexPath(root), removals,
-            fresh.withColumnRenamed("embedding", vecName), idCol,
-            addsDistinct = true, maxDeltaRows = nRem + nUp)
+            fresh.withColumnRenamed("embedding", vecName), idCol)
           catch {
             case scala.util.control.NonFatal(e) =>
               // same discipline as bootstrap's snapF: the `.next` staging

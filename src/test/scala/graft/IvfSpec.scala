@@ -912,6 +912,26 @@ class IvfSpec extends AnyFunSuite {
     assert(restored == 10, s"refit must restore nProbe=1 recall: $decayed/10 -> $restored/10")
   }
 
+  test("applyDelta evaluates `added` once: one aggregate serves the duplicate guard, the gate and the gaining lists") {
+    // the caller's `added` lineage (chunk → embed in the ingest path) runs
+    // once per call: every added row passes through this counter exactly
+    // once, however many checks and joins the upsert makes of it
+    val dir = java.nio.file.Files.createTempDirectory("ivf_delta_once").toString + "/store"
+    val (assigned0, model) = Ivf.assign(corpus, "vec", 6)
+    Ivf.writeIndexed(assigned0, dir, model, "vec")
+    val evals = spark.sparkContext.longAccumulator("added rows evaluated")
+    val src = ((0L until 5L).map(i => (i * 7, Embedder.default.embed(s"changed $i").toSeq)) ++
+      (0L until 15L).map(i => (5000L + i, Embedder.default.embed(s"fresh $i").toSeq))).toDF("id", "vec")
+    val added = src.mapPartitions { it => it.map { r => evals.add(1L); r } }(
+      org.apache.spark.sql.Encoders.row(src.schema))
+    val touched = Ivf.applyDelta(spark, dir, Seq(100L, 101L).toDF("id"), added, "id")
+    assert(evals.value == 20L, s"added evaluated ${evals.value / 20.0} times per row, want exactly once")
+    assert(touched >= 1 && touched <= 6)
+    val ids = spark.read.parquet(dir).select("id").as[Long].collect()
+    assert(ids.length == ids.distinct.length, "an upsert must not duplicate its id")
+    assert(ids.toSet == (0L until 300L).toSet - 100L - 101L ++ (5000L until 5015L))
+  }
+
   test("applyDelta's delta join is size-gated: small deltas broadcast, a bulk purge degrades to a shuffled join") {
     // plan shape, both branches: under the row cap the hint forces a
     // BroadcastHashJoin; over it the hint is withheld and (the delta being

@@ -33,6 +33,22 @@ class ParFanOutSpec extends AnyFunSuite {
     assert(Par.fanOut(fanned) eq fanned, "second fanOut must not add another exchange")
   }
 
+  test("broadcast-hinted join: estimated by its stream side, so the chunk → join → embed shape adds no exchange") {
+    // the ingest shape: chunks joined to their document metadata by a
+    // broadcast hint run in the chunks' partitions; pricing the join as a
+    // shuffle estimated 1 partition and made the embedder's fanOut add a
+    // round-robin exchange after it
+    import spark.implicits._
+    val docs = (0L until 50L).map(i => (i, s"document $i has a few words", "en", s"doc-$i", i % 3))
+      .toDF("doc_id", "text", "lang", "document_id", "category")
+    val chunks = operators.Chunker.chunk(spark, docs).toDF()
+      .join(broadcast(docs.select("doc_id", "document_id", "category")), "doc_id")
+    val est    = Par.estimatedPartitions(chunks)
+    val actual = chunks.rdd.getNumPartitions
+    assert((est < target) === (actual < target), s"est=$est actual=$actual target=$target")
+    if (actual >= target) assert(Par.fanOut(chunks) eq chunks, "an already-parallel join must not re-shuffle")
+  }
+
   test("join-derived frame: estimate runs zero jobs (the old probe executed the join)") {
     val t = Tables(spark, dir)
     val joined = t.embeddings.join(t.documents, col("vec_id") === col("doc_id"))

@@ -543,6 +543,26 @@ class PqSpec extends AnyFunSuite {
     assert(searchNow(codes2, floats2) == truth)
   }
 
+  test("applyDelta evaluates `added` once across both stores") {
+    // Ivf.deltaStats is the only evaluation of the caller's `added`: the
+    // floats rows, the codes encoding and the gaining lists all read the
+    // persisted assignment
+    val tmp = java.nio.file.Files.createTempDirectory("pq-once").toString + "/store"
+    Pq.writeStore(corpus, "vec", "id", tmp, nList = 6, m = 8, ksub = 16)
+    val evals = spark.sparkContext.longAccumulator("added rows evaluated")
+    val src = corpus.where(col("id") % 37 === 0)
+      .select((col("id") + 10000L).as("id"), reverse(col("vec")).as("vec"))
+    val n = src.count()
+    val added = src.mapPartitions { it => it.map { r => evals.add(1L); r } }(
+      org.apache.spark.sql.Encoders.row(src.schema))
+    val touched = Pq.applyDelta(spark, tmp, Seq(3L).toDF("id"), added, "vec", "id")
+    assert(evals.value == n, s"added evaluated ${evals.value.toDouble / n} times per row, want exactly once")
+    assert(touched >= 1)
+    val (codes1, floats1, _, _) = Pq.readStore(spark, tmp)
+    assert(floats1.count() == 400 - 1 + n && codes1.count() == 400 - 1 + n)
+    assert(codes1.where(col("id") === 3L).count() == 0)
+  }
+
   test("applyDelta replay self-heals a floats/codes divergence (crash between the two swaps)") {
     val tmp = java.nio.file.Files.createTempDirectory("pq-heal").toString + "/store"
     Pq.writeStore(corpus, "vec", "id", tmp, nList = 6, m = 8, ksub = 16)
