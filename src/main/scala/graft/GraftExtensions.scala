@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension registering graft's native expressions for SQL use:
+/** Session extension registering graft's native expressions for SQL use
+  * and the one declarative-ANN optimizer rule, [[graft.plans.DeclarativeAnn]]:
   *
   * {{{
   * spark.sql.extensions=graft.GraftExtensions
@@ -17,28 +18,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // opt-in ANN rewrite (spark.graft.pq.autoProbe=true): brute-force
-    // cosine top-k over a persistent IVF-PQ store's floats becomes the ADC
-    // probe over the code store. Injected BEFORE the IVF rule: the floats
-    // store also carries the IVF sidecar, and the ADC probe (m bytes/vec)
-    // beats the pruned float scan; the IVF rule declines PQ floats stores
-    // while this rule is enabled.
-    ext.injectOptimizerRule(graft.plans.PqAutoProbe.apply)
-    // opt-in ANN rewrite (spark.graft.ivf.autoProbe=true): brute-force
-    // cosine top-k over an IVF store becomes a partition-pruned probe.
-    // A PRE-CBO rule (Spark's `Once` batch, after operator optimization
-    // and before the scan push-down that makes the injected filter a
-    // partition filter), so planning one query makes ONE gate decision: in
-    // the fixed-point operator-optimization batches a declined rule leaves
-    // no mark on the plan and re-ran its selectivity job on every pass.
-    ext.injectPreCBORule(graft.plans.IvfAutoProbe.apply)
-    // opt-in ANN rewrite (spark.graft.hnsw.autoProbe=true): brute-force
-    // cosine top-k over an HNSW store becomes the sharded beam search
-    ext.injectOptimizerRule(graft.plans.HnswAutoProbe.apply)
-    // opt-in BATCH ANN rewrite (each family's flag governs its stores):
-    // per-query top-k window over queries × store becomes the family's
-    // gated batch knnJoin instead of a scored cartesian
-    ext.injectOptimizerRule(graft.plans.KnnJoinAuto.apply)
+    // opt-in declarative ANN (spark.graft.{ivf,pq,hnsw}.autoProbe,
+    // spark.graft.knnJoin.bruteAuto): brute-force cosine top-k and the
+    // per-query top-k window over an IVF, IVF-PQ or HNSW store become the
+    // family's gated probe. ONE rule, PRE-CBO (Spark's `Once` batch, after
+    // operator optimization and before the scan push-down that makes an
+    // injected probe a partition filter), so planning a query runs each
+    // rule-time data check once: in the fixed-point operator-optimization
+    // batches a declined rewrite leaves no mark on the plan and re-ran its
+    // checks on every pass.
+    ext.injectPreCBORule(graft.plans.DeclarativeAnn.apply)
     ext.injectFunction((
       FunctionIdentifier("cosine_similarity"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),

@@ -39,8 +39,8 @@ object PlanDump {
     "v47_pq_auto_probe" -> "round 15 (PQ-store auto-probe, dumped as the DECLARATIVE plan the rule rewrites — the declared query collects rule-vs-call parity rows, which would show only a LocalRelation): the user's sort-by-cosine+limit over the floats store is SUBSTITUTED by Pq.searchIvfPq — the candidate stage scans the CODE store's pq_codes (16 B/vector) pruned to the probed list_id directories (PartitionFilters), the ≤ k·refine ADC survivors broadcast back, and the float re-rank reads the float store pruned to the SAME lists + TakeOrderedAndProject; no scan in the plan is unpruned",
     "v48_per_query_filtered_join" -> "round 15 (per-query heterogeneous filtered batch join): ONE plan unions one gated Ivf.knnJoin per predicate GROUP (bounded by predicate classes, never |q|) — the broad group's query fan-out equi-joins the store on list_id at its own widened width with its filter pushed to the scan, the selective group routes to its exact brute-force leg, and each group's per-query top-k is the map-side-combined TopKScored aggregate (≤ k rows per (query, partition) into each final exchange)",
     "v50_knn_join_auto" -> "round 16 (declarative batch ANN, dumped as the DECLARATIVE window plan the rule rewrites — the declared query collects parity rows, which would show only a LocalRelation): the per-query top-k window over queries × store — the shape that otherwise plans a |q|·n CARTESIAN with every cosine scored — is SUBSTITUTED by the gated Ivf.knnJoin: NO Window and NO cross join in the plan; queries fan out to their nProbe nearest lists as narrow (qid, vec, list_id) rows and equi-join the store on list_id (candidate volume |q|·n·nProbe/nList, never all-pairs), and the per-query top-k is the map-side-combined TopKScored aggregate, so the final exchange carries ≤ k rows per (query, partition)",
-    "v52_per_query_knn_auto" -> "round 16 (declarative PER-QUERY filtered batch ANN — v50's window with a JOIN CONDITION store.label = queries.want): KnnJoinAuto routes the equality through Search.perQueryFiltered — NO Window and NO conditioned cross product in the plan; instead a UNION of per-predicate-GROUP gated joins (fan-out bounded by distinct key tuples ≤ spark.graft.knnJoin.maxPredGroups, never |q|), each group's EqualTo(label, <literal>) pushed all the way into its store scan as PushedFilters, each group taking its own cardinality-gate branch",
-    "v53_hydrated_knn_auto" -> "round 16 (declarative HYDRATED filtered batch ANN — the window over queries × (store ⋈ metadata) with the predicate on the METADATA table): KnnJoinAuto recognizes the single equi-keyed hydration join and substitutes the gated Ivf.knnJoin with the column-pruned metadata leaf as the payload carrier — NO Window and NO hydration join riding the scored path; the metadata predicate reaches the METADATA scan as PushedFilters (never the store scan — the store has no such column), the allowed-id set semi-joins the candidates, and the store scan stays list_id-pruned at the gate's widened width",
+    "v52_per_query_knn_auto" -> "round 16 (declarative PER-QUERY filtered batch ANN — v50's window with a JOIN CONDITION store.label = queries.want): DeclarativeAnn routes the equality through Search.perQueryFiltered — NO Window and NO conditioned cross product in the plan; instead a UNION of per-predicate-GROUP gated joins (fan-out bounded by distinct key tuples ≤ spark.graft.knnJoin.maxPredGroups, never |q|), each group's EqualTo(label, <literal>) pushed all the way into its store scan as PushedFilters, each group taking its own cardinality-gate branch",
+    "v53_hydrated_knn_auto" -> "round 16 (declarative HYDRATED filtered batch ANN — the window over queries × (store ⋈ metadata) with the predicate on the METADATA table): DeclarativeAnn recognizes the single equi-keyed hydration join and substitutes the gated Ivf.knnJoin with the column-pruned metadata leaf as the payload carrier — NO Window and NO hydration join riding the scored path; the metadata predicate reaches the METADATA scan as PushedFilters (never the store scan — the store has no such column), the allowed-id set semi-joins the candidates, and the store scan stays list_id-pruned at the gate's widened width",
   )
 
   def main(args: Array[String]): Unit = {
@@ -82,7 +82,7 @@ object PlanDump {
           val (_, floats, _, _) = graft.operators.Pq.readStore(spark, dir)
           val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
           val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.PqAutoProbe(spark)
+          classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(spark)
           spark.conf.set("spark.graft.pq.autoProbe", "true")
           release = () => {
             spark.conf.unset("spark.graft.pq.autoProbe")
@@ -103,7 +103,7 @@ object PlanDump {
           val indexed = spark.read.parquet(dir)
           val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
           val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(spark)
+          classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(spark)
           spark.conf.set("spark.graft.ivf.autoProbe", "true")
           spark.conf.set("spark.graft.ivf.nProbe", "2")
           release = () => {
@@ -132,7 +132,7 @@ object PlanDump {
           val indexed = spark.read.parquet(dir)
           val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
           val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(spark)
+          classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(spark)
           spark.conf.set("spark.graft.ivf.autoProbe", "true")
           spark.conf.set("spark.graft.ivf.nProbe", "2")
           release = () => {
@@ -164,7 +164,7 @@ object PlanDump {
           val indexed = spark.read.parquet(dir)
           val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
           val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(spark)
+          classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(spark)
           spark.conf.set("spark.graft.ivf.autoProbe", "true")
           spark.conf.set("spark.graft.ivf.nProbe", "2")
           release = () => {

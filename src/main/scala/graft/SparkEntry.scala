@@ -1216,7 +1216,7 @@ object SparkEntry {
           lit(lists.length >= 4 && lists.length <= 8).as("probed_lte_nlist"))
     }),
 
-    // V7 — the IvfAutoProbe optimizer rule end-to-end: a plain declarative
+    // V7 — the DeclarativeAnn rule's IVF injection end-to-end: a plain declarative
     // sort-by-cosine + limit over the IVF store, rewritten by the rule into
     // a pruned probe (plan shape asserted in IvfSpec; here the driver's gate
     // checks the recall contract). Session mutations are scoped: results
@@ -1248,7 +1248,7 @@ object SparkEntry {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev      = classic.experimental.extraOptimizations
       val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.ivf.autoProbe", "true")
       s.conf.set("spark.graft.ivf.nProbe", "6")
       try {
@@ -1268,7 +1268,7 @@ object SparkEntry {
     }),
 
     // V55 — geometry-aware DECLARATIVE probe width (round 16): with
-    // spark.graft.ivf.adaptiveMargin set, IvfAutoProbe's injected base
+    // spark.graft.ivf.adaptiveMargin set, DeclarativeAnn's injected base
     // width is the centroid-margin rule (tight queries probe few lists,
     // boundary queries widen) instead of the fixed nProbe — the
     // declarative twin of Ivf.searchAdaptive, sharing its ranked-centroid
@@ -1283,7 +1283,7 @@ object SparkEntry {
       val (indexed, model) = Ivf.indexFor(t.embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v7")
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev    = classic.experimental.extraOptimizations
-      classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.ivf.autoProbe", "true")
       s.conf.set("spark.graft.ivf.adaptiveMargin", "0.15")
       try {
@@ -4377,7 +4377,7 @@ object SparkEntry {
         .orderBy(col("path"), desc("score"), col("vec_id"))
     }),
 
-    // V41 — the HnswAutoProbe optimizer rule end-to-end (round 14): a
+    // V41 — the DeclarativeAnn rule's HNSW substitution end-to-end (round 14): a
     // plain declarative sort-by-cosine + limit over the HNSW store —
     // no Hnsw API in sight — substituted by the rule with the sharded
     // beam-search plan (plan shape asserted in HnswSpec: the scoring scan
@@ -4397,7 +4397,7 @@ object SparkEntry {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev   = classic.experimental.extraOptimizations
       val prevEf = s.conf.getOption("spark.graft.hnsw.efSearch")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.HnswAutoProbe(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.hnsw.autoProbe", "true")
       s.conf.set("spark.graft.hnsw.efSearch", "65536")
       try {
@@ -4421,7 +4421,7 @@ object SparkEntry {
 
     // V45 — DECLARATIVE filtered k-NN over the HNSW store (round 15, the
     // r14 verdict's #1): the reference's canonical query is filtered
-    // search (backend/vector_db.py:131-170), and HnswAutoProbe now routes
+    // search (backend/vector_db.py:131-170), and DeclarativeAnn now routes
     // a plain `where(pred) + sort-by-cosine + limit` through searchIndex's
     // cardinality gate instead of refusing. Both gate branches exercised
     // and value-checked: the selective leg (sel ~1/7 → needEf ≈ 459k >
@@ -4439,7 +4439,7 @@ object SparkEntry {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev   = classic.experimental.extraOptimizations
       val prevEf = s.conf.getOption("spark.graft.hnsw.efSearch")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.HnswAutoProbe(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.hnsw.autoProbe", "true")
       s.conf.set("spark.graft.hnsw.efSearch", "65536")
       try {
@@ -4472,7 +4472,7 @@ object SparkEntry {
     }),
 
     // V46 — DECLARATIVE filtered k-NN over the IVF store (round 15, the
-    // r14 verdict's #1, IVF side): IvfAutoProbe now gates the injected
+    // r14 verdict's #1, IVF side): DeclarativeAnn now gates the injected
     // probe width on predicate selectivity. The selective leg (sel ≈
     // 0.2/7 → widened ≈ 70 ≥ nList 8) DECLINES the injection — the
     // declarative plan already IS the exact branch, so its values are the
@@ -4490,7 +4490,7 @@ object SparkEntry {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev      = classic.experimental.extraOptimizations
       val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.ivf.autoProbe", "true")
       try {
         def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
@@ -4529,7 +4529,7 @@ object SparkEntry {
       }
     }),
 
-    // V47 — PqAutoProbe end-to-end (round 15, the r14 verdict's #2): the
+    // V47 — DeclarativeAnn over a PQ store end-to-end (round 15, the r14 verdict's #2): the
     // persistent IVF-PQ store's floats half carries the IVF sidecar, so a
     // declarative sort-by-cosine + limit used to full-scan (or at best
     // IVF-prune) 6 KB/vector floats; the rule substitutes Pq.searchIvfPq —
@@ -4553,7 +4553,7 @@ object SparkEntry {
       val (codes, floats, ivfm, pqm) = Pq.readStore(s, dir)
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev = classic.experimental.extraOptimizations
-      classic.experimental.extraOptimizations = prev :+ graft.plans.PqAutoProbe(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.pq.autoProbe", "true")
       try {
         def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
@@ -4588,7 +4588,7 @@ object SparkEntry {
     // (PARTITION BY qid ORDER BY cosine DESC, id) <= k — is the batch
     // analog of the reference's only query (backend/vector_db.py:131-170)
     // and used to plan a CARTESIAN (|q|·|corpus| cosines; WindowGroupLimit
-    // saves the sort, never the scoring). KnnJoinAuto substitutes the
+    // saves the sort, never the scoring). DeclarativeAnn substitutes the
     // store family's gated batch join. Three legs: the EXHAUSTIVE probe
     // (nProbe = nList 8) makes the substitution value-exact, so its rows
     // are the brute-force per-query top-5 the DuckDB oracle replays; the
@@ -4604,7 +4604,7 @@ object SparkEntry {
       val classic   = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev      = classic.experimental.extraOptimizations
       val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.ivf.autoProbe", "true")
       try {
         val qs = t.embeddings.where(col("vec_id") < 8)
@@ -4678,7 +4678,7 @@ object SparkEntry {
       val corpus  = t.embeddings.select(col("vec_id"), col("embedding"))
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev    = classic.experimental.extraOptimizations
-      classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.knnJoin.bruteAuto", "true")
       try {
         val w = org.apache.spark.sql.expressions.Window
@@ -4716,7 +4716,7 @@ object SparkEntry {
     // window shape of v50 with a JOIN CONDITION — each query row carries
     // its own category (want = qid % 5) and the join demands
     // store.label = queries.want, the declarative spelling of v48's
-    // per-query heterogeneous filters. KnnJoinAuto routes the equality
+    // per-query heterogeneous filters. DeclarativeAnn routes the equality
     // through Search.perQueryFiltered: ONE gated join per predicate
     // GROUP (5 label classes here), never per query, each group taking
     // the gate branch its own selectivity earns. The EXACT leg
@@ -4731,7 +4731,7 @@ object SparkEntry {
       val classic   = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev      = classic.experimental.extraOptimizations
       val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.ivf.autoProbe", "true")
       try {
         val qs = t.embeddings.where(col("vec_id") < 8)
@@ -4793,7 +4793,7 @@ object SparkEntry {
     // batch window over queries × (store ⋈ metadata) — predicates live in
     // a SEPARATE metadata table, the real retrieval shape and exactly
     // what the gated joins' payload/payloadIdCol parameters exist for.
-    // KnnJoinAuto recognizes the single equi-keyed hydration join
+    // DeclarativeAnn recognizes the single equi-keyed hydration join
     // (unique-keyed, checked by one rule-time aggregate), routes the
     // metadata predicates through the cardinality gate with the
     // column-pruned metadata leaf as the payload carrier, and — for the
@@ -4810,7 +4810,7 @@ object SparkEntry {
       val classic   = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev      = classic.experimental.extraOptimizations
       val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.ivf.autoProbe", "true")
       try {
         val qs = t.embeddings.where(col("vec_id") < 8)
@@ -4878,7 +4878,7 @@ object SparkEntry {
     // store (round 16): writeStore projects the floats store to exactly
     // (id, vec) BY DESIGN, so a metadata predicate can ONLY reach a
     // declarative query over it through a hydration join — the shape
-    // PqAutoProbe now routes through the gate with the metadata table as
+    // DeclarativeAnn now routes through the gate with the metadata table as
     // the payload carrier. Shares v47's per-JVM store. The EXACT leg
     // (exhaustive probe + unbounded refine under a sel-0.5 predicate →
     // the gate's exact branch) is DuckDB-replayed as the filtered brute
@@ -4896,7 +4896,7 @@ object SparkEntry {
       val meta = Tables(s, d).embeddings.select(col("vec_id").as("mid"), col("label").as("grade"))
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val prev = classic.experimental.extraOptimizations
-      classic.experimental.extraOptimizations = prev :+ graft.plans.PqAutoProbe(s)
+      classic.experimental.extraOptimizations = prev :+ graft.plans.DeclarativeAnn(s)
       s.conf.set("spark.graft.pq.autoProbe", "true")
       try {
         def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =

@@ -316,13 +316,13 @@ object Ivf {
     clusterByDir(assigned).write.mode("overwrite").partitionBy("list_id").parquet(path)
 
   /** What a store's sidecar declares: the centroids and WHICH column they
-    * index — [[graft.plans.IvfAutoProbe]] must refuse to prune when the
+    * index — [[graft.plans.DeclarativeAnn]] must refuse to prune when the
     * query ranks a different vector column of the same store.
     */
   final case class StoredIndex(model: Model, column: Option[String])
 
   /** Write the store AND its sidecar (indexed column + centroids): the
-    * sidecar makes the store self-describing, so [[graft.plans.IvfAutoProbe]]
+    * sidecar makes the store self-describing, so [[graft.plans.DeclarativeAnn]]
     * can turn a brute-force top-k over the store into a pruned probe from
     * the plan alone. The sidecar lands via temp-file + rename so a reader in
     * another JVM (shared `graft.ivf.root`) never sees a partial file, and
@@ -367,7 +367,7 @@ object Ivf {
     * partitioned store: each micro-batch assigns `list_id` with the FITTED
     * model (narrow, codegen'd — no refit, no shuffle) and appends into the
     * store's list directories. Probes — [[search]] or the
-    * [[graft.plans.IvfAutoProbe]] rewrite — pick up new files on their next
+    * [[graft.plans.DeclarativeAnn]] rewrite — pick up new files on their next
     * scan; no rebuild, and writers never block readers.
     *
     * foreachBatch + batch append (not the parquet streaming sink): a
@@ -871,6 +871,7 @@ object Ivf {
     val spark = indexed.sparkSession
     import spark.implicits._
     require(model.centroids.nonEmpty, "knnJoin needs a fitted index (empty centroid set)")
+    require(nProbe >= 1, s"nProbe must be at least 1: $nProbe")
     var nP = math.min(nProbe, model.centroids.length)
     var allowed: DataFrame = null
     if (filters.nonEmpty) {
@@ -1059,6 +1060,7 @@ object Ivf {
       selectivityHint: Double = Double.NaN,
       routeVec: Seq[Double] = null,
   ): DataFrame = {
+    require(nProbe >= 1, s"nProbe must be at least 1: $nProbe")
     var nP = math.min(nProbe, model.centroids.length)
     var allowed: DataFrame = null
     var storeFilters: Seq[Column] = Nil

@@ -223,7 +223,7 @@ object Pq {
   /** Monotonic store-version sidecar (VERDICT r15 task 2) — the
     * filesystem-INDEPENDENT freshness token: [[writeStore]] stamps 1 and
     * every [[applyDelta]] that changed any list bumps it AFTER both swaps
-    * complete, so a reader cache (e.g. [[graft.plans.PqAutoProbe]]) keyed
+    * complete, so a reader cache (e.g. [[graft.plans.PqFamily]]) keyed
     * on the version is correct on object stores whose prefixes report no
     * directory mtime (S3) and on filesystems with coarse (1 s) mtime
     * ticks where a same-tick rewrite is mtime-invisible (ADVICE r15).
@@ -498,6 +498,7 @@ object Pq {
       payloadIdCol: String = "id",
       selectivityHint: Double = Double.NaN,
   ): DataFrame = {
+    require(nProbe >= 1 && refine >= 1, s"nProbe and refine must be at least 1: $nProbe, $refine")
     var nP = math.min(nProbe, ivfModel.centroids.length)
     var allowed: DataFrame = null
     if (filters.nonEmpty) {
@@ -583,6 +584,7 @@ object Pq {
     val spark = codes.sparkSession
     import spark.implicits._
     require(ivfModel.centroids.nonEmpty, "knnJoinIvfPq needs a fitted index (empty centroid set)")
+    require(nProbe >= 1 && refine >= 1, s"nProbe and refine must be at least 1: $nProbe, $refine")
     var nP = math.min(nProbe, ivfModel.centroids.length)
     var allowed: DataFrame = null
     if (filters.nonEmpty) {

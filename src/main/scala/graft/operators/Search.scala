@@ -276,7 +276,7 @@ object Search {
   private[graft] val gateDecisions = new java.util.concurrent.atomic.AtomicLong()
 
   /** The filtered-ANN CARDINALITY GATE, the one policy every IVF, IVF-PQ
-    * and HNSW entry point and [[graft.plans.IvfAutoProbe]] runs (the
+    * and HNSW entry point and [[graft.plans.DeclarativeAnn]] runs (the
     * reference's canonical query is filtered k-NN, backend/vector_db.py:
     * 131-183): a fixed-width probe under a predicate passing `sel` of the
     * rows keeps only `sel` of the probed mass, so the width widens to
@@ -312,13 +312,8 @@ object Search {
 
   /** The gate's selectivity (so the hint contract and the estimate scan
     * cannot drift between families): `hint` when given (validated), else
-    * ONE column-pruned payload scan — an action, but it is what picks the
-    * plan (Qdrant's estimator does the same), corpus-proportional only in
-    * scan bytes, never in shuffle. With a `population` frame the
-    * denominator is ITS row count (capped at 1) instead of the payload's:
-    * the hydrated rule's metadata table may be pre-filtered, non-covering
-    * or carry null keys, all of which cut candidate mass without leaving
-    * a predicate to measure. 0.0 means NOTHING passes.
+    * the one-predicate case of [[estimatedSelectivities]]. One call is one
+    * gate decision.
     */
   private[graft] def estimatedSelectivity(
       payload: DataFrame, pred: Column, hint: Double, population: DataFrame = null): Double = {
@@ -326,16 +321,28 @@ object Search {
     if (!hint.isNaN) {
       require(hint > 0d && hint <= 1d, s"selectivityHint must be in (0, 1]: $hint")
       hint
-    } else {
-      val cardRow = payload.agg(
-        count(lit(1)).as("__n"),
-        count(when(pred, lit(1))).as("__a")).head()
-      val allowedN = cardRow.getLong(1)
-      if (allowedN == 0L) 0d
-      else {
-        val n = if (population == null) cardRow.getLong(0) else population.count()
-        math.min(allowedN.toDouble / n.toDouble, 1d)
-      }
+    } else estimatedSelectivities(payload, Seq(pred), population).head
+  }
+
+  /** The selectivity of each of `preds`, from ONE column-pruned payload
+    * scan — an action, but it is what picks the plan (Qdrant's estimator
+    * does the same), corpus-proportional only in scan bytes, never in
+    * shuffle. With a `population` frame the denominator is ITS row count
+    * (capped at 1) instead of the payload's: the hydrated rule's metadata
+    * table may be pre-filtered, non-covering or carry null keys, all of
+    * which cut candidate mass without leaving a predicate to measure. 0.0
+    * means NOTHING passes. Counts no decision: a caller that estimates
+    * several predicate groups at once hands each estimate to its family
+    * call as a hint, and that call decides.
+    */
+  private[graft] def estimatedSelectivities(
+      payload: DataFrame, preds: Seq[Column], population: DataFrame = null): Seq[Double] = {
+    val cardRow = payload.agg(count(lit(1)).as("__n"),
+      preds.zipWithIndex.map { case (p, i) => count(when(p, lit(1))).as(s"__a$i") }: _*).head()
+    lazy val n = if (population == null) cardRow.getLong(0) else population.count()
+    preds.indices.map { i =>
+      val allowedN = cardRow.getLong(i + 1)
+      if (allowedN == 0L) 0d else math.min(allowedN.toDouble / n.toDouble, 1d)
     }
   }
 
@@ -373,7 +380,7 @@ object Search {
     perQueryFilteredKeyed(queries, predCol, predicates, (_, qs, fs) => run(qs, fs))
 
   /** [[perQueryFiltered]] whose `run` also receives the GROUP KEY — lets a
-    * caller that precomputed per-group facts (e.g. [[graft.plans.KnnJoinAuto]]'s
+    * caller that precomputed per-group facts (e.g. [[graft.plans.DeclarativeAnn]]'s
     * one-scan gate selectivities) route them to the right family call.
     * Semantics otherwise identical.
     */

@@ -5,17 +5,15 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.types._
 
-/** The shared declarative-top-k pattern matching of the auto-probe rules
-  * ([[IvfAutoProbe]], [[HnswAutoProbe]], [[PqAutoProbe]]): all three
-  * recognize the same user shape — a global Sort+Limit whose primary key
-  * is descending cosine against a literal query vector over a stored
-  * relation's own vector column — and differ only in what they do with it
-  * (inject a partition filter / substitute a beam plan / substitute an ADC
-  * probe). Keeping the recognizers here means the conservative-match rules
-  * (one Project of look-through, alias resolution, cast stripping) cannot
-  * drift between the rules.
+/** The pattern matching of [[DeclarativeAnn]]: the single-query user
+  * shape — a global Sort+Limit whose primary key is descending cosine
+  * against a literal query vector over a stored relation's own vector
+  * column — and the store-path walk both of its shapes share (Projects,
+  * Filters, benign guards, at most one hydration join). Keeping the
+  * recognizers here means the conservative-match rules (one Project of
+  * look-through, alias resolution, cast stripping) live in one place.
   */
 private[plans] object TopKMatch {
 
@@ -72,38 +70,22 @@ private[plans] object TopKMatch {
     case other     => Seq(other)
   }
 
-  /** Substitution safety walk: the path from the sort's child to the
-    * relation may contain only Projects and Filters; returns the USER
-    * predicate conjuncts with `Search.topK`'s planted guards stripped
-    * (NOT-isnan / not-null REFERENCING the score alias or the vector —
-    * after pushdown the score guard may reference the inlined cosine over
-    * the vector; constraint inference plants the vector not-null). None =
-    * something a substitution would drop (a join, a set op) — refuse.
+  /** A guard the plan carries for free, not a user predicate: NOT-isnan /
+    * not-null over `okIds` alone (`Search.topK`'s planted guards on the
+    * score alias or the vector — after pushdown the score guard may
+    * reference the inlined cosine over the vector; constraint inference
+    * plants the vector not-null). An inferred not-null on an unrelated
+    * column is a user predicate.
     */
-  def pathPredicates(
-      p: LogicalPlan,
-      rel: LogicalRelation,
-      vecAttr: AttributeReference,
-      scoreId: Option[ExprId],
-  ): Option[Seq[Expression]] = {
-    def benign(c: Expression): Boolean = {
-      def scoreOrVec(e: Expression): Boolean =
-        e.references.nonEmpty && e.references.forall(a =>
-          a.exprId == vecAttr.exprId || scoreId.contains(a.exprId))
-      c match {
-        case Not(IsNaN(e)) => scoreOrVec(e)
-        case IsNotNull(e)  => scoreOrVec(e)
-        case _             => false
-      }
-    }
-    p match {
-      case r: LogicalRelation if r eq rel => Some(Nil)
-      case Project(_, c)                  => pathPredicates(c, rel, vecAttr, scoreId)
-      case Filter(cond, c) =>
-        pathPredicates(c, rel, vecAttr, scoreId)
-          .map(splitConjuncts(cond).filterNot(benign) ++ _)
-      case _ => None
-    }
+  def benignGuard(c: Expression, okIds: Set[ExprId]): Boolean = c match {
+    case Not(IsNaN(e)) => e.references.nonEmpty && e.references.forall(a => okIds.contains(a.exprId))
+    case IsNotNull(e)  => e.references.nonEmpty && e.references.forall(a => okIds.contains(a.exprId))
+    case _             => false
+  }
+
+  def integral(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _                                             => false
   }
 
   /** One matched hydration join on the store path (round 16): the store
@@ -134,8 +116,9 @@ private[plans] object TopKMatch {
       }
   }
 
-  /** [[pathPredicates]] extended across at most ONE hydration join — the
-    * real retrieval shape (`store ⋈ metadata` filtered on metadata
+  /** Substitution safety walk: the path from the sort's child to the
+    * relation may contain only Projects, Filters and at most ONE hydration
+    * join — the real retrieval shape (`store ⋈ metadata` filtered on metadata
     * columns, the exact thing the gated joins' `payload`/`payloadIdCol`
     * parameters exist for). Returns the store-leg non-benign conjuncts
     * (callers refuse a hydrated match when these are non-empty: the gated
@@ -155,11 +138,6 @@ private[plans] object TopKMatch {
       vecAttr: AttributeReference,
       scoreId: Option[ExprId],
   ): Option[(Seq[Expression], Option[Hydration])] = {
-    def benignGuard(c: Expression, okIds: Set[ExprId]): Boolean = c match {
-      case Not(IsNaN(e)) => e.references.nonEmpty && e.references.forall(a => okIds.contains(a.exprId))
-      case IsNotNull(e)  => e.references.nonEmpty && e.references.forall(a => okIds.contains(a.exprId))
-      case _             => false
-    }
     val baseOk = Set(vecAttr.exprId) ++ scoreId
     def payloadLeg(q: LogicalPlan): Option[(LogicalPlan, Seq[Expression], Map[ExprId, Expression])] =
       q match {
@@ -227,8 +205,8 @@ private[plans] object TopKMatch {
     * but not in the engine's semi-joined path, so substituting rules must
     * refuse it (one rule-time aggregate, the same order as the gate's
     * estimate scan; null keys are harmless — neither join matches them).
-    * The injection rule ([[IvfAutoProbe]]) needs no such check: the
-    * user's join still executes verbatim there.
+    * IVF injection needs no such check: the user's join still executes
+    * verbatim there.
     */
   def payloadUnique(spark: org.apache.spark.sql.SparkSession, h: Hydration): Boolean = {
     import org.apache.spark.sql.functions.{count, countDistinct}

@@ -62,7 +62,7 @@ object GraftBridge {
   }
 
   /** Wrap a (resolved) logical plan as a DataFrame — the splice surface
-    * [[graft.plans.HnswAutoProbe]] needs: an optimizer rule that rewrites a
+    * [[graft.plans.DeclarativeAnn]] needs: an optimizer rule that rewrites a
     * declarative top-k into the sharded beam search must build the beam
     * plan through the DataFrame API over the matched relation, then return
     * its logical plan. `Dataset.ofRows` is private[sql].
@@ -71,8 +71,8 @@ object GraftBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** The OPTIMIZED logical plan of a DataFrame — the splice surface for
-    * rules that substitute whole subtrees ([[graft.plans.PqAutoProbe]],
-    * [[graft.plans.HnswAutoProbe]]): a rule runs mid-optimization, after
+    * rules that substitute whole subtrees ([[graft.plans.DeclarativeAnn]]'s
+    * HNSW, PQ and batch substitutions): a rule runs mid-optimization, after
     * EliminateResolvedHint and the operator-optimization batches, so an
     * ANALYZED splice would ship un-eliminated broadcast hints (planner
     * INTERNAL_ERROR) and unpushed filters. Optimizing the inner frame is

@@ -154,7 +154,7 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.writeIndex(df, "vec", "id", dir, nShards = 3)
     val store   = Hnsw.readIndex(spark, dir)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.HnswAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.hnsw.autoProbe", "true")
     spark.conf.set("spark.graft.hnsw.efSearch", "64")
     try {
@@ -249,7 +249,7 @@ class HnswSpec extends AnyFunSuite {
     val store   = Hnsw.readIndex(spark, dir)
     val meta    = items.toSeq.map { case (i, _) => (i, i % 2) }.toDF("mid", "par")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.HnswAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.hnsw.autoProbe", "true")
     spark.conf.set("spark.graft.hnsw.efSearch", "64")
     try {
@@ -273,11 +273,17 @@ class HnswSpec extends AnyFunSuite {
       assert(!pure.queryExecution.optimizedPlan.toString.contains("cosine_similarity"))
       assert(pure.select("id").as[Long].collect().forall(_ % 2 == 0),
         "store rows without a metadata match must never surface")
-      // dup-keyed payload refuses (the user's join would rank duplicates)
-      val dup = Search.topK(store.join(metaHalf.unionByName(metaHalf.limit(1)),
-        col("id") === col("mid")), "vec", "id", q, 5).select("id", "score")
-      assert(dup.queryExecution.optimizedPlan.toString.contains("cosine_similarity"),
-        "a dup-keyed metadata table must refuse the substitution")
+      // dup-keyed payload refuses (the user's join would rank duplicates):
+      // a union (refused by the hydration walk) and a plain relation
+      // (refused by the key-uniqueness check)
+      val dupPlain = (items.toSeq.collect { case (i, _) if i % 2 == 0 => (i, i % 4) } :+ ((0L, 1L)))
+        .toDF("mid", "par")
+      for (metaDup <- Seq(metaHalf.unionByName(metaHalf.limit(1)), dupPlain)) {
+        val dup = Search.topK(store.join(metaDup, col("id") === col("mid")), "vec", "id", q, 5)
+          .select("id", "score")
+        assert(dup.queryExecution.optimizedPlan.toString.contains("cosine_similarity"),
+          "a dup-keyed metadata table must refuse the substitution")
+      }
     } finally {
       spark.conf.set("spark.graft.hnsw.autoProbe", "false")
       spark.conf.unset("spark.graft.hnsw.efSearch")
@@ -294,7 +300,7 @@ class HnswSpec extends AnyFunSuite {
     org.apache.spark.sql.GraftBridge.registerFunctions(spark)
     store.createOrReplaceTempView("hnsw_store_sql")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.HnswAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.hnsw.autoProbe", "true")
     spark.conf.set("spark.graft.hnsw.efSearch", "64")
     try {

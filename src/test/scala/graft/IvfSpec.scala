@@ -92,7 +92,7 @@ class IvfSpec extends AnyFunSuite {
   test("IvfAutoProbe: declarative brute-force top-k over the store becomes a pruned probe") {
     val (indexed, model) = Ivf.indexFor(corpus, "vec", 6, cacheKey = "ivfspec-auto")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.IvfAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     spark.conf.set("spark.graft.ivf.nProbe", "2")
     try {
@@ -153,7 +153,7 @@ class IvfSpec extends AnyFunSuite {
     // while recall stayed perfect — the worst kind of regression.
     val (indexed, model) = Ivf.indexFor(corpus, "vec", 6, cacheKey = "ivfspec-proj")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.IvfAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     spark.conf.set("spark.graft.ivf.nProbe", "2")
     try {
@@ -177,7 +177,7 @@ class IvfSpec extends AnyFunSuite {
     org.apache.spark.sql.GraftBridge.registerFunctions(spark)
     indexed.createOrReplaceTempView("ivf_store_sql")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.IvfAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     spark.conf.set("spark.graft.ivf.nProbe", "2")
     try {
@@ -210,7 +210,7 @@ class IvfSpec extends AnyFunSuite {
   test("IvfAutoProbe: user predicates gate the probe width — broad widens, selective declines") {
     val (indexed, model) = Ivf.indexFor(corpus, "vec", 6, cacheKey = "ivfspec-fgate")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.IvfAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     spark.conf.set("spark.graft.ivf.nProbe", "2")
     try {
@@ -252,7 +252,7 @@ class IvfSpec extends AnyFunSuite {
     val (indexed, model) = Ivf.indexFor(corpus, "vec", 6, cacheKey = "ivfspec-hyd")
     val meta = (0L until 300L).map(i => (i, i % 10)).toDF("mid", "grp")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.IvfAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     spark.conf.set("spark.graft.ivf.nProbe", "2")
     try {
@@ -389,7 +389,7 @@ class IvfSpec extends AnyFunSuite {
     // instead of the fixed nProbe, and the gate still widens it by 1/sel
     val (indexed, model) = Ivf.indexFor(corpus, "vec", 6, cacheKey = "ivfspec-adaptauto")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.IvfAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     spark.conf.set("spark.graft.ivf.adaptiveMargin", "0.15")
     try {
@@ -505,7 +505,7 @@ class IvfSpec extends AnyFunSuite {
     val two = corpus.withColumn("vec2", reverse(col("vec")))
     val (indexed, _) = Ivf.indexFor(two, "vec", 6, cacheKey = "ivfspec-twocol")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.IvfAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     try {
       val wrongCol = TestSpark.formattedPlan(Search.topK(indexed, "vec2", "id", qVec, 5))
@@ -608,7 +608,7 @@ class IvfSpec extends AnyFunSuite {
     assert(pf.contains("list_id") && pf.contains("IN"), s"streamed store must still partition-prune: $pf")
     // the stream-born store is self-describing: the auto-probe rule fires on it
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.IvfAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     try {
       val auto = TestSpark.formattedPlan(Search.topK(store, "vec", "id", qVec, 3))

@@ -48,7 +48,7 @@ class KnnJoinAutoSpec extends AnyFunSuite {
 
   private def withRule[T](confs: (String, String)*)(body: => T): T = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.KnnJoinAuto(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally {
@@ -484,11 +484,13 @@ class KnnJoinAutoSpec extends AnyFunSuite {
         rows(declarative(indexed.join(metaHalf, col("id") === col("mid")), "vec", "id", 5)) }
       assert(got == truth, "pure hydration must be value-exact")
       // a dup-keyed payload would rank duplicates in the user's plan but
-      // not in the engine's semi-join: refuse
-      val metaDup = metaHalf.unionByName(metaHalf.limit(1))
-      assert(TestSpark.formattedPlan(
-        declarative(indexed.join(metaDup, col("id") === col("mid")), "vec", "id", 5))
-        .contains("Window"), "a dup-keyed payload must refuse")
+      // not in the engine's semi-join: refuse — a union (refused by the
+      // hydration walk) and a plain relation (by the key-uniqueness check)
+      val dupPlain = ((0L until 400L by 2).map(i => (i, i % 5)) :+ ((0L, 1L))).toDF("mid", "grade")
+      for (metaDup <- Seq(metaHalf.unionByName(metaHalf.limit(1)), dupPlain))
+        assert(TestSpark.formattedPlan(
+          declarative(indexed.join(metaDup, col("id") === col("mid")), "vec", "id", 5))
+          .contains("Window"), "a dup-keyed payload must refuse")
       // per-query filters key on METADATA columns when hydrated: each
       // query wants its own grade class
       val meta5 = (0L until 400L).map(i => (i, i % 5)).toDF("mid", "grade")

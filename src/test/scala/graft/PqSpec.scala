@@ -24,7 +24,7 @@ class PqSpec extends AnyFunSuite {
     Pq.writeStore(corpus, "vec", "id", tmp, nList = 6, m = 8, ksub = 16)
     val (codes, floats, ivfm, pqm) = Pq.readStore(spark, tmp)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.PqAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.pq.autoProbe", "true")
     spark.conf.set("spark.graft.pq.nProbe", "2")
     try {
@@ -73,7 +73,7 @@ class PqSpec extends AnyFunSuite {
       spark.conf.set("spark.graft.pq.autoProbe", "true")
       spark.conf.set("spark.graft.ivf.autoProbe", "true")
       classic.experimental.extraOptimizations =
-        Seq(graft.plans.PqAutoProbe(spark), graft.plans.IvfAutoProbe(spark))
+        Seq(graft.plans.DeclarativeAnn(spark))
       val both = Search.topK(floats, "vec", "id", qVec, 5).select("id", "score")
       assert(TestSpark.formattedPlan(both).contains("pq_codes"))
       assert(both.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == viaApi)
@@ -93,7 +93,7 @@ class PqSpec extends AnyFunSuite {
         "stale store cache: the rule served pre-delta codes after applyDelta")
       // the explicit escape hatch (object stores without dir mtimes):
       // invalidate + re-query reloads and still answers correctly
-      graft.plans.PqAutoProbe.invalidate(tmp)
+      graft.plans.PqFamily.invalidate(tmp)
       val reloaded = Search.topK(floatsAfter, "vec", "id", qVec, 5).select("id", "score")
       assert(TestSpark.formattedPlan(reloaded).contains("pq_codes"))
       assert(reloaded.select("id").as[Long].collect().toSeq ==
@@ -114,7 +114,7 @@ class PqSpec extends AnyFunSuite {
     val (codes, floats, ivfm, pqm) = Pq.readStore(spark, tmp)
     val meta = (0L until 300L).map(i => (i, i % 2)).toDF("mid", "par")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.PqAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.pq.autoProbe", "true")
     spark.conf.set("spark.graft.pq.nProbe", "2")
     try {
@@ -134,7 +134,7 @@ class PqSpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.pq.autoProbe")
       spark.conf.unset("spark.graft.pq.nProbe")
       classic.experimental.extraOptimizations = Nil
-      graft.plans.PqAutoProbe.invalidate(tmp)
+      graft.plans.PqFamily.invalidate(tmp)
     }
   }
 
@@ -149,7 +149,7 @@ class PqSpec extends AnyFunSuite {
     org.apache.spark.sql.GraftBridge.registerFunctions(spark)
     floats.createOrReplaceTempView("pq_floats_sql")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.PqAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.pq.autoProbe", "true")
     spark.conf.set("spark.graft.pq.nProbe", "2")
     spark.conf.set("spark.graft.pq.refine", "4")
@@ -192,7 +192,7 @@ class PqSpec extends AnyFunSuite {
     val conf = spark.sparkContext.hadoopConfiguration
     assert(Pq.readVersion(conf, tmp).contains(1L), "writeStore must stamp version 1")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations = Seq(graft.plans.PqAutoProbe(spark))
+    classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.pq.autoProbe", "true")
     spark.conf.set("spark.graft.pq.nProbe", "6")
     try {
@@ -232,7 +232,7 @@ class PqSpec extends AnyFunSuite {
     Pq.writeStore(corpus, "vec", "id", tmp, nList = 6, m = 8, ksub = 16)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     classic.experimental.extraOptimizations =
-      Seq(graft.plans.PqAutoProbe(spark), graft.plans.IvfAutoProbe(spark))
+      Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.pq.autoProbe", "true")
     spark.conf.set("spark.graft.ivf.autoProbe", "true")
     try {
