@@ -1225,14 +1225,8 @@ object Hnsw {
         }
       }
       .toDF("query_id", "neighbor_id", "score")
-    val topk = graft.functions.TopKScored.udafFor(k)
-    cand
-      .where(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
-      .groupBy("query_id")
-      .agg(topk(col("neighbor_id"), col("score")).as("nns"))
-      .select(col("query_id"), posexplode(col("nns")).as(Seq("pos", "nn")))
-      .select(col("query_id"), col("nn.id").as("neighbor_id"),
-        col("nn.score").as("score"), (col("pos") + 1).as("rank"))
+    Search.rankedPerQuery(
+      cand.where(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true)), k)
   }
 
   /** The store with every shard's rows in one partition (hash on `shard`;

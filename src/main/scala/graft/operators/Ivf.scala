@@ -37,7 +37,7 @@ object Ivf {
         queryVec: Seq[Double], margin: Double,
         minProbe: Int = 1, maxProbe: Int = Int.MaxValue,
     ): Seq[Int] = {
-      require(margin >= 0, s"margin must be nonnegative: $margin")
+      Model.requireMargin(margin, minProbe, maxProbe)
       val ranked = rankedLists(queryVec)
       if (ranked.isEmpty) return Seq.empty
       val cut  = ranked.head._1 * (1 + margin) * (1 + margin)
@@ -48,19 +48,6 @@ object Ivf {
 
     /** (squared distance, id) for every centroid, ascending. */
     private def rankedLists(queryVec: Seq[Double]): Seq[(Double, Int)] = {
-      require(centroids.isEmpty || centroids.head.length == queryVec.length,
-        s"query dim ${queryVec.length} != index dim ${centroids.headOption.map(_.length).getOrElse(0)}")
-      val q = queryVec.toArray
-      def sq(a: Array[Double]): Double = {
-        var s = 0.0; var i = 0
-        while (i < a.length) { s += (a(i) - q(i)) * (a(i) - q(i)); i += 1 }
-        s
-      }
-      centroids.zipWithIndex.map { case (c, i) => (sq(c), i) }.sortBy(t => (t._1, t._2)).toSeq
-    }
-
-    /** nProbe closest centroid ids to the query (exact, driver-side). */
-    def probeLists(queryVec: Seq[Double], nProbe: Int): Seq[Int] = {
       // explicit dim guard: a short query would throw from deep inside sq,
       // a LONG one would silently rank centroids on a prefix and probe
       // uncorrelated lists (recall loss with no error)
@@ -75,7 +62,23 @@ object Ivf {
         while (i < a.length) { s += (a(i) - q(i)) * (a(i) - q(i)); i += 1 }
         s
       }
-      centroids.zipWithIndex.sortBy { case (c, i) => (sq(c), i) }.take(nProbe).map(_._2).toSeq
+      centroids.zipWithIndex.map { case (c, i) => (sq(c), i) }.sortBy(t => (t._1, t._2)).toSeq
+    }
+
+    /** nProbe closest centroid ids to the query (exact, driver-side). */
+    def probeLists(queryVec: Seq[Double], nProbe: Int): Seq[Int] =
+      rankedLists(queryVec).take(nProbe).map(_._2)
+  }
+
+  object Model {
+
+    /** The margin rule's arguments: a bound below 1, or a floor above the
+      * cap, would silently probe no list or a width nobody asked for.
+      */
+    private[graft] def requireMargin(margin: Double, minProbe: Int, maxProbe: Int): Unit = {
+      require(margin >= 0, s"margin must be nonnegative: $margin")
+      require(maxProbe >= 1, s"maxProbe must be at least 1: $maxProbe")
+      require(minProbe <= maxProbe, s"minProbe ($minProbe) must not exceed maxProbe ($maxProbe)")
     }
   }
 
@@ -816,7 +819,7 @@ object Ivf {
     * top-k neighbors from its own nProbe nearest lists. [[search]] serves
     * one query with a pruned scan; a training-data pipeline attaches
     * neighbors to MILLIONS of rows, where per-query scans would mean
-    * |q| full job launches. Shape:
+    * |q| full job launches. Shape ([[Probe]]'s batch form):
     *
     *  1. each query row fans out to its nProbe list ids (broadcast
     *     centroids, one narrow pass over the query frame — no collect);
@@ -831,25 +834,18 @@ object Ivf {
     * query didn't probe). Output: (query_id, neighbor_id, score, rank) like
     * [[Search.knnJoin]].
     *
-    * FILTERED batch search — [[Search.cardinalityGate]], IVF-shaped:
-    * `filters` over `payload` (carrying `payloadIdCol` + the filter
-    * columns). The probe compensates selectivity by WIDENING nProbe by
-    * 1/sel, so the expected allowed candidate mass per query is
-    * preserved. When the widened probe would reach (or pass) nList,
-    * probing is a full scan anyway, so the gate routes to the
-    * strictly-cheaper EXACT branch — brute-force [[Search.knnJoin]] over
-    * the allowed survivors. On the probe branch the allowed-id semi-join
-    * lands on the CANDIDATE frame (bounded at |q|·n·nProbe'/nList rows),
-    * never on the store. One gate decision per batch; `selectivityHint` skips the estimate scan.
+    * FILTERED batch search: `filters` over `payload` (carrying
+    * `payloadIdCol` + the filter columns), one gate decision per batch —
+    * the probe widens by 1/sel with the allowed ids cut on the candidate
+    * frame, or runs exact over the allowed survivors once the widened
+    * probe reaches nList. `selectivityHint` skips the estimate scan.
     *
     * QUANTIZED stores: each query row routes by ITS OWN vector, so against
     * an index fitted on SQ8 codes the query column must be in the same
     * code space — pass pre-quantized query vectors (the batch analog of
-    * [[search]]'s `routeVec`; see [[Quant.sq8QueryCodes]] for why float
-    * routing against code-space centroids collapses recall). Scoring then
-    * runs symmetric quantized cosine, which the per-vector scale
-    * cancellation keeps within the int8 rounding error — the v42 oracle
-    * value-checks the whole shape.
+    * [[search]]'s `routeVec`). Scoring then runs symmetric quantized
+    * cosine, which the per-vector scale cancellation keeps within the int8
+    * rounding error — the v42 oracle value-checks the whole shape.
     */
   def knnJoin(
       indexed: DataFrame,
@@ -866,100 +862,22 @@ object Ivf {
       payload: DataFrame = null,
       payloadIdCol: String = "id",
       selectivityHint: Double = Double.NaN,
-  ): DataFrame = {
-    import graft.functions.VectorOps._
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    require(model.centroids.nonEmpty, "knnJoin needs a fitted index (empty centroid set)")
-    require(nProbe >= 1, s"nProbe must be at least 1: $nProbe")
-    var nP = math.min(nProbe, model.centroids.length)
-    var allowed: DataFrame = null
-    if (filters.nonEmpty) {
-      require(payload != null,
-        "filtered knnJoin needs the payload frame carrying payloadIdCol + the filter columns")
-      val pred = filters.reduce(_ && _)
-      Search.cardinalityGate(payload, pred, selectivityHint, nP, model.centroids.length) match {
-        case None =>
-          // ids pre-cast to long so both gate branches emit ONE schema (the
-          // probe branch casts through its own select)
-          return Search.knnJoin(
-            queries.select(col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol)),
-            indexed.select(col(idCol).cast("long").as(idCol), col(vecCol)).join(
-              payload.where(pred).select(col(payloadIdCol).cast("long").as("__aid")),
-              col(idCol) === col("__aid"), "left_semi"),
-            queryVecCol, queryIdCol, vecCol, idCol, k, excludeSelf)
-        case Some(w) => nP = w
-      }
-      allowed = payload.where(pred)
-        .select(col(payloadIdCol).cast("long").as("neighbor_id"))
-    }
-    val bcModel = spark.sparkContext.broadcast(model)
-    val nPF     = nP
-    val fanned = graft.Par.fanOut(
-      queries.select(col(queryIdCol).cast("long").as("query_id"), asDouble(col(queryVecCol)).as("__qv")))
-      .as[(Long, Seq[Double])]
-      .flatMap { case (qid, v) =>
-        bcModel.value.probeLists(v, nPF).iterator.map(l => (qid, v, l))
-      }
-      .toDF("query_id", "__qv", "list_id")
-    probeJoinTail(indexed, fanned, idCol, vecCol, excludeSelf, allowed, k)
-  }
-
-  /** The batch probe's scoring tail shared by [[knnJoin]] and
-    * [[knnJoinAdaptive]]: store ⋈ fanned on `list_id` (candidate volume
-    * bounded by the fan-out, co-located by whole lists), the optional
-    * allowed-id semi-join on the CANDIDATE frame (never the store), exact
-    * cosine with the NaN guard, and the map-side-combined TopKScored cut
-    * so the final shuffle carries ≤ k rows per (query, partition).
-    */
-  private def probeJoinTail(
-      indexed: DataFrame,
-      fanned: DataFrame,
-      idCol: String,
-      vecCol: String,
-      excludeSelf: Boolean,
-      allowed: DataFrame,
-      k: Int,
-  ): DataFrame = {
-    import graft.functions.VectorOps._
-    val hydrated = indexed
-      .select(col(idCol).cast("long").as("neighbor_id"), asDouble(col(vecCol)).as("__cv"), col("list_id"))
-      .join(fanned, Seq("list_id"))
-      .where(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
-    val gated =
-      if (allowed == null) hydrated
-      else hydrated.join(allowed, Seq("neighbor_id"), "left_semi")
-    val cand = gated
-      .select(col("query_id"), col("neighbor_id"),
-        graft.functions.VectorExpressions.cosineFast(col("__cv"), col("__qv")).as("score"))
-      .where(!isnan(col("score")))
-    val topk = graft.functions.TopKScored.udafFor(k)
-    cand
-      .groupBy("query_id")
-      .agg(topk(col("neighbor_id"), col("score")).as("nns"))
-      .select(col("query_id"), posexplode(col("nns")).as(Seq("pos", "nn")))
-      .select(
-        col("query_id"),
-        col("nn.id").as("neighbor_id"),
-        col("nn.score").as("score"),
-        (col("pos") + 1).as("rank"),
-      )
-  }
+  ): DataFrame =
+    Probe.knnJoin(model, Probe.Fixed(nProbe), Probe.Cosine(indexed, vecCol, idCol),
+      Probe.Filter(filters, payload, payloadIdCol, selectivityHint), queries, queryVecCol, queryIdCol, k, excludeSelf)
 
   /** [[knnJoin]] with PER-QUERY geometry-aware probe widths — the batch
     * form of [[searchAdaptive]] (round 16): each query fans out to the
     * lists inside its own centroid-margin cut (tight queries probe few
     * lists, boundary queries widen), so a mixed batch spends its
     * candidate budget where the geometry needs it instead of a fixed
-    * nProbe everywhere. Filters ride the same cardinality gate, applied
-    * PER QUERY to the adaptive base: one shared estimate decision per
-    * batch, then each query's width widens by 1/sel
-    * ([[Search.widenedWidth]]); a query whose widened cut reaches nList
-    * probes every list — its rows are EXACT through the same plan, no
-    * separate branch (the batch analog of searchAdaptive's exact
-    * fallback; a per-query plan split would fan out per QUERY, the
-    * scale-killer this family refuses). sel == 0 is that same every-list
-    * probe, which returns the empty frame.
+    * nProbe everywhere. A filtered batch makes ONE gate decision, at its
+    * narrowest base (`minProbe` clamped to `[1, maxProbe]`): the exact
+    * branch when even that base widens to nList (or nothing passes),
+    * otherwise each query widens its own base by 1/sel, and a query whose
+    * widened cut reaches nList probes every list — its rows are exact
+    * through the same plan (a per-query plan split would fan out per
+    * QUERY, the scale-killer this family refuses).
     */
   def knnJoinAdaptive(
       indexed: DataFrame,
@@ -978,73 +896,29 @@ object Ivf {
       payload: DataFrame = null,
       payloadIdCol: String = "id",
       selectivityHint: Double = Double.NaN,
-  ): DataFrame = {
-    import graft.functions.VectorOps._
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    require(model.centroids.nonEmpty, "knnJoinAdaptive needs a fitted index (empty centroid set)")
-    var allowed: DataFrame = null
-    var sel    = 1d
-    if (filters.nonEmpty) {
-      require(payload != null,
-        "filtered knnJoinAdaptive needs the payload frame carrying payloadIdCol + the filter columns")
-      val pred = filters.reduce(_ && _)
-      sel = Search.estimatedSelectivity(payload, pred, selectivityHint)
-      allowed = payload.where(pred)
-        .select(col(payloadIdCol).cast("long").as("neighbor_id"))
-    }
-    val bcModel = spark.sparkContext.broadcast(model)
-    val (selF, mF, minF, maxF) = (sel, margin, minProbe, maxProbe)
-    val fanned = graft.Par.fanOut(
-      queries.select(col(queryIdCol).cast("long").as("query_id"), asDouble(col(queryVecCol)).as("__qv")))
-      .as[(Long, Seq[Double])]
-      .flatMap { case (qid, v) =>
-        val m     = bcModel.value
-        val nList = m.centroids.length
-        val base  = m.adaptiveProbeLists(v, mF, minF, maxF).length
-        val w     = Search.widenedWidth(base, selF, nList).getOrElse(nList)
-        m.adaptiveProbeLists(v, mF, w, w).iterator.map(l => (qid, v, l))
-      }
-      .toDF("query_id", "__qv", "list_id")
-    probeJoinTail(indexed, fanned, idCol, vecCol, excludeSelf, allowed, k)
-  }
+  ): DataFrame =
+    Probe.knnJoin(model, Probe.Margin(margin, minProbe, maxProbe), Probe.Cosine(indexed, vecCol, idCol),
+      Probe.Filter(filters, payload, payloadIdCol, selectivityHint), queries, queryVecCol, queryIdCol, k, excludeSelf)
 
   /** ANN top-k: exact search restricted to the nProbe nearest lists. When
     * `indexed` comes from [[indexFor]]/[[writeIndexed]], the `isin` lands in
     * the scan's `PartitionFilters`, so only nProbe/nList of the store's files
     * are listed and read.
     *
-    * FILTERED search runs behind the same CARDINALITY GATE as
-    * [[knnJoin]]/[[Hnsw.searchIndex]] (the reference's canonical query is
-    * filtered k-NN — backend/vector_db.py:131-170): a fixed-width probe
-    * under a selective predicate reads nProbe/nList of the corpus but
-    * keeps only `sel` of it, so the filtered candidate mass collapses and
-    * recall falls off a cliff. [[Search.cardinalityGate]] WIDENS the probe
-    * by 1/sel — expected allowed mass per probe preserved — and
-    * when the widened probe reaches nList (probing everything anyway, so
-    * pruning buys nothing) routes to the strictly-cheaper EXACT branch:
-    * brute-force [[Search.topK]] over the allowed survivors, exact by
-    * construction at any scale. `sel == 0` (nothing passes) degenerates
-    * into that same exact branch and returns empty for free.
+    * FILTERED search runs behind the cardinality gate ([[Probe]]): the
+    * probe widens by 1/sel, and once the widened probe reaches nList the
+    * exact brute-force top-k over the allowed survivors runs instead;
+    * nothing passing returns empty. Two predicate carriers: with
+    * `payload == null` the filters reference the store's OWN columns;
+    * with a `payload` frame (carrying `payloadIdCol` + the filter columns)
+    * the allowed ids semi-join the pruned probe scan. `selectivityHint`
+    * skips the one-aggregate estimate scan. With `filters` empty there is
+    * no estimate scan.
     *
-    * Two predicate carriers, matching how quantized stores split payload
-    * from codes: with `payload == null` the filters reference the store's
-    * OWN columns (applied as pushed `where`s on both branches); with a
-    * `payload` frame (carrying `payloadIdCol` + the filter columns — e.g.
-    * an SQ8 codes store whose labels live in the source table) the
-    * allowed ids semi-join the store, landing on the PRUNED probe scan on
-    * the probe branch, never on the full store. `selectivityHint` skips
-    * the one-aggregate estimate scan, same contract as [[knnJoin]].
-    * With `filters` empty the body is the pre-gate implementation
-    * verbatim — same plan, no estimate scan.
-    *
-    * `routeVec` (default: `queryVec`) is the vector the PROBE ranks
-    * centroids against, separate from the one candidates are SCORED
-    * against. Needed when the store is indexed in a transformed space —
-    * an SQ8 codes store's centroids live in int8 code space, where a raw
-    * float query's L2 ranking degenerates to centroid-norm ordering (see
-    * [[Quant.sq8QueryCodes]] for the measured failure); scoring stays on
-    * `queryVec`, exact under cosine's scale cancellation.
+    * `routeVec` (default: `queryVec`) is the vector the probe ranks
+    * centroids against, for a store indexed in a transformed space (SQ8
+    * codes, see [[Quant.sq8QueryCodes]]); candidates are scored against
+    * `queryVec`.
     */
   def search(
       indexed: DataFrame,
@@ -1059,49 +933,23 @@ object Ivf {
       payloadIdCol: String = "id",
       selectivityHint: Double = Double.NaN,
       routeVec: Seq[Double] = null,
-  ): DataFrame = {
-    require(nProbe >= 1, s"nProbe must be at least 1: $nProbe")
-    var nP = math.min(nProbe, model.centroids.length)
-    var allowed: DataFrame = null
-    var storeFilters: Seq[Column] = Nil
-    if (filters.nonEmpty) {
-      val pred = filters.reduce(_ && _)
-      Search.cardinalityGate(
-        if (payload == null) indexed else payload, pred, selectivityHint, nP, model.centroids.length) match {
-        case None =>
-          return Search.topK(
-            if (payload == null) indexed
-            else indexed.join(payload.where(pred).select(col(payloadIdCol).as("__aid")),
-              col(idCol) === col("__aid"), "left_semi"),
-            vecCol, idCol, queryVec, k, if (payload == null) filters else Nil)
-        case Some(w) => nP = w
-      }
-      if (payload == null) storeFilters = filters
-      else allowed = payload.where(pred).select(col(payloadIdCol).as("__aid"))
-    }
-    val lists = model.probeLists(if (routeVec == null) queryVec else routeVec, nP)
-    val pruned = indexed.where(col("list_id").isin(lists: _*))
-    val gated =
-      if (allowed == null) pruned
-      else pruned.join(allowed, col(idCol) === col("__aid"), "left_semi")
-    Search.topK(gated, vecCol, idCol, queryVec, k, storeFilters)
-  }
+  ): DataFrame =
+    Probe.topK(model, Probe.Fixed(nProbe), Probe.Cosine(indexed, vecCol, idCol),
+      Probe.Filter(filters, payload, payloadIdCol, selectivityHint), queryVec, k, routeVec)
 
-  /** [[search]] with the probe width chosen per query by
-    * [[Model.adaptiveProbeLists]] — geometry decides, not a global
-    * constant. Same partition-pruned scan shape. `routeVec` is
-    * [[search]]'s contract: the vector the margin geometry runs in —
-    * a quantized store's margins are meaningless against a raw float
-    * query ([[Quant.sq8QueryCodes]]).
+  /** [[search]] with the probe width chosen per query by the centroid-margin
+    * rule — every list within `(1+margin)²` of the nearest centroid's
+    * squared distance, clamped to `[minProbe, maxProbe]` — so geometry
+    * decides, not a global constant. Same partition-pruned scan shape.
+    * `routeVec` is [[search]]'s contract: the vector the margin geometry
+    * runs in — a quantized store's margins are meaningless against a raw
+    * float query ([[Quant.sq8QueryCodes]]).
     *
-    * Filtered queries run behind [[search]]'s CARDINALITY GATE (the rest
-    * of the family gained it in rounds 13–14; this entry point silently
-    * kept the geometry-chosen width and hit the same recall cliff): the
-    * geometry picks the base width, the gate widens it by `1/sel` —
-    * overriding `maxProbe`, which bounds the GEOMETRY's appetite, not the
+    * Filters reference the store's own columns and run behind [[search]]'s
+    * gate: the geometry picks the base width, the gate widens it by `1/sel`
+    * — overriding `maxProbe`, which bounds the GEOMETRY's appetite, not the
     * floor the predicate imposes — and routes to the exact brute-force
-    * branch once the widened probe reaches nList. Filters here reference
-    * the store's own columns ([[search]]'s `payload == null` carrier).
+    * branch once the widened probe reaches nList.
     */
   def searchAdaptive(
       indexed: DataFrame,
@@ -1116,19 +964,7 @@ object Ivf {
       filters: Seq[Column] = Nil,
       routeVec: Seq[Double] = null,
       selectivityHint: Double = Double.NaN,
-  ): DataFrame = {
-    val rv = if (routeVec == null) queryVec else routeVec
-    var lists = model.adaptiveProbeLists(rv, margin, minProbe, maxProbe)
-    if (filters.nonEmpty && lists.nonEmpty) {
-      val pred = filters.reduce(_ && _)
-      Search.cardinalityGate(indexed, pred, selectivityHint, lists.length, model.centroids.length) match {
-        case None => return Search.topK(indexed, vecCol, idCol, queryVec, k, filters)
-        case Some(w) if w > lists.length => lists = model.adaptiveProbeLists(rv, margin, w, w)
-        case _ => ()
-      }
-    }
-    Search.topK(
-      indexed.where(col("list_id").isin(lists: _*)),
-      vecCol, idCol, queryVec, k, filters)
-  }
+  ): DataFrame =
+    Probe.topK(model, Probe.Margin(margin, minProbe, maxProbe), Probe.Cosine(indexed, vecCol, idCol),
+      Probe.Filter(filters, hint = selectivityHint), queryVec, k, routeVec)
 }

@@ -462,25 +462,17 @@ object Pq {
     * just those candidates against the float store (pruned to the SAME
     * lists — a candidate's vector lives in the list its code came from).
     *
-    * FILTERED search runs behind the same CARDINALITY GATE as
-    * [[Ivf.search]]/[[Hnsw.searchIndex]] (the reference's canonical query
-    * is filtered k-NN — backend/vector_db.py:131-170, and the compressed
-    * store is exactly what a 100 TB deployment runs it on): `filters` are
-    * predicates over `payload` (carrying `payloadIdCol` + the filter
-    * columns — the code store holds only ids and codes). The probe
-    * compensates selectivity by WIDENING ([[Search.cardinalityGate]]:
-    * nProbe by 1/sel, so the expected allowed candidate mass is
-    * preserved), with the allowed-id semi-join landing on the PRUNED code
-    * scan BEFORE the ADC top-k·refine cut — filtering after the cut would
-    * silently shrink the candidate pool instead of the corpus. When the
-    * widened probe reaches nList (a full scan anyway), the gate routes to
-    * the strictly-cheaper EXACT branch: brute-force float-precision
-    * [[Search.topK]] over the allowed survivors — exact by construction,
-    * no recall cliff, and it reads floats only for rows that pass (few,
-    * by the gate's own premise). `sel == 0` degenerates into that exact branch and returns
-    * empty for free. `selectivityHint` skips the estimate scan, same
-    * contract as the other gates. With `filters` empty the body is the
-    * pre-gate implementation verbatim.
+    * FILTERED search runs behind the cardinality gate ([[Probe]]; the
+    * compressed store is exactly what a 100 TB deployment runs filtered
+    * k-NN on): `filters` are predicates over `payload` (carrying
+    * `payloadIdCol` + the filter columns — the code store holds only ids
+    * and codes). The probe widens by 1/sel, with the allowed-id semi-join
+    * landing on the PRUNED code scan BEFORE the ADC top-k·refine cut; once
+    * the widened probe reaches nList, the exact float-precision top-k over
+    * the allowed survivors runs instead — no recall cliff, and it reads
+    * floats only for rows that pass. Nothing passing returns empty.
+    * `selectivityHint` skips the estimate scan. With `filters` empty there
+    * is no estimate scan.
     */
   def searchIvfPq(
       codes: DataFrame,
@@ -497,36 +489,9 @@ object Pq {
       payload: DataFrame = null,
       payloadIdCol: String = "id",
       selectivityHint: Double = Double.NaN,
-  ): DataFrame = {
-    require(nProbe >= 1 && refine >= 1, s"nProbe and refine must be at least 1: $nProbe, $refine")
-    var nP = math.min(nProbe, ivfModel.centroids.length)
-    var allowed: DataFrame = null
-    if (filters.nonEmpty) {
-      require(payload != null,
-        "filtered searchIvfPq needs the payload frame carrying payloadIdCol + the filter " +
-          "columns (the code store holds only ids and codes)")
-      val pred = filters.reduce(_ && _)
-      val allowedIds = payload.where(pred).select(col(payloadIdCol).as("__aid"))
-      Search.cardinalityGate(payload, pred, selectivityHint, nP, ivfModel.centroids.length) match {
-        case None =>
-          return Search.topK(
-            floats.join(allowedIds, col(idCol) === col("__aid"), "left_semi"),
-            vecCol, idCol, queryVec, k)
-        case Some(w) => nP = w
-      }
-      allowed = allowedIds
-    }
-    val lists = ivfModel.probeLists(queryVec, nP)
-    val prunedCodes = codes.where(col("list_id").isin(lists: _*))
-    val gatedCodes =
-      if (allowed == null) prunedCodes
-      else prunedCodes.join(allowed, col(idCol) === col("__aid"), "left_semi")
-    val cand = topKOnCodes(gatedCodes, "pq_codes", idCol, queryVec, k * refine, pqModel)
-      .select(idCol)
-    Search.topK(
-      floats.where(col("list_id").isin(lists: _*)).join(broadcast(cand), Seq(idCol)),
-      vecCol, idCol, queryVec, k)
-  }
+  ): DataFrame =
+    Probe.topK(ivfModel, Probe.Fixed(nProbe), Probe.Adc(codes, floats, pqModel, refine, vecCol, idCol),
+      Probe.Filter(filters, payload, payloadIdCol, selectivityHint), queryVec, k)
 
   /** Batch ANN against the IVF-PQ store — the k-NN JOIN form of
     * [[searchIvfPq]] ([[Ivf.knnJoin]]'s shape on the compressed tier): a
@@ -551,12 +516,12 @@ object Pq {
     *     lists, the documented plateau) + the query vectors re-join by
     *     id; exact cosine, then the final top-k per query.
     *
-    * FILTERED batch search — the same cardinality gate as [[searchIvfPq]]:
-    * `filters` over `payload`, probe WIDENED by 1/sel with the allowed-id
-    * semi-join landing on the candidate frame BEFORE the ADC cut, exact
-    * fallback (brute-force [[Search.knnJoin]] over allowed float rows)
-    * when the widened probe reaches nList. One gate decision per batch;
-    * `selectivityHint` skips the estimate scan.
+    * FILTERED batch search — [[searchIvfPq]]'s gate, one decision per
+    * batch: `filters` over `payload`, probe widened by 1/sel with the
+    * allowed-id semi-join landing on the candidate frame BEFORE the ADC
+    * cut, exact brute-force join over the allowed float rows when the
+    * widened probe reaches nList. `selectivityHint` skips the estimate
+    * scan.
     *
     * Output: (query_id, neighbor_id, score, rank) — [[Search.knnJoin]]'s
     * contract, scores float-precision from the re-rank.
@@ -579,81 +544,7 @@ object Pq {
       payload: DataFrame = null,
       payloadIdCol: String = "id",
       selectivityHint: Double = Double.NaN,
-  ): DataFrame = {
-    import graft.functions.VectorOps._
-    val spark = codes.sparkSession
-    import spark.implicits._
-    require(ivfModel.centroids.nonEmpty, "knnJoinIvfPq needs a fitted index (empty centroid set)")
-    require(nProbe >= 1 && refine >= 1, s"nProbe and refine must be at least 1: $nProbe, $refine")
-    var nP = math.min(nProbe, ivfModel.centroids.length)
-    var allowed: DataFrame = null
-    if (filters.nonEmpty) {
-      require(payload != null,
-        "filtered knnJoinIvfPq needs the payload frame carrying payloadIdCol + the filter " +
-          "columns (the code store holds only ids and codes)")
-      val pred = filters.reduce(_ && _)
-      val allowedIds = payload.where(pred).select(col(payloadIdCol).cast("long").as("__aid"))
-      Search.cardinalityGate(payload, pred, selectivityHint, nP, ivfModel.centroids.length) match {
-        case None =>
-          // exact branch: brute-force float-precision join over the allowed
-          // survivors — ids pre-cast to long so both branches emit ONE schema
-          return Search.knnJoin(
-            queries.select(col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol)),
-            floats.select(col(idCol).cast("long").as(idCol), col(vecCol)).join(
-              allowedIds, col(idCol) === col("__aid"), "left_semi"),
-            queryVecCol, queryIdCol, vecCol, idCol, k, excludeSelf)
-        case Some(w) => nP = w
-      }
-      allowed = allowedIds
-    }
-    val bcModel = spark.sparkContext.broadcast(ivfModel)
-    val nPF     = nP
-    val fanned = graft.Par.fanOut(
-      queries.select(col(queryIdCol).cast("long").as("query_id"), asDouble(col(queryVecCol)).as("__qv")))
-      .as[(Long, Seq[Double])]
-      .flatMap { case (qid, v) =>
-        bcModel.value.probeLists(v, nPF).iterator.map(l => (qid, v, l))
-      }
-      .toDF("query_id", "__qv", "list_id")
-    val candBase = codes
-      .select(col(idCol).cast("long").as("neighbor_id"), col("pq_codes"), col("list_id"))
-      .join(fanned, Seq("list_id"))
-      .where(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
-    val gated =
-      if (allowed == null) candBase
-      else candBase.join(allowed, col("neighbor_id") === col("__aid"), "left_semi")
-    val scored = gated.select(col("query_id"), col("neighbor_id"),
-      graft.functions.PqExpressions.pqAdcPair(col("pq_codes"), col("__qv"),
-        pqModel.flat, pqModel.m, pqModel.ksub, pqModel.dsub).as("__adc"))
-    val topC = graft.functions.TopKScored.udafFor(k * refine)
-    val cands = scored
-      .groupBy("query_id")
-      .agg(topC(col("neighbor_id"), col("__adc")).as("nns"))
-      .select(col("query_id"), explode(col("nns")).as("nn"))
-      .select(col("query_id"), col("nn.id").as("neighbor_id"))
-    // probed-list union: bounded by nList (list IDS, never data rows) —
-    // prunes the float store's re-rank scan to the lists any query probed
-    val probedLists = fanned.select("list_id").distinct().as[Int].collect().toSeq
-    val qv = queries.select(col(queryIdCol).cast("long").as("query_id"),
-      asDouble(col(queryVecCol)).as("__qv2"))
-    val rer = cands
-      .join(floats.where(col("list_id").isin(probedLists: _*))
-        .select(col(idCol).cast("long").as("neighbor_id"), asDouble(col(vecCol)).as("__cv")),
-        Seq("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.functions.VectorExpressions.cosineFast(col("__cv"), col("__qv2")).as("score"))
-      .where(col("score").isNotNull && !isnan(col("score")))
-    val topk = graft.functions.TopKScored.udafFor(k)
-    rer
-      .groupBy("query_id")
-      .agg(topk(col("neighbor_id"), col("score")).as("nns"))
-      .select(col("query_id"), posexplode(col("nns")).as(Seq("pos", "nn")))
-      .select(
-        col("query_id"),
-        col("nn.id").as("neighbor_id"),
-        col("nn.score").as("score"),
-        (col("pos") + 1).as("rank"),
-      )
-  }
+  ): DataFrame =
+    Probe.knnJoin(ivfModel, Probe.Fixed(nProbe), Probe.Adc(codes, floats, pqModel, refine, vecCol, idCol),
+      Probe.Filter(filters, payload, payloadIdCol, selectivityHint), queries, queryVecCol, queryIdCol, k, excludeSelf)
 }

@@ -247,8 +247,19 @@ object Search {
       // crashing the aggregate's non-nullable score encoder — the same
       // tolerance Ivf.knnJoin's candidate stage has
       .where(col("score").isNotNull && !isnan(col("score")))
+    rankedPerQuery(crossed, k)
+  }
+
+  /** The ranked per-query tail every batch k-NN join ends in: `scored`
+    * (query_id, neighbor_id, score) → the top k per query through
+    * [[TopKScored]]'s map-side-combined aggregate (the shuffle carries ≤ k
+    * rows per (query, partition)), as (query_id, neighbor_id, score, rank).
+    * Scores must be non-null: each caller drops null/NaN scores in its
+    * scoring step.
+    */
+  private[graft] def rankedPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val topk = TopKScored.udafFor(k)
-    crossed
+    scored
       .groupBy("query_id")
       .agg(topk(col("neighbor_id"), col("score")).as("nns"))
       .select(col("query_id"), posexplode(col("nns")).as(Seq("pos", "nn")))
@@ -299,12 +310,22 @@ object Search {
       cap: Long,
       population: DataFrame = null,
   ): Option[Int] =
-    widenedWidth(base, estimatedSelectivity(payload, pred, hint, population), cap)
+    gatedSelectivity(payload, pred, hint, base, cap, population).flatMap(widenedWidth(base, _, cap))
+
+  /** [[cardinalityGate]]'s decision with the estimate it was made on:
+    * `Some(sel)` = probe, `None` = exact branch. For a caller that widens
+    * more than one base by the one decision — [[Probe]]'s batch decides at
+    * its narrowest base, then widens each query's own.
+    */
+  private[graft] def gatedSelectivity(payload: DataFrame, pred: Column, hint: Double, base: Int, cap: Long,
+      population: DataFrame = null): Option[Double] = {
+    val sel = estimatedSelectivity(payload, pred, hint, population)
+    widenedWidth(base, sel, cap).map(_ => sel)
+  }
 
   /** The gate's pure widening step (no estimate, no decision): `base`
     * widened by `1/sel`, or `None` once it reaches `cap` or nothing
-    * passes. [[Ivf.knnJoinAdaptive]] applies it per query inside its
-    * fan-out to one batch-wide estimate.
+    * passes.
     */
   private[graft] def widenedWidth(base: Int, sel: Double, cap: Long): Option[Int] =
     if (sel == 0d) None

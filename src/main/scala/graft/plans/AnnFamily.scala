@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.operators.{Hnsw, Ivf, Pq}
+import graft.operators.{Hnsw, Ivf, Pq, Probe}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -25,10 +25,9 @@ private[plans] final class AnnConf(spark: SparkSession) {
   def ivf: Boolean      = flag("spark.graft.ivf.autoProbe")
   def ivfNProbe: Int    = positive("spark.graft.ivf.nProbe", 4)
   // geometry-aware base width for the injected probe: when set, the base
-  // is [[Ivf.Model.adaptiveProbeLists]]' margin rule, exactly like the
-  // explicit [[Ivf.searchAdaptive]] (both rank centroids identically —
-  // distance asc, tie by id — so the injected set at width w IS
-  // searchAdaptive's at min=max=w)
+  // is the centroid-margin rule of the explicit [[Ivf.searchAdaptive]];
+  // the injected set equals searchAdaptive's by construction — both take
+  // their width and list set from the one [[Probe.Margin]] policy
   def adaptiveMargin: Option[Double] = get("spark.graft.ivf.adaptiveMargin").map(_.toDouble)
   def pq: Boolean       = flag("spark.graft.pq.autoProbe")
   def pqNProbe: Int     = positive("spark.graft.pq.nProbe", 4)
@@ -109,7 +108,8 @@ private[plans] sealed abstract class TopKStore extends AnnStore {
 
 /** IVF: `list_id`-partitioned with the `_graft_centroids.txt` sidecar. A
   * single-query top-k keeps the user's plan and gets the probe INJECTED
-  * ([[DeclarativeAnn]]); the batch form substitutes [[Ivf.knnJoin]].
+  * ([[DeclarativeAnn]]); the batch form substitutes [[Probe]]'s batch join
+  * ([[Ivf.knnJoin]]'s).
   */
 private[plans] final case class IvfStore(
     spark: SparkSession, rel: LogicalRelation, vec: AttributeReference, part: AttributeReference,
@@ -130,9 +130,8 @@ private[plans] final case class IvfStore(
 
   def knnJoin(c: AnnConf, id: AttributeReference, queries: DataFrame, k: Int,
       filters: Seq[Column], payload: DataFrame, payloadIdCol: String, hint: Double): DataFrame =
-    Ivf.knnJoin(frame, model, queries, "__gqv", "__gqid", vec.name, id.name, k, c.ivfNProbe,
-      excludeSelf = false, filters = filters, payload = payload, payloadIdCol = payloadIdCol,
-      selectivityHint = hint)
+    Probe.knnJoin(model, Probe.Fixed(c.ivfNProbe), Probe.Cosine(frame, vec.name, id.name),
+      Probe.Filter(filters, payload, payloadIdCol, hint), queries, "__gqv", "__gqid", k, excludeSelf = false)
 }
 
 private[plans] object IvfFamily extends AnnFamily {
@@ -206,14 +205,15 @@ private[plans] final case class PqStore(
 
   def topK(c: AnnConf, id: AttributeReference, q: Seq[Double], k: Int,
       filters: Seq[Column], payload: DataFrame, payloadIdCol: String): DataFrame =
-    Pq.searchIvfPq(codes, frame, ivf, pq, vec.name, id.name, q, k, c.pqNProbe, c.pqRefine,
-      filters = filters, payload = payload, payloadIdCol = payloadIdCol)
+    Probe.topK(ivf, Probe.Fixed(c.pqNProbe), scorer(c, id), Probe.Filter(filters, payload, payloadIdCol), q, k)
 
   def knnJoin(c: AnnConf, id: AttributeReference, queries: DataFrame, k: Int,
       filters: Seq[Column], payload: DataFrame, payloadIdCol: String, hint: Double): DataFrame =
-    Pq.knnJoinIvfPq(codes, frame, ivf, pq, queries, "__gqv", "__gqid", vec.name, id.name, k,
-      c.pqNProbe, c.pqRefine, excludeSelf = false, filters = filters, payload = payload,
-      payloadIdCol = payloadIdCol, selectivityHint = hint)
+    Probe.knnJoin(ivf, Probe.Fixed(c.pqNProbe), scorer(c, id), Probe.Filter(filters, payload, payloadIdCol, hint),
+      queries, "__gqv", "__gqid", k, excludeSelf = false)
+
+  private def scorer(c: AnnConf, id: AttributeReference): Probe.Scorer =
+    Probe.Adc(codes, frame, pq, c.pqRefine, vec.name, id.name)
 }
 
 /** Detection: the matched relation is `list_id`-partitioned parquet whose

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions.CosineSimilarity
-import graft.operators.Search
+import graft.operators.{Probe, Search}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -54,9 +54,10 @@ import org.apache.spark.sql.types._
   * saving only the sort); the family joins fan each query out to its
   * probed lists / per-shard beams. See [[rewriteWindow]] for the match.
   *
-  * Filtered queries of either shape run [[Search.cardinalityGate]], one
-  * decision per planned query (per predicate group for a per-query
-  * batch): the width widens by 1/sel and the exact branch takes over once
+  * Filtered queries of either shape run the one cardinality gate (in
+  * [[Search]], through [[Probe]] for IVF and IVF-PQ), one decision per
+  * planned query (per predicate group for a per-query batch): the width
+  * widens by 1/sel and the exact branch takes over once
   * the widened probe covers everything. Every rewrite trades exactness for
   * recall like the explicit call it stands for, so each family is OPT-IN
   * (`spark.graft.{ivf,pq,hnsw}.autoProbe`, the brute fallback
@@ -132,21 +133,20 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
         a => if (a.exprId == id.exprId) id.name else "score")
     }
 
-  /** IVF: inject the gated probe above the relation; the user's plan runs. */
+  /** IVF: inject the gated probe above the relation; the user's plan runs.
+    * The width policy and the gate are [[Probe]]'s, so the injected list
+    * set is the explicit call's ([[graft.operators.Ivf.search]] at
+    * `spark.graft.ivf.nProbe`, [[graft.operators.Ivf.searchAdaptive]] at
+    * `spark.graft.ivf.adaptiveMargin`).
+    */
   private def injectProbe(c: AnnConf, st: IvfStore, orig: GlobalLimit, proj: Option[Project],
       s: Sort, qv: Array[Double], scoreId: Option[ExprId]): Option[LogicalPlan] = {
-    val nList = st.model.centroids.length
     if (alreadyPruned(s.child, st.part)) return None
-    val base = c.adaptiveMargin match {
-      case Some(m) => math.max(1, st.model.adaptiveProbeLists(qv.toSeq, m).length)
-      case None    => math.min(c.ivfNProbe, nList)
-    }
+    val width = c.adaptiveMargin.fold[Probe.Width](Probe.Fixed(c.ivfNProbe))(Probe.Margin(_))
     for {
-      width <- gatedWidth(st, s.child, scoreId, base)
-      // probing everything — the user's exact plan wins
-      if width < nList
+      f      <- gateFilter(st, s.child, scoreId)
+      probes <- Probe.injected(st.model, width, f, qv.toSeq)
     } yield {
-      val probes = st.model.probeLists(qv.toSeq, width)
       val pruned = s.child.transformUp {
         case r: LogicalRelation if r eq st.rel =>
           Filter(In(st.part, probes.map(i => Literal(i))), r)
@@ -157,7 +157,7 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** [[Search.cardinalityGate]] in injection form, over the
+  /** What the injected probe's gate estimates, over the
     * [[TopKMatch.hydratedPredicates]] walk:
     *
     *  - plain path: user predicates on store columns gate the width (a
@@ -176,26 +176,24 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
     *    columns the walk can't account for — REFUSES: unaccounted mass
     *    means no pruning.
     *
-    * `None` = decline (the user's exact plan runs): the shape is refused,
-    * or the gate took its exact branch.
+    * The estimate frame rides as the filter's `payload`. `None` = decline
+    * (the user's exact plan runs): the shape is refused.
     */
-  private def gatedWidth(st: IvfStore, child: LogicalPlan, scoreId: Option[ExprId], base: Int): Option[Int] = {
-    def gate(frame: DataFrame, preds: Seq[Expression], population: DataFrame = null): Option[Int] =
-      Search.cardinalityGate(frame, preds.map(GraftBridge.column).reduce(_ && _), Double.NaN,
-        base, st.model.centroids.length, population)
+  private def gateFilter(st: IvfStore, child: LogicalPlan, scoreId: Option[ExprId]): Option[Probe.Filter] = {
     TopKMatch.hydratedPredicates(child, st.rel, st.vec, scoreId).flatMap { case (storeRaw, hyd) =>
       val gateable = storeRaw.filterNot(_.references.exists(a => st.excluded(a.exprId)))
       hyd match {
         case None =>
-          if (gateable.isEmpty) Some(base)
+          if (gateable.isEmpty) Some(Probe.Filter())
           else if (!gateable.forall(p => p.references.nonEmpty &&
             p.references.forall(a => st.rel.outputSet.contains(a)))) None
-          else gate(st.frame, gateable)
+          else Some(Probe.Filter(gateable.map(GraftBridge.column), st.frame))
         case Some(h) =>
           if (gateable.nonEmpty) None
           else {
             val preds = filtersOf(Nil, hyd)
-            gate(hydratedFrame(h, preds.flatMap(_.references)), preds, population = st.frame)
+            Some(Probe.Filter(preds.map(GraftBridge.column), hydratedFrame(h, preds.flatMap(_.references)),
+              population = st.frame))
           }
       }
     }

@@ -469,6 +469,57 @@ class IvfSpec extends AnyFunSuite {
     val brute = grouped(Search.knnJoin(queries, corpus, "qvec", "qid", "vec", "id", 5,
       excludeSelf = false))
     assert(exact == brute, "all-lists margin must equal the exact brute join")
+    // a predicate nothing passes: the batch's one gate decision takes the
+    // exact branch, which returns the empty, well-typed frame
+    val before = Search.gateDecisions.get()
+    val none = Ivf.knnJoinAdaptive(indexed, model, queries, "qvec", "qid", "vec", "id", 5, 0.15,
+      filters = Seq(col("id") < 0), payload = indexed.select("id"))
+    assert(none.columns.toSeq == Seq("query_id", "neighbor_id", "score", "rank") && none.count() == 0)
+    assert(Search.gateDecisions.get() - before == 1, "one gate decision per batch")
+    assert(!TestSpark.formattedPlan(none).contains("keys [1]: [list_id"),
+      "a batch nothing passes takes the exact branch, not a fan-out joined to every list")
+  }
+
+  test("adaptive width bounds below 1 or crossed fail naming the parameter, never return no rows") {
+    val (indexed, model) = Ivf.indexFor(corpus, "vec", 6, cacheKey = "ivfspec-kja")
+    val queries = corpus.where(col("id") < 4).select(col("id").as("qid"), col("vec").as("qvec"))
+    def rejects(name: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+    for (filters <- Seq(Nil, Seq(col("id") % 2 === 0))) {
+      rejects("maxProbe")(Ivf.searchAdaptive(indexed, model, "vec", "id", qVec, 5, 0.15,
+        maxProbe = 0, filters = filters).collect())
+      rejects("maxProbe")(Ivf.knnJoinAdaptive(indexed, model, queries, "qvec", "qid", "vec", "id", 5, 0.15,
+        maxProbe = 0, filters = filters, payload = indexed.select("id")).collect())
+    }
+    rejects("minProbe")(model.adaptiveProbeLists(qVec, 0.0, minProbe = 5, maxProbe = 2))
+    rejects("minProbe")(Ivf.searchAdaptive(indexed, model, "vec", "id", qVec, 5, 0.0,
+      minProbe = 5, maxProbe = 2).collect())
+  }
+
+  test("an empty centroid set fails on every IVF-family entry point, never returns no rows") {
+    val (indexed, _) = Ivf.indexFor(corpus, "vec", 6, cacheKey = "ivfspec-kja")
+    val empty   = Ivf.Model(Array.empty)
+    val queries = corpus.where(col("id") < 4).select(col("id").as("qid"), col("vec").as("qvec"))
+    val dir = java.nio.file.Files.createTempDirectory("ivf-empty-pq").toString
+    graft.operators.Pq.writeStore(corpus, "vec", "id", dir, nList = 6, m = 8, ksub = 16)
+    val (codes, floats, _, pqm) = graft.operators.Pq.readStore(spark, dir)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "search"         -> (() => Ivf.search(indexed, empty, "vec", "id", qVec, 5, 2).collect()),
+      "searchAdaptive" -> (() => Ivf.searchAdaptive(indexed, empty, "vec", "id", qVec, 5, 0.15).collect()),
+      "knnJoin"        -> (() => Ivf.knnJoin(indexed, empty, queries, "qvec", "qid", "vec", "id", 5, 2).collect()),
+      "knnJoinAdaptive" -> (() =>
+        Ivf.knnJoinAdaptive(indexed, empty, queries, "qvec", "qid", "vec", "id", 5, 0.15).collect()),
+      "searchIvfPq"    -> (() => graft.operators.Pq.searchIvfPq(codes, floats, empty, pqm, "vec", "id",
+        qVec, 5, 2).collect()),
+      "knnJoinIvfPq"   -> (() => graft.operators.Pq.knnJoinIvfPq(codes, floats, empty, pqm, queries,
+        "qvec", "qid", "vec", "id", 5, 2).collect()),
+    )
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("empty centroid set"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("searchAdaptive: filters ride the same cardinality gate as search (ADVICE r14)") {
@@ -581,6 +632,25 @@ class IvfSpec extends AnyFunSuite {
       s"2/6-probe recall collapsed: ${pruned.intersect(bruteIds).size}/${bruteIds.size}")
     // every query keeps k results (probed lists are never empty here)
     assert(pruned.groupBy(_._1).forall(_._2.size == 3))
+    // at the pruned width each query's batch rows ARE its own Ivf.search
+    // rows — unfiltered, and with a payload filter that widens the probe
+    // (sel 0.8: ceil(2/0.8) = 3 of 6 lists, one decision for the batch)
+    val payload = corpus.select(col("id"), (col("id") % 10).as("grp"))
+    val qvecs = queries.select(col("id"), col("vec")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq).toMap
+    for (filters <- Seq(Nil, Seq(col("grp") < 8))) {
+      val p = if (filters.isEmpty) null else payload
+      val batch = Ivf.knnJoin(indexed, model, queries, "vec", "id", "vec", "id", 3, nProbe = 2,
+        excludeSelf = false, filters = filters, payload = p)
+        .select("query_id", "neighbor_id", "score", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(t => (t._2, t._3)).toSeq).toMap
+      for ((qid, qv) <- qvecs) {
+        val solo = Ivf.search(indexed, model, "vec", "id", qv, 3, 2, filters = filters, payload = p)
+          .select("id", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(batch(qid) == solo, s"query $qid (filters $filters): batch rows must equal its solo search")
+      }
+    }
   }
 
   test("streamInto: micro-batches append into the live store; probes see new rows without a rebuild") {

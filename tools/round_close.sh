@@ -22,8 +22,10 @@ for sf in 0.001 0.01; do
   rm -rf "/tmp/round_close_$sf"
   sbt -batch "runMain graft.Verify /root/testdata/sf$sf /tmp/round_close_$sf" \
     2>&1 | grep '\[verify\]' || true
+  # the full per-query verdicts stay in verdicts.txt, so comparing two
+  # checkouts is one diff of that file
   if ! python3 tools/check_oracle.py "/tmp/round_close_$sf" "/root/testdata/sf$sf" \
-      | tail -3; then
+      | tee "/tmp/round_close_$sf/verdicts.txt" | tail -3; then
     echo "FAIL: oracle compare @ sf$sf"; fail=1
   fi
   [ "${1:-}" = "--quick" ] && break
