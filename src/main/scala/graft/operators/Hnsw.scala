@@ -610,25 +610,20 @@ object Hnsw {
     */
   final case class StoreMeta(nShards: Int, m: Int, efConstruction: Int)
 
-  private def metaPath(path: String) = new org.apache.hadoop.fs.Path(path, "_hnsw_meta")
+  private val MetaFile = "_hnsw_meta"
 
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession, path: String, meta: StoreMeta): Unit = {
-    val fs  = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath(path), true)
-    try out.write(s"${meta.nShards},${meta.m},${meta.efConstruction}".getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def writeMeta(conf: org.apache.hadoop.conf.Configuration, path: String, meta: StoreMeta): Unit =
+    Store.writeSidecar(conf, path, MetaFile, Iterator(s"${meta.nShards},${meta.m},${meta.efConstruction}"))
 
-  def readMeta(spark: org.apache.spark.sql.SparkSession, path: String): StoreMeta = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(metaPath(path))
-    val s  = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val Array(n, m, ef) = s.trim.split(",").map(_.toInt)
-    StoreMeta(n, m, ef)
-  }
+  def readMeta(spark: org.apache.spark.sql.SparkSession, path: String): StoreMeta =
+    Store.readSidecar(spark.sparkContext.hadoopConfiguration, path, MetaFile) { lines =>
+      val Array(n, m, ef) = lines.mkString.trim.split(",").map(_.toInt)
+      Some(StoreMeta(n, m, ef))
+    }.getOrElse(throw new IllegalStateException(s"no readable $MetaFile sidecar under $path — not an HNSW store?"))
 
   /** Build the sharded graphs of `df` and write the row-per-node store at
-    * `path` (one `shard=` directory per graph + the metadata sidecar).
+    * `path` (one `shard=` directory per graph + the metadata sidecar) as
+    * one [[Store.replace]]: `df` may read the store being replaced.
     * Shard label = the id-hash partition index, so new rows route to their
     * shard without reading the store.
     */
@@ -654,8 +649,11 @@ object Hnsw {
         else graphRows(shard, build(items, m, efConstruction))
       }
       .toDF("shard", "ord", "id", "level", "vec", "links", "entry", "max_level")
-    nodes.write.mode("overwrite").partitionBy("shard").parquet(path)
-    writeMeta(spark, path, StoreMeta(shards, m, efConstruction))
+    val conf = spark.sparkContext.hadoopConfiguration
+    Store.replace(conf, path) { stage =>
+      nodes.write.mode("overwrite").partitionBy("shard").parquet(stage)
+      writeMeta(conf, stage, StoreMeta(shards, m, efConstruction))
+    }
   }
 
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
@@ -674,7 +672,8 @@ object Hnsw {
     * insertion on each reconstructed graph via [[extend]], and overwrite
     * just those `shard=` directories. Untouched shards are never read or
     * written; per-batch cost is (touched shards) × (shard rebuild-free
-    * insert), not a corpus rebuild.
+    * insert), not a corpus rebuild. The touched shards commit through
+    * [[Store.swapPartitions]].
     *
     * Duplicate ids are skipped inside [[extend]]. Returns the number of
     * shards touched.
@@ -686,6 +685,8 @@ object Hnsw {
       vecCol: String,
       idCol: String,
   ): Int = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Store.recover(conf, path)
     val meta = readMeta(spark, path)
     import spark.implicits._
     val prepared = batch.select(col(idCol).cast("long").as("__id"), asDouble(col(vecCol)).as("__v"))
@@ -720,13 +721,7 @@ object Hnsw {
         }
       }
       .toDF("shard", "ord", "id", "level", "vec", "links", "entry", "max_level")
-    // per-writer option, not a session-conf toggle (Ivf.applyDelta's
-    // discipline): mutating the session conf races concurrent writers —
-    // a reset to 'static' mid-write would turn this into a full-table
-    // overwrite and delete every untouched shard directory
-    rebuilt.write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("shard").parquet(path)
+    Store.swapPartitions(conf, path, "shard", touched.toSeq, Seq(path -> rebuilt))
     touched.length
   }
 
@@ -762,94 +757,80 @@ object Hnsw {
       vecCol: String,
       idCol: String,
   ): Int = {
-    val meta = readMeta(spark, path)
-    import spark.implicits._
-    // complete any crashed shard swap BEFORE the store's file listing
-    // snapshots the directory layout
-    locally {
-      val fs0 = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Ivf.recoverDeltaSwap(fs0, new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.fs.Path(path + ".delta"), "shard=")
-    }
-    // same contract as Ivf.applyDelta: duplicate ids within `added` have no
-    // deterministic winner — fail loudly (one delta-sized agg)
-    val dupAdds = added.groupBy(col(idCol)).count().where(col("count") > 1).limit(1).count()
-    require(dupAdds == 0, s"applyDelta: duplicate ids within `added` (column $idCol)")
+    val conf = spark.sparkContext.hadoopConfiguration
+    // repair a crashed commit BEFORE the store's file listing snapshots the
+    // directory layout
+    Store.recover(conf, path)
+    val meta    = readMeta(spark, path)
+    val shardOf = pmod(hash(col("__id")), lit(meta.nShards)).cast("long")
+    // a null vector has no shard: deltaStats fails loudly on it
     val adds = added.select(col(idCol).cast("long").as("__id"), asDouble(col(vecCol)).as("__v"))
-      .withColumn("__shard", pmod(hash(col("__id")), lit(meta.nShards)).cast("long"))
-    val rems = removedIds.select(col(idCol).cast("long").as("__id")).distinct()
-      .withColumn("__shard", pmod(hash(col("__id")), lit(meta.nShards)).cast("long"))
-    val touched = adds.select("__shard").union(rems.select("__shard"))
-      .distinct().as[Long].collect().sorted
-    if (touched.isEmpty) return 0
-    val existing = readIndex(spark, path)
-      .where(col("shard").isin(touched: _*))
-      .select(col("shard").cast("long"), col("ord"), col("id"), col("level"),
-        col("vec"), col("links"), col("entry"), col("max_level"))
-    val m   = meta.m
-    val efC = meta.efConstruction
-    // kinds: 0 = store row, 1 = fresh insert, 2 = removal marker
-    val unioned = existing
-      .withColumn("__kind", lit(0))
-      .unionByName(
-        adds.select(col("__shard").as("shard"), lit(-1).as("ord"), col("__id").as("id"),
-          lit(0).as("level"), col("__v").as("vec"),
-          typedLit(Seq.empty[Seq[Int]]).as("links"), lit(0).as("entry"), lit(0).as("max_level"))
-          .withColumn("__kind", lit(1)))
-      .unionByName(
-        rems.select(col("__shard").as("shard"), lit(-1).as("ord"), col("__id").as("id"),
-          lit(0).as("level"), typedLit(Seq.empty[Double]).as("vec"),
-          typedLit(Seq.empty[Seq[Int]]).as("links"), lit(0).as("entry"), lit(0).as("max_level"))
-          .withColumn("__kind", lit(2)))
-    val rebuilt = unioned
-      .repartition(col("shard"))
-      .mapPartitions { rows =>
-        rows.toSeq.groupBy(_.getLong(0)).iterator.flatMap { case (shard, shardRows) =>
-          val byKind  = shardRows.groupBy(_.getInt(8))
-          val oldRows = byKind.getOrElse(0, Seq.empty)
-          val fresh   = byKind.getOrElse(1, Seq.empty)
-            .map(r => (r.getLong(2), r.getSeq[Double](4).toArray)).toArray
-          // removals + upserted ids both vacate existing rows
-          val gone = byKind.getOrElse(2, Seq.empty).map(_.getLong(2)).toSet ++ fresh.map(_._1)
-          if (oldRows.isEmpty) {
-            if (fresh.isEmpty) Iterator.empty else graphRows(shard, build(fresh, m, efC))
-          } else {
-            val g = graphOf(oldRows)
-            if (!g.ids.exists(gone)) graphRows(shard, extend(g, fresh, m, efC))
-            else {
-              val surviving = g.ids.indices.collect {
-                case o if !gone(g.ids(o)) => (g.ids(o), g.vecs(o))
+      .withColumn("__shard", when(col("__v").isNotNull, shardOf))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rems = removedIds.select(col(idCol).cast("long").as("__id")).withColumn("__shard", shardOf)
+      // Ivf.applyDelta's contract: ONE aggregate, the only evaluation of
+      // `added`, runs the duplicate guard and names the touched shards
+      // (id-hash routing — no store read)
+      val touched = Ivf.deltaStats(rems.withColumnRenamed("__id", idCol), adds.withColumnRenamed("__id", idCol),
+        idCol, "__shard", "applyDelta").parts.sorted
+      if (touched.isEmpty) return 0
+      import spark.implicits._
+      val existing = readIndex(spark, path)
+        .where(col("shard").isin(touched.map(Integer.valueOf).toIndexedSeq: _*))
+        .select(col("shard").cast("long"), col("ord"), col("id"), col("level"),
+          col("vec"), col("links"), col("entry"), col("max_level"))
+      val m   = meta.m
+      val efC = meta.efConstruction
+      // kinds: 0 = store row, 1 = fresh insert, 2 = removal marker
+      val unioned = existing
+        .withColumn("__kind", lit(0))
+        .unionByName(
+          adds.select(col("__shard").as("shard"), lit(-1).as("ord"), col("__id").as("id"),
+            lit(0).as("level"), col("__v").as("vec"),
+            typedLit(Seq.empty[Seq[Int]]).as("links"), lit(0).as("entry"), lit(0).as("max_level"))
+            .withColumn("__kind", lit(1)))
+        .unionByName(
+          rems.select(col("__shard").as("shard"), lit(-1).as("ord"), col("__id").as("id"),
+            lit(0).as("level"), typedLit(Seq.empty[Double]).as("vec"),
+            typedLit(Seq.empty[Seq[Int]]).as("links"), lit(0).as("entry"), lit(0).as("max_level"))
+            .withColumn("__kind", lit(2)))
+      val rebuilt = unioned
+        .repartition(col("shard"))
+        .mapPartitions { rows =>
+          rows.toSeq.groupBy(_.getLong(0)).iterator.flatMap { case (shard, shardRows) =>
+            val byKind  = shardRows.groupBy(_.getInt(8))
+            val oldRows = byKind.getOrElse(0, Seq.empty)
+            val fresh   = byKind.getOrElse(1, Seq.empty)
+              .map(r => (r.getLong(2), r.getSeq[Double](4).toArray)).toArray
+            // removals + upserted ids both vacate existing rows
+            val gone = byKind.getOrElse(2, Seq.empty).map(_.getLong(2)).toSet ++ fresh.map(_._1)
+            if (oldRows.isEmpty) {
+              if (fresh.isEmpty) Iterator.empty else graphRows(shard, build(fresh, m, efC))
+            } else {
+              val g = graphOf(oldRows)
+              if (!g.ids.exists(gone)) graphRows(shard, extend(g, fresh, m, efC))
+              else {
+                val surviving = g.ids.indices.collect {
+                  case o if !gone(g.ids(o)) => (g.ids(o), g.vecs(o))
+                }
+                val all = (surviving ++ fresh).toArray
+                if (all.isEmpty) Iterator.empty else graphRows(shard, build(all, m, efC))
               }
-              val all = (surviving ++ fresh).toArray
-              if (all.isEmpty) Iterator.empty else graphRows(shard, build(all, m, efC))
             }
           }
         }
-      }
-      .toDF("shard", "ord", "id", "level", "vec", "links", "entry", "max_level")
-    // ONE materialization (the Ivf.applyDelta discipline): write the
-    // touched shards' replacement data BESIDE the store — no lineage
-    // conflict with the files being read, so no localCheckpoint pass
-    // doubling the rebuild's I/O — then swap each touched shard
-    // directory in. A shard the delta emptied has no replacement
-    // directory and stays deleted. Crash safety: the recoverDeltaSwap
-    // pass at the NEXT call's entry (below, before this call's staging
-    // write) restores any shard whose live dir was deleted but whose
-    // replacement still sits under `.delta`, so a kill mid-swap never
-    // loses a shard.
-    val fs  = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".delta")
-    rebuilt.write.mode("overwrite").partitionBy("shard").parquet(tmp.toString)
-    Ivf.assertCommitMarker(fs, tmp)
-    touched.foreach { sh =>
-      val dst = new org.apache.hadoop.fs.Path(path, s"shard=$sh")
-      val src = new org.apache.hadoop.fs.Path(tmp, s"shard=$sh")
-      fs.delete(dst, true)
-      if (fs.exists(src)) fs.rename(src, dst)
+        .toDF("shard", "ord", "id", "level", "vec", "links", "entry", "max_level")
+      // ONE materialization (the Ivf.applyDelta discipline): the touched
+      // shards' replacement data is staged BESIDE the store — no lineage
+      // conflict with the files being read, so no localCheckpoint pass
+      // doubling the rebuild's I/O — then each touched shard directory
+      // swaps in; a shard the delta emptied stays deleted
+      Store.swapPartitions(conf, path, "shard", touched.toSeq, Seq(path -> rebuilt))
+      touched.length
+    } finally {
+      adds.unpersist()
     }
-    fs.delete(tmp, true)
-    touched.length
   }
 
   /** Shard-occupancy health of a store — the HNSW twin of
@@ -880,29 +861,19 @@ object Hnsw {
     * lifecycle gap where [[applyDelta]]'s selective rebuilds preserve the
     * build-time shard count forever. Cost: one full build (what the
     * store cost initially) — the operation applyDelta amortizes away
-    * until [[shardStats]] says otherwise. The rebuild stages into a
-    * sibling directory ([[writeIndex]] reads the live store, writes the
-    * sibling — no dynamic-overwrite self-read), then lands via two
-    * renames; `.old` is the crash-recovery breadcrumb.
+    * until [[shardStats]] says otherwise. The rebuild is [[writeIndex]]'s
+    * whole-store replace: it reads the live store into a complete staged
+    * store (data + sidecar), which then swaps in.
     */
   def reshard(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       nShards: Int = 0): StoreMeta = {
+    Store.recover(spark.sparkContext.hadoopConfiguration, path)
     val meta = readMeta(spark, path)
     val rows = spark.read.parquet(path).select(col("id"), col("vec"))
     val target = if (nShards > 0) nShards else shardsFor(rows.count())
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs   = root.getFileSystem(conf)
-    val tmp  = new org.apache.hadoop.fs.Path(path + ".reshard")
-    fs.delete(tmp, true)
-    writeIndex(rows, "vec", "id", tmp.toString, target, meta.m, meta.efConstruction)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    fs.delete(old, true)
-    fs.rename(root, old)
-    fs.rename(tmp, root)
-    fs.delete(old, true)
+    writeIndex(rows, "vec", "id", path, target, meta.m, meta.efConstruction)
     StoreMeta(target, meta.m, meta.efConstruction)
   }
 
@@ -931,6 +902,7 @@ object Hnsw {
       path: String,
       rowsPerShard: Long = RowsPerShard): DataFrame = {
     require(rowsPerShard >= 1L, s"rowsPerShard must be positive: $rowsPerShard")
+    Store.recover(spark.sparkContext.hadoopConfiguration, path)
     val meta   = readMeta(spark, path)
     val total  = spark.read.parquet(path).select(col("id")).count()
     val target = math.max(1L, (total + rowsPerShard - 1) / rowsPerShard).toInt

@@ -132,33 +132,38 @@ object Ivf {
 
   /** What an upsert must know about its delta before it touches the store:
     * `rows` = rows of removed ∪ added ids (what the broadcast gate sizes;
-    * the distinct id count whenever no id repeats), `gaining` = the lists
-    * an added row lands in.
+    * the distinct id count whenever no id repeats), `parts` = the
+    * partitions the delta's rows name (IVF: the lists an added row lands
+    * in; HNSW: the id-hash shards of every removed and added id).
     */
-  private[graft] final case class DeltaStats(rows: Long, gaining: Array[Int])
+  private[graft] final case class DeltaStats(rows: Long, parts: Array[Int])
 
   /** ONE aggregate over the delta's ids, removals and additions tagged
-    * apart, answering every question [[applyDelta]] and [[Pq.applyDelta]]
-    * ask of it. `assigned` is the added rows with their `list_id`,
-    * persisted by the caller: this is its first action, so the caller's
-    * chunk → embed lineage runs here and every later use reads the cache.
-    * Fails on duplicate added ids (no deterministic winner, and two rows
-    * would land under one id) and on added rows with no list (a null
-    * vector has no partition to be swapped into).
+    * apart, answering every question [[applyDelta]], [[Pq.applyDelta]] and
+    * [[Hnsw.applyDelta]] ask of it. `removed` and `assigned` carry `idCol`
+    * and the partition column `part` (null on a removal row that names no
+    * partition); `assigned` is persisted by the caller: this is its first
+    * action, so the caller's chunk → embed lineage runs here and every
+    * later use reads the cache. Fails on duplicate added ids (no
+    * deterministic winner, and two rows would land under one id) and on
+    * added rows with no partition (a null vector has none to be swapped
+    * into).
     */
-  private[graft] def deltaStats(removedIds: DataFrame, assigned: DataFrame, idCol: String, op: String): DeltaStats = {
-    val tagged = removedIds.select(col(idCol), lit(null).cast("int").as("list_id"), lit(0L).as("__add"))
-      .union(assigned.select(col(idCol), col("list_id"), lit(1L).as("__add")))
-    val perId = tagged.groupBy(col(idCol))
-      .agg(sum("__add").as("__adds"), count(lit(1)).as("__rows"), max("list_id").as("list_id"))
+  private[graft] def deltaStats(
+      removed: DataFrame, assigned: DataFrame, idCol: String, part: String, op: String): DeltaStats = {
+    val tagged = removed.select(col(idCol), col(part), lit(0L).as("__add"))
+      .union(assigned.select(col(idCol), col(part), lit(1L).as("__add")))
+    val perId = tagged.groupBy(col(idCol)).agg(
+      sum("__add").as("__adds"), count(lit(1)).as("__rows"), max(part).as("__part"),
+      count_if(col("__add") === 1L && col(part).isNull).as("__lost"))
     val r = perId.agg(
       coalesce(max("__adds"), lit(0L)),
       coalesce(sum("__rows"), lit(0L)),
-      collect_set("list_id"),
-      count_if(col("__adds") > 0 && col("list_id").isNull),
+      collect_set(col("__part").cast("int")),
+      coalesce(sum("__lost"), lit(0L)),
     ).head()
     require(r.getLong(0) <= 1, s"$op: duplicate ids within `added` (column $idCol)")
-    require(r.getLong(3) == 0, s"$op: `added` rows with a null vector have no list to land in")
+    require(r.getLong(3) == 0, s"$op: `added` rows with a null vector have no partition to land in")
     DeltaStats(r.getLong(1), r.getSeq[Int](2).toArray)
   }
 
@@ -327,42 +332,28 @@ object Ivf {
   /** Write the store AND its sidecar (indexed column + centroids): the
     * sidecar makes the store self-describing, so [[graft.plans.DeclarativeAnn]]
     * can turn a brute-force top-k over the store into a pruned probe from
-    * the plan alone. The sidecar lands via temp-file + rename so a reader in
-    * another JVM (shared `graft.ivf.root`) never sees a partial file, and
-    * the in-JVM cache is updated so a rebuild of the same path takes effect
-    * immediately.
+    * the plan alone. A whole-store [[Store.replace]]: data and sidecar land
+    * complete in the stage before the stage swaps in, so a reader in
+    * another JVM (shared `graft.ivf.root`) never sees a store without its
+    * sidecar, and the new version makes a rebuild of the same path take
+    * effect on every reader's next query.
     */
-  def writeIndexed(assigned: DataFrame, path: String, model: Model, vecCol: String): Unit = {
-    writeIndexed(assigned, path)
-    writeSidecar(assigned.sparkSession.sparkContext.hadoopConfiguration, path, model, vecCol)
-  }
+  def writeIndexed(assigned: DataFrame, path: String, model: Model, vecCol: String): Unit =
+    rewrite(assigned, path, Some(StoredIndex(model, Some(vecCol))))
 
-  private def writeSidecar(conf: org.apache.hadoop.conf.Configuration, path: String, model: Model, vecCol: String): Unit =
-    writeSidecar(conf, path, model, Some(vecCol))
-
-  private def writeSidecar(conf: org.apache.hadoop.conf.Configuration, path: String, model: Model, vecCol: Option[String]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs   = root.getFileSystem(conf)
-    fs.mkdirs(root)
-    val p    = new org.apache.hadoop.fs.Path(root, CentroidsFile)
-    val tmp  = new org.apache.hadoop.fs.Path(root, CentroidsFile + ".tmp")
-    val w    = new java.io.PrintWriter(fs.create(tmp, true))
-    try {
-      vecCol.foreach(c => w.println(s"column=$c"))
-      model.centroids.foreach(c => w.println(c.mkString(",")))
-    } finally w.close()
-    // PrintWriter swallows I/O errors into a flag — surface them BEFORE the
-    // rename, or a truncated-at-a-line-boundary sidecar could pass the
-    // reader's shape checks and silently shrink every probe
-    if (w.checkError()) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"sidecar write failed: $tmp")
+  /** Replace the store at `path` with `data` (list-partitioned) and its
+    * sidecar; `data` may read the live store. */
+  private def rewrite(data: DataFrame, path: String, idx: Option[StoredIndex]): Unit = {
+    val conf = data.sparkSession.sparkContext.hadoopConfiguration
+    Store.replace(conf, path) { stage =>
+      writeIndexed(data, stage)
+      idx.foreach(writeCentroids(conf, stage, _))
     }
-    fs.delete(p, false)
-    fs.rename(tmp, p)
-    val mtime = fs.getFileStatus(p).getModificationTime
-    centroidsCache.put(fs.makeQualified(root).toString, (mtime, StoredIndex(model, vecCol)))
   }
+
+  private def writeCentroids(conf: org.apache.hadoop.conf.Configuration, path: String, idx: StoredIndex): Unit =
+    Store.writeSidecar(conf, path, CentroidsFile,
+      idx.column.iterator.map(c => s"column=$c") ++ idx.model.centroids.iterator.map(_.mkString(",")))
 
   /** Continuous index maintenance — the reference's upload path
     * (backend/main.py:260-352: extract → chunk → embed → upsert into the
@@ -378,8 +369,8 @@ object Ivf {
     * `spark.read.parquet` ignore every file the BATCH writer produced.
     * Trade-off: exactly-once degrades to at-least-once on batch retry —
     * duplicate vectors cost a probe slot but never break top-k correctness.
-    * The sidecar is (re)written up front so a store born from the stream is
-    * immediately self-describing.
+    * The sidecar is (re)written up front, with a version bump, so a store
+    * born from the stream is immediately self-describing.
     */
   def streamInto(
       stream: DataFrame,
@@ -389,7 +380,9 @@ object Ivf {
       checkpoint: String,
       availableNow: Boolean = true,
   ): org.apache.spark.sql.streaming.StreamingQuery = {
-    writeSidecar(stream.sparkSession.sparkContext.hadoopConfiguration, path, model, vecCol)
+    val conf = stream.sparkSession.sparkContext.hadoopConfiguration
+    writeCentroids(conf, path, StoredIndex(model, Some(vecCol)))
+    Store.bump(conf, path)
     val assigned = withListId(stream, model, vecCol)
     val w = assigned.writeStream
       .option("checkpointLocation", checkpoint)
@@ -404,43 +397,35 @@ object Ivf {
     */
   private val CentroidsFile = "_graft_centroids.txt"
 
-  private val centroidsCache = scala.collection.concurrent.TrieMap.empty[String, (Long, StoredIndex)]
+  private val centroidsCache = scala.collection.concurrent.TrieMap.empty[String, (String, StoredIndex)]
 
   /** Sidecar persisted next to a store, if any. Reads are memoized per
-    * qualified root keyed by the sidecar's MODIFICATION TIME: every call
-    * stats the file (one cheap RPC — the optimizer rule calls this per
-    * candidate plan, and a stat beats a read+parse), so a rebuild by
-    * ANOTHER JVM sharing `graft.ivf.root` invalidates this JVM's entry on
-    * the next query instead of leaving it on stale centroids forever.
-    * Misses and unreadable/corrupt sidecars are not cached — a sidecar that
-    * appears or finishes writing later is picked up on the next query.
-    * Parsing is fail-closed: a torn or ragged sidecar yields None (the rule
-    * declines to fire) rather than an exception out of the optimizer.
+    * qualified root keyed by [[Store.token]], the freshness token: every
+    * call reads the two-line `_graft_version` (the optimizer rule calls
+    * this per candidate plan, and it beats a read+parse), so a
+    * commit by ANOTHER JVM sharing `graft.ivf.root` invalidates this JVM's
+    * entry on the next query. A store with no version file is read
+    * uncached; misses and unreadable/corrupt sidecars are not cached — a
+    * sidecar that appears or finishes writing later is picked up on the
+    * next query. Parsing is fail-closed: a torn or ragged sidecar yields
+    * None (the rule declines to fire) rather than an exception out of the
+    * optimizer.
     */
   def readCentroids(root: String, conf: org.apache.hadoop.conf.Configuration): Option[StoredIndex] = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs       = rootPath.getFileSystem(conf)
-    val p        = new org.apache.hadoop.fs.Path(rootPath, CentroidsFile)
-    scala.util.Try(fs.getFileStatus(p)).toOption.flatMap { status =>
-      val key   = fs.makeQualified(rootPath).toString
-      val mtime = status.getModificationTime
-      centroidsCache.get(key) match {
-        case Some((m, idx)) if m == mtime => Some(idx)
-        case _ =>
-          val parsed = scala.util.Try {
-            val in = fs.open(p)
-            try {
-              val lines  = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toArray
-              val column = lines.headOption.filter(_.startsWith("column=")).map(_.stripPrefix("column="))
-              val rows   = lines.filter(l => l.nonEmpty && !l.startsWith("column="))
-                .map(_.split(",").map(_.toDouble))
-              if (rows.isEmpty || rows.exists(_.length != rows.head.length)) None
-              else Some(StoredIndex(Model(rows), column))
-            } finally in.close()
-          }.toOption.flatten
-          parsed.foreach(idx => centroidsCache.put(key, (mtime, idx)))
-          parsed
-      }
+    val key      = rootPath.getFileSystem(conf).makeQualified(rootPath).toString
+    val token    = Store.token(conf, root)
+    centroidsCache.get(key) match {
+      case Some((t, idx)) if token.contains(t) => Some(idx)
+      case _ =>
+        val parsed = Store.readSidecar(conf, root, CentroidsFile) { lines =>
+          val column = lines.headOption.filter(_.startsWith("column=")).map(_.stripPrefix("column="))
+          val rows   = lines.filter(l => l.nonEmpty && !l.startsWith("column=")).map(_.split(",").map(_.toDouble))
+          if (rows.isEmpty || rows.exists(_.length != rows.head.length)) None
+          else Some(StoredIndex(Model(rows), column))
+        }
+        for (t <- token; idx <- parsed) centroidsCache.put(key, (t, idx))
+        parsed
     }
   }
 
@@ -504,11 +489,11 @@ object Ivf {
     * call — the caller's chunk → embed lineage runs once, not once per
     * check. Removed rows locate their lists via one column-pruned
     * (id, list_id) scan semi-joined against the size-gated removal set.
-    * The affected lists' surviving rows plus the additions are written
-    * ONCE to a staging directory beside the store, and each affected list
-    * directory is then swapped in; a list the delta emptied has no
-    * staged replacement and stays deleted. Readers see per-list swaps
-    * (same non-atomicity class as [[compact]]'s directory swap).
+    * The affected lists' surviving rows plus the additions commit through
+    * [[Store.swapPartitions]] (staged once beside the store, then each
+    * affected list directory swapped in; a list the delta emptied stays
+    * deleted); [[Store.recover]] at entry completes a crashed earlier
+    * commit. Readers see per-list swaps.
     * `removedIds` is re-read by each join, so pass a cheap or persisted
     * frame.
     *
@@ -526,27 +511,21 @@ object Ivf {
       idCol: String,
   ): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val st = readCentroids(path, conf).getOrElse(
-      throw new IllegalStateException(s"applyDelta needs a sidecar-described store: $path"))
-    val vecCol = st.column.getOrElse(
-      throw new IllegalStateException(s"store sidecar at $path records no indexed column"))
+    // repair a crashed commit BEFORE the sidecar read and the store's file
+    // listing snapshot the directory layout
+    Store.recover(conf, path)
+    val (model, vecCol) = described(conf, path, "applyDelta")
     require(added.columns.contains(vecCol),
       s"added frame must carry the store's indexed column '$vecCol' (has: ${added.columns.mkString(", ")})")
-    val assigned = withListId(added, st.model, vecCol)
+    val assigned = withListId(added, model, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the delta cache releases in a finally: a retried batch (the
     // documented at-least-once recovery contract, where a staging-write or
     // swap failure is EXPECTED to be replayed) must not accumulate pinned
     // delta frames across attempts
     try {
-      val delta = deltaStats(removedIds, assigned, idCol, "applyDelta")
-      // complete any crashed swap BEFORE the store's file listing snapshots
-      // the directory layout
-      locally {
-        val fs0 = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-        recoverDeltaSwap(fs0, new org.apache.hadoop.fs.Path(path),
-          new org.apache.hadoop.fs.Path(path + ".delta"), "list_id=")
-      }
+      val delta = deltaStats(removedIds.select(col(idCol), lit(null).cast("int").as("list_id")),
+        assigned, idCol, "list_id", "applyDelta")
       val store = spark.read.parquet(path)
       // additions are UPSERTS: any stored row with an added id drops first,
       // so re-applying a delta (at-least-once batch retry, a caller that
@@ -568,7 +547,7 @@ object Ivf {
       val located = store.select(col(idCol), col("list_id"))
         .join(remHint, Seq(idCol), "left_semi")
         .select("list_id").distinct().collect().map(_.getInt(0))
-      val affected = (located ++ delta.gaining).distinct.sorted
+      val affected = (located ++ delta.parts).distinct.sorted
       if (affected.isEmpty) return 0L
 
       val kept = store
@@ -576,85 +555,19 @@ object Ivf {
         .join(remHint, Seq(idCol), "left_anti")
       val rewrite = kept
         .unionByName(assigned.select(store.columns.map(col).toIndexedSeq: _*))
-      // ONE materialization: write the affected lists' replacement data
-      // BESIDE the store (no lineage conflict with the files being read),
-      // then swap each affected list directory in. Crash safety: a kill
-      // between a dst delete and its rename leaves that partition's ONLY
-      // copy under `.delta` — the [[recoverDeltaSwap]] pass at the NEXT
-      // call's entry (before the store listing and before staging is
-      // cleared) renames any replacement whose live directory is missing
-      // back into place, so no partition is ever lost; the caller then
-      // replays the batch idempotently.
-      val fs  = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(path + ".delta")
-      clusterByDir(rewrite).write.mode("overwrite").partitionBy("list_id").parquet(tmp.toString)
-      assertCommitMarker(fs, tmp)
-      affected.foreach { l =>
-        val dst = new org.apache.hadoop.fs.Path(path, s"list_id=$l")
-        val src = new org.apache.hadoop.fs.Path(tmp, s"list_id=$l")
-        fs.delete(dst, true)
-        if (fs.exists(src)) fs.rename(src, dst)
-      }
-      fs.delete(tmp, true)
+      Store.swapPartitions(conf, path, "list_id", affected.toSeq, Seq(path -> clusterByDir(rewrite)))
       affected.length.toLong
     } finally {
       assigned.unpersist()
     }
   }
 
-  /** Fail LOUDLY — before any live directory is deleted — if the staging
-    * write left no `_SUCCESS` marker: [[recoverDeltaSwap]]'s completeness
-    * check is built on that marker, and a session configured with
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` would
-    * otherwise take the no-marker recovery path after a mid-swap crash
-    * and clear the staging dir holding the only copy of an
-    * already-deleted partition. Cheap (one existence probe per delta
-    * batch) and catches the misconfiguration at write time, while the
-    * live store is still intact.
-    */
-  private[graft] def assertCommitMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-  ): Unit =
-    if (!fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-      throw new IllegalStateException(
-        s"staging write at $tmp produced no _SUCCESS marker — crash recovery " +
-          "(recoverDeltaSwap) needs it to tell a completed staging write from a " +
-          "partial one; enable mapreduce.fileoutputcommitter.marksuccessfuljobs")
-
-  /** Complete a crashed sibling-directory partition swap: any partition
-    * directory still under `tmp` whose live twin under `root` is MISSING
-    * was deleted-but-not-yet-replaced when the writer died — rename it
-    * into place (a deliberately emptied partition never has a replacement
-    * under tmp, so it stays deleted). Then clear the staging dir. Shared
-    * by [[applyDelta]] and [[Hnsw.applyDelta]]'s swap.
-    *
-    * Rename-recovery runs ONLY when `tmp/_SUCCESS` exists — the job-level
-    * commit marker Spark's staging write leaves at the output root. Its
-    * absence means the writer died MID-STAGING (some task outputs
-    * committed, some not): those partition dirs are partial, and renaming
-    * one over a live twin that an earlier batch legitimately emptied
-    * would install partial rows as genuine kept rows, repaired only if
-    * the exact same batch replays. Without the marker the live store is
-    * untouched and the incomplete staging dir is simply cleared.
-    */
-  private[graft] def recoverDeltaSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      tmp: org.apache.hadoop.fs.Path,
-      partitionPrefix: String,
-  ): Unit = {
-    if (fs.exists(tmp)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-        fs.listStatus(tmp).foreach { st =>
-          val name = st.getPath.getName
-          if (st.isDirectory && name.startsWith(partitionPrefix) &&
-            !fs.exists(new org.apache.hadoop.fs.Path(root, name)))
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(root, name))
-        }
-      }
-      fs.delete(tmp, true)
-    }
+  /** The store's sidecar model and indexed column, or a loud failure. */
+  private def described(conf: org.apache.hadoop.conf.Configuration, path: String, op: String): (Model, String) = {
+    val st = readCentroids(path, conf).getOrElse(
+      throw new IllegalStateException(s"$op needs a sidecar-described store: $path"))
+    (st.model, st.column.getOrElse(
+      throw new IllegalStateException(s"store sidecar at $path records no indexed column")))
   }
 
   /** Compact a store fragmented by [[streamInto]] appends: every micro-batch
@@ -662,8 +575,8 @@ object Ivf {
     * list directory with thousands of tiny files — at 100 TB that is a
     * listing/open-cost problem for every probe. Rewrites the corpus with
     * ONE shuffle clustered by `list_id` (each output task owns whole lists,
-    * so each list lands as few large files) into a fresh store, preserving
-    * the sidecar, then swaps directories. The swap is delete+rename — a
+    * so each list lands as few large files) into a complete staged store,
+    * sidecar included, and swaps it in ([[Store.replace]]) — a
     * single-writer maintenance window like the reference's collection reset
     * (backend/main.py:1046-1076), not a lock-free publish; run it when no
     * probe is in flight.
@@ -672,22 +585,8 @@ object Ivf {
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs   = root.getFileSystem(conf)
-    val tmp  = new org.apache.hadoop.fs.Path(path + ".compact")
-    fs.delete(tmp, true)
-    val df = spark.read.parquet(path)
-    clusterByDir(df)
-      .write.mode("overwrite").partitionBy("list_id").parquet(tmp.toString)
-    val stored = readCentroids(path, conf)
-    val old    = new org.apache.hadoop.fs.Path(path + ".old")
-    fs.delete(old, true)
-    fs.rename(root, old)
-    fs.rename(tmp, root)
-    fs.delete(old, true)
-    // restore the sidecar (it lived inside the swapped-out directory) and
-    // refresh this JVM's cache under the new mtime
-    stored.foreach(s => writeSidecar(conf, path, s.model, s.column))
+    Store.recover(conf, path)
+    rewrite(spark.read.parquet(path), path, readCentroids(path, conf))
     spark.read.parquet(path).count()
   }
 
@@ -706,13 +605,9 @@ object Ivf {
     */
   def driftStats(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     import graft.functions.VectorExpressions.dotFast
-    val conf = spark.sparkContext.hadoopConfiguration
-    val st = readCentroids(path, conf).getOrElse(
-      throw new IllegalStateException(s"driftStats needs a sidecar-described store: $path"))
-    val vecCol = st.column.getOrElse(
-      throw new IllegalStateException(s"store sidecar at $path records no indexed column"))
-    require(st.model.centroids.nonEmpty, s"store at $path has no centroids")
-    val cents = typedLit(st.model.centroids.map(_.toSeq).toSeq)
+    val (model, vecCol) = described(spark.sparkContext.hadoopConfiguration, path, "driftStats")
+    require(model.centroids.nonEmpty, s"store at $path has no centroids")
+    val cents = typedLit(model.centroids.map(_.toSeq).toSeq)
     val v     = col(vecCol).cast("array<double>")
     val c     = element_at(cents, col("list_id").cast("int") + 1)
     val d2    = dotFast(v, v) + dotFast(c, c) - lit(2.0) * dotFast(v, c)
@@ -725,10 +620,10 @@ object Ivf {
 
   /** Re-centroid and rewrite a drifted store IN PLACE: fit fresh
     * centroids on the store's CURRENT rows (the same sample-budgeted fit
-    * path as [[assign]]), reassign every row, rewrite the partitioned
-    * store through [[compact]]'s staged directory swap, and refresh the
-    * sidecar — closing the lifecycle gap where [[applyDelta]]'s
-    * selective rewrites preserve stale centroids forever. Cost: one full
+    * path as [[assign]]), reassign every row, and replace the store with
+    * the reassigned rows and the new sidecar ([[Store.replace]]) — closing
+    * the lifecycle gap where [[applyDelta]]'s selective rewrites preserve
+    * stale centroids forever. Cost: one full
     * scan + fit sample + one partitioned write — the operation
     * applyDelta amortizes away until [[driftStats]] says otherwise.
     *
@@ -741,30 +636,16 @@ object Ivf {
       nList: Int = 0,
       seed: Long = 42L): Model = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val st = readCentroids(path, conf).getOrElse(
-      throw new IllegalStateException(s"refit needs a sidecar-described store: $path"))
-    val vecCol = st.column.getOrElse(
-      throw new IllegalStateException(s"store sidecar at $path records no indexed column"))
-    val k = if (nList > 0) nList else st.model.centroids.length
+    Store.recover(conf, path)
+    val (current, vecCol) = described(conf, path, "refit")
+    val k = if (nList > 0) nList else current.centroids.length
     require(k > 0, s"refit of $path needs a positive list count")
     val (assigned, model) = assign(
       spark.read.parquet(path).drop("list_id"), vecCol, k, seed)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs   = root.getFileSystem(conf)
-    val tmp  = new org.apache.hadoop.fs.Path(path + ".refit")
-    fs.delete(tmp, true)
-    // stage into a sibling dir: the scan of the live store completes
-    // before any rename touches it (no dynamic-overwrite self-read)
-    clusterByDir(assigned).write.mode("overwrite").partitionBy("list_id").parquet(tmp.toString)
-    // the staged dir must be a COMPLETE store (data + sidecar) before any
-    // rename: a crash after fs.rename(root, old) then leaves either the
-    // old store or the fully-described new one, never a sidecar-less dir
-    writeSidecar(conf, tmp.toString, model, vecCol)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    fs.delete(old, true)
-    fs.rename(root, old)
-    fs.rename(tmp, root)
-    fs.delete(old, true)
+    // the stage reads the live store and swaps in complete (data +
+    // sidecar): a crash leaves the old store or the new one, never a
+    // sidecar-less directory
+    rewrite(assigned, path, Some(StoredIndex(model, Some(vecCol))))
     model
   }
 
@@ -794,6 +675,8 @@ object Ivf {
       skewMax: Double = 4.0,
       seed: Long = 42L): DataFrame = {
     require(skewMax > 1.0, s"skewMax must exceed 1 (skew of a balanced store): $skewMax")
+    val conf = spark.sparkContext.hadoopConfiguration
+    Store.recover(conf, path)
     // the sum coalesces: a store whose lists were all emptied by deltas
     // aggregates over zero rows, and a null total must read as "balanced"
     // (total == 0 short-circuits below), not NPE in getLong. max/avg need
@@ -805,9 +688,7 @@ object Ivf {
       .head()
     val total = stats.getLong(2)
     val skew  = if (total == 0L) 1.0 else stats.getDouble(0) / stats.getDouble(1)
-    val nLists = readCentroids(path, spark.sparkContext.hadoopConfiguration)
-      .map(_.model.centroids.length)
-      .getOrElse(throw new IllegalStateException(s"maintain needs a sidecar-described store: $path"))
+    val nLists = described(conf, path, "maintain")._1.centroids.length
     val decision = if (skew > skewMax) "refit" else "noop"
     if (decision == "refit") { refit(spark, path, seed = seed); () }
     import spark.implicits._

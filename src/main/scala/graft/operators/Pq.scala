@@ -208,9 +208,8 @@ object Pq {
       val root = sys.props("java.io.tmpdir") + s"/graft-ivfpq/$jvmToken/" + java.lang.Long.toHexString(
         (scala.util.hashing.MurmurHash3.stringHash(cacheKey, 42).toLong << 32) |
           (scala.util.hashing.MurmurHash3.stringHash(cacheKey, 4242).toLong & 0xffffffffL))
-      Ivf.clusterByDir(coded.select(col(idCol), col("pq_codes"), col("list_id")))
-        .write.mode("overwrite").partitionBy("list_id").parquet(root + "/codes")
-      Ivf.clusterByDir(assigned).write.mode("overwrite").partitionBy("list_id").parquet(root + "/floats")
+      Ivf.writeIndexed(coded.select(col(idCol), col("pq_codes"), col("list_id")), root + "/codes")
+      Ivf.writeIndexed(assigned, root + "/floats")
       val s = df.sparkSession
       (s.read.parquet(root + "/codes"), s.read.parquet(root + "/floats"), ivfm, pqm)
     })
@@ -220,47 +219,6 @@ object Pq {
   /** Underscore prefix: Spark's file index ignores the sidecar. */
   private val CodebooksFile = "_pq_codebooks.txt"
 
-  /** Monotonic store-version sidecar (VERDICT r15 task 2) — the
-    * filesystem-INDEPENDENT freshness token: [[writeStore]] stamps 1 and
-    * every [[applyDelta]] that changed any list bumps it AFTER both swaps
-    * complete, so a reader cache (e.g. [[graft.plans.PqFamily]]) keyed
-    * on the version is correct on object stores whose prefixes report no
-    * directory mtime (S3) and on filesystems with coarse (1 s) mtime
-    * ticks where a same-tick rewrite is mtime-invisible (ADVICE r15).
-    * Absent file = a pre-version store; readers fall back to mtimes and
-    * the first applyDelta self-upgrades it (absent reads as 1, bump
-    * writes 2). Same temp-file + rename discipline as the codebooks: a
-    * concurrent reader never sees a partial token.
-    */
-  private[graft] val VersionFile = "_graft_version"
-
-  /** Fail-closed version reader: None = no/unreadable sidecar. */
-  def readVersion(conf: org.apache.hadoop.conf.Configuration, root: String): Option[Long] =
-    scala.util.Try {
-      val p  = new org.apache.hadoop.fs.Path(root, VersionFile)
-      val fs = p.getFileSystem(conf)
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim.toLong
-      finally in.close()
-    }.toOption
-
-  private def writeVersion(
-      conf: org.apache.hadoop.conf.Configuration, root: String, v: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(root)
-    val fs  = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
-    val p   = new org.apache.hadoop.fs.Path(dir, VersionFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, VersionFile + ".tmp")
-    val w   = new java.io.PrintWriter(fs.create(tmp, true))
-    try w.println(v.toString) finally w.close()
-    if (w.checkError()) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"version sidecar write failed: $tmp")
-    }
-    fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
-
   /** Persist the PQ codebooks beside the store — what makes an IVF-PQ
     * store durable and self-describing like its IVF (`_graft_centroids
     * .txt`) and HNSW (`_hnsw_meta`) siblings: without it the codebooks
@@ -268,44 +226,21 @@ object Pq {
     * store could not be reopened, let alone incrementally maintained.
     * Format: one `m,ksub,dsub` header line, then m·ksub lines of dsub
     * comma-separated doubles (Double.toString round-trips exactly).
-    * Temp-file + rename so a concurrent reader never sees a partial file.
     */
-  private def writeCodebooks(conf: org.apache.hadoop.conf.Configuration, root: String, model: Model): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(root)
-    val fs  = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
-    val p   = new org.apache.hadoop.fs.Path(dir, CodebooksFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, CodebooksFile + ".tmp")
-    val w   = new java.io.PrintWriter(fs.create(tmp, true))
-    try {
-      w.println(s"${model.m},${model.ksub},${model.dsub}")
-      model.codebooks.foreach(_.foreach(entry => w.println(entry.mkString(","))))
-    } finally w.close()
-    if (w.checkError()) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"codebook sidecar write failed: $tmp")
-    }
-    fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
+  private def writeCodebooks(conf: org.apache.hadoop.conf.Configuration, root: String, model: Model): Unit =
+    Store.writeSidecar(conf, root, CodebooksFile,
+      Iterator(s"${model.m},${model.ksub},${model.dsub}") ++ model.codebooks.iterator.flatMap(_.map(_.mkString(","))))
 
   /** Fail-closed reader ([[Ivf.readCentroids]]'s contract): a torn or
     * ragged sidecar yields None, never an exception.
     */
-  def readCodebooks(spark: org.apache.spark.sql.SparkSession, root: String): Option[Model] = {
-    val p  = new org.apache.hadoop.fs.Path(root, CodebooksFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    scala.util.Try {
-      val in = fs.open(p)
-      try {
-        val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toArray
-        val Array(m, ksub, dsub) = lines.head.split(",").map(_.toInt)
-        val entries = lines.drop(1).map(_.split(",").map(_.toDouble))
-        if (entries.length != m * ksub || entries.exists(_.length != dsub)) None
-        else Some(Model(Array.tabulate(m)(j => Array.tabulate(ksub)(c => entries(j * ksub + c)))))
-      } finally in.close()
-    }.toOption.flatten
-  }
+  def readCodebooks(spark: org.apache.spark.sql.SparkSession, root: String): Option[Model] =
+    Store.readSidecar(spark.sparkContext.hadoopConfiguration, root, CodebooksFile) { lines =>
+      val Array(m, ksub, dsub) = lines.head.split(",").map(_.toInt)
+      val entries = lines.drop(1).map(_.split(",").map(_.toDouble))
+      if (entries.length != m * ksub || entries.exists(_.length != dsub)) None
+      else Some(Model(Array.tabulate(m)(j => Array.tabulate(ksub)(c => entries(j * ksub + c)))))
+    }
 
   /** Write a durable two-store IVF-PQ index at `root`: `root/codes` (id +
     * m-byte code, list-partitioned — the hot probe store), `root/floats`
@@ -313,7 +248,10 @@ object Pq {
     * sidecar so it is auto-probe-discoverable like any IVF store), and the
     * codebook sidecar at the root. This is [[ivfPqIndexFor]]'s layout made
     * persistent + self-describing — reopen with [[readStore]], maintain
-    * with [[applyDelta]].
+    * with [[applyDelta]]. One [[Store.replace]] of `root`: both stores and
+    * the codebooks land complete in the stage, and the root's
+    * `_graft_version` (1 for a new store) is the freshness token
+    * [[graft.plans.PqFamily]]'s cache keys on.
     */
   def writeStore(
       df: DataFrame,
@@ -334,12 +272,12 @@ object Pq {
     val pqm              = fit(proj, vecCol, m, ksub, seed)
     val (assigned, ivfm) = Ivf.assign(proj, vecCol, nList, seed = seed)
     val coded            = pqTable(assigned, vecCol, pqm)
-    Ivf.clusterByDir(coded.select(col(idCol), col("pq_codes"), col("list_id")))
-      .write.mode("overwrite").partitionBy("list_id").parquet(root + "/codes")
-    Ivf.writeIndexed(assigned, root + "/floats", ivfm, vecCol)
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    writeCodebooks(conf, root, pqm)
-    writeVersion(conf, root, 1L)
+    val conf             = df.sparkSession.sparkContext.hadoopConfiguration
+    Store.replace(conf, root) { stage =>
+      Ivf.writeIndexed(coded.select(col(idCol), col("pq_codes"), col("list_id")), stage + "/codes")
+      Ivf.writeIndexed(assigned, stage + "/floats", ivfm, vecCol)
+      writeCodebooks(conf, stage, pqm)
+    }
   }
 
   /** Reopen a [[writeStore]] store: (codes, floats, ivf model, pq model). */
@@ -357,8 +295,8 @@ object Pq {
 
   /** Recrawl maintenance for the two-store layout — [[Ivf.applyDelta]]'s
     * contract (removals + id-keyed upsert additions, affected-list-only
-    * rewrite, staged `.delta` write + per-list swap, crashed-swap recovery
-    * at entry) applied to BOTH stores in one pass: added rows assign their
+    * rewrite, one [[Store.swapPartitions]] commit, [[Store.recover]] at
+    * entry) applied to BOTH stores in one pass: added rows assign their
     * list with the STORED centroids and encode with the STORED codebooks
     * (no refit — drift is [[Ivf.maintain]]'s job on the floats store), and
     * only the affected `list_id=` directories of either store are read or
@@ -389,12 +327,8 @@ object Pq {
       idCol: String,
   ): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs   = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    // complete any crashed swap on EITHER store before listing files
-    Ivf.recoverDeltaSwap(fs, new org.apache.hadoop.fs.Path(root + "/floats"),
-      new org.apache.hadoop.fs.Path(root + "/floats.delta"), "list_id=")
-    Ivf.recoverDeltaSwap(fs, new org.apache.hadoop.fs.Path(root + "/codes"),
-      new org.apache.hadoop.fs.Path(root + "/codes.delta"), "list_id=")
+    // repair a crashed commit of the root or EITHER store before listing files
+    Store.recover(conf, root, root + "/floats", root + "/codes")
     val (codes, floats, ivfm, pqm) = readStore(spark, root)
     require(added.columns.contains(vecCol),
       s"added frame must carry the store's float column '$vecCol' (has: ${added.columns.mkString(", ")})")
@@ -403,7 +337,8 @@ object Pq {
     try {
       // the duplicate guard and the lists gaining rows: ONE aggregate, the
       // only evaluation of `added`
-      val delta = Ivf.deltaStats(removedIds, assigned, idCol, "Pq.applyDelta")
+      val delta = Ivf.deltaStats(removedIds.select(col(idCol), lit(null).cast("int").as("list_id")),
+        assigned, idCol, "list_id", "Pq.applyDelta")
       // upsert semantics: stored rows with an added id vacate first
       val rem = removedIds.select(col(idCol)).union(assigned.select(col(idCol)))
       // affected lists: one bounded-by-nList collect. Removed rows are
@@ -421,7 +356,7 @@ object Pq {
           .join(rem, Seq(idCol), "left_semi")
           .select("list_id"))
         .distinct().collect().map(_.getInt(0))
-      val affected = (located ++ delta.gaining).distinct.sorted
+      val affected = (located ++ delta.parts).distinct.sorted
       if (affected.isEmpty) return 0L
       val lists = affected.map(Integer.valueOf).toIndexedSeq
 
@@ -431,27 +366,14 @@ object Pq {
       val newC  = pqTable(assigned, vecCol, pqm)
         .select(col(idCol), col("pq_codes"), col("list_id"))
 
-      def stageAndSwap(sub: String, frame: DataFrame): Unit = {
-        val tmp = new org.apache.hadoop.fs.Path(root + s"/$sub.delta")
-        Ivf.clusterByDir(frame).write.mode("overwrite").partitionBy("list_id").parquet(tmp.toString)
-        Ivf.assertCommitMarker(fs, tmp)
-        affected.foreach { l =>
-          val dst = new org.apache.hadoop.fs.Path(root + s"/$sub", s"list_id=$l")
-          val src = new org.apache.hadoop.fs.Path(tmp, s"list_id=$l")
-          fs.delete(dst, true)
-          if (fs.exists(src)) fs.rename(src, dst)
-        }
-        fs.delete(tmp, true)
-      }
-      // floats FIRST (see ordering rationale above)
-      stageAndSwap("floats", keptF.unionByName(newF))
-      stageAndSwap("codes", keptC.unionByName(newC.select(codes.columns.map(col).toIndexedSeq: _*)))
-      // version bump LAST: a crash before this line leaves the token one
-      // behind, and the batch's replay (idempotent, self-healing swaps
-      // above) lands the bump — caches are never told "fresh" about a
-      // store whose swaps haven't completed. Pre-version stores read as 1
-      // and self-upgrade here.
-      writeVersion(conf, root, readVersion(conf, root).getOrElse(1L) + 1L)
+      // floats FIRST (see ordering rationale above); the version bump
+      // lands LAST: a crash before it leaves the token one behind, and the
+      // batch's replay (idempotent, self-healing swaps) lands the bump —
+      // caches are never told "fresh" about a store whose swaps haven't
+      // completed
+      Store.swapPartitions(conf, root, "list_id", affected.toSeq, Seq(
+        s"$root/floats" -> Ivf.clusterByDir(keptF.unionByName(newF)),
+        s"$root/codes" -> Ivf.clusterByDir(keptC.unionByName(newC.select(codes.columns.map(col).toIndexedSeq: _*)))))
       affected.length.toLong
     } finally {
       assigned.unpersist()

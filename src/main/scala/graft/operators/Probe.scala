@@ -167,9 +167,9 @@ private[graft] object Probe {
     /** Per-query ADC top k·refine through the codegen'd pair form (the
       * single-query lookup table cannot exist when the query is a column;
       * the pair form reproduces its arithmetic bit for bit), then the exact
-      * re-rank against the floats pruned to the batch's probed-list union
-      * (one bounded collect of list ids; diverse batches degrade to all
-      * lists) with the query vectors re-joined by id.
+      * re-rank against the floats cut to the batch's probed-list union — a
+      * semi-join on the fan-out's `list_id`s inside the plan, so building
+      * the frame runs no job — with the query vectors re-joined by id.
       */
     private[Probe] def knnJoin(fanned: DataFrame, candidates: DataFrame => DataFrame, qs: DataFrame, k: Int)
         : DataFrame = {
@@ -178,10 +178,10 @@ private[graft] object Probe {
           .select(col("query_id"), col("neighbor_id"), graft.functions.PqExpressions.pqAdcPair(col("pq_codes"),
             col("__qv"), pq.flat, pq.m, pq.ksub, pq.dsub).as("score")),
         k * refine).select("query_id", "neighbor_id")
-      val probed = fanned.select("list_id").distinct().collect().map(_.getInt(0)).toSeq
+      val probed = floats.join(fanned.select("list_id").distinct(), Seq("list_id"), "left_semi")
       Search.rankedPerQuery(
         cands
-          .join(pruned(floats, probed)
+          .join(probed
             .select(col(idCol).cast("long").as("neighbor_id"), asDouble(col(vecCol)).as("__cv")), Seq("neighbor_id"))
           .join(qs, Seq("query_id"))
           .select(col("query_id"), col("neighbor_id"), cosineFast(col("__cv"), col("__qv")).as("score"))

@@ -1,0 +1,207 @@
+package graft.operators
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.DataFrame
+
+/** The one commit path for every store on disk — the IVF, IVF-PQ and HNSW
+  * stores and the directory-replacing stream sinks. Nothing else renames a
+  * store file or deletes a live store directory. Four parts:
+  *
+  *  1. **Sidecars** — [[writeSidecar]] (temp file, `checkError`, rename) and
+  *     the fail-closed [[readSidecar]]: `_graft_centroids.txt`,
+  *     `_pq_codebooks.txt`, `_hnsw_meta` and `_graft_version`.
+  *  2. **Partition swap** — [[swapPartitions]]: staging write beside each
+  *     store, `_SUCCESS` check, per-partition swap, stores in the order
+  *     given, version bump last.
+  *  3. **Whole-store replace** — [[replace]] ([[stage]] + [[publish]]): the
+  *     stage is written complete, sidecars included, then
+  *     `root → .old`, `stage → root`, `.old` dropped.
+  *  4. **Freshness token** — `_graft_version`, bumped by every commit above;
+  *     reader caches key on its content alone ([[token]]).
+  *
+  * [[recover]] repairs whatever a crashed commit left: an interrupted
+  * replace rolls back to `.old` when `root` is missing, and an interrupted
+  * partition swap completes from its committed staging directory. Every
+  * writer calls it at entry, before it lists the store. It renames, so it
+  * belongs to the store's single writer (the maintenance-window contract
+  * of every commit here), never to a concurrent reader.
+  *
+  * Sibling layout of a store at `root`: `root.next` (replace stage),
+  * `root.old` (the replaced store until the swap completes) and
+  * `root.delta` (partition-swap staging).
+  */
+private[graft] object Store {
+
+  /** Version sidecar: the version (1 for a new store, +1 per commit), then
+    * the id of the commit that wrote it. */
+  private val VersionFile = "_graft_version"
+
+  private def fsOf(conf: Configuration, root: String): (FileSystem, Path) = {
+    val p = new Path(root)
+    (p.getFileSystem(conf), p)
+  }
+
+  private def sibling(root: Path, suffix: String) = new Path(root.toString + suffix)
+
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst)) throw new java.io.IOException(s"rename $src -> $dst failed")
+
+  // ---- sidecars ---------------------------------------------------------
+
+  /** Write `lines` to `dir/name` via a temp file and rename, so a reader in
+    * another JVM never sees a partial file. PrintWriter swallows I/O errors
+    * into a flag; it is checked BEFORE the rename, or a file truncated at a
+    * line boundary could pass a reader's shape checks.
+    */
+  def writeSidecar(conf: Configuration, dir: String, name: String, lines: Iterator[String]): Unit = {
+    val (fs, d) = fsOf(conf, dir)
+    fs.mkdirs(d)
+    val p   = new Path(d, name)
+    val tmp = new Path(d, name + ".tmp")
+    val w   = new java.io.PrintWriter(new java.io.OutputStreamWriter(fs.create(tmp, true), "UTF-8"))
+    try lines.foreach(w.println) finally w.close()
+    if (w.checkError()) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"sidecar write failed: $tmp")
+    }
+    fs.delete(p, false)
+    rename(fs, tmp, p)
+  }
+
+  /** Fail-closed read: a missing, torn or unparsable sidecar is None. */
+  def readSidecar[A](conf: Configuration, dir: String, name: String)(parse: Array[String] => Option[A]): Option[A] =
+    scala.util.Try {
+      val p  = new Path(dir, name)
+      val in = p.getFileSystem(conf).open(p)
+      try parse(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toArray) finally in.close()
+    }.toOption.flatten
+
+  // ---- freshness token --------------------------------------------------
+
+  def version(conf: Configuration, root: String): Option[Long] =
+    readSidecar(conf, root, VersionFile)(_.headOption.map(_.trim.toLong))
+
+  /** What reader caches key on: the version file's whole content. The
+    * commit id makes it unique, so a store moved in or rebuilt at the same
+    * path never repeats a token a reader cached.
+    */
+  def token(conf: Configuration, root: String): Option[String] =
+    readSidecar(conf, root, VersionFile)(l => if (l.isEmpty) None else Some(l.mkString("\n")))
+
+  /** Stamp the store's next version with a fresh commit id. */
+  def bump(conf: Configuration, root: String): Unit = bump(conf, root, root)
+
+  /** Stamp `into` with `from`'s next version. */
+  private def bump(conf: Configuration, from: String, into: String): Unit =
+    writeSidecar(conf, into, VersionFile,
+      Iterator((version(conf, from).getOrElse(0L) + 1L).toString, java.util.UUID.randomUUID().toString))
+
+  // ---- recovery ---------------------------------------------------------
+
+  /** Repair each root's crashed commit: roll an interrupted replace back to
+    * `.old` (or drop `.old` once the swap had completed), drop an
+    * unpublished stage, and complete an interrupted partition swap.
+    *
+    * A partition swap is completed ONLY when its staging dir carries
+    * `_SUCCESS`, the job-level commit marker: every staged partition whose
+    * live twin is missing was deleted but not yet replaced when the writer
+    * died, so it is renamed into place (a deliberately emptied partition
+    * has no staged replacement and stays deleted). Without the marker the
+    * writer died mid-staging — some partitions are partial and the live
+    * store is untouched — and the staging dir is only cleared.
+    */
+  def recover(conf: Configuration, roots: String*): Unit = roots.foreach { root =>
+    val (fs, r) = fsOf(conf, root)
+    val old     = sibling(r, ".old")
+    if (fs.exists(old)) {
+      if (fs.exists(r)) fs.delete(old, true) else rename(fs, old, r)
+    }
+    fs.delete(sibling(r, ".next"), true)
+    val delta = sibling(r, ".delta")
+    if (fs.exists(delta)) {
+      if (fs.exists(new Path(delta, "_SUCCESS")))
+        fs.listStatus(delta).foreach { st =>
+          val live = new Path(r, st.getPath.getName)
+          if (st.isDirectory && st.getPath.getName.contains("=") && !fs.exists(live))
+            rename(fs, st.getPath, live)
+        }
+      fs.delete(delta, true)
+    }
+  }
+
+  // ---- partition swap ---------------------------------------------------
+
+  /** Fail LOUDLY, before any live directory is deleted, if a staging write
+    * left no `_SUCCESS` marker: [[recover]] tells a complete staging write
+    * from a partial one by it, and a session with
+    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` would
+    * otherwise clear the staging dir holding the only copy of a deleted
+    * partition after a mid-swap crash.
+    */
+  def assertCommitMarker(fs: FileSystem, tmp: Path): Unit =
+    if (!fs.exists(new Path(tmp, "_SUCCESS")))
+      throw new IllegalStateException(
+        s"staging write at $tmp produced no _SUCCESS marker — crash recovery " +
+          "needs it to tell a completed staging write from a partial one; " +
+          "enable mapreduce.fileoutputcommitter.marksuccessfuljobs")
+
+  /** Commit `parts` (values of partition column `part`) of each store in
+    * `stores` order: write the store's replacement frame ONCE beside it
+    * (`root.delta` — no lineage conflict with the files being read), check
+    * the commit marker, then swap each partition directory in; a partition
+    * with no staged rows stays deleted. The version at `versionRoot` is
+    * bumped LAST, so a cache is never told "fresh" about a store whose
+    * swaps have not completed. The caller ran [[recover]] on every root
+    * before building the frames.
+    */
+  def swapPartitions(
+      conf: Configuration, versionRoot: String, part: String, parts: Seq[Any],
+      stores: Seq[(String, DataFrame)]): Unit = {
+    stores.foreach { case (root, frame) =>
+      val (fs, r) = fsOf(conf, root)
+      val tmp     = sibling(r, ".delta")
+      frame.write.mode("overwrite").partitionBy(part).parquet(tmp.toString)
+      assertCommitMarker(fs, tmp)
+      parts.foreach { v =>
+        val dst = new Path(r, s"$part=$v")
+        val src = new Path(tmp, s"$part=$v")
+        fs.delete(dst, true)
+        if (fs.exists(src)) rename(fs, src, dst)
+      }
+      fs.delete(tmp, true)
+    }
+    bump(conf, versionRoot)
+  }
+
+  // ---- whole-store replace ----------------------------------------------
+
+  /** Recover `root` (which also clears an earlier stage) and return its
+    * stage directory. */
+  def stage(conf: Configuration, root: String): String = {
+    recover(conf, root)
+    root + ".next"
+  }
+
+  /** Publish the complete stage: stamp its version (the live one + 1),
+    * then `root → .old`, `stage → root`, drop `.old`. A crash between the
+    * two renames leaves `.old`, which [[recover]] restores.
+    */
+  def publish(conf: Configuration, root: String): Unit = {
+    val (fs, r) = fsOf(conf, root)
+    val next    = sibling(r, ".next")
+    val old     = sibling(r, ".old")
+    bump(conf, root, next.toString)
+    if (fs.exists(r)) rename(fs, r, old)
+    rename(fs, next, r)
+    fs.delete(old, true)
+  }
+
+  /** Whole-store replace: `write` fills the stage (data and sidecars), then
+    * [[publish]]. The frames `write` stores may read the live `root`.
+    */
+  def replace(conf: Configuration, root: String)(write: String => Unit): Unit = {
+    write(stage(conf, root))
+    publish(conf, root)
+  }
+}

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.operators.{Hnsw, Ivf, Pq, Probe}
+import graft.operators.{Hnsw, Ivf, Pq, Probe, Store}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -247,80 +247,33 @@ object PqFamily extends AnnFamily {
     * nList partition directories of the code store and re-parsing both
     * sidecars ON EVERY QUERY dominates the probe itself.
     *
-    * Freshness (round 16, VERDICT r15 task 2): the AUTHORITATIVE token is
-    * the store's monotonic `_graft_version` sidecar — stamped by
-    * [[graft.operators.Pq.writeStore]], bumped by
-    * [[graft.operators.Pq.applyDelta]] after both swaps — which is
-    * filesystem-independent: correct on object stores whose prefixes
-    * report no directory mtime (S3) and immune to same-tick rewrites on
-    * coarse-mtime filesystems (the two ADVICE r15 staleness windows). The
-    * two sidecar FILE mtimes (real objects on every filesystem, rewritten
-    * atomically) ride along so an out-of-band refit that rewrites
-    * `_graft_centroids.txt` without going through the Pq API still
-    * invalidates. PRE-VERSION stores (no sidecar yet) fall back to the
-    * mtime fold hardened with the codes tree's content summary (file
-    * count + total length), narrowing the legacy same-tick window to
-    * same-tick AND same-byte-count; their first applyDelta self-upgrades
-    * them to the version token. [[invalidate]] remains the manual escape
-    * hatch for legacy stores on mtime-less filesystems.
+    * Freshness: the token is the `_graft_version` of the store root and of
+    * its floats store ([[graft.operators.Store.token]]), new on every
+    * commit — [[graft.operators.Pq.writeStore]],
+    * [[graft.operators.Pq.applyDelta]], and an [[graft.operators.Ivf]]
+    * rewrite of the floats store. It is filesystem-independent: correct on
+    * object stores whose prefixes report no directory mtime and on
+    * coarse-mtime filesystems where a same-tick rewrite is mtime-invisible.
+    * A store without version files is reloaded on every query.
     *
-    * Keyed by `sessionUUID` (collision-free, unlike the identity hash the
-    * round-15 version used — ADVICE r15) + store root; entries whose
-    * SparkContext has stopped are swept on every cache miss, so a
-    * restarted application cannot be served a DataFrame bound to a dead
-    * context and the map does not grow across context lifecycles.
+    * Keyed by `sessionUUID` (collision-free, unlike an identity hash) +
+    * store root; entries whose SparkContext has stopped are swept on every
+    * cache miss, so a restarted application cannot be served a DataFrame
+    * bound to a dead context and the map does not grow across context
+    * lifecycles.
     */
   private val storeCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String),
-    (String, SparkSession, (Ivf.StoredIndex, Pq.Model, DataFrame))]()
-
-  /** Drop every session's cached entry for `root` (the store root passed
-    * to [[graft.operators.Pq.writeStore]]) — the explicit escape hatch for
-    * PRE-VERSION stores on filesystems whose mtimes cannot carry the
-    * fallback token (version-stamped stores never need it).
-    */
-  def invalidate(root: String): Unit = {
-    val it = storeCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._2 == root) it.remove()
-  }
-
-  private def mtime(conf: org.apache.hadoop.conf.Configuration, p: String): Long =
-    try {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).getFileStatus(hp).getModificationTime
-    } catch { case scala.util.control.NonFatal(_) => -1L }
-
-  /** Codes-tree content signal for the legacy fallback token: recursive
-    * file count + byte length (one getContentSummary — nList directories
-    * of a handful of files; only ever paid by stores with no version
-    * sidecar). Fail-closed to a constant, like [[mtime]].
-    */
-  private def contentSig(conf: org.apache.hadoop.conf.Configuration, p: String): Long =
-    try {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val cs = hp.getFileSystem(conf).getContentSummary(hp)
-      cs.getFileCount * 1000003L ^ cs.getLength
-    } catch { case scala.util.control.NonFatal(_) => -1L }
-
-  private def freshnessToken(
-      conf: org.apache.hadoop.conf.Configuration, parent: String, floatsRoot: String): String = {
-    val fileM = s"c${mtime(conf, s"$parent/_pq_codebooks.txt")}:" +
-      s"i${mtime(conf, s"$floatsRoot/_graft_centroids.txt")}"
-    Pq.readVersion(conf, parent) match {
-      case Some(v) => s"v$v:$fileM"
-      case None =>
-        s"m${mtime(conf, s"$parent/codes")}:$fileM:s${contentSig(conf, s"$parent/codes")}"
-    }
-  }
+    ((String, String), SparkSession, (Ivf.StoredIndex, Pq.Model, DataFrame))]()
 
   private def storeFor(
       spark: SparkSession, parent: String, floatsRoot: String,
   ): Option[(Ivf.StoredIndex, Pq.Model, DataFrame)] = {
     val conf  = spark.sparkContext.hadoopConfiguration
-    val token = freshnessToken(conf, parent, floatsRoot)
+    val token = for (p <- Store.token(conf, parent); f <- Store.token(conf, floatsRoot)) yield (p, f)
     val key   = (GraftBridge.sessionUUID(spark), parent)
     val cur   = storeCache.get(key)
-    if (cur != null && cur._1 == token) Some(cur._3)
+    if (cur != null && token.contains(cur._1)) Some(cur._3)
     else {
       // miss path (rare): sweep entries owned by stopped contexts
       val it = storeCache.entrySet().iterator()
@@ -329,7 +282,7 @@ object PqFamily extends AnnFamily {
         stored <- Ivf.readCentroids(floatsRoot, conf)
         pqm    <- Pq.readCodebooks(spark, parent)
       } yield (stored, pqm, spark.read.parquet(parent + "/codes"))
-      loaded.foreach(v => storeCache.put(key, (token, spark, v)))
+      for (t <- token; v <- loaded) storeCache.put(key, (t, spark, v))
       loaded
     }
   }

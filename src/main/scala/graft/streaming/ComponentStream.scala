@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Store}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * [[Dedup.incrementalComponents]]. Each micro-batch folds its edges into
   * the stored labeling through the contracted-graph relabel (historical
   * edges are never re-read; the contracted CC almost always runs on the
-  * driver fast path), then publishes the new labeling with the same
-  * write-to-temp + directory-swap discipline as `Ivf.compact` — a reader
-  * between batches sees a complete labeling, never a partial write.
+  * driver fast path), then publishes the new labeling as one whole-store
+  * replace ([[graft.operators.Store.replace]], as `Ivf.compact` does) — a
+  * reader between batches sees a complete labeling, never a partial write.
   *
   * Single-writer by construction (micro-batches are serialized by the
   * streaming engine). The labeling rewrite is proportional to the labeled
@@ -25,19 +25,20 @@ object ComponentStream {
 
   /** Read the current labeling (empty if the store doesn't exist yet).
     *
-    * Crash recovery: the swap in [[start]] is two renames (root → `.old`,
-    * `.next` → root). A crash between them leaves no root but a complete
-    * `.old` — falling back to it here turns that window into "one batch is
-    * replayed" instead of "the whole labeling is silently lost" (the
-    * labeling is the only record of history; historical edges are never
-    * re-read, so an empty fallback would be permanent loss).
+    * Crash recovery: [[start]] publishes through
+    * [[graft.operators.Store.replace]], and [[graft.operators.Store.recover]]
+    * here rolls a crash between its two renames back to the complete
+    * `.old` labeling — "one batch is replayed" instead of "the whole
+    * labeling is silently lost" (the labeling is the only record of
+    * history; historical edges are never re-read, so an empty fallback
+    * would be permanent loss). Recovery renames: call this from the
+    * stream's single writer or between batches.
     */
   def currentLabels(spark: SparkSession, path: String): DataFrame = {
-    val p   = new org.apache.hadoop.fs.Path(path)
-    val fs  = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    if (fs.exists(p)) spark.read.parquet(path)
-    else if (fs.exists(old)) spark.read.parquet(old.toString)
+    val conf = spark.sparkContext.hadoopConfiguration
+    Store.recover(conf, path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(conf).exists(p)) spark.read.parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row],
       org.apache.spark.sql.types.StructType(Seq(
@@ -66,24 +67,7 @@ object ComponentStream {
           val s    = batch.sparkSession
           val cur  = currentLabels(s, labelsPath)
           val next = Dedup.incrementalComponents(cur, batch, "id", "component", srcCol, dstCol)
-          val conf = s.sparkContext.hadoopConfiguration
-          val root = new org.apache.hadoop.fs.Path(labelsPath)
-          val fs   = root.getFileSystem(conf)
-          val tmp  = new org.apache.hadoop.fs.Path(labelsPath + ".next")
-          fs.delete(tmp, true)
-          next.write.mode("overwrite").parquet(tmp.toString)
-          val old = new org.apache.hadoop.fs.Path(labelsPath + ".old")
-          fs.delete(old, true)
-          if (fs.exists(root)) fs.rename(root, old)
-          fs.rename(tmp, root)
-          // Keep `.old` until the new root is confirmed readable: a crash or
-          // failed rename above leaves `.old` as the recovery copy that
-          // currentLabels falls back to.
-          val rootReadable =
-            try { s.read.parquet(labelsPath).schema.fieldNames.contains("id") }
-            catch { case _: Exception => false }
-          if (rootReadable) fs.delete(old, true)
-          ()
+          Store.replace(s.sparkContext.hadoopConfiguration, labelsPath)(next.write.mode("overwrite").parquet(_))
         }
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()

@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * streaming wrapper. Each micro-batch routes through `applyDelta`
   * unchanged, so the stream inherits the batch path's whole contract:
   * id-hash shard routing with no store read, touched-shards-only
-  * rebuild/extend, the staged `.delta` write + per-shard directory swap,
-  * and the crashed-swap recovery that runs at every applyDelta entry — a
-  * kill between micro-batches (or mid-swap) never loses a shard, the next
-  * batch completes the swap first.
+  * rebuild/extend, and the per-shard swap and crash recovery of
+  * [[graft.operators.Store]], the one store-commit module, whose recovery
+  * runs before each batch lists the store — a kill between micro-batches
+  * (or mid-swap) never loses a shard, the next batch completes the swap
+  * first.
   *
   * Delivery semantics: foreachBatch is at-least-once on retry, and
   * `applyDelta` is IDEMPOTENT for exactly this shape — `added` rows are

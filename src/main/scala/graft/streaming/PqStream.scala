@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * [[graft.operators.Ivf.maintain]]'s job), affected-list-only rewrite of
   * BOTH stores, the floats-FIRST swap ordering (a crash between the two
   * swaps degrades gracefully: stale code candidates are dropped by the
-  * float re-rank join, never ghost results), and the self-healing
-  * crashed-swap recovery that runs at every applyDelta entry — a kill
+  * float re-rank join, never ghost results), and the commit and crash
+  * recovery of [[graft.operators.Store]], the one store-commit module,
+  * whose recovery runs before each batch lists the stores — a kill
   * between micro-batches or mid-swap never loses a list, the next batch
   * completes the swap first.
   *

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Dedup, Embedder, Ivf}
+import graft.operators.{Dedup, Embedder, Ivf, Store}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,15 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The store root co-publishes two datasets:
   *  - `<root>/docs` — the current (id, content-hash) snapshot, the state
-  *    future batches diff against; published via the
-  *    write-next → swap → `.old` crash-recovery discipline shared with
-  *    [[Scd2Stream]]/[[ComponentStream]], so a reader (or a recovering
-  *    batch) always sees one complete snapshot;
+  *    future batches diff against; published as one whole-store replace
+  *    ([[Store.replace]], shared with [[Scd2Stream]]/[[ComponentStream]]),
+  *    so a reader (or a recovering batch) always sees one complete
+  *    snapshot;
   *  - `<root>/index` — a live sidecar-described IVF store, patched IN
-  *    PLACE by [[Ivf.applyDelta]]'s per-list dynamic-partition swaps (it
-  *    has its own reader-safe publication unit, so it is deliberately
-  *    NOT under the root swap — rewriting it wholesale per batch would
-  *    undo exactly the selectivity the delta path buys).
+  *    PLACE by [[Ivf.applyDelta]]'s per-list partition swaps (it has its
+  *    own reader-safe publication unit, so it is deliberately NOT under
+  *    the docs replace — rewriting it wholesale per batch would undo
+  *    exactly the selectivity the delta path buys).
   *
   * Batch contract: rows (idCol, textCol); a NULL text means the crawler
   * observed the document gone. The fold is idempotent by construction —
@@ -110,19 +110,16 @@ object RecrawlStream {
     val spark = lifecycleSession(spark0)
     val docs  = org.apache.spark.sql.GraftBridge.reRoot(spark, docs0)
     // the (id, hash) snapshot computation is independent of the embed →
-    // index chain, so it overlaps on a second thread — but only into a
-    // STAGING dir: the live snapshot publishes (one rename) strictly
-    // after the index build succeeds, preserving the
-    // "snapshot exists ⇒ index exists" recovery invariant (currentDocs'
-    // bootstrap-first signal must survive a crash mid-bootstrap)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(docsPath(root))
-    val fs   = live.getFileSystem(conf)
-    val tmp  = new org.apache.hadoop.fs.Path(docsPath(root) + ".boot")
-    fs.delete(tmp, true)
+    // index chain, so it overlaps on a second thread — but only into the
+    // replace STAGE: the live snapshot publishes strictly after the index
+    // build succeeds, preserving the "snapshot exists ⇒ index exists"
+    // recovery invariant (currentDocs' bootstrap-first signal must
+    // survive a crash mid-bootstrap)
+    val conf  = spark.sparkContext.hadoopConfiguration
+    val stage = Store.stage(conf, docsPath(root))
     val snapF = scala.concurrent.Future {
       docs.select(col(idCol), Dedup.exactKey(col(textCol)).as("__hash"))
-        .write.mode("overwrite").parquet(tmp.toString)
+        .write.mode("overwrite").parquet(stage)
     }(scala.concurrent.ExecutionContext.global)
     try {
       val emb = Embedder.embedText(spark, docs, idCol, textCol, embedder).toDF()
@@ -132,25 +129,24 @@ object RecrawlStream {
     } catch {
       case scala.util.control.NonFatal(e) =>
         // the staging writer must settle before this throw hands control
-        // to a retry: an orphaned Future still writing `.boot` would race
+        // to a retry: an orphaned Future still writing the stage would race
         // the retry's delete-and-rewrite of the same directory (its own
         // failure is irrelevant here — the bootstrap is failing anyway)
         scala.concurrent.Await.ready(snapF, scala.concurrent.duration.Duration.Inf)
         throw e
     }
     scala.concurrent.Await.result(snapF, scala.concurrent.duration.Duration.Inf)
-    fs.delete(live, true)
-    fs.rename(tmp, live)
+    Store.publish(conf, docsPath(root))
   }
 
-  /** Current (id, __hash) snapshot, with the `.old` crash fallback. */
+  /** Current (id, __hash) snapshot, after [[Store.recover]] rolls a crashed
+    * publish back to `.old` (a rename: call it from the single writer).
+    */
   def currentDocs(spark: SparkSession, root: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    Store.recover(conf, docsPath(root))
     val live = new org.apache.hadoop.fs.Path(docsPath(root))
-    val old  = new org.apache.hadoop.fs.Path(docsPath(root) + ".old")
-    if (fs.exists(live)) spark.read.parquet(live.toString)
-    else if (fs.exists(old)) spark.read.parquet(old.toString)
+    if (live.getFileSystem(conf).exists(live)) spark.read.parquet(live.toString)
     else throw new IllegalStateException(s"no doc snapshot under $root — bootstrap first")
   }
 
@@ -219,42 +215,33 @@ object RecrawlStream {
         val vecName = Ivf.readCentroids(indexPath(root), spark.sparkContext.hadoopConfiguration)
           .flatMap(_.column).getOrElse("embedding")
         // prepare the next snapshot CONCURRENTLY with the index patch:
-        // writing to `.next` is pure staging (reads the pre-batch docs
-        // dir + the batch caches, touches nothing applyDelta touches),
-        // and the index-before-snapshot durability ordering is preserved
-        // because the SWAP renames only happen after applyDelta returns
+        // writing the replace stage is pure staging (reads the pre-batch
+        // docs dir + the batch caches, touches nothing applyDelta
+        // touches), and the index-before-snapshot durability ordering is
+        // preserved because the publish only happens after applyDelta
+        // returns
         val gone = removals.unionByName(upserts.select(col(idCol)))
         val next = cur.join(gone, Seq(idCol), "left_anti")
           .unionByName(upserts.select(col(idCol), col("__bh").as("__hash")))
-        val conf = spark.sparkContext.hadoopConfiguration
-        val live = new org.apache.hadoop.fs.Path(docsPath(root))
-        val fs   = live.getFileSystem(conf)
-        val tmp  = new org.apache.hadoop.fs.Path(docsPath(root) + ".next")
-        fs.delete(tmp, true)
+        val conf  = spark.sparkContext.hadoopConfiguration
+        val stage = Store.stage(conf, docsPath(root))
         val nextF = scala.concurrent.Future {
-          next.write.mode("overwrite").parquet(tmp.toString)
+          next.write.mode("overwrite").parquet(stage)
         }(scala.concurrent.ExecutionContext.global)
         val touched =
           try Ivf.applyDelta(spark, indexPath(root), removals,
             fresh.withColumnRenamed("embedding", vecName), idCol)
           catch {
             case scala.util.control.NonFatal(e) =>
-              // same discipline as bootstrap's snapF: the `.next` staging
-              // writer must settle before a retry can clear and rewrite
-              // that directory
+              // same discipline as bootstrap's snapF: the staging writer
+              // must settle before a retry can clear and rewrite that
+              // directory
               scala.concurrent.Await.ready(nextF, scala.concurrent.duration.Duration.Inf)
               throw e
           }
           finally { fresh.unpersist(); () }
         scala.concurrent.Await.result(nextF, scala.concurrent.duration.Duration.Inf)
-        val old = new org.apache.hadoop.fs.Path(docsPath(root) + ".old")
-        fs.delete(old, true)
-        if (fs.exists(live)) fs.rename(live, old)
-        fs.rename(tmp, live)
-        val readable =
-          try spark.read.parquet(live.toString).schema.fieldNames.contains("__hash")
-          catch { case _: Exception => false }
-        if (readable) fs.delete(old, true)
+        Store.publish(conf, docsPath(root))
         (nUp, nRem, touched)
       } finally { upserts.unpersist(); removals.unpersist(); () }
     } finally { batch.unpersist(); () }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Joins
+import graft.operators.{Joins, Store}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -27,13 +27,13 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * slice. The batch is `distinct()`-folded into the log, so foreachBatch
   * redelivery (at-least-once) is idempotent by construction.
   *
-  * Publication uses the same write-to-temp + directory-swap + `.old`
-  * recovery discipline as [[ComponentStream]]: a reader between batches
-  * sees a complete store; a crash mid-swap falls back to `.old`. The
-  * rewrite is proportional to the stored population; at very large
-  * populations the refinement is hash-range partitioning of the store
-  * and rewriting only ranges the batch touched — operator and merge
-  * unchanged.
+  * Publication is one whole-store replace
+  * ([[graft.operators.Store.replace]]), as in [[ComponentStream]]: a
+  * reader between batches sees a complete store; a crash mid-swap rolls
+  * back to `.old` at the next batch. The rewrite is proportional to the
+  * stored population; at very large populations the refinement is
+  * hash-range partitioning of the store and rewriting only ranges the
+  * batch touched — operator and merge unchanged.
   */
 object Scd2Stream {
 
@@ -56,16 +56,14 @@ object Scd2Stream {
     if (fs.exists(p)) spark.read.parquet(path) else fallback
   }
 
-  /** Root resolution with `.old` crash fallback: the directory whose
-    * sub-stores to read, or None before the first publish.
+  /** The published root after [[graft.operators.Store.recover]] rolls a
+    * crashed publish back to `.old`, or None before the first publish.
     */
   private def currentRoot(spark: SparkSession, path: String): Option[String] = {
-    val p   = new org.apache.hadoop.fs.Path(path)
-    val fs  = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    if (fs.exists(p)) Some(path)
-    else if (fs.exists(old)) Some(old.toString)
-    else None
+    val conf = spark.sparkContext.hadoopConfiguration
+    Store.recover(conf, path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(conf).exists(p)) Some(path) else None
   }
 
   /** Current interval view (key, attr, valid_from, valid_to); empty if
@@ -151,22 +149,10 @@ object Scd2Stream {
           val curEv  = currentEvents(s, storePath, keyT, attrT)
           val curIv  = currentIntervals(s, storePath, keyT, attrT)
           val (nextEv, nextIv) = foldBatch(curEv, curIv, batch, keyCol, tsCol, tieCol, attrCol)
-          val conf = s.sparkContext.hadoopConfiguration
-          val root = new org.apache.hadoop.fs.Path(storePath)
-          val fs   = root.getFileSystem(conf)
-          val tmp  = new org.apache.hadoop.fs.Path(storePath + ".next")
-          fs.delete(tmp, true)
-          nextEv.write.mode("overwrite").parquet(tmp.toString + "/events")
-          nextIv.write.mode("overwrite").parquet(tmp.toString + "/intervals")
-          val old = new org.apache.hadoop.fs.Path(storePath + ".old")
-          fs.delete(old, true)
-          if (fs.exists(root)) fs.rename(root, old)
-          fs.rename(tmp, root)
-          val rootReadable =
-            try { s.read.parquet(storePath + "/intervals").schema.fieldNames.contains("key") }
-            catch { case _: Exception => false }
-          if (rootReadable) fs.delete(old, true)
-          ()
+          Store.replace(s.sparkContext.hadoopConfiguration, storePath) { stage =>
+            nextEv.write.mode("overwrite").parquet(stage + "/events")
+            nextIv.write.mode("overwrite").parquet(stage + "/intervals")
+          }
         }
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Sketches
+import graft.operators.{Sketches, Store}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -79,10 +79,13 @@ object SketchStream {
 
   /** Collapse a store fragmented by many micro-batches into one row per
     * key: HLL sketches union, KLL sketches union, counts sum (after
-    * deduping replayed batch writes to one row per (key, batch_id)).
-    * Same single-writer maintenance-window contract as [[graft.operators.Ivf.compact]].
+    * deduping replayed batch writes to one row per (key, batch_id)), as
+    * one whole-store replace ([[graft.operators.Store.replace]]). Same
+    * single-writer maintenance-window contract as [[graft.operators.Ivf.compact]].
     */
   def compact(spark: SparkSession, storePath: String, keyCols: Seq[String]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Store.recover(conf, storePath)
     val hllU = org.apache.spark.sql.functions.hll_union_agg(col("hll_sketch"))
     val kllU = graft.functions.KllSketchAgg.unionUdaf()(col("kll_sketch"))
     val store = spark.read.parquet(storePath)
@@ -94,17 +97,7 @@ object SketchStream {
       .groupBy(keyCols.map(col): _*)
       .agg(hllU.as("hll_sketch"), kllU.as("kll_sketch"),
         sum(col("n_rows")).as("n_rows"), lit(-1L).as("batch_id"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs   = root.getFileSystem(conf)
-    val tmp  = new org.apache.hadoop.fs.Path(storePath + ".compact")
-    fs.delete(tmp, true)
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(storePath + ".old")
-    fs.delete(old, true)
-    fs.rename(root, old)
-    fs.rename(tmp, root)
-    fs.delete(old, true)
+    Store.replace(conf, storePath)(merged.write.mode("overwrite").parquet(_))
     spark.read.parquet(storePath).count()
   }
 }

@@ -466,6 +466,29 @@ class HnswSpec extends AnyFunSuite {
     assert(Hnsw.readIndex(spark, dir).count() == expected.size)
   }
 
+  test("applyDelta evaluates `added` once: one aggregate serves the duplicate guard and the touched shards") {
+    // Ivf.deltaStats over the id-hash shard column is the only evaluation
+    // of the caller's `added`: the rebuild reads the persisted rows
+    val dir = java.nio.file.Files.createTempDirectory("hnsw_once").toString + "/store"
+    Hnsw.writeIndex(items.toSeq.toDF("id", "vec"), "vec", "id", dir, nShards = 4,
+      m = 16, efConstruction = 128)
+    val evals = spark.sparkContext.longAccumulator("added rows evaluated")
+    val src = items.take(40).toSeq.map { case (id, v) => (id + 10000L, v.reverse) }.toDF("id", "vec")
+    val n = src.count()
+    val added = src.mapPartitions { it => it.map { r => evals.add(1L); r } }(
+      org.apache.spark.sql.Encoders.row(src.schema))
+    val touched = Hnsw.applyDelta(spark, dir, Seq(3L).toDF("id"), added, "vec", "id")
+    assert(evals.value == n, s"added evaluated ${evals.value.toDouble / n} times per row, want exactly once")
+    assert(touched >= 1 && touched <= 4)
+    assert(Hnsw.readIndex(spark, dir).select("id").as[Long].collect().toSet ==
+      items.map(_._1).toSet - 3L ++ (10000L until 10040L))
+    // a null vector has no shard to land in: loud, like IVF
+    val nullVec = Seq((20000L, null.asInstanceOf[Seq[Double]])).toDF("id", "vec")
+    val ex = intercept[IllegalArgumentException](
+      Hnsw.applyDelta(spark, dir, Seq.empty[Long].toDF("id"), nullVec, "vec", "id"))
+    assert(ex.getMessage.contains("null vector"))
+  }
+
   test("applyDelta invariants under randomized deltas: id-set algebra holds across evolving rounds") {
     val dir = java.nio.file.Files.createTempDirectory("hnsw_delta_prop").toString + "/store"
     Hnsw.writeIndex(items.toSeq.toDF("id", "vec"), "vec", "id", dir, nShards = 8,

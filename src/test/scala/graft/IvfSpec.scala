@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Embedder, Ivf, Search}
+import graft.operators.{Embedder, Ivf, Search, Store}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1054,7 +1054,7 @@ class IvfSpec extends AnyFunSuite {
     touch(new org.apache.hadoop.fs.Path(tmp, "list_id=2"))
     markStaged()
     fs.mkdirs(root)
-    Ivf.recoverDeltaSwap(fs, root, tmp, "list_id=")
+    Store.recover(spark.sparkContext.hadoopConfiguration, root.toString)
     assert(fs.exists(new org.apache.hadoop.fs.Path(root, "list_id=1")),
       "replaced partition must be restored from staging")
     assert(fs.exists(new org.apache.hadoop.fs.Path(root, "list_id=2")),
@@ -1068,14 +1068,14 @@ class IvfSpec extends AnyFunSuite {
     fs.create(marker).close()
     touch(new org.apache.hadoop.fs.Path(tmp, "list_id=5"))
     markStaged()
-    Ivf.recoverDeltaSwap(fs, root, tmp, "list_id=")
+    Store.recover(spark.sparkContext.hadoopConfiguration, root.toString)
     assert(fs.exists(marker), "an existing live partition must win over staging")
     assert(!fs.exists(tmp))
     // a crash MID-STAGING (no _SUCCESS marker: some task outputs committed,
     // some not) must never install partial partition dirs into the live
     // store — even where the live twin is missing — only clear staging
     touch(new org.apache.hadoop.fs.Path(tmp, "list_id=7"))
-    Ivf.recoverDeltaSwap(fs, root, tmp, "list_id=")
+    Store.recover(spark.sparkContext.hadoopConfiguration, root.toString)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "list_id=7")),
       "partial (uncommitted) staging output must not reach the live store")
     assert(!fs.exists(tmp), "incomplete staging dir must still be cleared")
@@ -1105,10 +1105,10 @@ class IvfSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("ivf_marker").toString + "/store.delta")
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(tmp, "list_id=0"))
-    val ex = intercept[IllegalStateException](Ivf.assertCommitMarker(fs, tmp))
+    val ex = intercept[IllegalStateException](Store.assertCommitMarker(fs, tmp))
     assert(ex.getMessage.contains("marksuccessfuljobs"))
     fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")).close()
-    Ivf.assertCommitMarker(fs, tmp) // with the marker: no-op
+    Store.assertCommitMarker(fs, tmp) // with the marker: no-op
   }
 
   test("clusterByDir AQE-off fallback salts within a list only when the write is large") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Embedder, Ivf, Pq, Search}
+import graft.operators.{Embedder, Ivf, Pq, Search, Store}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -91,9 +91,7 @@ class PqSpec extends AnyFunSuite {
         "the rule must still fire on the maintained store")
       assert(!afterDelta.select("id").as[Long].collect().contains(top1),
         "stale store cache: the rule served pre-delta codes after applyDelta")
-      // the explicit escape hatch (object stores without dir mtimes):
-      // invalidate + re-query reloads and still answers correctly
-      graft.plans.PqFamily.invalidate(tmp)
+      // a re-query of the maintained store answers the same
       val reloaded = Search.topK(floatsAfter, "vec", "id", qVec, 5).select("id", "score")
       assert(TestSpark.formattedPlan(reloaded).contains("pq_codes"))
       assert(reloaded.select("id").as[Long].collect().toSeq ==
@@ -134,7 +132,6 @@ class PqSpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.pq.autoProbe")
       spark.conf.unset("spark.graft.pq.nProbe")
       classic.experimental.extraOptimizations = Nil
-      graft.plans.PqFamily.invalidate(tmp)
     }
   }
 
@@ -190,7 +187,7 @@ class PqSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("pq-ver").toString + "/store"
     Pq.writeStore(corpus, "vec", "id", tmp, nList = 6, m = 8, ksub = 16)
     val conf = spark.sparkContext.hadoopConfiguration
-    assert(Pq.readVersion(conf, tmp).contains(1L), "writeStore must stamp version 1")
+    assert(Store.version(conf, tmp).contains(1L), "writeStore must stamp version 1")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     classic.experimental.extraOptimizations = Seq(graft.plans.DeclarativeAnn(spark))
     spark.conf.set("spark.graft.pq.autoProbe", "true")
@@ -207,7 +204,7 @@ class PqSpec extends AnyFunSuite {
       val pinned = mtimeTargets.map(p => p -> java.nio.file.Files.getLastModifiedTime(p))
       Pq.applyDelta(spark, tmp, Seq(top1).toDF("id"),
         Seq.empty[(Long, Seq[Double])].toDF("id", "vec"), "vec", "id")
-      assert(Pq.readVersion(conf, tmp).contains(2L), "applyDelta must bump the version")
+      assert(Store.version(conf, tmp).contains(2L), "applyDelta must bump the version")
       pinned.foreach { case (p, t) => java.nio.file.Files.setLastModifiedTime(p, t) }
       // every legacy mtime input is now byte-identical to the cached load;
       // only the version sidecar says the store moved
@@ -541,6 +538,32 @@ class PqSpec extends AnyFunSuite {
     Pq.applyDelta(spark, tmp, removed, delta, "vec", "id")
     val (codes2, floats2, _, _) = Pq.readStore(spark, tmp)
     assert(searchNow(codes2, floats2) == truth)
+  }
+
+  test("knnJoinIvfPq: building the frame runs no Spark job (the probed-list union is in the plan)") {
+    val tmp = java.nio.file.Files.createTempDirectory("pq-nojob").toString + "/store"
+    Pq.writeStore(corpus, "vec", "id", tmp, nList = 6, m = 8, ksub = 16)
+    val (codes, floats, ivfm, pqm) = Pq.readStore(spark, tmp)
+    val queries = corpus.where(col("id") % 50 === 0)
+    val group = "pq-knn-join-build"
+    val jobs  = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setJobGroup(group, "build a batch IVF-PQ frame")
+    try {
+      val frame = Pq.knnJoinIvfPq(codes, floats, ivfm, pqm, queries, "vec", "id", "vec", "id", 5, nProbe = 2)
+      Thread.sleep(300) // the listener bus is async; let any submitted job surface
+      assert(jobs.get == 0, s"building the frame ran ${jobs.get} jobs")
+      assert(frame.count() == 8 * 5)
+      Thread.sleep(300)
+      assert(jobs.get > 0, "the listener must see the frame's own jobs")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
   }
 
   test("applyDelta evaluates `added` once across both stores") {
