@@ -689,40 +689,45 @@ object Hnsw {
     Store.recover(conf, path)
     val meta = readMeta(spark, path)
     import spark.implicits._
+    // persisted once: the touched-shard collect and the rebuild both read
+    // it, and the caller's lineage must run once, not once per action
     val prepared = batch.select(col(idCol).cast("long").as("__id"), asDouble(col(vecCol)).as("__v"))
       .withColumn("__shard", pmod(hash(col("__id")), lit(meta.nShards)).cast("long"))
-    val touched = prepared.select("__shard").distinct().as[Long].collect().sorted
-    if (touched.isEmpty) return 0
-    val existing = readIndex(spark, path)
-      .where(col("shard").isin(touched: _*))
-      .select(col("shard").cast("long"), col("ord"), col("id"), col("level"),
-        col("vec"), col("links"), col("entry"), col("max_level"))
-    val m   = meta.m
-    val efC = meta.efConstruction
-    // one co-locating shuffle of (touched store rows + batch rows) on shard;
-    // rebuilds happen where the data lands
-    val unioned = existing
-      .withColumn("__kind", lit(0))
-      .unionByName(
-        prepared.select(col("__shard").as("shard"), lit(-1).as("ord"), col("__id").as("id"),
-          lit(0).as("level"), col("__v").as("vec"),
-          typedLit(Seq.empty[Seq[Int]]).as("links"), lit(0).as("entry"), lit(0).as("max_level"))
-          .withColumn("__kind", lit(1)))
-    val rebuilt = unioned
-      .repartition(col("shard"))
-      .mapPartitions { rows =>
-        rows.toSeq.groupBy(_.getLong(0)).iterator.flatMap { case (shard, shardRows) =>
-          val (newRows, oldRows) = shardRows.partition(_.getInt(8) == 1)
-          val fresh = newRows.map(r => (r.getLong(2), r.getSeq[Double](4).toArray)).toArray
-          val g =
-            if (oldRows.isEmpty) build(fresh, m, efC)
-            else extend(graphOf(oldRows), fresh, m, efC)
-          graphRows(shard, g)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val touched = prepared.select("__shard").distinct().as[Long].collect().sorted
+      if (touched.isEmpty) return 0
+      val existing = readIndex(spark, path)
+        .where(col("shard").isin(touched: _*))
+        .select(col("shard").cast("long"), col("ord"), col("id"), col("level"),
+          col("vec"), col("links"), col("entry"), col("max_level"))
+      val m   = meta.m
+      val efC = meta.efConstruction
+      // one co-locating shuffle of (touched store rows + batch rows) on shard;
+      // rebuilds happen where the data lands
+      val unioned = existing
+        .withColumn("__kind", lit(0))
+        .unionByName(
+          prepared.select(col("__shard").as("shard"), lit(-1).as("ord"), col("__id").as("id"),
+            lit(0).as("level"), col("__v").as("vec"),
+            typedLit(Seq.empty[Seq[Int]]).as("links"), lit(0).as("entry"), lit(0).as("max_level"))
+            .withColumn("__kind", lit(1)))
+      val rebuilt = unioned
+        .repartition(col("shard"))
+        .mapPartitions { rows =>
+          rows.toSeq.groupBy(_.getLong(0)).iterator.flatMap { case (shard, shardRows) =>
+            val (newRows, oldRows) = shardRows.partition(_.getInt(8) == 1)
+            val fresh = newRows.map(r => (r.getLong(2), r.getSeq[Double](4).toArray)).toArray
+            val g =
+              if (oldRows.isEmpty) build(fresh, m, efC)
+              else extend(graphOf(oldRows), fresh, m, efC)
+            graphRows(shard, g)
+          }
         }
-      }
-      .toDF("shard", "ord", "id", "level", "vec", "links", "entry", "max_level")
-    Store.swapPartitions(conf, path, "shard", touched.toSeq, Seq(path -> rebuilt))
-    touched.length
+        .toDF("shard", "ord", "id", "level", "vec", "links", "entry", "max_level")
+      Store.swapPartitions(conf, path, "shard", touched.toSeq, Seq(path -> rebuilt))
+      touched.length
+    } finally prepared.unpersist()
   }
 
   /** Recrawl maintenance — removals AND upsert-insertions in ONE

@@ -370,7 +370,10 @@ object Ivf {
     * Trade-off: exactly-once degrades to at-least-once on batch retry —
     * duplicate vectors cost a probe slot but never break top-k correctness.
     * The sidecar is (re)written up front, with a version bump, so a store
-    * born from the stream is immediately self-describing.
+    * born from the stream is immediately self-describing; each appended
+    * micro-batch bumps the version again, so a reader cache keyed on
+    * [[Store.token]] (the resident copy of [[graft.plans.Resident]]) sees
+    * every append.
     */
   def streamInto(
       stream: DataFrame,
@@ -388,6 +391,7 @@ object Ivf {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         clusterByDir(batch).write.mode("append").partitionBy("list_id").parquet(path)
+        Store.bump(conf, path)
       }
     (if (availableNow) w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()) else w).start()
   }

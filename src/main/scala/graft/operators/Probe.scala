@@ -87,10 +87,12 @@ private[graft] object Probe {
 
   /** Where a query's `filters` are evaluated: the store's own columns
     * (`payload == null`) or `payload`, keyed by `payloadIdCol`. `population`
-    * is the estimate's denominator frame ([[Search.estimatedSelectivities]]).
+    * is the estimate's denominator frame ([[Search.estimatedSelectivities]]);
+    * `counted` an exact selectivity that replaces the estimate scan
+    * ([[Search.gatedSelectivity]]).
     */
   final case class Filter(filters: Seq[Column] = Nil, payload: DataFrame = null, payloadIdCol: String = "id",
-      hint: Double = Double.NaN, population: DataFrame = null) {
+      hint: Double = Double.NaN, population: DataFrame = null, counted: Option[Double] = None) {
 
     /** `frame` cut to the payload's allowed ids on `key` (ids cast to long
       * for a batch); a no-op for an unfiltered or store-column filter.
@@ -114,7 +116,7 @@ private[graft] object Probe {
         "this filtered probe needs the payload frame carrying payloadIdCol + the filter columns")
       if (filters.isEmpty) Some(1d)
       else Search.gatedSelectivity(if (payload == null) store else payload, filters.reduce(_ && _), hint,
-        base, model.centroids.length, population)
+        base, model.centroids.length, population, counted)
     }
   }
 

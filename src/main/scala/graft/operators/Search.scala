@@ -315,11 +315,17 @@ object Search {
   /** [[cardinalityGate]]'s decision with the estimate it was made on:
     * `Some(sel)` = probe, `None` = exact branch. For a caller that widens
     * more than one base by the one decision — [[Probe]]'s batch decides at
-    * its narrowest base, then widens each query's own.
+    * its narrowest base, then widens each query's own. `counted` is a
+    * selectivity already counted exactly (a driver-resident store's,
+    * [[graft.plans.Resident]]): it replaces the estimate scan and is still
+    * one decision.
     */
   private[graft] def gatedSelectivity(payload: DataFrame, pred: Column, hint: Double, base: Int, cap: Long,
-      population: DataFrame = null): Option[Double] = {
-    val sel = estimatedSelectivity(payload, pred, hint, population)
+      population: DataFrame = null, counted: Option[Double] = None): Option[Double] = {
+    val sel = counted.fold(estimatedSelectivity(payload, pred, hint, population)) { s =>
+      gateDecisions.incrementAndGet()
+      s
+    }
     widenedWidth(base, sel, cap).map(_ => sel)
   }
 

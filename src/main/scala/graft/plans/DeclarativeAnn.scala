@@ -3,6 +3,7 @@ package graft.plans
 import graft.functions.CosineSimilarity
 import graft.operators.{Probe, Search}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
@@ -37,6 +38,12 @@ import org.apache.spark.sql.types._
   *    `PartitionFilters`. A PQ floats store whose ADC substitution
   *    refuses (a wide output, a foreign secondary sort) falls through to
   *    this injection, so it never loses its partition pruning.
+  *  - An IVF store small enough to be held on the driver ([[Resident]],
+  *    keyed on the store's version token and file set) is answered THERE:
+  *    the same gate decision and list set, the same expressions, a
+  *    `LocalRelation` of the k rows, no Spark job ([[residentTopK]]). The
+  *    hydration join after it becomes a driver-side lookup
+  *    ([[residentLookup]]).
   *
   * BATCH — per-query top-k over a queries × store cross join:
   *
@@ -77,6 +84,7 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val c        = new AnnConf(spark)
     val families = Seq(HnswFamily, PqFamily, IvfFamily).filter(_.enabled(c))
+    val lookups  = families.contains(IvfFamily)
     if (families.isEmpty && !c.bruteAuto) plan
     else plan.transformDown {
       case orig @ GlobalLimit(_, LocalLimit(_, rest))
@@ -85,7 +93,14 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
         rewriteTopK(c, families, orig, rest).getOrElse(orig)
       case orig @ Filter(_, w: Window) =>
         rewriteWindow(c, families, orig, w).getOrElse(orig)
+      case j: Join if lookups && j.joinType == Inner =>
+        residentLookup(j).getOrElse(j)
     }
+  }
+
+  private def limitOf(orig: GlobalLimit): Option[Int] = orig.limitExpr match {
+    case Literal(k: Int, IntegerType) => Some(k)
+    case _                            => None
   }
 
   // ---- single query ---------------------------------------------------------
@@ -117,10 +132,7 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
   private def substituteTopK(c: AnnConf, st: TopKStore, orig: GlobalLimit, s: Sort,
       qv: Array[Double], scoreId: Option[ExprId]): Option[LogicalPlan] =
     for {
-      k <- orig.limitExpr match {
-        case Literal(k: Int, IntegerType) => Some(k)
-        case _                            => None
-      }
+      k  <- limitOf(orig)
       id <- st.idIn(orig.output)
       if TopKMatch.tiebreakOnly(s.order, id)
       if orig.output.forall(a => a.exprId == id.exprId || scoreId.contains(a.exprId))
@@ -137,25 +149,70 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
     * The width policy and the gate are [[Probe]]'s, so the injected list
     * set is the explicit call's ([[graft.operators.Ivf.search]] at
     * `spark.graft.ivf.nProbe`, [[graft.operators.Ivf.searchAdaptive]] at
-    * `spark.graft.ivf.adaptiveMargin`).
+    * `spark.graft.ivf.adaptiveMargin`). A store held on the driver
+    * ([[Resident]]) is answered there instead ([[residentTopK]]).
     */
   private def injectProbe(c: AnnConf, st: IvfStore, orig: GlobalLimit, proj: Option[Project],
       s: Sort, qv: Array[Double], scoreId: Option[ExprId]): Option[LogicalPlan] = {
     if (alreadyPruned(s.child, st.part)) return None
     val width = c.adaptiveMargin.fold[Probe.Width](Probe.Fixed(c.ivfNProbe))(Probe.Margin(_))
-    for {
-      f      <- gateFilter(st, s.child, scoreId)
-      probes <- Probe.injected(st.model, width, f, qv.toSeq)
-    } yield {
-      val pruned = s.child.transformUp {
-        case r: LogicalRelation if r eq st.rel =>
-          Filter(In(st.part, probes.map(i => Literal(i))), r)
-      }
-      val newSort = s.copy(child = pruned)
-      orig.copy(child = orig.child.asInstanceOf[LocalLimit]
-        .copy(child = proj.map(p => p.copy(child = newSort)).getOrElse(newSort)))
+    gateFilter(st, s.child, scoreId).flatMap { f =>
+      residentTopK(st, width, f, orig, proj, s, qv).orElse(
+        Probe.injected(st.model, width, f, qv.toSeq).map { probes =>
+          val pruned = s.child.transformUp {
+            case r: LogicalRelation if r eq st.rel =>
+              Filter(In(st.part, probes.map(i => Literal(i))), r)
+          }
+          val newSort = s.copy(child = pruned)
+          orig.copy(child = orig.child.asInstanceOf[LocalLimit]
+            .copy(child = proj.map(p => p.copy(child = newSort)).getOrElse(newSort)))
+        })
     }
   }
+
+  /** The injected probe answered on the driver from the store's resident
+    * copy, as a `LocalRelation` of the k rows under the limit's output
+    * attributes — no job. Only the plain store path (Projects and Filters
+    * over the relation): a hydrated top-k's join keeps the injection.
+    *
+    *  - the gate counts EXACTLY over the copy (the estimate scan's
+    *    `count(when(pred, 1)) / count(1)`, predicates through Catalyst's
+    *    `Predicate`) and decides through [[Probe.injected]], so width,
+    *    branch and the one `gateDecisions` bump are the scan path's;
+    *  - the same lists are scored (every row on the exact branch) by the
+    *    matched subtree's own Filter, Project and score expressions —
+    *    interpreted `CosineSimilarity` folds as its codegen does, so the
+    *    scores are bit-identical;
+    *  - rows are ordered by the Sort's own `SortOrder`s, so NaN, null and
+    *    tie handling are Spark's.
+    *
+    * None (nothing decided yet) keeps the injection: a non-literal limit,
+    * an expression the driver cannot evaluate, or no current copy.
+    */
+  private def residentTopK(st: IvfStore, width: Probe.Width, f: Probe.Filter, orig: GlobalLimit,
+      proj: Option[Project], s: Sort, qv: Array[Double]): Option[LogicalPlan] =
+    for {
+      k <- limitOf(orig)
+      if Resident.evaluable(s.child, st.rel) && s.order.forall(o => Resident.evaluable(o.child)) &&
+        proj.forall(_.projectList.forall(Resident.evaluable))
+      copy <- Resident.load(spark, st.rel, st.part)
+    } yield {
+      val allowed =
+        if (f.filters.isEmpty) copy.size.toLong
+        else Resident.count(copy.rows, f.filters.map(GraftBridge.expression).reduce(And), st.rel.output)
+      val sel   = if (allowed == 0L) 0d else math.min(allowed.toDouble / copy.size.toDouble, 1d)
+      val lists = Probe.injected(st.model, width, f.copy(counted = Some(sel)), qv.toSeq)
+      // sort keys evaluated once per row, then ordered as the Sort orders
+      val keys  = new InterpretedProjection(s.order.map(_.child), s.child.output)
+      val order = new InterpretedOrdering(s.order.zipWithIndex.map { case (o, i) =>
+        o.copy(child = BoundReference(i, o.dataType, o.nullable))
+      })
+      val top = Resident.eval(s.child, lists.fold(copy.rows)(copy.rowsOf))
+        .map(r => (keys(r), r)).toArray
+        .sortBy(_._1)(order)
+        .iterator.take(k).map(_._2).toSeq
+      LocalRelation(orig.output, proj.fold(top)(p => top.map(new InterpretedProjection(p.projectList, s.output))))
+    }
 
   /** What the injected probe's gate estimates, over the
     * [[TopKMatch.hydratedPredicates]] walk:
@@ -213,6 +270,66 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       case _ => false
     }
+
+  /** The hydration lookup over a resident store: an Inner equi-join of a
+    * `LocalRelation` (the ≤ k hits `Joins.hydrate` joins) with Projects and
+    * Filters over a store that already has a current resident copy becomes
+    * a driver-side hash join emitting a `LocalRelation` — no job. It never
+    * builds a copy, so joins on a store's write path never pay for one.
+    * Keys are integral or string columns of one type on both sides (a null
+    * key matches nothing, as in the join); an output larger than the copy
+    * keeps the join.
+    */
+  private def residentLookup(j: Join): Option[LogicalPlan] = {
+    val oriented = (j.left, j.right) match {
+      case (l: LocalRelation, r) => Some((l, r))
+      case (l, r: LocalRelation) => Some((r, l))
+      case _                     => None
+    }
+    for {
+      (local, side) <- oriented
+      rel  <- side.collectLeaves() match {
+        case Seq(r: LogicalRelation) => Some(r)
+        case _                       => None
+      }
+      if Resident.evaluable(side, rel)
+      keys <- equiKeys(j.condition, local.output, side.output)
+      copy <- Resident.lookup(spark, rel)
+      out  <- {
+        def key(row: InternalRow, at: Seq[Int]): Seq[Any] = keys.zip(at).map { case ((_, _, dt), i) => row.get(i, dt) }
+        val hits = local.data.map(r => key(r, keys.map(_._1)) -> r).filterNot(_._1.contains(null))
+          .groupMap(_._1)(_._2)
+        // a key the store side passes through from its relation cuts the
+        // relation's rows before the Projects and Filters run
+        val leaf  = keys.map(k => rel.output.indexWhere(_.exprId == side.output(k._2).exprId))
+        val rows  = if (leaf.contains(-1)) copy.rows else copy.rows.filter(r => hits.contains(key(r, leaf)))
+        val localLeft = j.left eq local
+        val out = Resident.eval(side, rows).flatMap { r =>
+          hits.getOrElse(key(r, keys.map(_._2)), Nil).iterator.map { h =>
+            (if (localLeft) new JoinedRow(h, r) else new JoinedRow(r, h)).copy()
+          }
+        }.take(copy.size + 1).toSeq
+        if (out.length > copy.size) None else Some(out)
+      }
+    } yield LocalRelation(j.output, out)
+  }
+
+  /** The join condition as equality keys (local index, store-side index,
+    * type) between plain integral or string columns of one type; None
+    * when any conjunct is something else. */
+  private def equiKeys(cond: Option[Expression], local: Seq[Attribute], side: Seq[Attribute])
+      : Option[Seq[(Int, Int, DataType)]] = {
+    def at(out: Seq[Attribute], x: Attribute): Int = out.indexWhere(_.exprId == x.exprId)
+    val keys = cond.toSeq.flatMap(TopKMatch.splitConjuncts).map {
+      case EqualTo(a: AttributeReference, b: AttributeReference)
+          if a.dataType == b.dataType && (TopKMatch.integral(a.dataType) || a.dataType == StringType) =>
+        Seq((at(local, a), at(side, b)), (at(local, b), at(side, a))).collectFirst {
+          case (l, r) if l >= 0 && r >= 0 => (l, r, a.dataType)
+        }
+      case _ => None
+    }
+    if (keys.nonEmpty && keys.forall(_.isDefined)) Some(keys.flatten) else None
+  }
 
   // ---- shared by both shapes ------------------------------------------------
 

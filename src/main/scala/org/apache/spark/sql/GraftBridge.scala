@@ -81,6 +81,14 @@ object GraftBridge {
   def optimized(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan
 
+  /** Collect a DataFrame as Catalyst's own rows (one SQL execution, one
+    * job for a scan) — what [[graft.plans.Resident]] holds on the driver.
+    */
+  def internalRows(df: Dataset[_]): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
   /** The analyzed logical plan of a DataFrame (the inverse splice surface). */
   def analyzed(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed

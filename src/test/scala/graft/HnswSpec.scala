@@ -398,6 +398,21 @@ class HnswSpec extends AnyFunSuite {
     }
   }
 
+  test("insertInto: the caller's batch is evaluated once, not once per action") {
+    val dir = java.nio.file.Files.createTempDirectory("hnsw_ins_once").toString + "/store"
+    val (seed, late) = items.splitAt(380)
+    Hnsw.writeIndex(seed.toSeq.toDF("id", "vec"), "vec", "id", dir, nShards = 4)
+    val byId = late.toMap
+    val rowsRead = spark.sparkContext.longAccumulator("insertInto batch rows")
+    val batch = spark.createDataset(late.map(_._1).toSeq).map { id =>
+      rowsRead.add(1)
+      (id, byId(id).toSeq)
+    }.toDF("id", "vec")
+    assert(Hnsw.insertInto(spark, dir, batch, "vec", "id") >= 1)
+    assert(rowsRead.value == late.length, s"${late.length}-row batch read ${rowsRead.value} rows")
+    assert(Hnsw.readIndex(spark, dir).select("id").distinct().count() == items.length)
+  }
+
   test("applyDelta: removals + upserts rewrite only touched shards; removed ids never surface; search == exact post-delta") {
     val dir = java.nio.file.Files.createTempDirectory("hnsw_delta").toString + "/store"
     Hnsw.writeIndex(items.toSeq.toDF("id", "vec"), "vec", "id", dir, nShards = 8,

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Embedder, Ivf, Search, Store}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** IVF index contract: the probe must be a PARTITION-pruned scan of the
@@ -9,7 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * every list must recover the exact search results (the machinery adds no
   * error beyond list pruning).
   */
-class IvfSpec extends AnyFunSuite {
+class IvfSpec extends AnyFunSuite with BeforeAndAfterAll {
+  // these specs pin the scan path's plans (PartitionFilters, fall-through
+  // shapes) on stores small enough to be held on the driver
+  override def beforeAll(): Unit = graft.plans.Resident.budget = 0L
+  override def afterAll(): Unit  = graft.plans.Resident.budget = graft.plans.Resident.Budget
+
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Embedder, Ivf, Pq, Search, Store}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Product-quantization contract: the memory point (m bytes/vector), exact
@@ -9,7 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * recall through the refine step, and the two-store IVF-PQ probe's plan
   * shape (both scans partition-pruned — the 100 TB property).
   */
-class PqSpec extends AnyFunSuite {
+class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
+  // these specs pin the scan path's plans (PartitionFilters, fall-through
+  // shapes) on stores small enough to be held on the driver
+  override def beforeAll(): Unit = graft.plans.Resident.budget = 0L
+  override def afterAll(): Unit  = graft.plans.Resident.budget = graft.plans.Resident.Budget
+
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
