@@ -2,6 +2,10 @@ package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -144,10 +148,9 @@ object Ivf {
     * and the partition column `part` (null on a removal row that names no
     * partition); `assigned` is persisted by the caller: this is its first
     * action, so the caller's chunk → embed lineage runs here and every
-    * later use reads the cache. Fails on duplicate added ids (no
-    * deterministic winner, and two rows would land under one id) and on
-    * added rows with no partition (a null vector has none to be swapped
-    * into).
+    * later use reads the cache. Fails ([[requireDelta]]) on added rows
+    * with a null id, on duplicate added ids and on added rows with no
+    * partition.
     */
   private[graft] def deltaStats(
       removed: DataFrame, assigned: DataFrame, idCol: String, part: String, op: String): DeltaStats = {
@@ -155,16 +158,30 @@ object Ivf {
       .union(assigned.select(col(idCol), col(part), lit(1L).as("__add")))
     val perId = tagged.groupBy(col(idCol)).agg(
       sum("__add").as("__adds"), count(lit(1)).as("__rows"), max(part).as("__part"),
-      count_if(col("__add") === 1L && col(part).isNull).as("__lost"))
+      count_if(col("__add") === 1L && col(part).isNull).as("__lost"),
+      count_if(col("__add") === 1L && col(idCol).isNull).as("__nullIds"))
     val r = perId.agg(
       coalesce(max("__adds"), lit(0L)),
       coalesce(sum("__rows"), lit(0L)),
       collect_set(col("__part").cast("int")),
       coalesce(sum("__lost"), lit(0L)),
+      coalesce(sum("__nullIds"), lit(0L)),
     ).head()
-    require(r.getLong(0) <= 1, s"$op: duplicate ids within `added` (column $idCol)")
-    require(r.getLong(3) == 0, s"$op: `added` rows with a null vector have no partition to land in")
+    requireDelta(op, idCol, r.getLong(4), r.getLong(0) > 1, r.getLong(3))
     DeltaStats(r.getLong(1), r.getSeq[Int](2).toArray)
+  }
+
+  /** The delta guards every upsert runs before it touches the store, in
+    * this order: an added row with a null id (it would be stored under no
+    * id, and null ids group together, which would read as a duplicate),
+    * a repeated added id (no deterministic winner, and two rows would land
+    * under one id), and an added row with no partition (a null vector has
+    * none to be swapped into).
+    */
+  private def requireDelta(op: String, idCol: String, nullIds: Long, repeated: Boolean, lost: Long): Unit = {
+    require(nullIds == 0, s"$op: $nullIds `added` rows with a null id (column $idCol)")
+    require(!repeated, s"$op: duplicate ids within `added` (column $idCol)")
+    require(lost == 0, s"$op: `added` rows with a null vector have no partition to land in")
   }
 
   /** Append `list_id` = nearest centroid, choosing the scale-appropriate
@@ -286,42 +303,67 @@ object Ivf {
     * (~480 writer open/close cycles per delta batch), and every subsequent
     * probe or rewrite of the store paid the per-file open cost again — the
     * write stage profiled at ~470 ms/task blocked with ~44 ms CPU.
-    * The REBALANCE hint is the scale-adaptive form: under AQE it coalesces
-    * small lists into shared writer tasks AND splits an oversized list into
-    * several advisory-sized files. On an AQE-off session (the lifecycle
-    * clones) the hint silently degrades to ROUND-ROBIN partitioning
-    * (measured: 30 files/list — worse than nothing), so that branch gets an
-    * explicit hash repartition on list_id instead — one right-sized file
-    * per list at delta scale. Both ends stay correct at 100 TB: file count
-    * tracks bytes, never task count.
+    *
+    * The form: a hash repartition on `list_id` into an EXPLICIT count,
+    * min(`lists` written, `spark.sql.shuffle.partitions`) times the salt
+    * below. Not the REBALANCE hint: AQE sizes its partitions by shuffle
+    * bytes, and shuffle bytes are a poor measure of what a parquet writer
+    * costs on 768-d float arrays — a 1 476-row, 23-list upsert shuffled
+    * about 0.7 MB, under AQE's 1 MB minimum partition size, so AQE merged
+    * it into ONE writer task (439 ms) while three of four cores idled. AQE
+    * never coalesces an explicit-count repartition, and the same branch
+    * serves AQE-off sessions (the lifecycle clones), where the hint
+    * degraded to round-robin (30 files per list).
+    *
+    * Skew guard (guide §2.5): one task per hash bucket would serialize a
+    * hot list's writer at scale, so when the frame's size estimate — free,
+    * from the optimized plan (a persisted delta is measured, not guessed)
+    * and the file index (a store read filtered on `list_id` counts only
+    * the files of the lists it reads: a delta touching one list of a
+    * 1 GB store is one list's bytes, not 1 GB), no job — gives each of
+    * the min(`lists`, shuffle partitions) writers several advisory-sized
+    * partitions, a deterministic within-list salt (at most shuffle
+    * partitions) lets writers share a hot list, and the task count grows
+    * with it, so file count tracks bytes. Small writes keep salt 1: one
+    * file per list. The estimate is capped by the bytes the plan's leaves
+    * hold: an inner join's size-only estimate is the PRODUCT of its sides,
+    * which put a 5 MB chunk → embed frame of 1 500 rows (a broadcast join
+    * with its documents) at 6.5 GB and split every list of the build into
+    * 4 files.
     */
-  private[graft] def clusterByDir(df: DataFrame, c: String = "list_id"): DataFrame =
-    if (df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true") == "true")
-      df.hint("rebalance", col(c))
-    else {
-      // Skew guard for the AQE-off fallback (guide §2.5): a bare
-      // repartition(list_id) is ONE task per hash bucket, so a single hot
-      // list serializes its writer at scale (the REBALANCE branch splits
-      // oversized partitions at runtime; this branch can't). When the
-      // frame's size estimate — free, from the analyzed plan, no job —
-      // says the write spans several advisory-sized partitions, add a
-      // deterministic within-list salt so writers can share a hot list.
-      // Small writes keep n = 1 (today's one-task-per-list layout), and
-      // file count tracks bytes either way, never task count.
-      val conf = df.sparkSession.sessionState.conf
-      val advisory = math.max(1L, conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-      val bytes = df.queryExecution.analyzed.stats.sizeInBytes
-      val n = bytes./(advisory).min(BigInt(conf.numShufflePartitions)).max(1).toInt
-      if (n <= 1) df.repartition(col(c))
-      else df.repartition(col(c), pmod(xxhash64(df.columns.map(col): _*), lit(n)))
+  private[graft] def clusterByDir(df: DataFrame, lists: Int = Int.MaxValue): DataFrame = {
+    val conf     = df.sparkSession.sessionState.conf
+    val parallel = conf.numShufflePartitions
+    val writers  = math.max(1, math.min(lists, parallel))
+    val advisory = math.max(1L, conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    // the bytes the leaves hold; a store read filtered on `list_id` holds
+    // only the files of the lists it reads (a path-based relation is
+    // pruned at planning, after the optimized plan's estimate)
+    def held(p: LogicalPlan): BigInt = p match {
+      case PhysicalOperation(_, filters, r: LogicalRelation) => r.relation match {
+        case fs: HadoopFsRelation =>
+          BigInt(fs.location.listFiles(filters.filter(_.deterministic), Nil).iterator.flatMap(_.files).map(_.getLen).sum)
+        case _ => r.stats.sizeInBytes
+      }
+      case leaf if leaf.children.isEmpty => leaf.stats.sizeInBytes
+      case other                         => other.children.map(held).sum
     }
+    val plan  = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes.min(held(plan))
+    val salt  = (bytes / (BigInt(advisory) * writers)).min(BigInt(parallel)).max(1).toInt
+    if (salt <= 1) df.repartition(writers, col("list_id"))
+    else df.repartition(writers * salt, col("list_id"), pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(salt)))
+  }
 
   /** Persist the indexed corpus partitioned by list — this is what makes the
     * probe a partition-pruned scan instead of a filter over everything.
     */
-  def writeIndexed(assigned: DataFrame, path: String): Unit =
-    clusterByDir(assigned).write.mode("overwrite").partitionBy("list_id").parquet(path)
+  def writeIndexed(assigned: DataFrame, path: String): Unit = writeLists(assigned, path, Int.MaxValue)
+
+  /** [[writeIndexed]] of a corpus known to span `lists` lists. */
+  private def writeLists(assigned: DataFrame, path: String, lists: Int): Unit =
+    clusterByDir(assigned, lists).write.mode("overwrite").partitionBy("list_id").parquet(path)
 
   /** What a store's sidecar declares: the centroids and WHICH column they
     * index — [[graft.plans.DeclarativeAnn]] must refuse to prune when the
@@ -346,7 +388,7 @@ object Ivf {
   private def rewrite(data: DataFrame, path: String, idx: Option[StoredIndex]): Unit = {
     val conf = data.sparkSession.sparkContext.hadoopConfiguration
     Store.replace(conf, path) { stage =>
-      writeIndexed(data, stage)
+      writeLists(data, stage, idx.map(_.model.centroids.length).filter(_ > 0).getOrElse(Int.MaxValue))
       idx.foreach(writeCentroids(conf, stage, _))
     }
   }
@@ -390,7 +432,7 @@ object Ivf {
     val w = assigned.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        clusterByDir(batch).write.mode("append").partitionBy("list_id").parquet(path)
+        clusterByDir(batch, model.centroids.length).write.mode("append").partitionBy("list_id").parquet(path)
         Store.bump(conf, path)
       }
     (if (availableNow) w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()) else w).start()
@@ -486,20 +528,36 @@ object Ivf {
     * the cost is proportional to the churn, not the corpus.
     *
     * Mechanics: added rows assign lists with the SIDECAR's fitted model
-    * (no refit — same contract as [[streamInto]]) and are persisted before
-    * any action; ONE aggregate over the delta's ids ([[deltaStats]]) then
-    * runs the duplicate guard, sizes the broadcast gate and names the
-    * lists gaining rows. `added` is therefore evaluated exactly once per
-    * call — the caller's chunk → embed lineage runs once, not once per
-    * check. Removed rows locate their lists via one column-pruned
-    * (id, list_id) scan semi-joined against the size-gated removal set.
-    * The affected lists' surviving rows plus the additions commit through
+    * (no refit — same contract as [[streamInto]]); the affected lists are
+    * those holding a removed or added id plus those gaining a row. Their
+    * surviving rows plus the additions commit through
     * [[Store.swapPartitions]] (staged once beside the store, then each
     * affected list directory swapped in; a list the delta emptied stays
     * deleted); [[Store.recover]] at entry completes a crashed earlier
-    * commit. Readers see per-list swaps.
-    * `removedIds` is re-read by each join, so pass a cheap or persisted
-    * frame.
+    * commit. Readers see per-list swaps. Two paths resolve the delta:
+    *
+    *  - Resident: a store within [[graft.plans.Resident]]'s budget is
+    *    resolved against its driver copy (built by one scan job when none
+    *    is held). The additions are collected in one job; the null-id,
+    *    duplicate and null-vector guards and the affected lists are
+    *    answered on the driver; the kept rows come from the copy and
+    *    are written through [[clusterByDir]]. After the swap returns, the
+    *    next version's copy is installed, so a reopened handle's first
+    *    top-k runs no job. A delta whose types differ from the store's,
+    *    whose removal set passes [[BroadcastDeltaMaxRows]], or whose
+    *    additions pass the room the copy leaves in the budget takes the
+    *    scan path.
+    *  - Scan: `added` is persisted, and ONE aggregate over the delta's
+    *    ids ([[deltaStats]]) runs the guards, sizes the broadcast gate and
+    *    names the lists gaining rows; removed rows locate their lists via
+    *    one column-pruned (id, list_id) scan semi-joined against the
+    *    size-gated removal set.
+    *
+    * Either way `added` is evaluated once per call — the caller's
+    * chunk → embed lineage runs once, not once per check — except for the
+    * bounded prefix a resident attempt reads before it hands a bulk delta
+    * to the scan path. `removedIds` is re-read by each join, so pass a
+    * cheap or persisted frame.
     *
     * `added` rows are UPSERTS (existing rows with the same id drop first),
     * so re-applying a delta is idempotent. `added` must carry `idCol` plus
@@ -522,7 +580,77 @@ object Ivf {
     require(added.columns.contains(vecCol),
       s"added frame must carry the store's indexed column '$vecCol' (has: ${added.columns.mkString(", ")})")
     val assigned = withListId(added, model, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    lazy val store = spark.read.parquet(path)
+    graft.plans.Resident.writable(spark, path, store)
+      .flatMap(residentDelta(spark, path, _, removedIds, assigned, idCol))
+      .getOrElse(scanDelta(spark, path, store, removedIds, assigned, idCol))
+  }
+
+  /** [[applyDelta]] resolved against the store's resident copy; None hands
+    * the delta to [[scanDelta]], before any commit. The additions are
+    * collected in one job only while they fit the room the copy leaves in
+    * the resident budget: past it each task stops at its share, and a bulk
+    * load into a small store takes the scan path, which evaluates `added`
+    * again — the rows read twice are at most the room's worth plus one per
+    * task. Not persisted: under AQE a cached frame's first read runs one
+    * more job, to fill the cache, than the same collect uncached. */
+  private def residentDelta(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      base: graft.plans.Resident.Base,
+      removedIds: DataFrame,
+      assigned: DataFrame,
+      idCol: String,
+  ): Option[Long] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils.{equalsIgnoreNullability, toAttributes}
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val schema = base.schema
+    if (!schema.fieldNames.forall(assigned.columns.contains) || !removedIds.columns.contains(idCol)) return None
+    val adds   = assigned.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val rems   = removedIds.select(col(idCol))
+    val idType = schema(idCol).dataType
+    if (!Seq(IntegerType, LongType, StringType).contains(idType) || rems.schema.head.dataType != idType ||
+      !adds.schema.fields.zip(schema.fields).forall { case (a, b) => equalsIgnoreNullability(a.dataType, b.dataType) })
+      return None
+    val gone = graft.plans.Resident.unsafeRows(rems.limit((BroadcastDeltaMaxRows + 1).toInt))
+    if (gone.length > BroadcastDeltaMaxRows) return None
+    val room = graft.plans.Resident.budget - base.copy.bytes
+    val rows = graft.plans.Resident.unsafeRowsWithin(adds, room) match {
+      case Some(rs) => rs
+      case None     => return None
+    }
+    val (ii, li) = (schema.fieldIndex(idCol), schema.fieldIndex("list_id"))
+    def id(r: InternalRow): Any = r.get(ii, idType)
+    requireDelta("applyDelta", idCol, rows.count(_.isNullAt(ii)).toLong,
+      rows.iterator.map(id).distinct.size < rows.length, rows.count(_.isNullAt(li)).toLong)
+    // upserts: a stored row with an added id vacates, whichever list it is in
+    val rem = (gone.iterator.filterNot(_.isNullAt(0)).map(_.get(0, idType)) ++ rows.iterator.map(id)).toSet[Any]
+    val gaining  = rows.groupBy(_.getInt(li))
+    val affected = (base.copy.rows.filter(r => rem(id(r))).map(_.getInt(li)).toSet ++ gaining.keySet).toSeq.sorted
+    if (affected.isEmpty) return Some(0L)
+    val changed: Map[Int, Array[InternalRow]] = affected.map { l =>
+      l -> (base.copy.rowsOf(Seq(l)).filterNot(r => rem(id(r))) ++ gaining.getOrElse(l, Array.empty).iterator).toArray
+    }.toMap
+    val frame = org.apache.spark.sql.GraftBridge.ofRows(spark, LocalRelation(toAttributes(schema), changed.values.flatten.toSeq))
+    val token = Store.swapPartitions(spark.sparkContext.hadoopConfiguration, path, "list_id", affected,
+      Seq(path -> clusterByDir(frame, affected.length)))
+    graft.plans.Resident.install(spark, base, token, changed)
+    Some(affected.length.toLong)
+  }
+
+  /** [[applyDelta]] through Spark: the path for stores over the resident
+    * budget (or without a version file) and deltas the driver copy does
+    * not take. */
+  private def scanDelta(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      store: DataFrame,
+      removedIds: DataFrame,
+      added: DataFrame,
+      idCol: String,
+  ): Long = {
+    val assigned = added.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the delta cache releases in a finally: a retried batch (the
     // documented at-least-once recovery contract, where a staging-write or
     // swap failure is EXPECTED to be replayed) must not accumulate pinned
@@ -530,7 +658,6 @@ object Ivf {
     try {
       val delta = deltaStats(removedIds.select(col(idCol), lit(null).cast("int").as("list_id")),
         assigned, idCol, "list_id", "applyDelta")
-      val store = spark.read.parquet(path)
       // additions are UPSERTS: any stored row with an added id drops first,
       // so re-applying a delta (at-least-once batch retry, a caller that
       // forgot to list changed ids as stale) never duplicates a vector —
@@ -559,7 +686,8 @@ object Ivf {
         .join(remHint, Seq(idCol), "left_anti")
       val rewrite = kept
         .unionByName(assigned.select(store.columns.map(col).toIndexedSeq: _*))
-      Store.swapPartitions(conf, path, "list_id", affected.toSeq, Seq(path -> clusterByDir(rewrite)))
+      Store.swapPartitions(spark.sparkContext.hadoopConfiguration, path, "list_id", affected.toSeq,
+        Seq(path -> clusterByDir(rewrite, affected.length)))
       affected.length.toLong
     } finally {
       assigned.unpersist()

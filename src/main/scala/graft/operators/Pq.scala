@@ -372,8 +372,8 @@ object Pq {
       // caches are never told "fresh" about a store whose swaps haven't
       // completed
       Store.swapPartitions(conf, root, "list_id", affected.toSeq, Seq(
-        s"$root/floats" -> Ivf.clusterByDir(keptF.unionByName(newF)),
-        s"$root/codes" -> Ivf.clusterByDir(keptC.unionByName(newC.select(codes.columns.map(col).toIndexedSeq: _*)))))
+        s"$root/floats" -> Ivf.clusterByDir(keptF.unionByName(newF), affected.length),
+        s"$root/codes" -> Ivf.clusterByDir(keptC.unionByName(newC.select(codes.columns.map(col).toIndexedSeq: _*)), affected.length)))
       affected.length.toLong
     } finally {
       assigned.unpersist()

@@ -90,12 +90,14 @@ private[graft] object Store {
     readSidecar(conf, root, VersionFile)(l => if (l.isEmpty) None else Some(l.mkString("\n")))
 
   /** Stamp the store's next version with a fresh commit id. */
-  def bump(conf: Configuration, root: String): Unit = bump(conf, root, root)
+  def bump(conf: Configuration, root: String): Unit = { bump(conf, root, root); () }
 
-  /** Stamp `into` with `from`'s next version. */
-  private def bump(conf: Configuration, from: String, into: String): Unit =
-    writeSidecar(conf, into, VersionFile,
-      Iterator((version(conf, from).getOrElse(0L) + 1L).toString, java.util.UUID.randomUUID().toString))
+  /** Stamp `into` with `from`'s next version; returns the token written. */
+  private def bump(conf: Configuration, from: String, into: String): String = {
+    val lines = Seq((version(conf, from).getOrElse(0L) + 1L).toString, java.util.UUID.randomUUID().toString)
+    writeSidecar(conf, into, VersionFile, lines.iterator)
+    lines.mkString("\n")
+  }
 
   // ---- recovery ---------------------------------------------------------
 
@@ -152,12 +154,13 @@ private[graft] object Store {
     * the commit marker, then swap each partition directory in; a partition
     * with no staged rows stays deleted. The version at `versionRoot` is
     * bumped LAST, so a cache is never told "fresh" about a store whose
-    * swaps have not completed. The caller ran [[recover]] on every root
-    * before building the frames.
+    * swaps have not completed; the returned token is the one that bump
+    * wrote. The caller ran [[recover]] on every root before building the
+    * frames.
     */
   def swapPartitions(
       conf: Configuration, versionRoot: String, part: String, parts: Seq[Any],
-      stores: Seq[(String, DataFrame)]): Unit = {
+      stores: Seq[(String, DataFrame)]): String = {
     stores.foreach { case (root, frame) =>
       val (fs, r) = fsOf(conf, root)
       val tmp     = sibling(r, ".delta")
@@ -171,7 +174,7 @@ private[graft] object Store {
       }
       fs.delete(tmp, true)
     }
-    bump(conf, versionRoot)
+    bump(conf, versionRoot, versionRoot)
   }
 
   // ---- whole-store replace ----------------------------------------------

@@ -275,7 +275,7 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
     * `LocalRelation` (the ≤ k hits `Joins.hydrate` joins) with Projects and
     * Filters over a store that already has a current resident copy becomes
     * a driver-side hash join emitting a `LocalRelation` — no job. It never
-    * builds a copy, so joins on a store's write path never pay for one.
+    * builds a copy: only a top-k or an in-budget `Ivf.applyDelta` does.
     * Keys are integral or string columns of one type on both sides (a null
     * key matches nothing, as in the join); an output larger than the copy
     * keeps the join.

@@ -4,7 +4,7 @@ import graft.operators.Store
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
@@ -31,6 +31,15 @@ import scala.util.control.NonFatal
   * handle whose listing equals the store's current files, by ONE scan job,
   * single-flight per (root, token) — concurrent clients plan concurrently —
   * and is dropped if the token moved while it was read.
+  *
+  * Writers: an in-budget [[graft.operators.Ivf.applyDelta]] resolves its
+  * delta against the copy ([[writable]], which builds it through [[load]]
+  * when missing) and, once its commit has returned, installs the next
+  * version's copy ([[install]]): unaffected lists share their row arrays,
+  * affected lists hold exactly the rows the commit wrote, keyed on the
+  * token the commit wrote and the post-commit listing, and only when no
+  * other commit changed the store since the copy was read. So the first
+  * top-k after an upsert runs no job either.
   *
   * The cache holds at most [[Budget]] decoded bytes in total, evicts least
   * recently used copies, and sweeps copies of stopped contexts and of
@@ -65,7 +74,22 @@ private[graft] object Resident {
     /** The rows of `probed` lists only. */
     def rowsOf(probed: Seq[Int]): Iterator[InternalRow] =
       probed.iterator.flatMap(l => lists.getOrElse(l, Array.empty[InternalRow]).iterator)
+
+    /** This copy with the `changed` lists' rows replaced (an empty list is
+      * dropped); every other list shares its array. */
+    private[Resident] def updated(changed: Map[Int, Array[InternalRow]]): Copy = {
+      def bytesOf(rs: Iterator[InternalRow]) = rs.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
+      val next = lists -- changed.keys ++ changed.filter(_._2.nonEmpty)
+      new Copy(next, next.valuesIterator.map(_.length).sum,
+        bytes - bytesOf(rowsOf(changed.keys.toSeq)) + bytesOf(changed.valuesIterator.flatMap(_.iterator)))
+    }
   }
+
+  /** What an upsert resolves its delta against: the copy of the version
+    * `token` of the store at `root`, read from the data files `files`,
+    * whose rows have the layout `schema`. */
+  final class Base private[Resident] (val root: String, val token: String, private[Resident] val files: Set[String],
+      val schema: StructType, val copy: Copy)
 
   /** A cached version: `copy` is None for a store measured over the
     * budget in force when it was read (`budget`). */
@@ -98,8 +122,8 @@ private[graft] object Resident {
   private def cached(root: String): Option[Entry] = entries.synchronized(Option(entries.get(root)))
 
   /** The copy `rel` may be answered from, if one is already held. Never
-    * builds: the hydration lookup and every other join use it, so a
-    * store's writers never pay for a build. */
+    * builds: the hydration lookup and every other join use it, so a join
+    * never pays for a build. */
   def lookup(spark: SparkSession, rel: LogicalRelation): Option[Copy] =
     for {
       h <- handleOf(spark, rel)
@@ -115,6 +139,9 @@ private[graft] object Resident {
     * listing is not the store's current one, or a commit during the read.
     */
   def load(spark: SparkSession, rel: LogicalRelation, part: Attribute): Option[Copy] =
+    entry(spark, rel, part).flatMap(_.copy)
+
+  private def entry(spark: SparkSession, rel: LogicalRelation, part: Attribute): Option[Entry] =
     for {
       h <- handleOf(spark, rel)
       t <- h.token
@@ -127,8 +154,85 @@ private[graft] object Resident {
           try build(spark, rel, part, h, t) catch { case NonFatal(_) => None }))
         finally building.remove(key, lock)
       }
-      c <- e.copy
-    } yield c
+    } yield e
+
+  /** The copy an upsert of the store at `path` resolves its delta against:
+    * the held one when its token and file set are the store's current
+    * ones, else one [[load]] builds from `open` (a fresh handle over
+    * `path`, forced only then). None keeps the upsert's scan path: no
+    * version file, over the budget, or a failed build.
+    */
+  def writable(spark: SparkSession, path: String, open: => DataFrame): Option[Base] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p    = new Path(path)
+    val root = p.getFileSystem(conf).makeQualified(p).toString
+    val held = for {
+      t <- Store.token(conf, root)
+      e <- cached(root)
+      if e.token == t && e.budget == budget && !e.sc.isStopped && e.files == listing(conf, root)
+    } yield e
+    held.orElse(GraftBridge.analyzed(open) match {
+      case rel: LogicalRelation => rel.output.find(_.name == "list_id").flatMap(entry(spark, rel, _))
+      case _                    => None
+    }).flatMap(e => e.copy.map(new Base(root, e.token, e.files, e.schema, _)))
+  }
+
+  /** After a commit of `base`'s store that wrote `token`, hold the next
+    * version: `base`'s copy with the `changed` lists' rows (the rows just
+    * written), keyed on `token` and the post-commit listing. Installs
+    * nothing when the store's token is no longer `token`, the held entry is
+    * another version's (so it never replaces a newer version), or the
+    * listing outside the changed lists' directories is not the file set
+    * `base` was read from: a commit that installs nothing (a `streamInto`
+    * micro-batch, a scan-path upsert) landed between the read and this
+    * commit, and its files are not in `base`'s rows.
+    */
+  def install(spark: SparkSession, base: Base, token: String, changed: Map[Int, Array[InternalRow]]): Unit = {
+    val conf  = spark.sparkContext.hadoopConfiguration
+    val files = listing(conf, base.root)
+    val dirs  = changed.keySet.map(l => s"list_id=$l")
+    def kept(fs: Set[String]) = fs.filterNot(f => dirs(new Path(f).getParent.getName))
+    if (kept(files) == kept(base.files)) {
+      val next = base.copy.updated(changed)
+      entries.synchronized {
+        if (Store.token(conf, base.root).contains(token) && cached(base.root).forall(_.token == base.token))
+          put(base.root, Entry(token, files, base.schema, spark.sparkContext, budget, Some(next).filter(_.bytes <= budget)))
+      }
+    }
+  }
+
+  /** `df`'s rows as a copy holds them (`UnsafeRow`s), in one collect. */
+  def unsafeRows(df: DataFrame): Array[UnsafeRow] = {
+    lazy val unsafe = UnsafeProjection.create(df.schema)
+    GraftBridge.internalRows(df).map {
+      case u: UnsafeRow => u
+      case r            => unsafe(r).copy()
+    }
+  }
+
+  /** [[unsafeRows]] of a frame whose size is not known, in one job that
+    * never holds much more than `maxBytes` on the driver: each task returns
+    * at most its even share of `maxBytes` (plus the row that passes it),
+    * and None means some task had more — the caller takes a path that
+    * does not collect.
+    */
+  def unsafeRowsWithin(df: DataFrame, maxBytes: Long): Option[Array[UnsafeRow]] = {
+    val rdd    = df.queryExecution.toRdd
+    val share  = maxBytes / math.max(1, rdd.getNumPartitions)
+    val schema = df.schema
+    val parts = rdd.mapPartitions { it =>
+      val unsafe = UnsafeProjection.create(schema)
+      val out    = Array.newBuilder[UnsafeRow]
+      var bytes  = 0L
+      while (bytes <= share && it.hasNext) {
+        val u = unsafe(it.next()).copy()
+        bytes += u.getSizeInBytes
+        out += u
+      }
+      Iterator((bytes <= share, out.result()))
+    }.collect()
+    if (parts.forall(_._1)) Some(parts.flatMap(_._2)) else None
+  }
 
   private def build(spark: SparkSession, rel: LogicalRelation, part: Attribute, h: Handle,
       token: String): Option[Entry] = {
@@ -141,17 +245,13 @@ private[graft] object Resident {
     val li     = rel.output.indexWhere(_.exprId == part.exprId)
     val onDisk = rel.relation.asInstanceOf[HadoopFsRelation].location.sizeInBytes
     if (li < 0) None
-    else if (onDisk > budget) Some(put(h, Entry(token, h.files, h.schema, sc, budget, None)))
+    else if (onDisk > budget) Some(put(h.root, Entry(token, h.files, h.schema, sc, budget, None)))
     else if (listing(h.conf, h.root) != h.files) None
     else {
-      lazy val unsafe = UnsafeProjection.create(rel.schema)
-      val rows = GraftBridge.internalRows(GraftBridge.ofRows(spark, rel)).map {
-        case u: UnsafeRow => u
-        case r            => unsafe(r).copy()
-      }
+      val rows  = unsafeRows(GraftBridge.ofRows(spark, rel))
       val bytes = rows.iterator.map(_.getSizeInBytes.toLong).sum
       if (!h.token.contains(token) || rows.exists(_.isNullAt(li))) None
-      else Some(put(h, Entry(token, h.files, h.schema, sc, budget,
+      else Some(put(h.root, Entry(token, h.files, h.schema, sc, budget,
         if (bytes > budget) None
         else Some(new Copy(rows.groupBy(_.getInt(li)).view.mapValues(_.toArray[InternalRow]).toMap, rows.length, bytes)))))
     }
@@ -159,34 +259,34 @@ private[graft] object Resident {
 
   /** Install `e` for its root, then evict least recently used copies until
     * the held total fits the budget. */
-  private def put(h: Handle, e: Entry): Entry = entries.synchronized {
-    entries.put(h.root, e)
+  private def put(root: String, e: Entry): Entry = entries.synchronized {
+    entries.put(root, e)
     var total = 0L
     entries.values.forEach(x => total += x.bytes)
     val it = entries.entrySet.iterator
     while (total > budget && it.hasNext) {
       val x = it.next()
-      if (x.getKey != h.root) { total -= x.getValue.bytes; it.remove() }
+      if (x.getKey != root) { total -= x.getValue.bytes; it.remove() }
     }
     e
   }
 
   /** The data files of the store at `root` as the file index lists them
-    * (hidden `_`/`.` names skipped, `name=value` directories kept). */
+    * (hidden `_`/`.` names skipped, `name=value` directories kept). Plain
+    * `listStatus` per directory, as Spark's own file listing does: the
+    * recursive `listFiles` builds a `LocatedFileStatus` per file, which
+    * copies its permissions, and the local file system reads those by
+    * forking a process per file — about 250 ms for a 39-list store. */
   private def listing(conf: Configuration, root: String): Set[String] = {
     val r  = new Path(root)
-    val it = r.getFileSystem(conf).listFiles(r, true)
-    def hidden(p: Path): Boolean =
-      p != null && p.toUri.getPath != r.toUri.getPath && {
-        val n = p.getName
-        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_") || hidden(p.getParent)
+    val fs = r.getFileSystem(conf)
+    def hidden(n: String): Boolean =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    def walk(d: Path): Iterator[String] =
+      fs.listStatus(d).iterator.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) walk(st.getPath) else Iterator(st.getPath.toUri.toString)
       }
-    val out = Set.newBuilder[String]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (!hidden(p)) out += p.toUri.toString
-    }
-    out.result()
+    walk(r).toSet
   }
 
   // ---- the driver-side evaluator ------------------------------------------

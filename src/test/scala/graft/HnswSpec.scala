@@ -504,6 +504,21 @@ class HnswSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("null vector"))
   }
 
+  test("applyDelta: added rows with a null id fail loudly naming the id column, one row or two") {
+    // a null id has no shard of its own: the guard names the id column
+    // before any shard is read or rewritten
+    val dir = java.nio.file.Files.createTempDirectory("hnsw_null_id").toString + "/store"
+    Hnsw.writeIndex(items.toSeq.toDF("id", "vec"), "vec", "id", dir, nShards = 4,
+      m = 16, efConstruction = 128)
+    for (n <- Seq(1, 2)) {
+      val added = items.take(n).toSeq.toDF("id", "vec").select(lit(null).cast("long").as("id"), col("vec"))
+      val ex = intercept[IllegalArgumentException](
+        Hnsw.applyDelta(spark, dir, Seq.empty[Long].toDF("id"), added, "vec", "id"))
+      assert(ex.getMessage.contains("null id") && ex.getMessage.contains("(column id)"), ex.getMessage)
+    }
+    assert(Hnsw.readIndex(spark, dir).count() == items.length)
+  }
+
   test("applyDelta invariants under randomized deltas: id-set algebra holds across evolving rounds") {
     val dir = java.nio.file.Files.createTempDirectory("hnsw_delta_prop").toString + "/store"
     Hnsw.writeIndex(items.toSeq.toDF("id", "vec"), "vec", "id", dir, nShards = 8,

@@ -1008,6 +1008,24 @@ class IvfSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids.toSet == (0L until 300L).toSet - 100L - 101L ++ (5000L until 5015L))
   }
 
+  test("applyDelta: added rows with a null id fail loudly naming the id column, one row or two") {
+    // without the guard one such row committed under a null id and two
+    // failed as "duplicate ids"
+    val dir = java.nio.file.Files.createTempDirectory("ivf_null_id").toString + "/store"
+    val (assigned0, model) = Ivf.assign(corpus, "vec", 6)
+    Ivf.writeIndexed(assigned0, dir, model, "vec")
+    val conf   = spark.sparkContext.hadoopConfiguration
+    val before = Store.token(conf, dir)
+    for (n <- Seq(1, 2)) {
+      val added = corpus.limit(n).select(lit(null).cast("long").as("id"), col("vec"))
+      val ex = intercept[IllegalArgumentException](
+        Ivf.applyDelta(spark, dir, Seq.empty[Long].toDF("id"), added, "id"))
+      assert(ex.getMessage.contains("null id") && ex.getMessage.contains("(column id)"), ex.getMessage)
+    }
+    assert(Store.token(conf, dir) == before, "a rejected delta commits nothing")
+    assert(spark.read.parquet(dir).count() == 300L)
+  }
+
   test("applyDelta's delta join is size-gated: small deltas broadcast, a bulk purge degrades to a shuffled join") {
     // plan shape, both branches: under the row cap the hint forces a
     // BroadcastHashJoin; over it the hint is withheld and (the delta being

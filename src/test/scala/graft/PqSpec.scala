@@ -592,6 +592,21 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(codes1.where(col("id") === 3L).count() == 0)
   }
 
+  test("applyDelta: added rows with a null id fail loudly naming the id column, one row or two") {
+    val tmp = java.nio.file.Files.createTempDirectory("pq-null-id").toString + "/store"
+    Pq.writeStore(corpus, "vec", "id", tmp, nList = 6, m = 8, ksub = 16)
+    val before = Store.token(spark.sparkContext.hadoopConfiguration, tmp)
+    for (n <- Seq(1, 2)) {
+      val added = corpus.limit(n).select(lit(null).cast("long").as("id"), col("vec"))
+      val ex = intercept[IllegalArgumentException](
+        Pq.applyDelta(spark, tmp, Seq.empty[Long].toDF("id"), added, "vec", "id"))
+      assert(ex.getMessage.contains("null id") && ex.getMessage.contains("(column id)"), ex.getMessage)
+    }
+    assert(Store.token(spark.sparkContext.hadoopConfiguration, tmp) == before, "a rejected delta commits nothing")
+    val (codes1, floats1, _, _) = Pq.readStore(spark, tmp)
+    assert(floats1.count() == 400 && codes1.count() == 400)
+  }
+
   test("applyDelta replay self-heals a floats/codes divergence (crash between the two swaps)") {
     val tmp = java.nio.file.Files.createTempDirectory("pq-heal").toString + "/store"
     Pq.writeStore(corpus, "vec", "id", tmp, nList = 6, m = 8, ksub = 16)

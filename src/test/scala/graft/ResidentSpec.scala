@@ -2,10 +2,13 @@ package graft
 
 import graft.operators.{Embedder, Ivf, Joins, Search, Store}
 import graft.plans.Resident
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Zero-job search over driver-resident IVF stores, under the shipped
@@ -85,6 +88,62 @@ class ResidentSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** The stages `body` completed, in completion order. */
+  private def stages[T](body: => T): (T, Seq[StageInfo]) = {
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = done.add(e.stageInfo)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      Thread.sleep(500)
+      (out, done.toArray(new Array[StageInfo](0)).toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Data files per `list_id=` directory of the store at `dir`. */
+  private def layout(dir: String): Map[Int, Int] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("list_id=")).map { d =>
+      d.getName.stripPrefix("list_id=").toInt -> d.listFiles().count(f => !f.getName.startsWith(".") &&
+        !f.getName.startsWith("_"))
+    }.toMap
+
+  private def copyStore(from: String, to: String): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src  = new org.apache.hadoop.fs.Path(from)
+    val fs   = src.getFileSystem(conf)
+    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, new org.apache.hadoop.fs.Path(to), false, conf)
+    to
+  }
+
+  private def relOf(df: DataFrame): LogicalRelation =
+    org.apache.spark.sql.GraftBridge.analyzed(df).asInstanceOf[LogicalRelation]
+
+  /** A row's values by the relation's schema (strings and float arrays as
+    * Scala values), for comparing copies with scans. */
+  private def plain(r: InternalRow, schema: StructType): Seq[Any] = schema.fields.indices.map { i =>
+    if (r.isNullAt(i)) null
+    else schema(i).dataType match {
+      case ArrayType(FloatType, _) => r.getArray(i).toFloatArray.toSeq
+      case dt                      => r.get(i, dt) match {
+        case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+        case x                                            => x
+      }
+    }
+  }
+
+  /** list_id → the list's rows, sorted by chunk_id. */
+  private def perList(rows: Iterable[InternalRow], schema: StructType): Map[Int, Seq[Seq[Any]]] = {
+    val (li, ci) = (schema.fieldIndex("list_id"), schema.fieldIndex("chunk_id"))
+    rows.map(plain(_, schema)).groupBy(_(li).asInstanceOf[Int])
+      .view.mapValues(_.toSeq.sortBy(_(ci).asInstanceOf[Long])).toMap
+  }
+
+  /** The store's rows as a scan reads them, by chunk_id. */
+  private def stored(dir: String): Seq[Row] =
+    spark.read.parquet(dir).orderBy("chunk_id").collect().toSeq
+
   private def decisions[T](body: => T): (T, Long) = {
     val before = Search.gateDecisions.get()
     val out    = body
@@ -161,7 +220,7 @@ class ResidentSpec extends AnyFunSuite {
     }
   }
 
-  test("after applyDelta a reopened handle is answered at the new version: one build job, then none") {
+  test("after applyDelta a reopened handle is answered at the new version with no build job") {
     import spark.implicits._
     val dir = write(tmp("resident-fresh"))
     val old = ext.read.parquet(dir)
@@ -170,8 +229,9 @@ class ResidentSpec extends AnyFunSuite {
       .toDF("chunk_id", "document_id", "category", "lang", "text", "embedding")
     Ivf.applyDelta(spark, dir, Seq(5L).toDF("chunk_id"), planted, "chunk_id")
     val fresh = ext.read.parquet(dir)
-    val ((top, hyd), built) = jobs(request(fresh, Nil))
-    assert(built == 1, s"the first request after the commit: expected 1 build job, got $built")
+    // the commit installed the next version's copy: nothing to build
+    val ((top, hyd), first) = jobs(request(fresh, Nil))
+    assert(first == 0, s"the first request after the commit: expected no job, got $first")
     assert(top.head._1 == 9999L && hyd.exists(_.getLong(0) == 9999L), "the committed row is visible")
     val (_, warm) = jobs(request(fresh, Nil))
     assert(warm == 0, s"the next request: expected no job, got $warm")
@@ -245,5 +305,205 @@ class ResidentSpec extends AnyFunSuite {
       assert(isResident(plan))
       assert(top().head == 9999L, "the streamed row is served")
     } finally q.stop()
+  }
+
+  test("one delta, both paths: the resident upsert commits what the scan path commits and holds a fresh build") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src  = rows(400)
+    val (assigned, model) = Ivf.assign(src.toDF("chunk_id", "document_id", "category", "lang", "text", "embedding"),
+      "embedding", 20)
+    val listOf = assigned.select("chunk_id", "list_id").as[(Long, Int)].collect().toMap
+    // ids 0 (a zero vector) and 1 (a null category) stay out of the delta
+    val sizes  = listOf.groupBy(_._2).view.mapValues(_.keys.toSeq.filter(_ > 1).sorted).toMap
+    val Seq(fresh, emptied, from, to) = sizes.toSeq.filter(_._2.size >= 2).sortBy(l => (l._2.size, l._1))
+      .map(_._1).take(4)
+    // `fresh` has no directory before the delta; the delta adds a row to it
+    val dir  = tmp("resident-both")
+    Ivf.writeIndexed(assigned.where(col("list_id") =!= fresh), dir, model, "embedding")
+    val twin = copyStore(dir, tmp("resident-both-scan"))
+    val byId  = src.map(r => r._1 -> r).toMap
+    val moved   = sizes(from).head
+    val dropped = listOf.collect { case (id, l) if l == emptied => id }.toSeq ++ sizes(to).take(2)
+    val added = Seq(
+      // re-uploaded with a vector of `to`: vacates `from`, lands in `to`
+      byId(moved).copy(_5 = "moved", _6 = byId(sizes(to).last)._6),
+      (5000L, 5000L, "c1", "en", "new", byId(sizes(fresh).last)._6),
+    ).toDF("chunk_id", "document_id", "category", "lang", "text", "embedding")
+    val removal = dropped.toDF("chunk_id")
+    val old     = ext.read.parquet(dir)
+    request(old, Nil)
+    // the scan path first: a zero budget evicts every held copy
+    val nScan = withBudget(0L)(Ivf.applyDelta(spark, twin, removal, added, "chunk_id"))
+    val n     = Ivf.applyDelta(spark, dir, removal, added, "chunk_id")
+    assert(n == nScan && n == 4, s"lists touched: resident $n, scan $nScan")
+    // the files on disk: the same lists, one data file each, the same rows
+    assert(layout(dir) == layout(twin) && layout(dir).values.forall(_ == 1), s"${layout(dir)} vs ${layout(twin)}")
+    assert(!layout(dir).contains(emptied) && layout(dir).contains(fresh))
+    assert(stored(dir) == stored(twin))
+    assert(stored(dir).map(_.getAs[Long]("chunk_id")).toSet ==
+      listOf.collect { case (id, l) if l != fresh => id }.toSet -- dropped + 5000L)
+    // the installed copy serves a new handle (same token, file set and
+    // schema) and holds exactly the rows a fresh build reads, per list
+    val reopened = ext.read.parquet(dir)
+    val rel      = relOf(reopened)
+    val held     = Resident.lookup(ext, rel)
+    assert(held.isDefined, "the commit installed a copy the reopened handle is served from")
+    assert(perList(held.get.rows.toSeq, rel.schema) == perList(Resident.unsafeRows(reopened).toSeq, rel.schema))
+    // a handle opened before the commit keeps its file scan
+    assert(!isResident(Search.topK(vecs(old), "embedding", "chunk_id", qv, 10).select("chunk_id", "score")))
+    // a call that throws installs nothing and commits nothing
+    val token = Store.token(conf, dir)
+    val dup = Seq(byId(7L), byId(7L)).toDF("chunk_id", "document_id", "category", "lang", "text", "embedding")
+    val ex = intercept[IllegalArgumentException](
+      Ivf.applyDelta(spark, dir, Seq.empty[Long].toDF("chunk_id"), dup, "chunk_id"))
+    assert(ex.getMessage.contains("duplicate"))
+    assert(Store.token(conf, dir) == token)
+    assert(Resident.lookup(ext, relOf(ext.read.parquet(dir))).exists(_ eq held.get))
+  }
+
+  test("null added ids fail loudly on the resident path, naming the id column") {
+    import spark.implicits._
+    val dir = write(tmp("resident-null-id"))
+    request(ext.read.parquet(dir), Nil)
+    val conf   = spark.sparkContext.hadoopConfiguration
+    val before = Store.token(conf, dir)
+    for (n <- Seq(1, 2)) {
+      val added = rows(n + 2).drop(2).map(r => (Option.empty[Long], r._2, r._3, r._4, r._5, r._6))
+        .toDF("chunk_id", "document_id", "category", "lang", "text", "embedding")
+      val ex = intercept[IllegalArgumentException](
+        Ivf.applyDelta(spark, dir, Seq.empty[Long].toDF("chunk_id"), added, "chunk_id"))
+      assert(ex.getMessage.contains("null id") && ex.getMessage.contains("(column chunk_id)"), ex.getMessage)
+    }
+    assert(Store.token(conf, dir) == before, "a rejected delta commits nothing")
+  }
+
+  test("write layout: one file per list, and the write runs min(lists written, shuffle partitions) tasks") {
+    import spark.implicits._
+    val parallel = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val dir = tmp("resident-layout")
+    // the last stage a write completes is its write stage
+    val (_, built) = stages(write(dir))
+    assert(layout(dir).size == 20 && layout(dir).values.forall(_ == 1), layout(dir).toString)
+    assert(built.last.numTasks == math.min(20, parallel), s"writeIndexed ran ${built.last.numTasks} write tasks")
+    val twin = copyStore(dir, tmp("resident-layout-scan"))
+    // three stored rows of three lists, re-added under new ids: 3 lists written
+    val three = spark.read.parquet(dir).dropDuplicates("list_id").orderBy("list_id").limit(3)
+      .select((col("chunk_id") + 10000L).as("chunk_id"), col("document_id"), col("category"), col("lang"),
+        col("text"), col("embedding")).collect().toSeq
+    val added = spark.createDataFrame(spark.sparkContext.parallelize(three), three.head.schema)
+    for ((d, b) <- Seq(twin -> 0L, dir -> Resident.Budget)) withBudget(b) {
+      val (n, st) = stages(Ivf.applyDelta(spark, d, Seq.empty[Long].toDF("chunk_id"), added, "chunk_id"))
+      assert(n == 3L)
+      assert(st.last.numTasks == math.min(3, parallel), s"budget $b: the write ran ${st.last.numTasks} tasks; ${st.map(i => (i.stageId, i.name, i.numTasks))}")
+      assert(layout(d).values.forall(_ == 1), s"budget $b: ${layout(d)}")
+    }
+  }
+
+  test("a scan-path delta on a store past advisory × lists rewrites each touched list as one file") {
+    import spark.implicits._
+    val dir = write(tmp("layout-pruned"))
+    val sizes = new java.io.File(dir).listFiles().filter(_.getName.startsWith("list_id=")).map { d =>
+      d.getName.stripPrefix("list_id=").toInt -> d.listFiles().filter(_.getName.startsWith("part-")).map(_.length).sum
+    }.toMap
+    // the store spans two advisory partitions; the touched list, a
+    // twentieth of it, stays far under one
+    val key  = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    val l    = sizes.maxBy(_._2)._1
+    assert(sizes(l) * 4 < sizes.values.sum, s"list $l holds ${sizes(l)} of ${sizes.values.sum} bytes")
+    val one = spark.read.parquet(dir).where(col("list_id") === l).limit(1)
+      .select(lit(90000L).as("chunk_id"), col("document_id"), col("category"), col("lang"), col("text"),
+        col("embedding")).collect().toSeq
+    val added = spark.createDataFrame(spark.sparkContext.parallelize(one), one.head.schema)
+    spark.conf.set(key, (sizes.values.sum / 2).toString)
+    try withBudget(0L) {
+      assert(Ivf.applyDelta(spark, dir, Seq.empty[Long].toDF("chunk_id"), added, "chunk_id") == 1L)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(layout(dir)(l) == 1, s"list $l was rewritten as ${layout(dir)(l)} files")
+    assert(spark.read.parquet(dir).where(col("chunk_id") === 90000L).select("list_id").as[Int].collect().toSeq == Seq(l))
+  }
+
+  test("additions past the room the copy leaves take the scan path: no task ships them, and only the room's worth runs twice") {
+    import spark.implicits._
+    val dir = write(tmp("resident-bulk"))
+    request(ext.read.parquet(dir), Nil)
+    val held  = Resident.lookup(ext, relOf(ext.read.parquet(dir))).get
+    val small = held.bytes + (16L << 10)
+    val evals = spark.sparkContext.longAccumulator("added rows evaluated")
+    val src   = rows(4000).drop(2).map(r => r.copy(_1 = r._1 + 50000L))
+      .toDF("chunk_id", "document_id", "category", "lang", "text", "embedding")
+    val added = src.mapPartitions { it => it.map { r => evals.add(1L); r } }(
+      org.apache.spark.sql.Encoders.row(src.schema))
+    val shipped = new java.util.concurrent.atomic.AtomicLong()
+    val l = new SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) shipped.accumulateAndGet(e.taskMetrics.resultSize, math.max)
+    }
+    withBudget(small) {
+      // the store itself fits this budget: its copy is built under it
+      request(ext.read.parquet(dir), Nil)
+      assert(Resident.lookup(ext, relOf(ext.read.parquet(dir))).isDefined, "the store fits the lowered budget")
+      spark.sparkContext.addSparkListener(l)
+      try {
+        assert(Ivf.applyDelta(spark, dir, Seq(5L).toDF("chunk_id"), added, "chunk_id") > 0)
+        Thread.sleep(500)
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    // 3 998 rows of about 400 bytes: collected whole, the largest task
+    // result (compressed) would be about 70 KB
+    assert(shipped.get < (16L << 10), s"the largest task result shipped ${shipped.get} bytes")
+    // the resident attempt stops each task at its share of the 16 KB room
+    // (about 10 rows of 400 bytes) before the scan path evaluates `added`
+    assert(evals.value >= 3998L && evals.value <= 3998L + 100L, s"added evaluated ${evals.value} rows for 3 998")
+    assert(stored(dir).map(_.getAs[Long]("chunk_id")).toSet == (0L until 400L).toSet - 5L ++ (50002L until 54000L))
+  }
+
+  test("a commit that installs nothing between the read and the swap keeps the next copy out") {
+    import spark.implicits._
+    val conf   = spark.sparkContext.hadoopConfiguration
+    val dir    = write(tmp("resident-interleaved"))
+    val Seq(l1, l2) = spark.read.parquet(dir).select("list_id").distinct().as[Int].collect().sorted.take(2).toSeq
+    def rewrite(base: Resident.Base, l: Int): Unit = {
+      val token = Store.swapPartitions(conf, dir, "list_id", Seq(l), Seq(dir -> spark.read.parquet(dir)
+        .where(col("list_id") === l).select(base.schema.fieldNames.map(col).toIndexedSeq: _*)))
+      Resident.install(spark, base, token, Map(l -> base.copy.rowsOf(Seq(l)).toArray))
+    }
+    val stale = Resident.writable(spark, dir, spark.read.parquet(dir)).get
+    // an append that installs no copy (a `streamInto` micro-batch) lands
+    // in list l1, then a commit from the copy read before it rewrites l2
+    val one = spark.read.parquet(dir).where(col("list_id") === l1).limit(1).withColumn("chunk_id", lit(7777L))
+      .collect().toSeq
+    spark.createDataFrame(spark.sparkContext.parallelize(one), one.head.schema)
+      .write.mode("append").partitionBy("list_id").parquet(dir)
+    Store.bump(conf, dir)
+    rewrite(stale, l2)
+    assert(Resident.lookup(ext, relOf(ext.read.parquet(dir))).isEmpty, "a copy missing the appended row was installed")
+    // the copy built for the next upsert holds the appended row
+    val next = Resident.writable(spark, dir, spark.read.parquet(dir)).get
+    val ci   = next.schema.fieldIndex("chunk_id")
+    assert(next.copy.rows.exists(_.getLong(ci) == 7777L), "the rebuilt copy holds the appended row")
+    // with no commit in between, the same rewrite installs its copy
+    rewrite(next, l2)
+    assert(Resident.lookup(ext, relOf(ext.read.parquet(dir))).isDefined, "the next copy is installed")
+  }
+
+  test("job budget: an in-budget 50-row applyDelta runs at most 5 Spark jobs cold and 3 with a held copy") {
+    import spark.implicits._
+    val dir = write(tmp("resident-jobs"))
+    def batch(from: Long): DataFrame = {
+      val b = rows(50).map(r => (r._1 + from, r._2 + from, r._3, r._4, r._5, r._6))
+        .toDF("chunk_id", "document_id", "category", "lang", "text", "embedding").persist()
+      b.count()
+      b
+    }
+    val (b1, b2) = (batch(10000L), batch(20000L))
+    // no copy held: one schema job for the handle, one build scan, one
+    // collect of `added`, then the write: its shuffle stage and its write
+    val (_, cold) = jobs(Ivf.applyDelta(spark, dir, Seq(5L, 6L).toDF("chunk_id"), b1, "chunk_id"))
+    val (_, warm) = jobs(Ivf.applyDelta(spark, dir, Seq(7L, 8L).toDF("chunk_id"), b2, "chunk_id"))
+    assert(cold <= 5, s"a cold in-budget upsert ran $cold jobs")
+    assert(warm <= 3, s"an upsert against the held copy ran $warm jobs")
+    b1.unpersist(); b2.unpersist()
   }
 }
