@@ -725,7 +725,7 @@ object Hnsw {
           }
         }
         .toDF("shard", "ord", "id", "level", "vec", "links", "entry", "max_level")
-      Store.swapPartitions(conf, path, "shard", touched.toSeq, Seq(path -> rebuilt))
+      Store.swapPartitions(conf, path, "shard", touched.toSeq, Seq(path -> Store.stageFrame(rebuilt, "shard")))
       touched.length
     } finally prepared.unpersist()
   }
@@ -831,7 +831,7 @@ object Hnsw {
       // conflict with the files being read, so no localCheckpoint pass
       // doubling the rebuild's I/O — then each touched shard directory
       // swaps in; a shard the delta emptied stays deleted
-      Store.swapPartitions(conf, path, "shard", touched.toSeq, Seq(path -> rebuilt))
+      Store.swapPartitions(conf, path, "shard", touched.toSeq, Seq(path -> Store.stageFrame(rebuilt, "shard")))
       touched.length
     } finally {
       adds.unpersist()

@@ -540,13 +540,14 @@ object Ivf {
     *    resolved against its driver copy (built by one scan job when none
     *    is held). The additions are collected in one job; the null-id,
     *    duplicate and null-vector guards and the affected lists are
-    *    answered on the driver; the kept rows come from the copy and
-    *    are written through [[clusterByDir]]. After the swap returns, the
-    *    next version's copy is installed, so a reopened handle's first
-    *    top-k runs no job. A delta whose types differ from the store's,
-    *    whose removal set passes [[BroadcastDeltaMaxRows]], or whose
-    *    additions pass the room the copy leaves in the budget takes the
-    *    scan path.
+    *    answered on the driver; the kept rows come from the copy, and
+    *    the changed lists are staged from the driver by
+    *    [[Store.stageRows]] (no shuffle, no write job). After the swap
+    *    returns, the next version's copy is installed, so a reopened
+    *    handle's first top-k runs no job. A delta whose types differ from
+    *    the store's, whose removal set passes [[BroadcastDeltaMaxRows]],
+    *    or whose additions pass the room the copy leaves in the budget
+    *    takes the scan path.
     *  - Scan: `added` is persisted, and ONE aggregate over the delta's
     *    ids ([[deltaStats]]) runs the guards, sizes the broadcast gate and
     *    names the lists gaining rows; removed rows locate their lists via
@@ -587,13 +588,17 @@ object Ivf {
   }
 
   /** [[applyDelta]] resolved against the store's resident copy; None hands
-    * the delta to [[scanDelta]], before any commit. The additions are
-    * collected in one job only while they fit the room the copy leaves in
-    * the resident budget: past it each task stops at its share, and a bulk
-    * load into a small store takes the scan path, which evaluates `added`
-    * again — the rows read twice are at most the room's worth plus one per
-    * task. Not persisted: under AQE a cached frame's first read runs one
-    * more job, to fill the cache, than the same collect uncached. */
+    * the delta to [[scanDelta]], before any commit. The collect of `added`
+    * is its only Spark job: each changed list (the copy's surviving rows
+    * plus the list's additions) is written as one parquet file from the
+    * driver by [[Store.stageRows]], and those same rows become the next
+    * version's copy. The additions are collected in one job only while
+    * they fit the room the copy leaves in the resident budget: past it
+    * each task stops at its share, and a bulk load into a small store
+    * takes the scan path, which evaluates `added` again — the rows read
+    * twice are at most the room's worth plus one per task. Not persisted:
+    * under AQE a cached frame's first read runs one more job, to fill the
+    * cache, than the same collect uncached. */
   private def residentDelta(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -602,8 +607,7 @@ object Ivf {
       assigned: DataFrame,
       idCol: String,
   ): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.catalyst.types.DataTypeUtils.{equalsIgnoreNullability, toAttributes}
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils.equalsIgnoreNullability
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     val schema = base.schema
     if (!schema.fieldNames.forall(assigned.columns.contains) || !removedIds.columns.contains(idCol)) return None
@@ -632,9 +636,8 @@ object Ivf {
     val changed: Map[Int, Array[InternalRow]] = affected.map { l =>
       l -> (base.copy.rowsOf(Seq(l)).filterNot(r => rem(id(r))) ++ gaining.getOrElse(l, Array.empty).iterator).toArray
     }.toMap
-    val frame = org.apache.spark.sql.GraftBridge.ofRows(spark, LocalRelation(toAttributes(schema), changed.values.flatten.toSeq))
     val token = Store.swapPartitions(spark.sparkContext.hadoopConfiguration, path, "list_id", affected,
-      Seq(path -> clusterByDir(frame, affected.length)))
+      Seq(path -> Store.stageRows(spark, schema, "list_id", changed.view.mapValues(_.toSeq))))
     graft.plans.Resident.install(spark, base, token, changed)
     Some(affected.length.toLong)
   }
@@ -687,7 +690,7 @@ object Ivf {
       val rewrite = kept
         .unionByName(assigned.select(store.columns.map(col).toIndexedSeq: _*))
       Store.swapPartitions(spark.sparkContext.hadoopConfiguration, path, "list_id", affected.toSeq,
-        Seq(path -> clusterByDir(rewrite, affected.length)))
+        Seq(path -> Store.stageFrame(clusterByDir(rewrite, affected.length), "list_id")))
       affected.length.toLong
     } finally {
       assigned.unpersist()

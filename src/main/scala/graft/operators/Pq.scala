@@ -372,8 +372,9 @@ object Pq {
       // caches are never told "fresh" about a store whose swaps haven't
       // completed
       Store.swapPartitions(conf, root, "list_id", affected.toSeq, Seq(
-        s"$root/floats" -> Ivf.clusterByDir(keptF.unionByName(newF), affected.length),
-        s"$root/codes" -> Ivf.clusterByDir(keptC.unionByName(newC.select(codes.columns.map(col).toIndexedSeq: _*)), affected.length)))
+        s"$root/floats" -> Store.stageFrame(Ivf.clusterByDir(keptF.unionByName(newF), affected.length), "list_id"),
+        s"$root/codes" -> Store.stageFrame(Ivf.clusterByDir(
+          keptC.unionByName(newC.select(codes.columns.map(col).toIndexedSeq: _*)), affected.length), "list_id")))
       affected.length.toLong
     } finally {
       assigned.unpersist()

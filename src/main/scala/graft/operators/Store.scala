@@ -2,7 +2,13 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
 
 /** The one commit path for every store on disk — the IVF, IVF-PQ and HNSW
   * stores and the directory-replacing stream sinks. Nothing else renames a
@@ -11,9 +17,12 @@ import org.apache.spark.sql.DataFrame
   *  1. **Sidecars** — [[writeSidecar]] (temp file, `checkError`, rename) and
   *     the fail-closed [[readSidecar]]: `_graft_centroids.txt`,
   *     `_pq_codebooks.txt`, `_hnsw_meta` and `_graft_version`.
-  *  2. **Partition swap** — [[swapPartitions]]: staging write beside each
-  *     store, `_SUCCESS` check, per-partition swap, stores in the order
-  *     given, version bump last.
+  *  2. **Partition swap** — [[swapPartitions]]: two staging writers, one
+  *     swap. [[stageFrame]] stages a frame through a Spark write and
+  *     [[stageRows]] stages rows already on the driver through Spark's
+  *     parquet writer, with no job; either fills `root.delta` and leaves
+  *     `_SUCCESS` there last. Then the `_SUCCESS` check, the per-partition
+  *     swap, stores in the order given, version bump last.
   *  3. **Whole-store replace** — [[replace]] ([[stage]] + [[publish]]): the
   *     stage is written complete, sidecars included, then
   *     `root → .old`, `stage → root`, `.old` dropped.
@@ -149,22 +158,22 @@ private[graft] object Store {
           "enable mapreduce.fileoutputcommitter.marksuccessfuljobs")
 
   /** Commit `parts` (values of partition column `part`) of each store in
-    * `stores` order: write the store's replacement frame ONCE beside it
-    * (`root.delta` — no lineage conflict with the files being read), check
-    * the commit marker, then swap each partition directory in; a partition
-    * with no staged rows stays deleted. The version at `versionRoot` is
-    * bumped LAST, so a cache is never told "fresh" about a store whose
-    * swaps have not completed; the returned token is the one that bump
-    * wrote. The caller ran [[recover]] on every root before building the
-    * frames.
+    * `stores` order: the store's staging writer fills `root.delta` ONCE
+    * (beside the store — no lineage conflict with the files being read),
+    * the commit marker is checked, then each partition directory swaps in;
+    * a partition with no staged rows stays deleted. The version at
+    * `versionRoot` is bumped LAST, so a cache is never told "fresh" about a
+    * store whose swaps have not completed; the returned token is the one
+    * that bump wrote. The caller ran [[recover]] on every root before
+    * building the writers' input.
     */
   def swapPartitions(
       conf: Configuration, versionRoot: String, part: String, parts: Seq[Any],
-      stores: Seq[(String, DataFrame)]): String = {
-    stores.foreach { case (root, frame) =>
+      stores: Seq[(String, String => Unit)]): String = {
+    stores.foreach { case (root, stage) =>
       val (fs, r) = fsOf(conf, root)
       val tmp     = sibling(r, ".delta")
-      frame.write.mode("overwrite").partitionBy(part).parquet(tmp.toString)
+      stage(tmp.toString)
       assertCommitMarker(fs, tmp)
       parts.foreach { v =>
         val dst = new Path(r, s"$part=$v")
@@ -175,6 +184,57 @@ private[graft] object Store {
       fs.delete(tmp, true)
     }
     bump(conf, versionRoot, versionRoot)
+  }
+
+  /** Staging writer of a frame: one Spark write, partitioned by `part`. */
+  def stageFrame(frame: DataFrame, part: String): String => Unit =
+    dir => frame.write.mode("overwrite").partitionBy(part).parquet(dir)
+
+  /** Staging writer of rows already on the driver: one parquet file per
+    * value of `part` (a value with no rows writes nothing), through Spark's
+    * own writer — `ParquetFileFormat.prepareWrite`'s factory over the
+    * session's hadoop conf — so the footer, codec and schema metadata are a
+    * Spark write's. No job runs: the files are written on at most
+    * `defaultParallelism` driver threads, and `_SUCCESS` only after every
+    * file has closed, so a failure part-way leaves a staging directory
+    * [[recover]] clears. `schema` is the rows' schema, `part` one of its
+    * fields; a value's string form must need no path escaping (integers).
+    */
+  def stageRows(spark: SparkSession, schema: StructType, part: String,
+      rows: Iterable[(Any, Iterable[InternalRow])]): String => Unit = dir => {
+    val conf    = spark.sessionState.newHadoopConf()
+    val (fs, d) = fsOf(conf, dir)
+    fs.delete(d, true)
+    fs.mkdirs(d)
+    val keep    = schema.fields.indices.filter(_ != schema.fieldIndex(part))
+    val data    = StructType(keep.map(schema.fields(_)))
+    val job     = Job.getInstance(conf)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, data)
+    val uuid    = java.util.UUID.randomUUID().toString
+    // each writer gets its own copy of the conf, as each Spark write task does
+    def write(v: Any, rs: Iterable[InternalRow], i: Int): Unit = {
+      val ctx     = new TaskAttemptContextImpl(new Configuration(job.getConfiguration),
+        new TaskAttemptID("graft", 0, TaskType.MAP, i, 0))
+      val file    = new Path(d, f"$part=$v/part-$i%05d-$uuid.c000${factory.getFileExtension(ctx)}")
+      val project = UnsafeProjection.create(keep.map(k => BoundReference(k, schema(k).dataType, schema(k).nullable)))
+      val w       = factory.newInstance(file.toString, data, ctx)
+      try rs.foreach(r => w.write(project(r))) finally w.close()
+    }
+    val files = rows.filter(_._2.nonEmpty).toSeq.zipWithIndex
+    val pool  = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism)))
+    // every writer finishes before a failure is thrown: none may still be
+    // writing into the staging directory the next attempt fills
+    val failed = try {
+      files.map { case ((v, rs), i) => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = write(v, rs, i)
+      }) }.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+    } finally pool.shutdown()
+    failed.headOption.foreach(e => throw e)
+    fs.create(new Path(d, "_SUCCESS"), true).close()
   }
 
   // ---- whole-store replace ----------------------------------------------

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Zero-job search over driver-resident IVF stores, under the shipped
   * registration (`GraftExtensions`) with `spark.graft.ivf.autoProbe`: a
@@ -391,11 +392,33 @@ class ResidentSpec extends AnyFunSuite {
     val three = spark.read.parquet(dir).dropDuplicates("list_id").orderBy("list_id").limit(3)
       .select((col("chunk_id") + 10000L).as("chunk_id"), col("document_id"), col("category"), col("lang"),
         col("text"), col("embedding")).collect().toSeq
-    val added = spark.createDataFrame(spark.sparkContext.parallelize(three), three.head.schema)
+    // the stages whose tasks evaluate `added` mark the job that collects it
+    val evals = spark.sparkContext.longAccumulator("added rows evaluated")
+    val src   = spark.createDataFrame(spark.sparkContext.parallelize(three), three.head.schema)
+    val added = src.mapPartitions(it => it.map { r => evals.add(1L); r })(org.apache.spark.sql.Encoders.row(src.schema))
+    val jobStages = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
+    val collects  = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobStages.put(e.jobId, e.stageIds)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskInfo.accumulables.exists(_.id == evals.id)) collects.add(e.stageId)
+    }
+    // the scan path stages its lists through a Spark write; the resident
+    // path from the driver, after the collect of `added`
     for ((d, b) <- Seq(twin -> 0L, dir -> Resident.Budget)) withBudget(b) {
-      val (n, st) = stages(Ivf.applyDelta(spark, d, Seq.empty[Long].toDF("chunk_id"), added, "chunk_id"))
+      jobStages.clear(); collects.clear()
+      spark.sparkContext.addSparkListener(l)
+      val (n, st) = try stages(Ivf.applyDelta(spark, d, Seq.empty[Long].toDF("chunk_id"), added, "chunk_id"))
+        finally spark.sparkContext.removeSparkListener(l)
       assert(n == 3L)
-      assert(st.last.numTasks == math.min(3, parallel), s"budget $b: the write ran ${st.last.numTasks} tasks; ${st.map(i => (i.stageId, i.name, i.numTasks))}")
+      if (b == 0L)
+        assert(st.last.numTasks == math.min(3, parallel), s"budget $b: the write ran ${st.last.numTasks} tasks; ${st.map(i => (i.stageId, i.name, i.numTasks))}")
+      else {
+        val ran     = jobStages.asScala.toMap
+        val collect = ran.collect { case (j, ss) if ss.exists(collects.contains) => j }
+        assert(collect.size == 1, s"jobs evaluating added: $collect of $ran")
+        assert(ran.keys.forall(_ <= collect.head), s"jobs after the collect of added (job ${collect.head}): $ran")
+      }
       assert(layout(d).values.forall(_ == 1), s"budget $b: ${layout(d)}")
     }
   }
@@ -465,8 +488,8 @@ class ResidentSpec extends AnyFunSuite {
     val dir    = write(tmp("resident-interleaved"))
     val Seq(l1, l2) = spark.read.parquet(dir).select("list_id").distinct().as[Int].collect().sorted.take(2).toSeq
     def rewrite(base: Resident.Base, l: Int): Unit = {
-      val token = Store.swapPartitions(conf, dir, "list_id", Seq(l), Seq(dir -> spark.read.parquet(dir)
-        .where(col("list_id") === l).select(base.schema.fieldNames.map(col).toIndexedSeq: _*)))
+      val token = Store.swapPartitions(conf, dir, "list_id", Seq(l), Seq(dir -> Store.stageFrame(spark.read.parquet(dir)
+        .where(col("list_id") === l).select(base.schema.fieldNames.map(col).toIndexedSeq: _*), "list_id")))
       Resident.install(spark, base, token, Map(l -> base.copy.rowsOf(Seq(l)).toArray))
     }
     val stale = Resident.writable(spark, dir, spark.read.parquet(dir)).get
@@ -488,7 +511,80 @@ class ResidentSpec extends AnyFunSuite {
     assert(Resident.lookup(ext, relOf(ext.read.parquet(dir))).isDefined, "the next copy is installed")
   }
 
-  test("job budget: an in-budget 50-row applyDelta runs at most 5 Spark jobs cold and 3 with a held copy") {
+  /** Every file under the store at `dir` (sidecars included) with its size. */
+  private def files(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_)).map(p => root.relativize(p).toString -> p.toFile.length).toMap
+  }
+
+  test("a driver-staged swap that fails before _SUCCESS leaves the store, its token and its copy; the next applyDelta commits") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir  = write(tmp("resident-crash-staging"))
+    request(ext.read.parquet(dir), Nil)
+    val held   = Resident.lookup(ext, relOf(ext.read.parquet(dir))).get
+    val (token, before) = (Store.token(conf, dir), files(dir))
+    val base   = Resident.writable(spark, dir, spark.read.parquet(dir)).get
+    val lists  = layout(dir).keys.toSeq.sorted.take(3)
+    // the last list's rows fail after its first row, while the other lists' files are written
+    val failing: Iterable[InternalRow] = new Iterable[InternalRow] {
+      def iterator: Iterator[InternalRow] = base.copy.rowsOf(Seq(lists.last)).take(1) ++
+        Iterator.single(0).map[InternalRow](_ => throw new java.io.IOException("injected staging failure"))
+    }
+    val staged = lists.init.map(l => l -> base.copy.rowsOf(Seq(l)).toSeq) :+ (lists.last -> failing)
+    val ex = intercept[java.io.IOException](Store.swapPartitions(conf, dir, "list_id", lists,
+      Seq(dir -> Store.stageRows(spark, base.schema, "list_id", staged))))
+    assert(ex.getMessage.contains("injected"))
+    val delta = java.nio.file.Paths.get(dir + ".delta")
+    assert(lists.init.forall(l => java.nio.file.Files.exists(delta.resolve(s"list_id=$l"))), "the other lists were staged")
+    assert(!java.nio.file.Files.exists(delta.resolve("_SUCCESS")), "a failed stage leaves no commit marker")
+    assert(files(dir) == before && Store.token(conf, dir) == token, "the live store and its token are unchanged")
+    assert(Resident.lookup(ext, relOf(ext.read.parquet(dir))).exists(_ eq held), "the held copy still serves")
+    // the next upsert clears the staging directory and commits
+    val one = spark.read.parquet(dir).where(col("list_id") === lists.head).limit(1)
+      .select(lit(70000L).as("chunk_id"), col("document_id"), col("category"), col("lang"), col("text"), col("embedding"))
+    assert(Ivf.applyDelta(spark, dir, Seq(5L).toDF("chunk_id"), one, "chunk_id") > 0)
+    assert(!java.nio.file.Files.exists(delta), "the next applyDelta cleared .delta")
+    assert(Store.token(conf, dir) != token)
+    assert(stored(dir).map(_.getAs[Long]("chunk_id")).toSet == (0L until 400L).toSet - 5L + 70000L)
+  }
+
+  test("a driver-staged swap that fails after _SUCCESS: recover keeps the live lists, and completes a list the swap had deleted") {
+    val conf  = spark.sparkContext.hadoopConfiguration
+    val dir   = write(tmp("resident-crash-marked"))
+    val token = Store.token(conf, dir)
+    val base  = Resident.writable(spark, dir, spark.read.parquet(dir)).get
+    val Seq(l1, l2) = layout(dir).keys.toSeq.sorted.take(2)
+    // the staged lists drop their first row; the stage commits, then the call dies before the swap loop
+    val staged = Seq(l1, l2).map(l => l -> base.copy.rowsOf(Seq(l)).drop(1).toSeq)
+    def crash(): Unit = intercept[java.io.IOException](Store.swapPartitions(conf, dir, "list_id", Seq(l1, l2),
+      Seq(dir -> { d: String =>
+        Store.stageRows(spark, base.schema, "list_id", staged)(d)
+        throw new java.io.IOException("injected after the stage")
+      })))
+    val ci = base.schema.fieldIndex("chunk_id")
+    def ids(l: Int): Set[Long] = spark.read.parquet(dir).where(col("list_id") === l).select("chunk_id")
+      .collect().map(_.getLong(0)).toSet
+    val (full1, full2) = (ids(l1), ids(l2))
+    crash()
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir + ".delta", "_SUCCESS")))
+    // every live twin is present: the swap never began, so the live lists win
+    Store.recover(conf, dir)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + ".delta")))
+    assert(ids(l1) == full1 && ids(l2) == full2 && Store.token(conf, dir) == token)
+    // the swap loop had deleted l1 when the call died: recover swaps in its staged rows
+    crash()
+    val gone = new org.apache.hadoop.fs.Path(dir, s"list_id=$l1")
+    gone.getFileSystem(conf).delete(gone, true)
+    Store.recover(conf, dir)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + ".delta")))
+    assert(ids(l1) == staged.head._2.map(_.getLong(ci)).toSet && ids(l1).size == full1.size - 1)
+    assert(ids(l2) == full2)
+    assert(layout(dir).values.forall(_ == 1), layout(dir).toString)
+  }
+
+  test("job budget: an in-budget 50-row applyDelta runs at most 3 Spark jobs cold and 1 with a held copy") {
     import spark.implicits._
     val dir = write(tmp("resident-jobs"))
     def batch(from: Long): DataFrame = {
@@ -498,12 +594,12 @@ class ResidentSpec extends AnyFunSuite {
       b
     }
     val (b1, b2) = (batch(10000L), batch(20000L))
-    // no copy held: one schema job for the handle, one build scan, one
-    // collect of `added`, then the write: its shuffle stage and its write
+    // no copy held: one schema job for the handle, one build scan and the
+    // collect of `added`; the lists are staged from the driver
     val (_, cold) = jobs(Ivf.applyDelta(spark, dir, Seq(5L, 6L).toDF("chunk_id"), b1, "chunk_id"))
     val (_, warm) = jobs(Ivf.applyDelta(spark, dir, Seq(7L, 8L).toDF("chunk_id"), b2, "chunk_id"))
-    assert(cold <= 5, s"a cold in-budget upsert ran $cold jobs")
-    assert(warm <= 3, s"an upsert against the held copy ran $warm jobs")
+    assert(cold <= 3, s"a cold in-budget upsert ran $cold jobs")
+    assert(warm <= 1, s"an upsert against the held copy ran $warm jobs")
     b1.unpersist(); b2.unpersist()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Embedder, Hnsw, Ivf}
+import graft.operators.{Embedder, Hnsw, Ivf, NioLocalFileSystem, Store}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,11 +18,84 @@ class StoreSpec extends AnyFunSuite {
     (0L until 120L).map(i => (i, Embedder.default.embed(s"doc $i topic ${i % 5}")))
       .toDF("id", "vec")
 
-  test("operators/Store.scala is the only file in src/main/scala that calls rename") {
-    val offenders = Files.walk(Paths.get("src/main/scala")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+  /** Files in src/main/scala, other than operators/Store.scala, whose text
+    * contains any of `marks`. */
+  private def outsideStore(marks: String*): Seq[java.nio.file.Path] =
+    Files.walk(Paths.get("src/main/scala")).toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
       .filter(p => p.toString.endsWith(".scala") && !p.endsWith(Paths.get("graft/operators/Store.scala")))
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(".rename("))
+      .filter { p => val text = new String(Files.readAllBytes(p), "UTF-8"); marks.exists(text.contains) }
+
+  test("operators/Store.scala is the only file in src/main/scala that calls rename") {
+    val offenders = outsideStore(".rename(")
     assert(offenders.isEmpty, s"store commits outside operators/Store: ${offenders.mkString(", ")}")
+  }
+
+  test("operators/Store.scala is the only file in src/main/scala that names the .delta staging directory or writes _SUCCESS") {
+    val offenders = outsideStore("\".delta\"", "_SUCCESS")
+    assert(offenders.isEmpty, s"partition-swap staging outside operators/Store: ${offenders.mkString(", ")}")
+  }
+
+  test("file:// is the fork-free local file system, and it sets the stock permission bits") {
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = spark.sparkContext.hadoopConfiguration
+    val uri  = java.net.URI.create("file:///")
+    assert(Engine.LocalFsConf == ("spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName))
+    assert(FileSystem.get(uri, conf).isInstanceOf[NioLocalFileSystem], FileSystem.get(uri, conf).getClass.getName)
+    def mode(p: java.nio.file.Path): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    // the default umask and a stricter one: each file system takes it from its conf
+    for (umask <- Seq(None, Some("027"))) {
+      val c = new org.apache.hadoop.conf.Configuration(conf)
+      umask.foreach(c.set("fs.permissions.umask-mode", _))
+      val modes = Seq(new NioLocalFileSystem, new LocalFileSystem).map { fs =>
+        fs.initialize(uri, c)
+        val base = Files.createTempDirectory("store_perm")
+        fs.mkdirs(new Path(base.toUri.toString + "/a/b/c"))
+        val out = fs.create(new Path(base.toUri.toString + "/a/b/c/part-0"))
+        out.write(new Array[Byte](180 << 10))
+        out.close()
+        Seq("a", "a/b", "a/b/c", "a/b/c/part-0", "a/b/c/.part-0.crc").map(r => r -> mode(base.resolve(r)))
+      }
+      assert(modes(0) == modes(1), s"umask $umask: graft ${modes(0)} vs stock ${modes(1)}")
+    }
+    // a sticky bit is past java.nio: the stock call sets it
+    val fs  = FileSystem.get(uri, conf)
+    val dir = Files.createTempDirectory("store_sticky")
+    fs.setPermission(new Path(dir.toUri.toString), new FsPermission(Integer.parseInt("1777", 8).toShort))
+    assert(mode(dir) == Integer.parseInt("1777", 8), Integer.toOctalString(mode(dir)))
+    fs.setPermission(new Path(dir.toUri.toString), new FsPermission(Integer.parseInt("750", 8).toShort))
+    assert(mode(dir) == Integer.parseInt("750", 8), Integer.toOctalString(mode(dir)))
+  }
+
+  test("the driver stage writes what the frame stage writes: schema, row metadata, codec, rows, one file per list") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf  = spark.sparkContext.hadoopConfiguration
+    val store = spark.read.parquet(ivfStore()).withColumn("text", concat(lit("chunk "), col("id").cast("string")))
+    val lists = graft.plans.Resident.unsafeRows(store).groupBy(_.getInt(store.schema.fieldIndex("list_id")))
+    val base  = Files.createTempDirectory("store_parity")
+    val (viaFrame, viaRows) = (base.resolve("frame").toString, base.resolve("rows").toString)
+    Store.stageFrame(Ivf.clusterByDir(store, lists.size), "list_id")(viaFrame)
+    Store.stageRows(spark, store.schema, "list_id", lists.view.mapValues(_.toSeq))(viaRows)
+    assert(spark.read.parquet(viaFrame).schema == spark.read.parquet(viaRows).schema)
+    def footers(dir: String): Map[String, (Set[String], Set[String])] =
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("list_id=")).map { d =>
+        val data = d.listFiles().filter(_.getName.startsWith("part-"))
+        assert(data.length == 1, s"${d.getName} holds ${data.length} data files")
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(data.head.toURI), conf))
+        try {
+          val f = r.getFooter
+          d.getName -> (f.getFileMetaData.getKeyValueMetaData.asScala.get("org.apache.spark.sql.parquet.row.metadata").toSet,
+            f.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet)
+        } finally r.close()
+      }.toMap
+    val (a, b) = (footers(viaFrame), footers(viaRows))
+    assert(a.size == lists.size && a == b, s"frame $a\nrows $b")
+    assert(a.values.forall { case (meta, codecs) => meta.size == 1 && codecs.nonEmpty })
+    Seq(viaFrame, viaRows).foreach(d => assert(Files.exists(Paths.get(d, "_SUCCESS")), d))
+    def rows(d: String) = spark.read.parquet(d).orderBy("id").collect().toSeq
+    assert(rows(viaFrame) == rows(viaRows) && rows(viaRows).size == 120)
   }
 
   /** The two states a crash between a replace's renames leaves, built by

@@ -24,5 +24,6 @@ object TestSpark {
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
     .config("spark.ui.enabled", "false")
+    .config(Engine.LocalFsConf._1, Engine.LocalFsConf._2)
     .getOrCreate()
 }
