@@ -443,35 +443,39 @@ object Ivf {
     */
   private val CentroidsFile = "_graft_centroids.txt"
 
-  private val centroidsCache = scala.collection.concurrent.TrieMap.empty[String, (String, StoredIndex)]
+  private val centroidsCache = new java.util.concurrent.ConcurrentHashMap[(String, String), StoredIndex]()
 
   /** Sidecar persisted next to a store, if any. Reads are memoized per
-    * qualified root keyed by [[Store.token]], the freshness token: every
+    * (qualified root, [[Store.token]]), the freshness token: every
     * call reads the two-line `_graft_version` (the optimizer rule calls
     * this per candidate plan, and it beats a read+parse), so a
     * commit by ANOTHER JVM sharing `graft.ivf.root` invalidates this JVM's
-    * entry on the next query. A store with no version file is read
-    * uncached; misses and unreadable/corrupt sidecars are not cached — a
-    * sidecar that appears or finishes writing later is picked up on the
-    * next query. Parsing is fail-closed: a torn or ragged sidecar yields
-    * None (the rule declines to fire) rather than an exception out of the
-    * optimizer.
+    * entry on the next query. A version is parsed once however many
+    * clients ask for it at the same time (`computeIfAbsent`, as for the
+    * index registry below), and a new version drops the root's older
+    * entries. A store with no version file is read uncached; misses and
+    * unreadable/corrupt sidecars are not cached — a sidecar that appears
+    * or finishes writing later is picked up on the next query. Parsing is
+    * fail-closed: a torn or ragged sidecar yields None (the rule declines
+    * to fire) rather than an exception out of the optimizer.
     */
   def readCentroids(root: String, conf: org.apache.hadoop.conf.Configuration): Option[StoredIndex] = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val key      = rootPath.getFileSystem(conf).makeQualified(rootPath).toString
-    val token    = Store.token(conf, root)
-    centroidsCache.get(key) match {
-      case Some((t, idx)) if token.contains(t) => Some(idx)
-      case _ =>
-        val parsed = Store.readSidecar(conf, root, CentroidsFile) { lines =>
-          val column = lines.headOption.filter(_.startsWith("column=")).map(_.stripPrefix("column="))
-          val rows   = lines.filter(l => l.nonEmpty && !l.startsWith("column=")).map(_.split(",").map(_.toDouble))
-          if (rows.isEmpty || rows.exists(_.length != rows.head.length)) None
-          else Some(StoredIndex(Model(rows), column))
+    def parsed: Option[StoredIndex] = Store.readSidecar(conf, root, CentroidsFile) { lines =>
+      val column = lines.headOption.filter(_.startsWith("column=")).map(_.stripPrefix("column="))
+      val rows   = lines.filter(l => l.nonEmpty && !l.startsWith("column=")).map(_.split(",").map(_.toDouble))
+      if (rows.isEmpty || rows.exists(_.length != rows.head.length)) None
+      else Some(StoredIndex(Model(rows), column))
+    }
+    Store.token(conf, root) match {
+      case None => parsed
+      case Some(t) =>
+        Option(centroidsCache.get((key, t))).orElse {
+          val idx = Option(centroidsCache.computeIfAbsent((key, t), _ => parsed.orNull))
+          if (idx.isDefined) centroidsCache.keySet.removeIf(k => k._1 == key && k._2 != t)
+          idx
         }
-        for (t <- token; idx <- parsed) centroidsCache.put(key, (t, idx))
-        parsed
     }
   }
 

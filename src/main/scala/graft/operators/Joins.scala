@@ -20,9 +20,13 @@ object Joins {
 
   /** J2 — lookup join: hydrate small hit lists with full payload rows
     * (backend/main.py:723-745 neighbor_map). Hit side is k rows → broadcast.
+    * Local hits over a store whose copy is held on the driver are looked
+    * up there when the frame is built ([[graft.plans.DeclarativeAnn.heldHydrate]]),
+    * with the join's columns and rows.
     */
   def hydrate(hits: DataFrame, chunks: DataFrame, key: String): DataFrame =
-    broadcast(hits).join(chunks, Seq(key), "inner")
+    graft.plans.DeclarativeAnn.heldHydrate(hits, chunks, key)
+      .getOrElse(broadcast(hits).join(chunks, Seq(key), "inner"))
 
   /** Attach a 1-based global position column following `order`, WITHOUT a
     * global single-partition window: `orderBy` plans as a range-partitioned

@@ -21,9 +21,16 @@ object Search {
 
   /** Score + filter + top-k. Ties broken by `idCol` for determinism.
     *
-    * The query norm is a constant, so it's folded on the driver instead of
-    * re-aggregating the literal array per row (the fold order matches
-    * Spark's `aggregate`, so the score is bit-identical to full `cosine`).
+    * The frame is built as one plan and analysed once. In a session that
+    * runs [[graft.plans.DeclarativeAnn]] with `spark.graft.ivf.autoProbe`,
+    * a corpus of Projects and Filters over an IVF store whose current copy
+    * is held on the driver ([[graft.plans.Resident]]) is answered from
+    * that copy: the frame is a `LocalRelation` of the k rows (the corpus
+    * columns plus `score`), filled the first time it is planned, with the
+    * rule's gate, lists, scores and order. Otherwise the rule plans it.
+    * A scanned row's score is `cosine_similarity`, which sums the query's
+    * norm again on every row; the resident path sums it once, in the same
+    * order, so the scores are the same bits.
     */
   def topK(
       corpus: DataFrame,
@@ -33,17 +40,29 @@ object Search {
       k: Int,
       filters: Seq[Column] = Nil,
   ): DataFrame = {
-    val q = typedLit(queryVec)
-    val scored = corpus
-      .withColumn("score", graft.functions.VectorExpressions.cosineFast(asDouble(col(vecCol)), q))
-    filters
-      .foldLeft(scored)((df, f) => df.where(f))
-      // zero-norm vectors (empty-text embeddings) score 0/0 = NaN, and Spark
-      // sorts NaN ABOVE every real double — without this guard junk rows
-      // would top every search result
-      .where(!isnan(col("score")))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.GraftBridge.analyzed
+    def expression(c: Column) = GraftBridge.expression(corpus.sparkSession, c)
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Descending, Literal, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, Project, Sort}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    // typedLit's type, without deriving an encoder by reflection per call
+    val q      = Literal(new GenericArrayData(queryVec.toArray), ArrayType(DoubleType, containsNull = false))
+    val score  = graft.functions.VectorExpressions.cosineFast(asDouble(col(vecCol)), GraftBridge.column(q))
+    val scored =
+      if (corpus.columns.exists(_.equalsIgnoreCase("score"))) analyzed(corpus.withColumn("score", score))
+      else {
+        val base = analyzed(corpus)
+        Project(base.output :+ Alias(expression(score), "score")(), base)
+      }
+    // zero-norm vectors (empty-text embeddings) score 0/0 = NaN, and Spark
+    // sorts NaN ABOVE every real double — without this guard junk rows
+    // would top every search result
+    val guarded = (filters :+ !isnan(col("score"))).foldLeft(scored)((p, f) => Filter(expression(f), p))
+    val order   = Seq(SortOrder(expression(col("score")), Descending), SortOrder(expression(col(idCol)), Ascending))
+    graft.plans.DeclarativeAnn.heldTopK(GraftBridge.ofRows(corpus.sparkSession,
+      Limit(Literal(k), Sort(order, global = true, guarded))))
   }
 
   /** Matryoshka (MRL) two-stage search — Kusupati 2022: embeddings trained

@@ -40,10 +40,13 @@ import org.apache.spark.sql.types._
   *    this injection, so it never loses its partition pruning.
   *  - An IVF store small enough to be held on the driver ([[Resident]],
   *    keyed on the store's version token and file set) is answered THERE:
-  *    the same gate decision and list set, the same expressions, a
-  *    `LocalRelation` of the k rows, no Spark job ([[residentTopK]]). The
-  *    hydration join after it becomes a driver-side lookup
-  *    ([[residentLookup]]).
+  *    the same gate decision and list set, a `LocalRelation` of the k
+  *    rows, no Spark job ([[residentTopK]], through [[Resident.topK]]).
+  *    The hydration join after it becomes a driver-side lookup
+  *    ([[residentLookup]]). `Search.topK` and `Joins.hydrate` over a copy
+  *    already held take the same two paths when their frame is built
+  *    (the companion object), so the rule sees those only as a held
+  *    answer to turn into its `LocalRelation`.
   *
   * BATCH — per-query top-k over a queries × store cross join:
   *
@@ -83,10 +86,12 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val c        = new AnnConf(spark)
+    // an answer held when its frame was built is computed now
+    val p        = plan.transformUp { case h: Resident.Held => h.relation }
     val families = Seq(HnswFamily, PqFamily, IvfFamily).filter(_.enabled(c))
     val lookups  = families.contains(IvfFamily)
-    if (families.isEmpty && !c.bruteAuto) plan
-    else plan.transformDown {
+    if (families.isEmpty && !c.bruteAuto) p
+    else p.transformDown {
       case orig @ GlobalLimit(_, LocalLimit(_, rest))
           if families.nonEmpty &&
             TopKMatch.sortUnderLimit(rest).exists(_._2.order.headOption.exists(_.direction == Descending)) =>
@@ -105,8 +110,11 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
 
   // ---- single query ---------------------------------------------------------
 
-  private def rewriteTopK(c: AnnConf, families: Seq[AnnFamily], orig: GlobalLimit,
-      rest: LogicalPlan): Option[LogicalPlan] = {
+  /** `held`: answer only from a copy already held, and only an IVF store
+    * the rule would inject into ([[DeclarativeAnn.heldTopK]]); anything
+    * else is left for planning. */
+  private[plans] def rewriteTopK(c: AnnConf, families: Seq[AnnFamily], orig: GlobalLimit,
+      rest: LogicalPlan, held: Boolean = false): Option[LogicalPlan] = {
     val (proj, s) = TopKMatch.sortUnderLimit(rest).get
     val child     = s.child
     val scoreId = s.order.head.child match {
@@ -114,16 +122,18 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
       case _                     => None
     }
     for {
-      (qv, vecExpr) <- TopKMatch.queryVector(s.order.head.child, child)
+      (qv, vecExpr, cos) <- TopKMatch.queryVector(s.order.head.child, child)
       vec <- TopKMatch.stripCasts(vecExpr) match {
         case a: AttributeReference => Some(a)
         case _                     => None
       }
-      out <- families.view.flatMap(_.open(spark, child, Seq(vec)))
-        .filter(_.dim.forall(_ == qv.length))
-        .flatMap {
+      stores = families.view.flatMap(_.open(spark, child, Seq(vec))).filter(_.dim.forall(_ == qv.length))
+      out <-
+        if (held) stores.headOption.collect { case st: IvfStore => st }
+          .flatMap(injectProbe(c, _, orig, proj, s, qv, cos, scoreId, held))
+        else stores.flatMap {
           case st: TopKStore => substituteTopK(c, st, orig, s, qv, scoreId)
-          case st: IvfStore  => injectProbe(c, st, orig, proj, s, qv, scoreId)
+          case st: IvfStore  => injectProbe(c, st, orig, proj, s, qv, cos, scoreId, held)
         }.headOption
     } yield out
   }
@@ -152,13 +162,14 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
     * `spark.graft.ivf.adaptiveMargin`). A store held on the driver
     * ([[Resident]]) is answered there instead ([[residentTopK]]).
     */
-  private def injectProbe(c: AnnConf, st: IvfStore, orig: GlobalLimit, proj: Option[Project],
-      s: Sort, qv: Array[Double], scoreId: Option[ExprId]): Option[LogicalPlan] = {
+  private def injectProbe(c: AnnConf, st: IvfStore, orig: GlobalLimit, proj: Option[Project], s: Sort,
+      qv: Array[Double], cos: Expression, scoreId: Option[ExprId], held: Boolean): Option[LogicalPlan] = {
     if (alreadyPruned(s.child, st.part)) return None
     val width = c.adaptiveMargin.fold[Probe.Width](Probe.Fixed(c.ivfNProbe))(Probe.Margin(_))
-    gateFilter(st, s.child, scoreId).flatMap { f =>
-      residentTopK(st, width, f, orig, proj, s, qv).orElse(
-        Probe.injected(st.model, width, f, qv.toSeq).map { probes =>
+    gatePredicates(st, s.child, scoreId).flatMap { case (preds, hyd) =>
+      residentTopK(st, width, preds, hyd, orig, proj, s, qv, cos, scoreId, held).orElse(
+        if (held) None
+        else Probe.injected(st.model, width, gateFilter(st, preds, hyd), qv.toSeq).map { probes =>
           val pruned = s.child.transformUp {
             case r: LogicalRelation if r eq st.rel =>
               Filter(In(st.part, probes.map(i => Literal(i))), r)
@@ -171,51 +182,59 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** The injected probe answered on the driver from the store's resident
-    * copy, as a `LocalRelation` of the k rows under the limit's output
-    * attributes — no job. Only the plain store path (Projects and Filters
-    * over the relation): a hydrated top-k's join keeps the injection.
+    * copy through [[Resident.topK]], as a `LocalRelation` of the k rows
+    * under the limit's output attributes — no job (`held`: a
+    * [[Resident.Held]] answer, computed when the frame is planned). The plain store
+    * path only (a hydrated top-k's join keeps the injection), and only
+    * what that one function answers exactly:
     *
-    *  - the gate counts EXACTLY over the copy (the estimate scan's
-    *    `count(when(pred, 1)) / count(1)`, predicates through Catalyst's
-    *    `Predicate`) and decides through [[Probe.injected]], so width,
-    *    branch and the one `gateDecisions` bump are the scan path's;
-    *  - the same lists are scored (every row on the exact branch) by the
-    *    matched subtree's own Filter, Project and score expressions —
-    *    interpreted `CosineSimilarity` folds as its codegen does, so the
-    *    scores are bit-identical;
-    *  - rows are ordered by the Sort's own `SortOrder`s, so NaN, null and
-    *    tie handling are Spark's.
+    *  - the path's Filters carry the NaN guard on the score (`Search.topK`
+    *    plants it), so a NaN or null score never surfacing is the user's
+    *    own predicate; every other conjunct reads only relation columns;
+    *  - the primary key is the descending score, and any further keys are
+    *    relation columns;
+    *  - the vector is `array<float>` or `array<double>`.
     *
-    * None (nothing decided yet) keeps the injection: a non-literal limit,
-    * an expression the driver cannot evaluate, or no current copy.
+    * The output rows are the matched Projects evaluated over the k rows,
+    * with the computed score standing in for the cosine. None (nothing
+    * decided yet) keeps the injection: a non-literal limit, a declined
+    * shape, or no current copy (`held`: no copy already held).
     */
-  private def residentTopK(st: IvfStore, width: Probe.Width, f: Probe.Filter, orig: GlobalLimit,
-      proj: Option[Project], s: Sort, qv: Array[Double]): Option[LogicalPlan] =
+  private def residentTopK(st: IvfStore, width: Probe.Width, gate: Seq[Expression], hyd: Option[TopKMatch.Hydration],
+      orig: GlobalLimit, proj: Option[Project], s: Sort, qv: Array[Double], cos: Expression,
+      scoreId: Option[ExprId], held: Boolean): Option[LogicalPlan] = {
+    def isScore(e: Expression): Boolean = e match {
+      case a: AttributeReference => scoreId.contains(a.exprId)
+      case other                 => other.semanticEquals(cos)
+    }
+    def onRel(e: Expression): Boolean = e.references.forall(st.rel.outputSet.contains)
+    val (guards, keep) = s.child.collect { case Filter(cond, _) => TopKMatch.splitConjuncts(cond) }.flatten.partition {
+      case Not(IsNaN(e)) => isScore(e)
+      case IsNotNull(e)  => isScore(e)
+      case _             => false
+    }
+    val vec = st.rel.output.indexWhere(_.exprId == st.vec.exprId)
     for {
       k <- limitOf(orig)
-      if Resident.evaluable(s.child, st.rel) && s.order.forall(o => Resident.evaluable(o.child)) &&
-        proj.forall(_.projectList.forall(Resident.evaluable))
-      copy <- Resident.load(spark, st.rel, st.part)
-    } yield {
-      val allowed =
-        if (f.filters.isEmpty) copy.size.toLong
-        else Resident.count(copy.rows, f.filters.map(GraftBridge.expression).reduce(And), st.rel.output)
-      val sel   = if (allowed == 0L) 0d else math.min(allowed.toDouble / copy.size.toDouble, 1d)
-      val lists = Probe.injected(st.model, width, f.copy(counted = Some(sel)), qv.toSeq)
-      // sort keys evaluated once per row, then ordered as the Sort orders
-      val keys  = new InterpretedProjection(s.order.map(_.child), s.child.output)
-      val order = new InterpretedOrdering(s.order.zipWithIndex.map { case (o, i) =>
-        o.copy(child = BoundReference(i, o.dataType, o.nullable))
+      if hyd.isEmpty && Resident.evaluable(s.child, st.rel) && proj.forall(_.projectList.forall(Resident.evaluable))
+      if guards.exists(_.isInstanceOf[Not]) && keep.forall(onRel)
+      if s.order.head.direction == Descending && isScore(s.order.head.child)
+      if s.order.tail.forall(o => o.child.isInstanceOf[AttributeReference] && onRel(o.child))
+      if (st.vec.dataType match {
+        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+        case _                                                  => false
       })
-      val top = Resident.eval(s.child, lists.fold(copy.rows)(copy.rowsOf))
-        .map(r => (keys(r), r)).toArray
-        .sortBy(_._1)(order)
-        .iterator.take(k).map(_._2).toSeq
-      LocalRelation(orig.output, proj.fold(top)(p => top.map(new InterpretedProjection(p.projectList, s.output))))
+      copy <- if (held) Resident.lookup(spark, st.rel) else Resident.load(spark, st.rel, st.part)
+    } yield {
+      val answer = new Resident.Held.Answer(Resident.project(proj.fold(s.child)(_.copy(child = s.child)),
+        Resident.topK(copy, st.model, width, gate, keep, st.rel.output, vec, qv, k, s.order.tail), isScore))
+      if (held) Resident.Held(orig.output, k, answer) else LocalRelation(orig.output, answer.rows)
     }
+  }
 
   /** What the injected probe's gate estimates, over the
-    * [[TopKMatch.hydratedPredicates]] walk:
+    * [[TopKMatch.hydratedPredicates]] walk, with the hydration it reads
+    * (None: the store's own columns):
     *
     *  - plain path: user predicates on store columns gate the width (a
     *    conjunct on the vector / `list_id` is ignored for gating, not a
@@ -233,28 +252,30 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
     *    columns the walk can't account for — REFUSES: unaccounted mass
     *    means no pruning.
     *
-    * The estimate frame rides as the filter's `payload`. `None` = decline
-    * (the user's exact plan runs): the shape is refused.
+    * `None` = decline (the user's exact plan runs): the shape is refused.
     */
-  private def gateFilter(st: IvfStore, child: LogicalPlan, scoreId: Option[ExprId]): Option[Probe.Filter] = {
+  private def gatePredicates(st: IvfStore, child: LogicalPlan, scoreId: Option[ExprId])
+      : Option[(Seq[Expression], Option[TopKMatch.Hydration])] =
     TopKMatch.hydratedPredicates(child, st.rel, st.vec, scoreId).flatMap { case (storeRaw, hyd) =>
       val gateable = storeRaw.filterNot(_.references.exists(a => st.excluded(a.exprId)))
       hyd match {
         case None =>
-          if (gateable.isEmpty) Some(Probe.Filter())
-          else if (!gateable.forall(p => p.references.nonEmpty &&
-            p.references.forall(a => st.rel.outputSet.contains(a)))) None
-          else Some(Probe.Filter(gateable.map(GraftBridge.column), st.frame))
-        case Some(h) =>
-          if (gateable.nonEmpty) None
-          else {
-            val preds = filtersOf(Nil, hyd)
-            Some(Probe.Filter(preds.map(GraftBridge.column), hydratedFrame(h, preds.flatMap(_.references)),
-              population = st.frame))
-          }
+          if (gateable.forall(p => p.references.nonEmpty && p.references.forall(a => st.rel.outputSet.contains(a))))
+            Some((gateable, None))
+          else None
+        case Some(_) => if (gateable.nonEmpty) None else Some((filtersOf(Nil, hyd), hyd))
       }
     }
-  }
+
+  /** The gate's filter for [[gatePredicates]]: its estimate frame rides as
+    * the filter's `payload`. */
+  private def gateFilter(st: IvfStore, preds: Seq[Expression], hyd: Option[TopKMatch.Hydration]): Probe.Filter =
+    hyd match {
+      case _ if preds.isEmpty => Probe.Filter()
+      case None               => Probe.Filter(preds.map(GraftBridge.column), st.frame)
+      case Some(h) =>
+        Probe.Filter(preds.map(GraftBridge.column), hydratedFrame(h, preds.flatMap(_.references)), population = st.frame)
+    }
 
   /** Idempotency / user-intent guard: any IN or = filter on list_id below
     * the sort means the probe (ours or the user's) already exists.
@@ -272,42 +293,36 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   /** The hydration lookup over a resident store: an Inner equi-join of a
-    * `LocalRelation` (the ≤ k hits `Joins.hydrate` joins) with Projects and
-    * Filters over a store that already has a current resident copy becomes
-    * a driver-side hash join emitting a `LocalRelation` — no job. It never
-    * builds a copy: only a top-k or an in-budget `Ivf.applyDelta` does.
-    * Keys are integral or string columns of one type on both sides (a null
-    * key matches nothing, as in the join); an output larger than the copy
-    * keeps the join.
+    * local side (the ≤ k hits `Joins.hydrate` joins: Projects and Filters
+    * over a `LocalRelation`) with Projects and Filters over a store that
+    * already has a current resident copy becomes a driver-side lookup
+    * emitting a `LocalRelation` — no job. It never builds a copy: only a
+    * top-k or an in-budget `Ivf.applyDelta` does. Keys are integral or
+    * string columns of one type on both sides (a null key matches
+    * nothing, as in the join); the first key reads a relation column as it
+    * is, so each local row's matches come from the copy's memoized index
+    * on that column ([[Resident.Copy.withKey]]) and the rest are compared
+    * on the evaluated rows. An output larger than the copy keeps the join,
+    * and so does a store-side key computed by a Project.
     */
-  private def residentLookup(j: Join): Option[LogicalPlan] = {
-    val oriented = (j.left, j.right) match {
-      case (l: LocalRelation, r) => Some((l, r))
-      case (l, r: LocalRelation) => Some((r, l))
-      case _                     => None
-    }
+  private[plans] def residentLookup(j: Join): Option[LogicalPlan] = {
+    def localOf(p: LogicalPlan): Option[LocalRelation] = Resident.leafOf(p).collect { case l: LocalRelation => l }
+    val oriented = localOf(j.left).map((j.left, _, j.right)).orElse(localOf(j.right).map((j.right, _, j.left)))
     for {
-      (local, side) <- oriented
-      rel  <- side.collectLeaves() match {
-        case Seq(r: LogicalRelation) => Some(r)
-        case _                       => None
-      }
-      if Resident.evaluable(side, rel)
+      (local, data, side) <- oriented
+      rel  <- Resident.leafOf(side).collect { case r: LogicalRelation => r }
       keys <- equiKeys(j.condition, local.output, side.output)
+      (li, si, dt) = keys.head
+      leaf = rel.output.indexWhere(_.exprId == side.output(si).exprId)
+      if leaf >= 0
       copy <- Resident.lookup(spark, rel)
       out  <- {
-        def key(row: InternalRow, at: Seq[Int]): Seq[Any] = keys.zip(at).map { case ((_, _, dt), i) => row.get(i, dt) }
-        val hits = local.data.map(r => key(r, keys.map(_._1)) -> r).filterNot(_._1.contains(null))
-          .groupMap(_._1)(_._2)
-        // a key the store side passes through from its relation cuts the
-        // relation's rows before the Projects and Filters run
-        val leaf  = keys.map(k => rel.output.indexWhere(_.exprId == side.output(k._2).exprId))
-        val rows  = if (leaf.contains(-1)) copy.rows else copy.rows.filter(r => hits.contains(key(r, leaf)))
+        val run       = Resident.evaluator(side)
         val localLeft = j.left eq local
-        val out = Resident.eval(side, rows).flatMap { r =>
-          hits.getOrElse(key(r, keys.map(_._2)), Nil).iterator.map { h =>
-            (if (localLeft) new JoinedRow(h, r) else new JoinedRow(r, h)).copy()
-          }
+        val out = Resident.evaluator(local)(data.data.iterator).filterNot(_.isNullAt(li)).flatMap { h =>
+          run(copy.withKey(leaf, dt, h.get(li, dt)).iterator)
+            .filter(r => keys.forall { case (l, s, t) => !h.isNullAt(l) && !r.isNullAt(s) && h.get(l, t) == r.get(s, t) })
+            .map(r => (if (localLeft) new JoinedRow(h, r) else new JoinedRow(r, h)).copy())
         }.take(copy.size + 1).toSeq
         if (out.length > copy.size) None else Some(out)
       }
@@ -728,5 +743,53 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
       qdf.select(GraftBridge.column(m.partKey).as("__gqid"),
         GraftBridge.column(qv).as("__gqv"), keyCol.as("__gpred")),
       groups)))
+  }
+}
+
+/** The construction-time entries: `Search.topK` and `Joins.hydrate` build
+  * their frame and, in a session that runs the rule with
+  * `spark.graft.ivf.autoProbe`, hand it here first. A frame over a store
+  * whose current copy is already held is answered by the rule's own
+  * resident paths ([[DeclarativeAnn.residentTopK]],
+  * [[DeclarativeAnn.residentLookup]]) as a `LocalRelation`, so building it
+  * runs one analysis and planning it never reaches the rule; anything
+  * else (a declined shape, a stale handle, no copy held) is returned as
+  * built, for the rule to plan as before.
+  */
+object DeclarativeAnn {
+
+  /** The rule as `spark` runs it, when it runs with IVF on. */
+  private def active(spark: SparkSession): Option[DeclarativeAnn] =
+    if (new AnnConf(spark).ivf && GraftBridge.optimizerRules(spark).exists(_.isInstanceOf[DeclarativeAnn]))
+      Some(DeclarativeAnn(spark))
+    else None
+
+  /** `topK` (a `Search.topK` frame), or its answer from a held copy. */
+  private[graft] def heldTopK(topK: DataFrame): DataFrame = {
+    val spark = topK.sparkSession
+    (active(spark), GraftBridge.analyzed(topK)) match {
+      case (Some(rule), orig @ GlobalLimit(_, LocalLimit(_, rest)))
+          if TopKMatch.sortUnderLimit(rest).exists(_._2.order.headOption.exists(_.direction == Descending)) =>
+        val c = new AnnConf(spark)
+        rule.rewriteTopK(c, Seq(HnswFamily, PqFamily, IvfFamily).filter(_.enabled(c)), orig, rest, held = true)
+          .fold(topK)(GraftBridge.ofResolved(spark, _))
+      case _ => topK
+    }
+  }
+
+  /** `Joins.hydrate`'s inner `USING (key)` join of `hits` with `chunks`
+    * answered from a held copy, in the join's column order (the key, the
+    * other hit columns, the other chunk columns), when `hits` is local. */
+  private[graft] def heldHydrate(hits: DataFrame, chunks: DataFrame, key: String): Option[DataFrame] = {
+    val spark = hits.sparkSession
+    val named = GraftBridge.resolver(spark)
+    val (h, c) = (GraftBridge.analyzed(hits), GraftBridge.analyzed(chunks))
+    for {
+      rule <- active(spark)
+      if h.outputSet.intersect(c.outputSet).isEmpty
+      hk <- h.output.find(a => named(a.name, key))
+      ck <- c.output.find(a => named(a.name, key))
+      lr <- rule.residentLookup(Join(h, c, Inner, Some(EqualTo(hk, ck)), JoinHint.NONE))
+    } yield GraftBridge.ofResolved(spark, Project((hk +: h.output.filterNot(_ == hk)) ++ c.output.filterNot(_ == ck), lr))
   }
 }

@@ -1,26 +1,37 @@
 package graft.plans
 
-import graft.operators.Store
+import graft.operators.{Ivf, Probe, Store}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LocalRelation, LogicalPlan, Project, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructType}
 
 import scala.util.control.NonFatal
 
 /** Driver-resident copies of small IVF stores: a store whose decoded rows
   * fit [[Budget]] is held on the driver as ONE copy — its relation's rows
-  * as `InternalRow`s, every column, grouped by `list_id` — so
-  * [[DeclarativeAnn]] answers a top-k (and the hydration lookup after it)
-  * with no Spark job: each job costs about 100 ms of fixed scheduling on a
-  * 4-core host, the whole request budget of an in-memory store. Spark takes
-  * the same step in `ConvertToLocalRelation`: work over a local relation
-  * runs no job.
+  * as `InternalRow`s, every column, grouped by `list_id` — so a top-k
+  * (and the hydration lookup after it) is answered with no Spark job: each
+  * job costs about 100 ms of fixed scheduling on a 4-core host, the whole
+  * request budget of an in-memory store. Spark takes the same step in
+  * `ConvertToLocalRelation`: work over a local relation runs no job.
+  *
+  * Who answers: `Search.topK` and `Joins.hydrate` over a store whose copy
+  * is already held, when their frame is built
+  * ([[DeclarativeAnn.heldTopK]], [[DeclarativeAnn.heldHydrate]]); the rule
+  * [[DeclarativeAnn]] when it plans anything else it serves (the first
+  * request after a copy is dropped, which builds it, and user-written
+  * declarative shapes). Both go through the same two functions: [[topK]]
+  * (gate, probe, scoring, order) and [[Copy.withKey]] (the hydration
+  * lookup).
   *
   * Freshness: a copy is keyed on the store's qualified root and its
   * [[Store.token]] (`_graft_version`, new on every commit), and records the
@@ -54,33 +65,68 @@ private[graft] object Resident {
     * Measured as a crossover on a 4-core host (Spark 4.1.2, `local[4]`,
     * 768-d float vectors with a 10–99-word text payload, about 3.5 KB
     * decoded per row, nList = √rows; median of 15 warm top-10 + hydration
-    * requests per filter kind): at 5, 41 and 168 MB decoded the resident
-    * request took 17–111 ms against the scan path's 165–499 ms; at 326 MB
-    * the unfiltered request, the kind with the smallest margin, took
-    * 478 ms against the scan's 407 ms. The crossover is near 260 MB; half
-    * of it, as for the partition-listing threshold, leaves room for slower
-    * drivers and keeps a copy small beside a few-GB driver heap.
+    * requests per filter kind none, category, lang, document). Scoring
+    * through interpreted expressions, the resident request lost to the
+    * scan path at 326 MB (unfiltered: 478 ms against 407 ms), and the
+    * budget was half of a crossover near 260 MB. Scoring from the held
+    * float arrays ([[topK]]), at 5, 43, 172 and 332 MB decoded the
+    * resident request took 17–62 ms against the scan path's 212–648 ms
+    * (at 332 MB: 21–51 ms against 295–648 ms), so no crossover is left
+    * below 332 MB. The budget stays under the largest size measured and
+    * keeps the cache a small share of a few-GB driver heap.
     */
-  val Budget: Long = 128L << 20
+  val Budget: Long = 256L << 20
 
   /** The budget in force: [[Budget]], lowered by specs that pin the scan
     * path's plan on small stores. */
   @volatile private[graft] var budget: Long = Budget
 
+  /** One list's rows, with the norms of a vector column memoized the first
+    * time a request scores the list. A copy installed after a commit
+    * shares this object for every list the commit did not change, so
+    * neither an upsert nor a build computes a norm. */
+  private[Resident] final class ListRows(val rows: Array[InternalRow]) {
+    private val norms = new java.util.concurrent.ConcurrentHashMap[Int, Array[Double]]()
+
+    /** Each row's `sqrt(Σ x²)` over the whole vector at `vec` (0 for a null
+      * vector), summed in [[graft.functions.CosineSimilarity]]'s order. */
+    def normsOf(vec: Int, floats: Boolean): Array[Double] = norms.computeIfAbsent(vec, _ =>
+      rows.map(r => if (r.isNullAt(vec)) 0d else {
+        val a = r.getArray(vec)
+        math.sqrt(dot(a, floats, null, a.numElements()))
+      }))
+  }
+
   /** One store version on the driver: rows grouped by list. */
-  final class Copy private[Resident] (lists: Map[Int, Array[InternalRow]], val size: Int, val bytes: Long) {
-    def rows: Iterator[InternalRow] = lists.keys.toSeq.sorted.iterator.flatMap(l => lists(l).iterator)
+  final class Copy private[Resident] (lists: Map[Int, ListRows], val size: Int, val bytes: Long) {
+    private val ids = lists.keys.toArray.sorted
+
+    def rows: Iterator[InternalRow] = ids.iterator.flatMap(l => lists(l).rows.iterator)
 
     /** The rows of `probed` lists only. */
-    def rowsOf(probed: Seq[Int]): Iterator[InternalRow] =
-      probed.iterator.flatMap(l => lists.getOrElse(l, Array.empty[InternalRow]).iterator)
+    def rowsOf(probed: Seq[Int]): Iterator[InternalRow] = listsOf(Some(probed)).flatMap(_.rows.iterator)
+
+    /** The `probed` lists in probe order, or every list in id order. */
+    private[Resident] def listsOf(probed: Option[Seq[Int]]): Iterator[ListRows] =
+      probed.fold(ids.iterator)(_.iterator).flatMap(lists.get)
+
+    private val keyed = new java.util.concurrent.ConcurrentHashMap[Int, java.util.Map[Any, Array[InternalRow]]]()
+
+    /** The rows whose column `key` (of type `dt`) equals `v`, from an index
+      * of that column built the first time it is asked for. */
+    def withKey(key: Int, dt: DataType, v: Any): Array[InternalRow] =
+      keyed.computeIfAbsent(key, _ => {
+        val m = new java.util.HashMap[Any, Array[InternalRow]]()
+        rows.filterNot(_.isNullAt(key)).toArray.groupBy(_.get(key, dt)).foreach { case (kv, rs) => m.put(kv, rs) }
+        m
+      }).getOrDefault(v, Array.empty[InternalRow])
 
     /** This copy with the `changed` lists' rows replaced (an empty list is
-      * dropped); every other list shares its array. */
+      * dropped); every other list shares its rows and memoized norms. */
     private[Resident] def updated(changed: Map[Int, Array[InternalRow]]): Copy = {
       def bytesOf(rs: Iterator[InternalRow]) = rs.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
-      val next = lists -- changed.keys ++ changed.filter(_._2.nonEmpty)
-      new Copy(next, next.valuesIterator.map(_.length).sum,
+      val next = lists -- changed.keys ++ changed.collect { case (l, rs) if rs.nonEmpty => l -> new ListRows(rs) }
+      new Copy(next, next.valuesIterator.map(_.rows.length).sum,
         bytes - bytesOf(rowsOf(changed.keys.toSeq)) + bytesOf(changed.valuesIterator.flatMap(_.iterator)))
     }
   }
@@ -253,7 +299,8 @@ private[graft] object Resident {
       if (!h.token.contains(token) || rows.exists(_.isNullAt(li))) None
       else Some(put(h.root, Entry(token, h.files, h.schema, sc, budget,
         if (bytes > budget) None
-        else Some(new Copy(rows.groupBy(_.getInt(li)).view.mapValues(_.toArray[InternalRow]).toMap, rows.length, bytes)))))
+        else Some(new Copy(rows.groupBy(_.getInt(li)).view.mapValues(rs => new ListRows(rs.toArray[InternalRow])).toMap,
+          rows.length, bytes)))))
     }
   }
 
@@ -289,6 +336,110 @@ private[graft] object Resident {
     walk(r).toSet
   }
 
+  // ---- the resident request ------------------------------------------------
+
+  /** One resident top-k — the gate, the probe, the scoring and the order of
+    * every top-k answered from a copy: `Search.topK`'s frame when it is
+    * built and [[DeclarativeAnn]]'s user-written shapes when they are
+    * planned. `gate`, `keep` and `ties` are over the relation's `input`;
+    * the result is the k relation rows and their scores, best first.
+    *
+    *  - the gate counts EXACTLY over the copy (the estimate scan's
+    *    `count(when(pred, 1)) / count(1)`, null is not a pass) and decides
+    *    through [[Probe.injected]], so width, branch and the one
+    *    `gateDecisions` bump are the scan path's;
+    *  - the same lists are scored (every list on the exact branch), each
+    *    row that passes `keep` read straight from the held row's array.
+    *    The query norm is taken once and each row's norm is memoized per
+    *    list ([[ListRows]]); both are summed in
+    *    [[graft.functions.CosineSimilarity]]'s order and float widens to
+    *    double exactly, so the scores are bit-identical to the scan's;
+    *  - a null or NaN score never surfaces (`Search.topK`'s guard), and
+    *    rows order by descending score, then by `ties` (`Search.topK`'s
+    *    ascending id), then in list order.
+    */
+  def topK(copy: Copy, model: Ivf.Model, width: Probe.Width, gate: Seq[Expression], keep: Seq[Expression],
+      input: Seq[Attribute], vec: Int, q: Array[Double], k: Int, ties: Seq[SortOrder]): Seq[(InternalRow, Double)] = {
+    def predicate(ps: Seq[Expression]): InternalRow => Boolean =
+      if (ps.isEmpty) _ => true
+      else Predicate.createInterpreted(BindReferences.bindReference(ps.reduce(And), input)).eval
+    val allowed = if (gate.isEmpty) copy.size.toLong else copy.rows.count(predicate(gate)).toLong
+    val sel     = if (allowed == 0L) 0d else math.min(allowed.toDouble / copy.size.toDouble, 1d)
+    val lists   = Probe.injected(model, width, Probe.Filter(gate.map(GraftBridge.column), counted = Some(sel)), q.toSeq)
+    val passes  = predicate(keep)
+    val floats  = input(vec).dataType == ArrayType(FloatType, containsNull = true) ||
+      input(vec).dataType == ArrayType(FloatType, containsNull = false)
+    val qNorm   = math.sqrt(q.foldLeft(0d)((s, x) => s + x * x))
+    val tie     = new InterpretedOrdering(ties, input)
+    val better: Ordering[Hit] = (a, b) =>
+      if (a.score != b.score) (if (a.score > b.score) -1 else 1)
+      else { val t = tie.compare(a.row, b.row); if (t != 0) t else Integer.compare(a.seq, b.seq) }
+    // the worst kept hit at the head
+    val kept = new java.util.PriorityQueue[Hit](math.max(1, math.min(k, 1024)), better.reverse)
+    var seq  = 0
+    copy.listsOf(lists).foreach { lr =>
+      val norms = lr.normsOf(vec, floats)
+      var i = 0
+      while (i < lr.rows.length) {
+        val r = lr.rows(i)
+        if (!r.isNullAt(vec) && passes(r)) {
+          val a = r.getArray(vec)
+          val s =
+            if (a.numElements() == q.length) dot(a, floats, q, q.length) / (norms(i) * qNorm)
+            else {
+              val n = math.min(a.numElements(), q.length)
+              dot(a, floats, q, n) / (math.sqrt(dot(a, floats, null, n)) * math.sqrt(q.iterator.take(n).foldLeft(0d)((s, x) => s + x * x)))
+            }
+          if (!s.isNaN && k > 0) {
+            val h = Hit(r, s, seq)
+            if (kept.size < k) kept.add(h)
+            else if (better.lt(h, kept.peek())) { kept.poll(); kept.add(h) }
+          }
+          seq += 1
+        }
+        i += 1
+      }
+    }
+    kept.toArray(new Array[Hit](0)).sorted(better).toSeq.map(h => (h.row, h.score))
+  }
+
+  private final case class Hit(row: InternalRow, score: Double, seq: Int)
+
+  /** `Σ a(i)·q(i)` over the first `n` elements, or `Σ a(i)²` when `q` is
+    * null, summed in order; float elements widen to double. */
+  private def dot(a: ArrayData, floats: Boolean, q: Array[Double], n: Int): Double = {
+    var s = 0d
+    var i = 0
+    if (floats) while (i < n) {
+      val x = a.getFloat(i).toDouble
+      s += x * (if (q == null) x else q(i))
+      i += 1
+    }
+    else while (i < n) {
+      val x = a.getDouble(i)
+      s += x * (if (q == null) x else q(i))
+      i += 1
+    }
+    s
+  }
+
+  /** A resident answer of at most `bound` rows, computed the first time
+    * it is planned: [[DeclarativeAnn]] turns it into a `LocalRelation`.
+    * So a resident frame, like any other, does no work and decides no
+    * gate until it is used, and then once, however often it is planned. */
+  final case class Held(output: Seq[Attribute], bound: Int, answer: Held.Answer)
+      extends LeafNode with MultiInstanceRelation {
+    def newInstance(): Held = copy(output = output.map(_.newInstance()))
+    override def computeStats(): Statistics = Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * bound)
+    def relation: LocalRelation = LocalRelation(output, answer.rows)
+  }
+
+  object Held {
+    final class Answer(compute: => Seq[InternalRow]) {
+      lazy val rows: Seq[InternalRow] = compute
+    }
+  }
+
   // ---- the driver-side evaluator ------------------------------------------
 
   /** An expression the driver can evaluate row by row exactly as a task
@@ -300,31 +451,45 @@ private[graft] object Resident {
       case _                     => false
     }
 
+  /** The leaf under `plan` when `plan` is evaluable Projects and Filters
+    * over it. */
+  def leafOf(plan: LogicalPlan): Option[LogicalPlan] = plan match {
+    case Project(list, c) => if (list.forall(evaluable)) leafOf(c) else None
+    case Filter(cond, c)  => if (evaluable(cond)) leafOf(c) else None
+    case l: LeafNode      => Some(l)
+    case _                => None
+  }
+
   /** `plan` is Projects and Filters over `rel` alone, all evaluable. */
-  def evaluable(plan: LogicalPlan, rel: LogicalRelation): Boolean = plan match {
-    case r: LogicalRelation => r eq rel
-    case Project(list, c)   => list.forall(evaluable) && evaluable(c, rel)
-    case Filter(cond, c)    => evaluable(cond) && evaluable(c, rel)
-    case _                  => false
-  }
+  def evaluable(plan: LogicalPlan, rel: LogicalRelation): Boolean = leafOf(plan).exists(_ eq rel)
 
-  /** `plan`'s rows, given its relation's rows `leaf`: each Filter through
-    * Catalyst's interpreted `Predicate`, each Project through an
-    * interpreted projection (a new row per input). */
-  def eval(plan: LogicalPlan, leaf: Iterator[InternalRow]): Iterator[InternalRow] = plan match {
+  /** `plan`'s rows, given its leaf's rows: each Filter through Catalyst's
+    * interpreted `Predicate`, each Project through an interpreted
+    * projection (a new row per input), all bound once. */
+  def evaluator(plan: LogicalPlan): Iterator[InternalRow] => Iterator[InternalRow] = plan match {
     case Project(list, c) =>
-      val p = new InterpretedProjection(list, c.output)
-      eval(c, leaf).map(p)
+      val (below, p) = (evaluator(c), new InterpretedProjection(list, c.output))
+      below(_).map(p)
     case Filter(cond, c) =>
-      val p = Predicate.createInterpreted(BindReferences.bindReference(cond, c.output))
-      eval(c, leaf).filter(p.eval)
-    case _ => leaf
+      val (below, p) = (evaluator(c), Predicate.createInterpreted(BindReferences.bindReference(cond, c.output)))
+      below(_).filter(p.eval)
+    case _ => identity
   }
 
-  /** The rows `pred` (over `input`) passes — null is not a pass, as in the
-    * gate's `count(when(pred, 1))`. */
-  def count(rows: Iterator[InternalRow], pred: Expression, input: Seq[Attribute]): Long = {
-    val p = Predicate.createInterpreted(BindReferences.bindReference(pred, input))
-    rows.count(p.eval).toLong
+  /** `plan`'s rows (Projects and Filters over one relation) for relation
+    * rows whose Filters [[topK]] already applied: each Project evaluated
+    * with the row's score standing in for every `isScore` expression. */
+  def project(plan: LogicalPlan, top: Seq[(InternalRow, Double)], isScore: Expression => Boolean): Seq[InternalRow] = {
+    val slot = AttributeReference("score", DoubleType)()
+    def level(p: LogicalPlan): (InternalRow, Double) => InternalRow = p match {
+      case Project(list, c) =>
+        val below = level(c)
+        val proj  = new InterpretedProjection(list.map(_.transformDown { case e if isScore(e) => slot }), c.output :+ slot)
+        (r, s) => proj(new JoinedRow(below(r, s), InternalRow(s)))
+      case Filter(_, c) => level(c)
+      case _            => (r, _) => r
+    }
+    val row = level(plan)
+    top.map { case (r, s) => row(r, s) }
   }
 }

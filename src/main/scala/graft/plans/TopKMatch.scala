@@ -35,14 +35,14 @@ private[plans] object TopKMatch {
     case other            => other
   }
 
-  /** The literal query vector AND the expression it is ranked against —
-    * matched on the sort key itself or through one Project alias
-    * (`Search.topK`'s withColumn shape).
+  /** The literal query vector, the expression it is ranked against, and
+    * the cosine itself — matched on the sort key itself or through one
+    * Project alias (`Search.topK`'s withColumn shape).
     */
-  def queryVector(key: Expression, child: LogicalPlan): Option[(Array[Double], Expression)] = {
-    def direct(e: Expression): Option[(Array[Double], Expression)] = e match {
-      case CosineSimilarity(v, Literal(q: ArrayData, ArrayType(DoubleType, _))) => Some((q.toDoubleArray(), v))
-      case CosineSimilarity(Literal(q: ArrayData, ArrayType(DoubleType, _)), v) => Some((q.toDoubleArray(), v))
+  def queryVector(key: Expression, child: LogicalPlan): Option[(Array[Double], Expression, CosineSimilarity)] = {
+    def direct(e: Expression): Option[(Array[Double], Expression, CosineSimilarity)] = e match {
+      case c @ CosineSimilarity(v, Literal(q: ArrayData, ArrayType(DoubleType, _))) => Some((q.toDoubleArray(), v, c))
+      case c @ CosineSimilarity(Literal(q: ArrayData, ArrayType(DoubleType, _)), v) => Some((q.toDoubleArray(), v, c))
       case _ => None
     }
     key match {

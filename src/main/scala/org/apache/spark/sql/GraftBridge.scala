@@ -12,6 +12,11 @@ object GraftBridge {
   def column(e: Expression): Column     = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `c` as the expression `spark`'s Dataset operations would put in a
+    * plan: converted through the session, nested columns included. */
+  def expression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[classic.SparkSession].expression(c)
+
   /** The session's unique id (`sessionUUID` is private[sql]) — the stable
     * cache key for per-session caches; identity hashes can collide across
     * sessions (ADVICE r15).
@@ -70,6 +75,15 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Dataset[Row] =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** [[ofRows]] of a plan built from resolved attributes only (a local
+    * answer): marked analyzed, so building the frame runs no analyzer
+    * batch over it. `setAnalyzed` is private[catalyst].
+    */
+  def ofResolved(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Dataset[Row] = {
+    catalyst.GraftAnalyzed.mark(plan)
+    ofRows(spark, plan)
+  }
+
   /** The OPTIMIZED logical plan of a DataFrame — the splice surface for
     * rules that substitute whole subtrees ([[graft.plans.DeclarativeAnn]]'s
     * HNSW, PQ and batch substitutions): a rule runs mid-optimization, after
@@ -88,6 +102,18 @@ object GraftBridge {
     val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
     execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
   }
+
+  /** The optimizer rules a session adds to Spark's own: its extensions'
+    * pre-CBO rules and `experimental.extraOptimizations` — where
+    * [[graft.plans.DeclarativeAnn]] is registered. */
+  def optimizerRules(spark: SparkSession): Seq[catalyst.rules.Rule[catalyst.plans.logical.LogicalPlan]] = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.sessionState.optimizer.preCBORules ++ s.experimental.extraOptimizations
+  }
+
+  /** The session's column-name resolver (case-insensitive by default). */
+  def resolver(spark: SparkSession): catalyst.analysis.Resolver =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.resolver
 
   /** The analyzed logical plan of a DataFrame (the inverse splice surface). */
   def analyzed(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
@@ -130,5 +156,11 @@ object GraftBridge {
       case other     => throw new IllegalArgumentException(s"expected an integer literal, got $other")
     }
     case other => throw new IllegalArgumentException(s"expected a literal argument, got $other")
+  }
+}
+
+package catalyst {
+  private[sql] object GraftAnalyzed {
+    def mark(plan: plans.logical.LogicalPlan): Unit = plan.setAnalyzed()
   }
 }

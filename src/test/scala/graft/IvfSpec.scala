@@ -1156,4 +1156,24 @@ class IvfSpec extends AnyFunSuite with BeforeAndAfterAll {
       small.sparkSession.range(1000).selectExpr("id % 4 as list_id", "id")
         .groupBy("list_id").count().orderBy("list_id").collect().toSeq)
   }
+
+  test("readCentroids: cold readers of one version share one parse of the sidecar; a commit brings a new one") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_sidecar").toString + "/store"
+    val rnd = new scala.util.Random(11)
+    val vecs = (0L until 400L).map(i => (i, Seq.fill(768)(rnd.nextFloat() - 0.5f))).toDF("id", "vec")
+    val (assigned, model) = Ivf.assign(vecs, "vec", 40)
+    Ivf.writeIndexed(assigned, dir, model, "vec")
+    val conf  = spark.sparkContext.hadoopConfiguration
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool  = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val read  = try {
+      val fs = (0 until 4).map(_ => pool.submit(() => { start.await(); Ivf.readCentroids(dir, conf).get }))
+      start.countDown()
+      fs.map(_.get())
+    } finally pool.shutdown()
+    assert(read.forall(_ eq read.head), "every cold reader of one version gets the one parsed index")
+    assert(Ivf.readCentroids(dir, conf).get eq read.head)
+    Ivf.applyDelta(spark, dir, Seq(0L).toDF("id"), vecs.limit(0), "id")
+    assert(!(Ivf.readCentroids(dir, conf).get eq read.head), "a commit is a new version, parsed again")
+  }
 }

@@ -211,6 +211,150 @@ class ResidentSpec extends AnyFunSuite {
     assert(resNull == scanNull && resNull._2.map(_.isNullAt(3)) == Seq(true))
   }
 
+  private def isHeld(df: DataFrame): Boolean = org.apache.spark.sql.GraftBridge.analyzed(df) match {
+    case _: Resident.Held => true
+    case _                => false
+  }
+
+  /** The ranked (id, score) rows of a top-k frame. */
+  private def ranked(df: DataFrame): Seq[(Long, Double)] =
+    df.select("chunk_id", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  test("construction time: a held store answers Search.topK as one leaf, bit-identical to the scan path, with one gate decision and no job") {
+    val dir = write(tmp("resident-built"))
+    for (k <- Seq(10, 1000)) {
+      val scan = withBudget(0L)(kinds.map { case (name, f) =>
+        name -> ranked(Search.topK(vecs(ext.read.parquet(dir)), "embedding", "chunk_id", qv, k, f))
+      }.toMap)
+      val h = ext.read.parquet(dir)
+      request(h, Nil)
+      for ((name, f) <- kinds) {
+        val (((held, top), decided), n) = jobs(decisions {
+          val df = Search.topK(vecs(h), "embedding", "chunk_id", qv, k, f)
+          (df, ranked(df))
+        })
+        assert(isHeld(held), s"$name: the built frame is not one held answer: ${org.apache.spark.sql.GraftBridge.analyzed(held)}")
+        assert(held.columns.toSeq == vecs(h).columns.toSeq :+ "score", s"$name: ${held.columns.toSeq}")
+        assert(isResident(held))
+        assert(top == scan(name), s"$name k=$k: ${top.take(3)} vs ${scan(name).take(3)}")
+        assert(decided == (if (name == "none") 0L else 1L), s"$name: $decided gate decisions")
+        assert(n == 0, s"$name: $n jobs")
+        assert(!top.exists(_._1 == 0L), s"$name: the zero-norm row surfaced")
+      }
+    }
+  }
+
+  test("construction time: what it cannot answer exactly falls back, and what the rule does not serve stays as it was") {
+    val dir = write(tmp("resident-declined"))
+    val h   = ext.read.parquet(dir)
+    request(h, Nil)
+    def exact(f: Seq[Column]): Seq[(Long, Double)] =
+      ranked(Search.topK(vecs(spark.read.parquet(dir)), "embedding", "chunk_id", qv, 10, f))
+    // a filter the driver does not evaluate (a scalar subquery) keeps the
+    // rule's injected scan
+    def subTop(hd: DataFrame): DataFrame = Search.topK(vecs(hd), "embedding", "chunk_id", qv, 10,
+      Seq(col("document_id") >= ext.range(1).select(min(col("id"))).scalar()))
+    val declined = subTop(h)
+    assert(!isHeld(declined) && !isResident(declined))
+    assert(ranked(declined) == withBudget(0L)(ranked(subTop(ext.read.parquet(dir)))))
+    // autoProbe off: exact brute force, with the copy still held
+    ext.conf.set("spark.graft.ivf.autoProbe", "false")
+    try {
+      val off = Search.topK(vecs(h), "embedding", "chunk_id", qv, 10, Seq(col("lang") === "en"))
+      assert(!isHeld(off) && "list_id#?\\d* IN ".r.findFirstIn(off.queryExecution.optimizedPlan.toString).isEmpty)
+      assert(ranked(off) == exact(Seq(col("lang") === "en")))
+    } finally ext.conf.set("spark.graft.ivf.autoProbe", "true")
+    // autoProbe on in a session that does not run the rule: exact too
+    spark.conf.set("spark.graft.ivf.autoProbe", "true")
+    try {
+      val plain = Search.topK(vecs(spark.read.parquet(dir)), "embedding", "chunk_id", qv, 10)
+      assert(!isHeld(plain) && ranked(plain) == exact(Nil))
+    } finally spark.conf.unset("spark.graft.ivf.autoProbe")
+    // a handle opened before a commit is not answered from the new copy
+    import spark.implicits._
+    val planted = Seq((9999L, 9999L, "c3", "en", "planted", qv.map(_.toFloat)))
+      .toDF("chunk_id", "document_id", "category", "lang", "text", "embedding")
+    Ivf.applyDelta(spark, dir, Seq(5L).toDF("chunk_id"), planted, "chunk_id")
+    assert(isHeld(Search.topK(vecs(ext.read.parquet(dir)), "embedding", "chunk_id", qv, 10)), "the commit installed a copy")
+    assert(!isHeld(Search.topK(vecs(h), "embedding", "chunk_id", qv, 10)))
+  }
+
+  test("construction time: tied scores keep id order") {
+    import spark.implicits._
+    val base = rows(120)
+    // five copies of row 5's vector, written in descending id order
+    val twins = (1004L to 1000L by -1L).map(i => base(5).copy(_1 = i, _5 = s"twin $i"))
+    val df = (base ++ twins).toDF("chunk_id", "document_id", "category", "lang", "text", "embedding")
+    val (assigned, model) = Ivf.assign(df, "embedding", 6)
+    val dir = tmp("resident-ties")
+    Ivf.writeIndexed(assigned, dir, model, "embedding")
+    val q   = base(5)._6.map(_.toDouble)
+    def top(h: DataFrame): Seq[(Long, Double)] = ranked(Search.topK(vecs(h), "embedding", "chunk_id", q, 8))
+    val scan = withBudget(0L)(top(ext.read.parquet(dir)))
+    val h    = ext.read.parquet(dir)
+    top(h)
+    assert(isHeld(Search.topK(vecs(h), "embedding", "chunk_id", q, 8)))
+    val res = top(h)
+    assert(res == scan)
+    assert(res.take(6).map(_._1) == Seq(5L, 1000L, 1001L, 1002L, 1003L, 1004L), res.toString)
+    assert(res.take(6).map(_._2).distinct.size == 1)
+  }
+
+  test("hydration: the resident lookup is the join, in its column order, for absent, duplicate and null hit ids and a filtered payload") {
+    import spark.implicits._
+    val dir = write(tmp("resident-hydrate"))
+    // 5000 is no stored id, 7 comes twice, one id is null
+    def hits(s: SparkSession): DataFrame = s.createDataFrame(Seq[(Option[Long], Double)]((Some(3L), 0.9),
+      (Some(5000L), 0.8), (Some(7L), 0.7), (Some(7L), 0.7), (None, 0.6), (Some(1L), 0.5), (Some(12L), 0.4)))
+      .toDF("chunk_id", "score")
+    def payloads(h: DataFrame): Seq[(String, DataFrame)] = Seq(
+      "plain"    -> payload(h),
+      "filtered" -> payload(h).where(col("lang") =!= "zh" && col("chunk_id") =!= 12L))
+    def answers(): Map[String, (StructType, Map[Row, Int], Boolean)] = {
+      val h = ext.read.parquet(dir)
+      payloads(h).map { case (name, p) =>
+        val ((df, out), n) = jobs {
+          val d = Joins.hydrate(hits(ext), p, "chunk_id")
+          (d, d.collect().toSeq)
+        }
+        val local = !org.apache.spark.sql.GraftBridge.analyzed(df).exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join])
+        name -> (df.schema, out.groupMapReduce(identity)(_ => 1)(_ + _), local && n == 0)
+      }.toMap
+    }
+    val scan = withBudget(0L)(answers())
+    request(ext.read.parquet(dir), Nil)
+    val res = answers()
+    for (name <- Seq("plain", "filtered")) {
+      assert(!scan(name)._3 && res(name)._3, s"$name: answered on the driver: scan ${scan(name)._3}, resident ${res(name)._3}")
+      assert(res(name)._1 == scan(name)._1, s"$name: ${res(name)._1} vs ${scan(name)._1}")
+      assert(res(name)._2 == scan(name)._2, s"$name: ${res(name)._2} vs ${scan(name)._2}")
+    }
+    assert(res("plain")._1.fieldNames.toSeq == Seq("chunk_id", "score", "document_id", "category", "lang", "text"))
+    assert(res("plain")._2.values.sum == 5 && res("plain")._2.keys.count(_.getLong(0) == 7L) == 1 &&
+      res("plain")._2.values.max == 2, "7 twice, 5000 and the null id dropped")
+    assert(res("filtered")._2.keys.forall(r => r.getLong(0) != 12L && r.getString(4) != "zh"))
+  }
+
+  test("hydration: a string-keyed store") {
+    import spark.implicits._
+    val df = rows(200).map(r => (s"s${r._1}", r._4, r._5, r._6)).toDF("sid", "lang", "text", "embedding")
+    val (assigned, model) = Ivf.assign(df, "embedding", 8)
+    val dir = tmp("resident-string")
+    Ivf.writeIndexed(assigned, dir, model, "embedding")
+    def hydrated(): (StructType, Map[Row, Int], Boolean) = {
+      val h    = ext.read.parquet(dir)
+      val hits = ext.createDataFrame(Seq(("s4", 0.9), ("s9", 0.8), ("nope", 0.7), ("s4", 0.6))).toDF("sid", "score")
+      val out  = Joins.hydrate(hits, h.select("sid", "lang", "text"), "sid")
+      (out.schema, out.collect().toSeq.groupMapReduce(identity)(_ => 1)(_ + _), isResident(out))
+    }
+    val scan = withBudget(0L)(hydrated())
+    Search.topK(ext.read.parquet(dir).select("sid", "embedding"), "embedding", "sid", qv, 3).collect()
+    val res = hydrated()
+    assert(!scan._3 && res._3)
+    assert(res._1 == scan._1 && res._2 == scan._2, s"$res vs $scan")
+    assert(res._2.values.sum == 3)
+  }
+
   test("a warm top-k + hydration request runs no Spark job") {
     val dir = write(tmp("resident-zero"))
     val h   = ext.read.parquet(dir)
