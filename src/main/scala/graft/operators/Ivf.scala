@@ -72,6 +72,34 @@ object Ivf {
     /** nProbe closest centroid ids to the query (exact, driver-side). */
     def probeLists(queryVec: Seq[Double], nProbe: Int): Seq[Int] =
       rankedLists(queryVec).take(nProbe).map(_._2)
+
+    // each centroid's c·c, summed in order
+    @transient private lazy val sqNorms: Array[Double] =
+      centroids.map(c => { var s = 0.0; var i = 0; while (i < c.length) { s += c(i) * c(i); i += 1 }; s })
+
+    /** The list of `v`: the first centroid minimising `v·v − 2·v·c + c·c`,
+      * in [[assignExpr]]'s formula and floating-point order (a dot product
+      * runs over the shorter of `v` and `c`). Every JVM-side assignment
+      * calls it: [[withListId]]'s loop and an upsert's on the driver. */
+    def nearest(v: Array[Double]): Int = {
+      var vv = 0.0
+      var i  = 0
+      while (i < v.length) { vv += v(i) * v(i); i += 1 }
+      var best     = 0
+      var bestDist = Double.MaxValue
+      var c        = 0
+      while (c < centroids.length) {
+        val cv  = centroids(c)
+        var dot = 0.0
+        var j   = 0
+        val n   = math.min(v.length, cv.length)
+        while (j < n) { dot += v(j) * cv(j); j += 1 }
+        val d = vv - 2.0 * dot + sqNorms(c)
+        if (d < bestDist) { bestDist = d; best = c }
+        c += 1
+      }
+      best
+    }
   }
 
   object Model {
@@ -186,13 +214,15 @@ object Ivf {
 
   /** Append `list_id` = nearest centroid, choosing the scale-appropriate
     * plan: the codegen'd expression for small models, a broadcast +
-    * `mapPartitions` JVM loop for large ones. A production IVF sizes
-    * nList ≈ √n — thousands of lists at 100 TB — where a 2·nList-expression
-    * projection is not a plan, it's a plan-size explosion; the JVM loop is
-    * O(nList·dim) per row with zero per-row allocation, and the centroid
-    * matrix rides one broadcast instead of nList literal arrays. Both paths
-    * compute the IDENTICAL formula (same FP order), so the chosen path never
-    * changes assignments.
+    * `mapPartitions` JVM loop ([[Model.nearest]]) for large ones. A
+    * production IVF sizes nList ≈ √n — thousands of lists at 100 TB — where
+    * a 2·nList-expression projection is not a plan, it's a plan-size
+    * explosion; the JVM loop is O(nList·dim) per row, and the model rides
+    * one broadcast instead of nList literal arrays. Both paths compute the
+    * IDENTICAL formula (same FP order), so the chosen path never changes
+    * assignments; a null vector has no list. An in-budget upsert assigns
+    * its rows on the driver instead ([[listOf]]), through the same
+    * [[Model.nearest]].
     */
   def withListId(df: DataFrame, model: Model, vecCol: String): DataFrame =
     if (model.centroids.length <= CodegenAssignMaxLists)
@@ -200,11 +230,10 @@ object Ivf {
     else {
       val spark  = df.sparkSession
       val schema = df.schema.add("list_id", org.apache.spark.sql.types.IntegerType)
-      val bc     = spark.sparkContext.broadcast(model.centroids)
+      val bc     = spark.sparkContext.broadcast(model)
       val vecIdx = df.schema.fieldIndex(vecCol)
       df.mapPartitions { it =>
-        val cs  = bc.value
-        val ccs = cs.map(c => { var s = 0.0; var i = 0; while (i < c.length) { s += c(i) * c(i); i += 1 }; s })
+        val m = bc.value
         it.map { r =>
           // null vector or null element → null list_id, matching the
           // expression path's null propagation (the doc's "never changes
@@ -225,30 +254,26 @@ object Ivf {
               }
               if (ok) arr else null
             }
-          if (v == null) org.apache.spark.sql.Row.fromSeq(r.toSeq :+ null)
-          else {
-            var vv = 0.0
-            var i  = 0
-            while (i < v.length) { vv += v(i) * v(i); i += 1 }
-            var best     = 0
-            var bestDist = Double.MaxValue
-            var c        = 0
-            while (c < cs.length) {
-              val cv = cs(c)
-              var dot = 0.0
-              var j   = 0
-              val n   = math.min(v.length, cv.length)
-              while (j < n) { dot += v(j) * cv(j); j += 1 }
-              // same formula and FP order as assignExpr: v·v − 2·v·c + c·c
-              val d = vv - 2.0 * dot + ccs(c)
-              if (d < bestDist) { bestDist = d; best = c }
-              c += 1
-            }
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ best)
-          }
+          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (if (v == null) null else m.nearest(v)))
         }
       }(org.apache.spark.sql.Encoders.row(schema))
     }
+
+  /** The driver twin of [[withListId]] for rows already collected: the
+    * `list_id` of a row whose vector sits at ordinal `vec` with type `dt`
+    * (cast to `array<double>` as [[assignExpr]] casts it), from
+    * [[Model.nearest]]; null for a null vector or one with a null element,
+    * as [[withListId]]'s JVM loop gives. */
+  private[graft] def listOf(model: Model, vec: Int, dt: org.apache.spark.sql.types.DataType): InternalRow => Any = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val cast = Cast(BoundReference(vec, dt, nullable = true), ArrayType(DoubleType))
+    r => cast.eval(r) match {
+      case a: org.apache.spark.sql.catalyst.util.ArrayData if !(0 until a.numElements()).exists(a.isNullAt) =>
+        model.nearest(a.toDoubleArray())
+      case _ => null
+    }
+  }
 
   def assign(df: DataFrame, vecCol: String, nList: Int, seed: Long = 42L, maxDriverFitBytes: Long = 64L << 20): (DataFrame, Model) = {
     // One bounded collect decides the fit path AND provides the fit sample
@@ -459,7 +484,13 @@ object Ivf {
     * fail-closed: a torn or ragged sidecar yields None (the rule declines
     * to fire) rather than an exception out of the optimizer.
     */
-  def readCentroids(root: String, conf: org.apache.hadoop.conf.Configuration): Option[StoredIndex] = {
+  def readCentroids(root: String, conf: org.apache.hadoop.conf.Configuration): Option[StoredIndex] =
+    readCentroids(root, conf, Store.token(conf, root))
+
+  /** [[readCentroids]] at the version `token` the caller read (None: no
+    * version file), so one read of `_graft_version` keys every cache a
+    * frame consults. */
+  def readCentroids(root: String, conf: org.apache.hadoop.conf.Configuration, token: Option[String]): Option[StoredIndex] = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val key      = rootPath.getFileSystem(conf).makeQualified(rootPath).toString
     def parsed: Option[StoredIndex] = Store.readSidecar(conf, root, CentroidsFile) { lines =>
@@ -468,7 +499,7 @@ object Ivf {
       if (rows.isEmpty || rows.exists(_.length != rows.head.length)) None
       else Some(StoredIndex(Model(rows), column))
     }
-    Store.token(conf, root) match {
+    token match {
       case None => parsed
       case Some(t) =>
         Option(centroidsCache.get((key, t))).orElse {
@@ -541,10 +572,13 @@ object Ivf {
     * commit. Readers see per-list swaps. Two paths resolve the delta:
     *
     *  - Resident: a store within [[graft.plans.Resident]]'s budget is
-    *    resolved against its driver copy (built by one scan job when none
-    *    is held). The additions are collected in one job; the null-id,
-    *    duplicate and null-vector guards and the affected lists are
-    *    answered on the driver; the kept rows come from the copy, and
+    *    resolved against its driver copy (read from the store's files on
+    *    the driver, with no job, when none is held). The additions are
+    *    collected in one job and assigned their lists on the driver
+    *    ([[listOf]]); a removal frame over a local relation is read
+    *    without planning; the null-id, duplicate and null-vector guards
+    *    and the affected lists are answered on the driver; the kept rows
+    *    come from the copy, and
     *    the changed lists are staged from the driver by
     *    [[Store.stageRows]] (no shuffle, no write job). After the swap
     *    returns, the next version's copy is installed, so a reopened
@@ -584,19 +618,19 @@ object Ivf {
     val (model, vecCol) = described(conf, path, "applyDelta")
     require(added.columns.contains(vecCol),
       s"added frame must carry the store's indexed column '$vecCol' (has: ${added.columns.mkString(", ")})")
-    val assigned = withListId(added, model, vecCol)
-    lazy val store = spark.read.parquet(path)
-    graft.plans.Resident.writable(spark, path, store)
-      .flatMap(residentDelta(spark, path, _, removedIds, assigned, idCol))
-      .getOrElse(scanDelta(spark, path, store, removedIds, assigned, idCol))
+    graft.plans.Resident.writable(spark, path)
+      .flatMap(residentDelta(spark, path, _, removedIds, added, model, vecCol, idCol))
+      .getOrElse(scanDelta(spark, path, spark.read.parquet(path), removedIds, withListId(added, model, vecCol), idCol))
   }
 
   /** [[applyDelta]] resolved against the store's resident copy; None hands
     * the delta to [[scanDelta]], before any commit. The collect of `added`
-    * is its only Spark job: each changed list (the copy's surviving rows
-    * plus the list's additions) is written as one parquet file from the
-    * driver by [[Store.stageRows]], and those same rows become the next
-    * version's copy. The additions are collected in one job only while
+    * is its only Spark job: the additions' lists are assigned on the
+    * driver ([[listOf]]), a local removal frame is read without planning,
+    * each changed list (the copy's surviving rows plus the list's
+    * additions) is written as one parquet file from the driver by
+    * [[Store.stageRows]], and those same rows become the next version's
+    * copy. The additions are collected in one job only while
     * they fit the room the copy leaves in the resident budget: past it
     * each task stops at its share, and a bulk load into a small store
     * takes the scan path, which evaluates `added` again — the rows read
@@ -608,27 +642,40 @@ object Ivf {
       path: String,
       base: graft.plans.Resident.Base,
       removedIds: DataFrame,
-      assigned: DataFrame,
+      added: DataFrame,
+      model: Model,
+      vecCol: String,
       idCol: String,
   ): Option[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{JoinedRow, UnsafeProjection}
     import org.apache.spark.sql.catalyst.types.DataTypeUtils.equalsIgnoreNullability
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    // the store's layout: its data columns, then the partition column
     val schema = base.schema
-    if (!schema.fieldNames.forall(assigned.columns.contains) || !removedIds.columns.contains(idCol)) return None
-    val adds   = assigned.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val li     = schema.length - 1
+    val fields = schema.fields.init
+    val vi     = fields.indexWhere(_.name == vecCol)
+    if (schema(li).name != "list_id" || schema(li).dataType != IntegerType || vi < 0 ||
+      !fields.forall(f => added.columns.contains(f.name)) || !removedIds.columns.contains(idCol)) return None
+    val adds   = added.select(fields.map(f => col(f.name)).toIndexedSeq: _*)
     val rems   = removedIds.select(col(idCol))
     val idType = schema(idCol).dataType
     if (!Seq(IntegerType, LongType, StringType).contains(idType) || rems.schema.head.dataType != idType ||
-      !adds.schema.fields.zip(schema.fields).forall { case (a, b) => equalsIgnoreNullability(a.dataType, b.dataType) })
+      !adds.schema.fields.zip(fields).forall { case (a, b) => equalsIgnoreNullability(a.dataType, b.dataType) })
       return None
-    val gone = graft.plans.Resident.unsafeRows(rems.limit((BroadcastDeltaMaxRows + 1).toInt))
+    val gone = graft.plans.Resident.localRows(rems).map(_.take((BroadcastDeltaMaxRows + 1).toInt).toSeq)
+      .getOrElse(graft.plans.Resident.unsafeRows(rems.limit((BroadcastDeltaMaxRows + 1).toInt)).toSeq)
     if (gone.length > BroadcastDeltaMaxRows) return None
     val room = graft.plans.Resident.budget - base.copy.bytes
-    val rows = graft.plans.Resident.unsafeRowsWithin(adds, room) match {
+    val collected = graft.plans.Resident.unsafeRowsWithin(adds, room) match {
       case Some(rs) => rs
       case None     => return None
     }
-    val (ii, li) = (schema.fieldIndex(idCol), schema.fieldIndex("list_id"))
+    // each addition with its list appended, assigned on the driver
+    val listOf = Ivf.listOf(model, vi, adds.schema(vi).dataType)
+    val layout = UnsafeProjection.create(adds.schema.fields.map(_.dataType) :+ IntegerType)
+    val rows   = collected.map(r => layout(new JoinedRow(r, InternalRow(listOf(r)))).copy())
+    val ii   = schema.fieldIndex(idCol)
     def id(r: InternalRow): Any = r.get(ii, idType)
     requireDelta("applyDelta", idCol, rows.count(_.isNullAt(ii)).toLong,
       rows.iterator.map(id).distinct.size < rows.length, rows.count(_.isNullAt(li)).toLong)

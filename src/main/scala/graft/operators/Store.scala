@@ -4,10 +4,15 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** The one commit path for every store on disk — the IVF, IVF-PQ and HNSW
@@ -28,6 +33,10 @@ import org.apache.spark.sql.types.StructType
   *     `root → .old`, `stage → root`, `.old` dropped.
   *  4. **Freshness token** — `_graft_version`, bumped by every commit above;
   *     reader caches key on its content alone ([[token]]).
+  *  5. **Driver reads** — [[relation]] opens a store as `spark.read.parquet`
+  *     resolves it and [[readRows]] decodes its rows as a scan returns
+  *     them, both with no Spark job: the read twin of [[stageRows]]. This
+  *     file is the one home of driver-side parquet I/O.
   *
   * [[recover]] repairs whatever a crashed commit left: an interrupted
   * replace rolls back to `.old` when `root` is missing, and an interrupted
@@ -220,21 +229,66 @@ private[graft] object Store {
       val w       = factory.newInstance(file.toString, data, ctx)
       try rs.foreach(r => w.write(project(r))) finally w.close()
     }
-    val files = rows.filter(_._2.nonEmpty).toSeq.zipWithIndex
-    val pool  = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism)))
     // every writer finishes before a failure is thrown: none may still be
     // writing into the staging directory the next attempt fills
-    val failed = try {
-      files.map { case ((v, rs), i) => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = write(v, rs, i)
-      }) }.flatMap { f =>
-        try { f.get(); None }
-        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
-      }
-    } finally pool.shutdown()
-    failed.headOption.foreach(e => throw e)
+    onDriver(spark, rows.filter(_._2.nonEmpty).toSeq.zipWithIndex.map { case ((v, rs), i) => () => write(v, rs, i) })
     fs.create(new Path(d, "_SUCCESS"), true).close()
+  }
+
+  /** `tasks`' results in order, run on at most `defaultParallelism` driver
+    * threads. Every task finishes before the first failure is rethrown. */
+  private def onDriver[A](spark: SparkSession, tasks: Seq[() => A]): Seq[A] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(tasks.size, spark.sparkContext.defaultParallelism)))
+    val done = try tasks.map(t => pool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
+      .map(f => scala.util.Try(f.get())) finally pool.shutdown()
+    done.collectFirst { case scala.util.Failure(e: java.util.concurrent.ExecutionException) => throw e.getCause }
+    done.map(_.get)
+  }
+
+  // ---- driver reads -----------------------------------------------------
+
+  /** The relation `spark.read.parquet(root)` resolves, opened with no Spark
+    * job. The listing is the reader's own driver-side `InMemoryFileIndex`
+    * (no job under the parallel-listing threshold), with the partition
+    * schema it infers. The data schema comes from one footer read on the
+    * driver: the first file by path, the one the reader's schema
+    * inference reads when it does not merge schemas, with every column made
+    * nullable as the reader makes it. None for a store with no file.
+    */
+  def relation(spark: SparkSession, root: String): Option[HadoopFsRelation] = {
+    val index = new InMemoryFileIndex(spark, Seq(new Path(root)), Map.empty, None)
+    index.allFiles().sortBy(_.getPath.toString).headOption.map { first =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(first, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val data   = ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      HadoopFsRelation(index, index.partitionSchema, GraftBridge.asNullable(data), None, new ParquetFileFormat,
+        Map.empty)(spark)
+    }
+  }
+
+  /** Every row of the parquet relation `rel` as a scan job returns them,
+    * as `UnsafeRow`s in `rel.schema`'s layout, with no job: the scan's own
+    * splits (each file cut at `FilePartition.maxSplitBytes`, largest
+    * first) decoded by `ParquetFileFormat`'s reader on at most
+    * `defaultParallelism` driver threads, concatenated in split order.
+    */
+  def readRows(spark: SparkSession, rel: HadoopFsRelation): Array[UnsafeRow] = {
+    val layout = StructType(rel.dataSchema ++ rel.partitionSchema)
+    require(rel.fileFormat.isInstanceOf[ParquetFileFormat] && rel.schema.fieldNames.sameElements(layout.fieldNames),
+      s"not a parquet relation with its partition columns last: ${rel.schema.simpleString}")
+    val parts  = rel.location.listFiles(Nil, Nil)
+    val max    = FilePartition.maxSplitBytes(spark, parts)
+    val splits = parts.flatMap(p => p.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+      isSplitable = true, max, p.values))).sortBy(_.length)(Ordering[Long].reverse)
+    val read   = rel.fileFormat.buildReaderWithPartitionValues(spark, rel.dataSchema, rel.partitionSchema,
+      rel.dataSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConfWithOptions(rel.options))
+    // one projection per thread: building one costs more than a small split
+    val unsafe = ThreadLocal.withInitial(() => UnsafeProjection.create(layout))
+    onDriver(spark, splits.map(s => () => { val u = unsafe.get(); read(s).map(r => u(r).copy()).toArray }))
+      .toArray.flatten
   }
 
   // ---- whole-store replace ----------------------------------------------

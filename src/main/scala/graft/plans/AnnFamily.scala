@@ -113,7 +113,7 @@ private[plans] sealed abstract class TopKStore extends AnnStore {
   */
 private[plans] final case class IvfStore(
     spark: SparkSession, rel: LogicalRelation, vec: AttributeReference, part: AttributeReference,
-    model: Ivf.Model) extends AnnStore {
+    model: Ivf.Model, token: Option[String]) extends AnnStore {
   def dim: Option[Int] = Some(model.centroids.head.length)
 
   /** The one store column the output carries besides the vector and
@@ -141,9 +141,11 @@ private[plans] object IvfFamily extends AnnFamily {
     for {
       (rel, listAttr, root) <- TopKMatch.partitionedStore(side, "list_id")
       vec    <- storeVec(rel, vecs)
-      stored <- Ivf.readCentroids(root, spark.sparkContext.hadoopConfiguration)
+      // one read of the version keys the centroids and the resident copy
+      token = Store.token(spark.sparkContext.hadoopConfiguration, root)
+      stored <- Ivf.readCentroids(root, spark.sparkContext.hadoopConfiguration, token)
       if stored.column.forall(_ == vec.name) && stored.model.centroids.nonEmpty
-    } yield IvfStore(spark, rel, vec, listAttr, stored.model)
+    } yield IvfStore(spark, rel, vec, listAttr, stored.model, token)
 }
 
 /** HNSW: `shard`-partitioned with the `_hnsw_meta` sidecar, vector column

@@ -224,7 +224,8 @@ case class DeclarativeAnn(spark: SparkSession) extends Rule[LogicalPlan] {
         case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
         case _                                                  => false
       })
-      copy <- if (held) Resident.lookup(spark, st.rel) else Resident.load(spark, st.rel, st.part)
+      t    <- st.token
+      copy <- if (held) Resident.lookup(spark, st.rel, t) else Resident.load(spark, st.rel, t)
     } yield {
       val answer = new Resident.Held.Answer(Resident.project(proj.fold(s.child)(_.copy(child = s.child)),
         Resident.topK(copy, st.model, width, gate, keep, st.rel.output, vec, qv, k, s.order.tail), isScore))

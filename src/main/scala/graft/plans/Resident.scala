@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LocalRelation, LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructType}
 
 import scala.util.control.NonFatal
@@ -39,13 +39,15 @@ import scala.util.control.NonFatal
   * token read at planning equals the key AND its own listing
   * (`location.inputFiles`) and schema equal the recorded ones, so a handle
   * opened before a commit keeps its file scan. A copy is built only from a
-  * handle whose listing equals the store's current files, by ONE scan job,
-  * single-flight per (root, token) — concurrent clients plan concurrently —
-  * and is dropped if the token moved while it was read.
+  * handle whose listing equals the store's current files, single-flight
+  * per (root, token) — concurrent clients plan concurrently — and is
+  * dropped if the token moved while it was read. The build runs no Spark
+  * job: [[Store.readRows]] decodes the handle's files on the driver, in the
+  * order a scan job returns them.
   *
   * Writers: an in-budget [[graft.operators.Ivf.applyDelta]] resolves its
-  * delta against the copy ([[writable]], which builds it through [[load]]
-  * when missing) and, once its commit has returned, installs the next
+  * delta against the copy ([[writable]], which builds it from the store's
+  * files when missing) and, once its commit has returned, installs the next
   * version's copy ([[install]]): unaffected lists share their row arrays,
   * affected lists hold exactly the rows the commit wrote, keyed on the
   * token the commit wrote and the post-commit listing, and only when no
@@ -144,9 +146,9 @@ private[graft] object Resident {
     def bytes: Long = copy.fold(0L)(_.bytes)
   }
 
-  /** A matched relation's identity: root, own listing and schema. */
-  private final class Handle(val root: String, index: FileIndex, val schema: StructType, val conf: Configuration) {
-    lazy val files: Set[String] = index.inputFiles.toSet
+  /** A store as one relation sees it: root, own listing and schema. */
+  private final class Handle(val root: String, val fs: HadoopFsRelation, val schema: StructType, val conf: Configuration) {
+    lazy val files: Set[String] = fs.location.inputFiles.toSet
     def token: Option[String] = Store.token(conf, root)
 
     def serves(e: Entry, token: String): Boolean =
@@ -160,8 +162,7 @@ private[graft] object Resident {
 
   private def handleOf(spark: SparkSession, rel: LogicalRelation): Option[Handle] = rel.relation match {
     case fs: HadoopFsRelation if fs.location.rootPaths.length == 1 =>
-      Some(new Handle(fs.location.rootPaths.head.toString, fs.location, rel.schema,
-        spark.sparkContext.hadoopConfiguration))
+      Some(new Handle(fs.location.rootPaths.head.toString, fs, rel.schema, spark.sparkContext.hadoopConfiguration))
     case _ => None
   }
 
@@ -171,56 +172,50 @@ private[graft] object Resident {
     * builds: the hydration lookup and every other join use it, so a join
     * never pays for a build. */
   def lookup(spark: SparkSession, rel: LogicalRelation): Option[Copy] =
-    for {
-      h <- handleOf(spark, rel)
-      e <- cached(h.root)
-      t <- h.token
-      if h.serves(e, t)
-      c <- e.copy
-    } yield c
+    handleOf(spark, rel).flatMap(h => h.token.flatMap(lookup(h, _)))
 
-  /** The copy `rel` may be answered from, built from `rel` when missing.
-    * `part` is the relation's `list_id` attribute. None keeps today's plan:
-    * a store without a version file, over the budget, a handle whose
-    * listing is not the store's current one, or a commit during the read.
+  /** [[lookup]] at the version `token` the caller read for this frame. */
+  def lookup(spark: SparkSession, rel: LogicalRelation, token: String): Option[Copy] =
+    handleOf(spark, rel).flatMap(lookup(_, token))
+
+  private def lookup(h: Handle, token: String): Option[Copy] = cached(h.root).filter(h.serves(_, token)).flatMap(_.copy)
+
+  /** The copy `rel` may be answered from at the version `token` the caller
+    * read for this frame, built from `rel`'s files when missing. None keeps
+    * today's plan: over the budget, a handle whose listing is not the
+    * store's current one, or a commit during the read.
     */
-  def load(spark: SparkSession, rel: LogicalRelation, part: Attribute): Option[Copy] =
-    entry(spark, rel, part).flatMap(_.copy)
+  def load(spark: SparkSession, rel: LogicalRelation, token: String): Option[Copy] =
+    handleOf(spark, rel).flatMap(entry(spark, _, token)).flatMap(_.copy)
 
-  private def entry(spark: SparkSession, rel: LogicalRelation, part: Attribute): Option[Entry] =
-    for {
-      h <- handleOf(spark, rel)
-      t <- h.token
-      e <- cached(h.root).filter(h.serves(_, t)).orElse {
-        val key  = (h.root, t)
-        val lock = building.computeIfAbsent(key, _ => new Object)
-        // a failed build (a listing error, a file deleted mid-read) keeps
-        // today's plan, which meets the same store on its own
-        try lock.synchronized(cached(h.root).filter(h.serves(_, t)).orElse(
-          try build(spark, rel, part, h, t) catch { case NonFatal(_) => None }))
-        finally building.remove(key, lock)
-      }
-    } yield e
+  private def entry(spark: SparkSession, h: Handle, t: String): Option[Entry] =
+    cached(h.root).filter(h.serves(_, t)).orElse {
+      val key  = (h.root, t)
+      val lock = building.computeIfAbsent(key, _ => new Object)
+      // a failed build (a listing error, a file deleted mid-read) keeps
+      // today's plan, which meets the same store on its own
+      try lock.synchronized(cached(h.root).filter(h.serves(_, t)).orElse(
+        try build(spark, h, t) catch { case NonFatal(_) => None }))
+      finally building.remove(key, lock)
+    }
 
   /** The copy an upsert of the store at `path` resolves its delta against:
     * the held one when its token and file set are the store's current
-    * ones, else one [[load]] builds from `open` (a fresh handle over
-    * `path`, forced only then). None keeps the upsert's scan path: no
-    * version file, over the budget, or a failed build.
+    * ones, else one built from the store as `spark.read.parquet(path)`
+    * would open it ([[Store.relation]], no job). None keeps the upsert's
+    * scan path: no version file, over the budget, or a failed build.
     */
-  def writable(spark: SparkSession, path: String, open: => DataFrame): Option[Base] = {
+  def writable(spark: SparkSession, path: String): Option[Base] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p    = new Path(path)
     val root = p.getFileSystem(conf).makeQualified(p).toString
-    val held = for {
+    def fresh(e: Entry, t: String) = e.token == t && e.budget == budget && !e.sc.isStopped && e.files == listing(conf, root)
+    for {
       t <- Store.token(conf, root)
-      e <- cached(root)
-      if e.token == t && e.budget == budget && !e.sc.isStopped && e.files == listing(conf, root)
-    } yield e
-    held.orElse(GraftBridge.analyzed(open) match {
-      case rel: LogicalRelation => rel.output.find(_.name == "list_id").flatMap(entry(spark, rel, _))
-      case _                    => None
-    }).flatMap(e => e.copy.map(new Base(root, e.token, e.files, e.schema, _)))
+      e <- cached(root).filter(fresh(_, t)).orElse(scala.util.Try(Store.relation(spark, root)).toOption.flatten
+        .flatMap(fs => entry(spark, new Handle(root, fs, fs.schema, conf), t)))
+      c <- e.copy
+    } yield new Base(root, e.token, e.files, e.schema, c)
   }
 
   /** After a commit of `base`'s store that wrote `token`, hold the next
@@ -245,6 +240,13 @@ private[graft] object Resident {
           put(base.root, Entry(token, files, base.schema, spark.sparkContext, budget, Some(next).filter(_.bytes <= budget)))
       }
     }
+  }
+
+  /** `df`'s rows evaluated on the driver, with no planning, when its plan is
+    * evaluable Projects and Filters over a `LocalRelation`. */
+  def localRows(df: DataFrame): Option[Iterator[InternalRow]] = {
+    val plan = GraftBridge.analyzed(df)
+    leafOf(plan).collect { case l: LocalRelation => evaluator(plan)(l.data.iterator) }
   }
 
   /** `df`'s rows as a copy holds them (`UnsafeRow`s), in one collect. */
@@ -280,21 +282,21 @@ private[graft] object Resident {
     if (parts.forall(_._1)) Some(parts.flatMap(_._2)) else None
   }
 
-  private def build(spark: SparkSession, rel: LogicalRelation, part: Attribute, h: Handle,
-      token: String): Option[Entry] = {
+  /** `h`'s store at `token` read on the driver ([[Store.readRows]]): rows
+    * reach each list in the order a scan job returns them. */
+  private def build(spark: SparkSession, h: Handle, token: String): Option[Entry] = {
     // copies of stopped contexts and of deleted stores serve no one
     entries.synchronized(entries.entrySet.removeIf { e =>
       val root = new Path(e.getKey)
       e.getValue.sc.isStopped || scala.util.Try(!root.getFileSystem(h.conf).exists(root)).getOrElse(false)
     })
-    val sc     = spark.sparkContext
-    val li     = rel.output.indexWhere(_.exprId == part.exprId)
-    val onDisk = rel.relation.asInstanceOf[HadoopFsRelation].location.sizeInBytes
+    val sc = spark.sparkContext
+    val li = h.schema.fieldNames.indexOf("list_id")
     if (li < 0) None
-    else if (onDisk > budget) Some(put(h.root, Entry(token, h.files, h.schema, sc, budget, None)))
+    else if (h.fs.location.sizeInBytes > budget) Some(put(h.root, Entry(token, h.files, h.schema, sc, budget, None)))
     else if (listing(h.conf, h.root) != h.files) None
     else {
-      val rows  = unsafeRows(GraftBridge.ofRows(spark, rel))
+      val rows  = Store.readRows(spark, h.fs)
       val bytes = rows.iterator.map(_.getSizeInBytes.toLong).sum
       if (!h.token.contains(token) || rows.exists(_.isNullAt(li))) None
       else Some(put(h.root, Entry(token, h.files, h.schema, sc, budget,

@@ -111,6 +111,10 @@ object GraftBridge {
     s.sessionState.optimizer.preCBORules ++ s.experimental.extraOptimizations
   }
 
+  /** `s` with every field, element and value nullable, as a file source's
+    * reader makes the schema it infers (`asNullable` is private[spark]). */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** The session's column-name resolver (case-insensitive by default). */
   def resolver(spark: SparkSession): catalyst.analysis.Resolver =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.resolver

@@ -404,13 +404,16 @@ class ResidentSpec extends AnyFunSuite {
   test("two clients planning at once build the copy once") {
     val dir   = write(tmp("resident-flight"))
     val hs    = Seq(ext.read.parquet(dir), ext.read.parquet(dir))
+    val token = Store.token(spark.sparkContext.hadoopConfiguration, dir).get
     val start = new java.util.concurrent.CountDownLatch(1)
-    val (plans, n) = jobs {
+    // each client loads the copy as the rule does when it plans, then plans
+    val (out, n) = jobs {
       val ts = hs.map { h =>
-        val out = new java.util.concurrent.atomic.AtomicReference[Boolean]()
+        val out = new java.util.concurrent.atomic.AtomicReference[(Option[Resident.Copy], Boolean)]()
         val t = new Thread(() => {
           start.await()
-          out.set(isResident(Search.topK(vecs(h), "embedding", "chunk_id", qv, 10).select("chunk_id", "score")))
+          val copy = Resident.load(ext, relOf(h), token)
+          out.set((copy, isResident(Search.topK(vecs(h), "embedding", "chunk_id", qv, 10).select("chunk_id", "score"))))
         })
         t.start()
         (t, out)
@@ -418,8 +421,10 @@ class ResidentSpec extends AnyFunSuite {
       start.countDown()
       ts.map { case (t, out) => t.join(); out.get() }
     }
-    assert(plans == Seq(true, true))
-    assert(n == 1, s"two concurrent plans: expected 1 build job, got $n")
+    val Seq((c1, r1), (c2, r2)) = out
+    assert(r1 && r2, "both plans are answered from the copy")
+    assert(c1.isDefined && c2.exists(_ eq c1.get), "two concurrent loads: the second waits for the first's build")
+    assert(n == 0, s"two concurrent plans: a driver build runs no job, got $n")
   }
 
   test("streamInto: each micro-batch bumps the version token; a reopened top-k returns a streamed row") {
@@ -636,7 +641,7 @@ class ResidentSpec extends AnyFunSuite {
         .where(col("list_id") === l).select(base.schema.fieldNames.map(col).toIndexedSeq: _*), "list_id")))
       Resident.install(spark, base, token, Map(l -> base.copy.rowsOf(Seq(l)).toArray))
     }
-    val stale = Resident.writable(spark, dir, spark.read.parquet(dir)).get
+    val stale = Resident.writable(spark, dir).get
     // an append that installs no copy (a `streamInto` micro-batch) lands
     // in list l1, then a commit from the copy read before it rewrites l2
     val one = spark.read.parquet(dir).where(col("list_id") === l1).limit(1).withColumn("chunk_id", lit(7777L))
@@ -647,7 +652,7 @@ class ResidentSpec extends AnyFunSuite {
     rewrite(stale, l2)
     assert(Resident.lookup(ext, relOf(ext.read.parquet(dir))).isEmpty, "a copy missing the appended row was installed")
     // the copy built for the next upsert holds the appended row
-    val next = Resident.writable(spark, dir, spark.read.parquet(dir)).get
+    val next = Resident.writable(spark, dir).get
     val ci   = next.schema.fieldIndex("chunk_id")
     assert(next.copy.rows.exists(_.getLong(ci) == 7777L), "the rebuilt copy holds the appended row")
     // with no commit in between, the same rewrite installs its copy
@@ -669,7 +674,7 @@ class ResidentSpec extends AnyFunSuite {
     request(ext.read.parquet(dir), Nil)
     val held   = Resident.lookup(ext, relOf(ext.read.parquet(dir))).get
     val (token, before) = (Store.token(conf, dir), files(dir))
-    val base   = Resident.writable(spark, dir, spark.read.parquet(dir)).get
+    val base   = Resident.writable(spark, dir).get
     val lists  = layout(dir).keys.toSeq.sorted.take(3)
     // the last list's rows fail after its first row, while the other lists' files are written
     val failing: Iterable[InternalRow] = new Iterable[InternalRow] {
@@ -698,7 +703,7 @@ class ResidentSpec extends AnyFunSuite {
     val conf  = spark.sparkContext.hadoopConfiguration
     val dir   = write(tmp("resident-crash-marked"))
     val token = Store.token(conf, dir)
-    val base  = Resident.writable(spark, dir, spark.read.parquet(dir)).get
+    val base  = Resident.writable(spark, dir).get
     val Seq(l1, l2) = layout(dir).keys.toSeq.sorted.take(2)
     // the staged lists drop their first row; the stage commits, then the call dies before the swap loop
     val staged = Seq(l1, l2).map(l => l -> base.copy.rowsOf(Seq(l)).drop(1).toSeq)
@@ -728,7 +733,7 @@ class ResidentSpec extends AnyFunSuite {
     assert(layout(dir).values.forall(_ == 1), layout(dir).toString)
   }
 
-  test("job budget: an in-budget 50-row applyDelta runs at most 3 Spark jobs cold and 1 with a held copy") {
+  test("job budget: an in-budget 50-row applyDelta runs at most 1 Spark job cold and 1 with a held copy") {
     import spark.implicits._
     val dir = write(tmp("resident-jobs"))
     def batch(from: Long): DataFrame = {
@@ -738,12 +743,109 @@ class ResidentSpec extends AnyFunSuite {
       b
     }
     val (b1, b2) = (batch(10000L), batch(20000L))
-    // no copy held: one schema job for the handle, one build scan and the
-    // collect of `added`; the lists are staged from the driver
+    // no copy held: the copy is read on the driver, so the collect of
+    // `added` is the only job; the lists are staged from the driver
     val (_, cold) = jobs(Ivf.applyDelta(spark, dir, Seq(5L, 6L).toDF("chunk_id"), b1, "chunk_id"))
     val (_, warm) = jobs(Ivf.applyDelta(spark, dir, Seq(7L, 8L).toDF("chunk_id"), b2, "chunk_id"))
-    assert(cold <= 3, s"a cold in-budget upsert ran $cold jobs")
+    assert(cold <= 1, s"a cold in-budget upsert ran $cold jobs")
     assert(warm <= 1, s"an upsert against the held copy ran $warm jobs")
     b1.unpersist(); b2.unpersist()
+  }
+
+  /** A store `streamInto` wrote in three micro-batches (several files per
+    * list), with string ids and chunk 1's null category. */
+  private def streamed(name: String): String = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory(name).toString
+    val src  = rows(180).map(r => (s"id-${r._1}", Option(r._3), r._6))
+    val (_, model) = Ivf.assign(src.toDF("chunk_id", "category", "embedding"), "embedding", 6)
+    val mem = MemoryStream[(String, Option[String], Seq[Float])]
+    val q = Ivf.streamInto(mem.toDF().toDF("chunk_id", "category", "embedding"), model, "embedding", s"$base/store",
+      s"$base/ckpt", availableNow = false)
+    try src.grouped(60).foreach { b => mem.addData(b: _*); q.processAllAvailable() } finally q.stop()
+    s"$base/store"
+  }
+
+  /** `body` with `confs` set on both sessions. */
+  private def withConf[T](confs: Map[String, String])(body: => T): T = {
+    confs.foreach { case (k, v) => spark.conf.set(k, v); ext.conf.set(k, v) }
+    try body finally confs.keys.foreach { k => spark.conf.unset(k); ext.conf.unset(k) }
+  }
+
+  /** list_id → the list's rows as bytes, in the order given. */
+  private def bytesPerList(rows: Iterator[InternalRow], li: Int): Map[Int, Seq[Seq[Byte]]] =
+    rows.toSeq.groupBy(_.getInt(li)).view
+      .mapValues(_.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow].getBytes.toSeq)).toMap
+
+  test("driver build: each list holds a scan job's rows, byte for byte and in its order, under the reader's schema") {
+    val conf     = spark.sparkContext.hadoopConfiguration
+    val stream   = streamed("resident-read-stream")
+    assert(layout(stream).values.exists(_ > 1), s"several files in a list: ${layout(stream)}")
+    val splitAt2k = Map("spark.sql.files.maxPartitionBytes" -> "2048", "spark.sql.files.openCostInBytes" -> "0")
+    for ((name, dir) <- Seq("written" -> write(tmp("resident-read")), "streamed" -> stream);
+         confs      <- Seq(Map.empty[String, String], splitAt2k)) withConf(confs) {
+      val what    = s"$name ${confs.keys.mkString(",")}"
+      val scanned = spark.read.parquet(dir)
+      val li      = scanned.schema.fieldIndex("list_id")
+      val scan    = bytesPerList(Resident.unsafeRows(scanned).iterator, li)
+      val token   = Store.token(conf, dir).get
+      // each build reads its own copy of the store: the cache keys on the root
+      val fromRel  = Resident.load(ext, relOf(ext.read.parquet(copyStore(dir, tmp("resident-read-rel")))), token)
+      val viaPath  = copyStore(dir, tmp("resident-read-path"))
+      val fromPath = Resident.writable(spark, viaPath)
+      assert(fromRel.exists(c => bytesPerList(c.rows, li) == scan), s"$what: the handle's build")
+      assert(fromPath.exists(b => bytesPerList(b.copy.rows, li) == scan), s"$what: the path's build")
+      assert(fromPath.get.schema == spark.read.parquet(viaPath).schema, s"$what: ${fromPath.get.schema}")
+      assert(Resident.lookup(ext, relOf(ext.read.parquet(viaPath))).exists(_ eq fromPath.get.copy),
+        s"$what: a later handle is served from the path's build")
+    }
+  }
+
+  test("both builds run no Spark job: the rule's, from a handle, and an upsert's, from a path") {
+    val dir   = write(tmp("resident-nojob"))
+    val twin  = copyStore(dir, tmp("resident-nojob-path"))
+    val rel   = relOf(ext.read.parquet(dir))
+    val token = Store.token(spark.sparkContext.hadoopConfiguration, dir).get
+    val (fromRel, n1)  = jobs(Resident.load(ext, rel, token))
+    val (fromPath, n2) = jobs(Resident.writable(spark, twin))
+    assert(fromRel.isDefined && fromPath.isDefined)
+    assert(n1 == 0 && n2 == 0, s"build jobs: from a handle $n1, from a path $n2")
+  }
+
+  test("after a cold applyDelta a reopened handle is served from the installed copy with no job") {
+    import spark.implicits._
+    val dir = write(tmp("resident-cold-delta"))
+    val planted = Seq((9999L, 9999L, "c3", "en", "planted", qv.map(_.toFloat)))
+      .toDF("chunk_id", "document_id", "category", "lang", "text", "embedding")
+    Ivf.applyDelta(spark, dir, Seq(5L).toDF("chunk_id"), planted, "chunk_id")
+    val fresh = ext.read.parquet(dir)
+    assert(isHeld(Search.topK(vecs(fresh), "embedding", "chunk_id", qv, 10)), "the commit's copy serves the reopened handle")
+    val ((top, hyd), first) = jobs(request(fresh, Nil))
+    assert(first == 0, s"the first request after a cold upsert: expected no job, got $first")
+    assert(top.head._1 == 9999L && hyd.exists(_.getLong(0) == 9999L) && !top.exists(_._1 == 5L))
+  }
+
+  test("driver list assignment is withListId's at nList <= 32 and > 32: ties take the first centroid, a null vector no list") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def near: Seq[Float] = Seq.fill(3)(rnd.nextFloat() * 4 - 2)
+    def far: Seq[Float]  = Seq.fill(3)(rnd.nextFloat() * 4 + 5)
+    val vs  = Seq(Some(Seq(1f, 1f, 0f)), Some(Seq(0f, 1f, 0f)), Some(Seq(0f, 0f, 0f)), None) ++
+      Seq.fill(30)(Some(near)) ++ Seq.fill(30)(Some(far))
+    val df  = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
+    for (n <- Seq(8, 40)) {
+      // c0 and c2 coincide, and (1, 1, 0) and (0, 0, 0) are as far from c0 as from c1
+      val model  = Ivf.Model(Array(Array(1d, 0d, 0d), Array(0d, 1d, 0d), Array(1d, 0d, 0d)) ++
+        Array.fill(n - 3)(Array.fill(3)(rnd.nextDouble() * 4 + 5)))
+      val scan   = Ivf.withListId(df, model, "vec").select("id", "list_id").collect()
+        .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+      val listOf = Ivf.listOf(model, 1, df.schema("vec").dataType)
+      val driver = Resident.unsafeRows(df).map(r => r.getLong(0) -> Option(listOf(r))).toMap
+      assert(driver == scan, s"nList $n")
+      assert(driver(0L).contains(0) && driver(1L).contains(1) && driver(2L).contains(0) && driver(3L).isEmpty, s"nList $n")
+      assert(driver.values.flatten.toSet.size > 3, s"nList $n: the far vectors take far lists")
+    }
   }
 }

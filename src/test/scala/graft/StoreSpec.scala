@@ -35,6 +35,11 @@ class StoreSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"partition-swap staging outside operators/Store: ${offenders.mkString(", ")}")
   }
 
+  test("operators/Store.scala is the only file in src/main/scala that names ParquetFileFormat") {
+    val offenders = outsideStore("ParquetFileFormat")
+    assert(offenders.isEmpty, s"driver-side parquet I/O outside operators/Store: ${offenders.mkString(", ")}")
+  }
+
   test("file:// is the fork-free local file system, and it sets the stock permission bits") {
     import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
     import org.apache.hadoop.fs.permission.FsPermission
