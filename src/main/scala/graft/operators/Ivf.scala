@@ -3,11 +3,15 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 
 /** IVF (inverted-file) approximate-nearest-neighbor index — the 100 TB scale
   * path for the reference's HNSW search (reference: backend/vector_db.py:41,
@@ -78,9 +82,10 @@ object Ivf {
       centroids.map(c => { var s = 0.0; var i = 0; while (i < c.length) { s += c(i) * c(i); i += 1 }; s })
 
     /** The list of `v`: the first centroid minimising `v·v − 2·v·c + c·c`,
-      * in [[assignExpr]]'s formula and floating-point order (a dot product
-      * runs over the shorter of `v` and `c`). Every JVM-side assignment
-      * calls it: [[withListId]]'s loop and an upsert's on the driver. */
+      * each term a sequential sum (a dot product runs over the shorter of
+      * `v` and `c`) — the formula and floating-point order the DuckDB
+      * oracle replays. The only code that picks a list: every assignment
+      * reaches it through [[NearestList]]. */
     def nearest(v: Array[Double]): Int = {
       var vv = 0.0
       var i  = 0
@@ -114,41 +119,35 @@ object Ivf {
     }
   }
 
-  /** Assign every row its nearest-centroid `list_id`. Narrow (no shuffle):
-    * the fitted centroids ride along as literals/broadcast.
-    *
-    * Fit path mirrors [[Ml.KMeansClusterer]]: corpora within the driver-fit
-    * BYTE budget (rows × dim × 8 ≤ `maxDriverFitBytes`, so a 768-d corpus
-    * collects 12× fewer rows than a 64-d one) fit with seeded Lloyd's on the
-    * driver (MLlib's per-iteration jobs dominate at small scale), then
-    * assignment runs DISTRIBUTED as an argmin over codegen'd dot products —
-    * `dist²(v,c) = v·v − 2·v·c + c·c` with `c·c` folded driver-side. Larger
-    * corpora fit via MLlib.
+  /** The `list_id` of one vector, the row-level kernel of every
+    * assignment: [[Model.nearest]] of the vector cast to `array<double>`,
+    * null for a null vector or one with a null element (it has no list to
+    * land in, and every upsert fails loudly on it). The model is a
+    * reference object of the generated code, so it travels in the stage's
+    * task binary: no per-list literal, no broadcast, and one plan shape at
+    * every nList. [[withListId]] projects it; [[listOf]] evaluates it on
+    * the driver.
     */
-  /** Codegen'd nearest-centroid assignment for a FITTED model: argmin over
-    * `dist²(v,c) = v·v − 2·v·c + c·c` with `c·c` folded driver-side. Narrow
-    * — usable on batch frames and streaming micro-batches alike.
-    *
-    * Only for SMALL models: the projection holds 2·nList dot-product
-    * expressions, and beyond ~32 lists it exceeds the whole-stage-codegen
-    * method budget and silently runs interpreted (per-row tree-walking ×
-    * nList — catastrophic). [[withListId]] picks the path by nList.
-    */
-  def assignExpr(model: Model, vecCol: String): Column = {
-    import graft.functions.VectorExpressions.dotFast
-    val v = col(vecCol).cast("array<double>")
-    val dists = array(model.centroids.map { c =>
-      val cc = c.map(x => x * x).sum
-      dotFast(v, v) - lit(2.0) * dotFast(v, typedLit(c.toSeq)) + lit(cc)
-    }.toIndexedSeq: _*)
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
+  private[graft] final case class NearestList(child: Expression, model: Model) extends UnaryExpression {
+    override def dataType: DataType = IntegerType
+    override def nullable: Boolean  = true
 
-  /** nList above which [[assignExpr]]'s projection stops fitting in
-    * whole-stage codegen (measured round 4: >32 dot products in one
-    * projection fall back to interpreted expressions).
-    */
-  private val CodegenAssignMaxLists = 32
+    override protected def nullSafeEval(v: Any): Any = list(v.asInstanceOf[ArrayData])
+
+    def list(v: ArrayData): Integer =
+      if ((0 until v.numElements()).exists(v.isNullAt)) null else model.nearest(v.toDoubleArray())
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val self = ctx.addReferenceObj("nearestList", this)
+      val l    = ctx.freshName("list")
+      nullSafeCodeGen(ctx, ev, v =>
+        s"""Integer $l = $self.list($v);
+           |${ev.isNull} = $l == null;
+           |if ($l != null) ${ev.value} = $l;""".stripMargin)
+    }
+
+    override protected def withNewChildInternal(c: Expression): NearestList = copy(child = c)
+  }
 
   /** Max delta rows [[applyDelta]] will broadcast-hint. 4M ids ≈ 32 MB of
     * longs (more for string ids) — comfortably driver-safe; anything
@@ -212,69 +211,31 @@ object Ivf {
     require(lost == 0, s"$op: `added` rows with a null vector have no partition to land in")
   }
 
-  /** Append `list_id` = nearest centroid, choosing the scale-appropriate
-    * plan: the codegen'd expression for small models, a broadcast +
-    * `mapPartitions` JVM loop ([[Model.nearest]]) for large ones. A
-    * production IVF sizes nList ≈ √n — thousands of lists at 100 TB — where
-    * a 2·nList-expression projection is not a plan, it's a plan-size
-    * explosion; the JVM loop is O(nList·dim) per row, and the model rides
-    * one broadcast instead of nList literal arrays. Both paths compute the
-    * IDENTICAL formula (same FP order), so the chosen path never changes
-    * assignments; a null vector has no list. An in-budget upsert assigns
-    * its rows on the driver instead ([[listOf]]), through the same
-    * [[Model.nearest]].
+  /** Append `list_id` = nearest centroid ([[NearestList]]) to a batch or
+    * streaming frame: one narrow projection at every nList, O(nList·dim)
+    * per row. A production IVF sizes nList ≈ √n — thousands of lists at
+    * 100 TB — and the plan holds the model once, not per list. A null
+    * vector, or one with a null element, gets a null `list_id`.
     */
   def withListId(df: DataFrame, model: Model, vecCol: String): DataFrame =
-    if (model.centroids.length <= CodegenAssignMaxLists)
-      df.withColumn("list_id", assignExpr(model, vecCol))
-    else {
-      val spark  = df.sparkSession
-      val schema = df.schema.add("list_id", org.apache.spark.sql.types.IntegerType)
-      val bc     = spark.sparkContext.broadcast(model)
-      val vecIdx = df.schema.fieldIndex(vecCol)
-      df.mapPartitions { it =>
-        val m = bc.value
-        it.map { r =>
-          // null vector or null element → null list_id, matching the
-          // expression path's null propagation (the doc's "never changes
-          // assignments" contract includes the null rows)
-          val raw = if (r.isNullAt(vecIdx)) null else r.getSeq[Any](vecIdx)
-          val v: Array[Double] =
-            if (raw == null) null
-            else {
-              val arr = new Array[Double](raw.length)
-              var ok  = true
-              var i   = 0
-              raw.foreach { x =>
-                x match {
-                  case d: java.lang.Number => arr(i) = d.doubleValue
-                  case _                   => ok = false
-                }
-                i += 1
-              }
-              if (ok) arr else null
-            }
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (if (v == null) null else m.nearest(v)))
-        }
-      }(org.apache.spark.sql.Encoders.row(schema))
-    }
+    df.withColumn("list_id",
+      GraftBridge.column(NearestList(GraftBridge.expression(col(vecCol).cast("array<double>")), model)))
 
   /** The driver twin of [[withListId]] for rows already collected: the
-    * `list_id` of a row whose vector sits at ordinal `vec` with type `dt`
-    * (cast to `array<double>` as [[assignExpr]] casts it), from
-    * [[Model.nearest]]; null for a null vector or one with a null element,
-    * as [[withListId]]'s JVM loop gives. */
-  private[graft] def listOf(model: Model, vec: Int, dt: org.apache.spark.sql.types.DataType): InternalRow => Any = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val cast = Cast(BoundReference(vec, dt, nullable = true), ArrayType(DoubleType))
-    r => cast.eval(r) match {
-      case a: org.apache.spark.sql.catalyst.util.ArrayData if !(0 until a.numElements()).exists(a.isNullAt) =>
-        model.nearest(a.toDoubleArray())
-      case _ => null
-    }
-  }
+    * `list_id` of a row whose vector sits at ordinal `vec` with type `dt`,
+    * from the same [[NearestList]] evaluated on the row. */
+  private[graft] def listOf(model: Model, vec: Int, dt: DataType): InternalRow => Any =
+    NearestList(Cast(BoundReference(vec, dt, nullable = true), ArrayType(DoubleType)), model).eval(_)
 
+  /** Assign every row its nearest-centroid `list_id` ([[withListId]]) with
+    * centroids fitted here. The fit path mirrors [[Ml.KMeansClusterer]]:
+    * corpora within the driver-fit BYTE budget (rows × dim × 8 ≤
+    * `maxDriverFitBytes`, so a 768-d corpus collects 12× fewer rows than a
+    * 64-d one) fit with seeded Lloyd's on the driver (MLlib's per-iteration
+    * jobs dominate at small scale); larger corpora fit via MLlib KMeans on
+    * a sample. Either way the lists are assigned by [[withListId]], so a
+    * row re-uploaded unchanged lands in the list the build gave it.
+    */
   def assign(df: DataFrame, vecCol: String, nList: Int, seed: Long = 42L, maxDriverFitBytes: Long = 64L << 20): (DataFrame, Model) = {
     // One bounded collect decides the fit path AND provides the fit sample
     // (lloydFit is collect-order-independent, so limit's arbitrary row
@@ -310,12 +271,9 @@ object Ivf {
         .setK(nList)
         .setSeed(seed)
         .setFeaturesCol("__v")
-        .setPredictionCol("list_id")
         .setMaxIter(10)
-      val model     = km.fit(fitInput)
-      val assigned  = model.transform(withVec).drop("__v")
-      val centroids = model.clusterCenters.map(_.toArray)
-      (assigned, Model(centroids))
+      val m = Model(km.fit(fitInput).clusterCenters.map(_.toArray))
+      (withListId(df, m, vecCol), m)
     }
   }
 
@@ -426,8 +384,8 @@ object Ivf {
     * (backend/main.py:260-352: extract → chunk → embed → upsert into the
     * live HNSW index) re-expressed as a Structured Streaming sink over the
     * partitioned store: each micro-batch assigns `list_id` with the FITTED
-    * model (narrow, codegen'd — no refit, no shuffle) and appends into the
-    * store's list directories. Probes — [[search]] or the
+    * model ([[withListId]]: narrow — no refit, no shuffle) and appends
+    * into the store's list directories. Probes — [[search]] or the
     * [[graft.plans.DeclarativeAnn]] rewrite — pick up new files on their next
     * scan; no rebuild, and writers never block readers.
     *
@@ -574,8 +532,8 @@ object Ivf {
     *  - Resident: a store within [[graft.plans.Resident]]'s budget is
     *    resolved against its driver copy (read from the store's files on
     *    the driver, with no job, when none is held). The additions are
-    *    collected in one job and assigned their lists on the driver
-    *    ([[listOf]]); a removal frame over a local relation is read
+    *    collected in one job and assigned their lists on the driver by
+    *    the same kernel ([[listOf]]); a removal frame over a local relation is read
     *    without planning; the null-id, duplicate and null-vector guards
     *    and the affected lists are answered on the driver; the kept rows
     *    come from the copy, and
@@ -586,11 +544,12 @@ object Ivf {
     *    the store's, whose removal set passes [[BroadcastDeltaMaxRows]],
     *    or whose additions pass the room the copy leaves in the budget
     *    takes the scan path.
-    *  - Scan: `added` is persisted, and ONE aggregate over the delta's
-    *    ids ([[deltaStats]]) runs the guards, sizes the broadcast gate and
-    *    names the lists gaining rows; removed rows locate their lists via
-    *    one column-pruned (id, list_id) scan semi-joined against the
-    *    size-gated removal set.
+    *  - Scan ([[scanDelta]], the path [[Pq.applyDelta]] takes too): the
+    *    additions are assigned by [[withListId]] and persisted, and ONE
+    *    aggregate over the delta's ids ([[deltaStats]]) runs the guards,
+    *    sizes the broadcast gate and names the lists gaining rows; removed
+    *    rows locate their lists via one column-pruned (id, list_id) scan
+    *    semi-joined against the size-gated removal set.
     *
     * Either way `added` is evaluated once per call — the caller's
     * chunk → embed lineage runs once, not once per check — except for the
@@ -620,7 +579,8 @@ object Ivf {
       s"added frame must carry the store's indexed column '$vecCol' (has: ${added.columns.mkString(", ")})")
     graft.plans.Resident.writable(spark, path)
       .flatMap(residentDelta(spark, path, _, removedIds, added, model, vecCol, idCol))
-      .getOrElse(scanDelta(spark, path, spark.read.parquet(path), removedIds, withListId(added, model, vecCol), idCol))
+      .getOrElse(scanDelta(spark, path, removedIds, withListId(added, model, vecCol), idCol, "applyDelta",
+        Seq((path, spark.read.parquet(path), identity[DataFrame] _))))
   }
 
   /** [[applyDelta]] resolved against the store's resident copy; None hands
@@ -693,16 +653,29 @@ object Ivf {
     Some(affected.length.toLong)
   }
 
-  /** [[applyDelta]] through Spark: the path for stores over the resident
-    * budget (or without a version file) and deltas the driver copy does
-    * not take. */
-  private def scanDelta(
+  /** An upsert through Spark, for [[applyDelta]]'s stores over the
+    * resident budget (or without a version file) and the deltas the driver
+    * copy does not take, and for [[Pq.applyDelta]]'s two stores. `added`
+    * carries `list_id` and is persisted; ONE aggregate over the delta's ids
+    * ([[deltaStats]]) is its first evaluation: it runs the guards, sizes
+    * the broadcast gate and names the lists gaining rows. Each of `stores`
+    * is (root, live frame, its rows of the additions): removed and added
+    * ids are located in EVERY store, by one column-pruned (id, list_id)
+    * scan each semi-joined against the size-gated removal set, so a
+    * replay after a crash between two stores' swaps still finds what the
+    * first swap already removed. Each store's affected lists (its kept
+    * rows plus its additions) are staged and swapped in `stores` order,
+    * and the version at `root` is bumped last ([[Store.swapPartitions]]).
+    * Returns the number of lists touched.
+    */
+  private[graft] def scanDelta(
       spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      store: DataFrame,
+      root: String,
       removedIds: DataFrame,
       added: DataFrame,
       idCol: String,
+      op: String,
+      stores: Seq[(String, DataFrame, DataFrame => DataFrame)],
   ): Long = {
     val assigned = added.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the delta cache releases in a finally: a retried batch (the
@@ -711,7 +684,7 @@ object Ivf {
     // delta frames across attempts
     try {
       val delta = deltaStats(removedIds.select(col(idCol), lit(null).cast("int").as("list_id")),
-        assigned, idCol, "list_id", "applyDelta")
+        assigned, idCol, "list_id", op)
       // additions are UPSERTS: any stored row with an added id drops first,
       // so re-applying a delta (at-least-once batch retry, a caller that
       // forgot to list changed ids as stale) never duplicates a vector —
@@ -727,21 +700,20 @@ object Ivf {
       // contamination-sweep joins (Dedup.contaminatedIds): hint only what
       // is measured small.
       val remHint = gatedBroadcast(rem, delta.rows)
-      // affected lists = lists holding a removed id (a column-pruned store
-      // scan against the gated removal set) ∪ lists gaining a row
-      val located = store.select(col(idCol), col("list_id"))
-        .join(remHint, Seq(idCol), "left_semi")
-        .select("list_id").distinct().collect().map(_.getInt(0))
+      // affected lists = lists of any store holding a removed id ∪ lists
+      // gaining a row
+      val located = stores.map { case (_, live, _) =>
+        live.select(col(idCol), col("list_id")).join(remHint, Seq(idCol), "left_semi").select("list_id")
+      }.reduce(_ union _).distinct().collect().map(_.getInt(0))
       val affected = (located ++ delta.parts).distinct.sorted
       if (affected.isEmpty) return 0L
-
-      val kept = store
-        .where(col("list_id").isin(affected.map(Integer.valueOf).toIndexedSeq: _*))
-        .join(remHint, Seq(idCol), "left_anti")
-      val rewrite = kept
-        .unionByName(assigned.select(store.columns.map(col).toIndexedSeq: _*))
-      Store.swapPartitions(spark.sparkContext.hadoopConfiguration, path, "list_id", affected.toSeq,
-        Seq(path -> Store.stageFrame(clusterByDir(rewrite, affected.length), "list_id")))
+      val lists = affected.map(Integer.valueOf).toIndexedSeq
+      Store.swapPartitions(spark.sparkContext.hadoopConfiguration, root, "list_id", affected.toSeq,
+        stores.map { case (dir, live, rows) =>
+          val kept = live.where(col("list_id").isin(lists: _*)).join(remHint, Seq(idCol), "left_anti")
+          val rewrite = kept.unionByName(rows(assigned).select(live.columns.map(col).toIndexedSeq: _*))
+          dir -> Store.stageFrame(clusterByDir(rewrite, affected.length), "list_id")
+        })
       affected.length.toLong
     } finally {
       assigned.unpersist()

@@ -296,12 +296,14 @@ object Pq {
   /** Recrawl maintenance for the two-store layout — [[Ivf.applyDelta]]'s
     * contract (removals + id-keyed upsert additions, affected-list-only
     * rewrite, one [[Store.swapPartitions]] commit, [[Store.recover]] at
-    * entry) applied to BOTH stores in one pass: added rows assign their
-    * list with the STORED centroids and encode with the STORED codebooks
+    * entry) applied to BOTH stores in one pass of [[Ivf.scanDelta]], the
+    * IVF scan path's upsert: added rows assign their list with the STORED
+    * centroids ([[Ivf.withListId]]) and encode with the STORED codebooks
     * (no refit — drift is [[Ivf.maintain]]'s job on the floats store), and
     * only the affected `list_id=` directories of either store are read or
     * written. `added` is evaluated once: its assignment is persisted and
-    * [[Ivf.deltaStats]]'s one aggregate is its only evaluation.
+    * [[Ivf.deltaStats]]'s one aggregate is its only evaluation; the removal
+    * set is broadcast only under [[Ivf.BroadcastDeltaMaxRows]].
     *
     * Cross-store ordering: the FLOAT store swaps first. A crash between
     * the two swaps leaves codes one delta stale, which degrades gracefully
@@ -332,53 +334,12 @@ object Pq {
     val (codes, floats, ivfm, pqm) = readStore(spark, root)
     require(added.columns.contains(vecCol),
       s"added frame must carry the store's float column '$vecCol' (has: ${added.columns.mkString(", ")})")
-    val assigned = Ivf.withListId(added.select(col(idCol), col(vecCol)), ivfm, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the duplicate guard and the lists gaining rows: ONE aggregate, the
-      // only evaluation of `added`
-      val delta = Ivf.deltaStats(removedIds.select(col(idCol), lit(null).cast("int").as("list_id")),
-        assigned, idCol, "list_id", "Pq.applyDelta")
-      // upsert semantics: stored rows with an added id vacate first
-      val rem = removedIds.select(col(idCol)).union(assigned.select(col(idCol)))
-      // affected lists: one bounded-by-nList collect. Removed rows are
-      // located in BOTH stores, not just floats — after a crash between
-      // the floats swap and the codes swap, a replayed batch would find
-      // nothing left to remove in floats for the already-swapped lists and
-      // silently leave the removed ids in codes FOREVER (permanent stale
-      // candidates eating k·refine slots); the codes-side scan makes the
-      // replay self-healing at the cost of one column-pruned scan of the
-      // narrow code store.
-      val located = floats.select(col(idCol), col("list_id"))
-        .join(rem, Seq(idCol), "left_semi")
-        .select("list_id")
-        .union(codes.select(col(idCol), col("list_id"))
-          .join(rem, Seq(idCol), "left_semi")
-          .select("list_id"))
-        .distinct().collect().map(_.getInt(0))
-      val affected = (located ++ delta.parts).distinct.sorted
-      if (affected.isEmpty) return 0L
-      val lists = affected.map(Integer.valueOf).toIndexedSeq
-
-      val keptF = floats.where(col("list_id").isin(lists: _*)).join(rem, Seq(idCol), "left_anti")
-      val newF  = assigned.select(floats.columns.map(col).toIndexedSeq: _*)
-      val keptC = codes.where(col("list_id").isin(lists: _*)).join(rem, Seq(idCol), "left_anti")
-      val newC  = pqTable(assigned, vecCol, pqm)
-        .select(col(idCol), col("pq_codes"), col("list_id"))
-
-      // floats FIRST (see ordering rationale above); the version bump
-      // lands LAST: a crash before it leaves the token one behind, and the
-      // batch's replay (idempotent, self-healing swaps) lands the bump —
-      // caches are never told "fresh" about a store whose swaps haven't
-      // completed
-      Store.swapPartitions(conf, root, "list_id", affected.toSeq, Seq(
-        s"$root/floats" -> Store.stageFrame(Ivf.clusterByDir(keptF.unionByName(newF), affected.length), "list_id"),
-        s"$root/codes" -> Store.stageFrame(Ivf.clusterByDir(
-          keptC.unionByName(newC.select(codes.columns.map(col).toIndexedSeq: _*)), affected.length), "list_id")))
-      affected.length.toLong
-    } finally {
-      assigned.unpersist()
-    }
+    // floats FIRST (see the ordering rationale above), then codes; the
+    // version bump lands at the root, last
+    Ivf.scanDelta(spark, root, removedIds, Ivf.withListId(added.select(col(idCol), col(vecCol)), ivfm, vecCol),
+      idCol, "Pq.applyDelta", Seq(
+        (s"$root/floats", floats, identity[DataFrame] _),
+        (s"$root/codes", codes, pqTable(_, vecCol, pqm))))
   }
 
   /** Probe: prune lists → ADC top k·refine over codes → exact re-rank of

@@ -223,12 +223,12 @@ object Sampling {
     * fraction (easy examples near the prototype are redundant), on a
     * scarce one the easy fraction — `keepHardest` picks the direction.
     * Everything deterministic: explicit prototypes, argmin assignment
-    * with lowest-index tie-break ([[Ivf.withListId]]'s codegen path), a
+    * with lowest-index tie-break ([[Ivf.withListId]]), a
     * per-cluster (distance, id) rank, keep ceil(keepFrac·n_c) per
     * cluster.
     *
-    * Plan shape: one narrow assignment projection (prototypes inlined in
-    * the codegen'd argmin — no join), then ONE cluster-keyed shuffle
+    * Plan shape: one narrow assignment projection (the prototypes ride in
+    * the assignment expression — no join), then ONE cluster-keyed shuffle
     * shared by the rank and cluster-size windows. Same scale contract as
     * [[stratifiedTake]]; clusters skewed enough to make a per-cluster
     * sort hurt should prune per shard first (prototypes are global, so

@@ -73,6 +73,10 @@ class DistributedFitSpec extends AnyFunSuite {
     assert(model.centroids.length == 4)
     val lists = assigned.select("list_id").as[Int].collect().toSeq
     assert(lists.size == 60 && lists.forall(l => l >= 0 && l < 4))
+    // the build assigns as an upsert does: a row re-uploaded unchanged
+    // stays in its list
+    def byId(d: org.apache.spark.sql.DataFrame) = d.select("id", "list_id").as[(Long, Int)].collect().toMap
+    assert(byId(assigned) == byId(Ivf.withListId(df, model, "vec")))
   }
 
   /** 768-d corpus with 3 orthogonal, widely separated latent clusters and

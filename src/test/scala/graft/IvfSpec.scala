@@ -710,22 +710,41 @@ class IvfSpec extends AnyFunSuite with BeforeAndAfterAll {
       "sidecar (with its column claim) must survive compaction")
   }
 
+  /** `df` with `list_id` = the first centroid of `model` minimising
+    * `v·v − 2·v·c + c·c`, in Spark built-ins (sequential dot products), as
+    * the DuckDB oracle replays the argmin. */
+  private def builtinArgmin(df: org.apache.spark.sql.DataFrame, model: Ivf.Model, vecCol: String) = {
+    val v = col(vecCol).cast("array<double>")
+    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
+    val dists = array(model.centroids.toIndexedSeq.map { c =>
+      dot(v, v) - lit(2.0) * dot(v, typedLit(c.toSeq)) + lit(c.map(x => x * x).sum)
+    }: _*)
+    df.withColumn("list_id", (array_position(dists, array_min(dists)) - 1).cast("int"))
+  }
+
   test("withListId: large-model mapPartitions path assigns identically to the codegen'd expression") {
     val (_, model) = Ivf.assign(corpus, "vec", 6)
-    // fake a >32-list model by tiling the fitted centroids with far-away
-    // ghosts: argmin still lands on the original 6, so both paths must agree
+    // a 46-list model: the fitted centroids tiled with far-away ghosts, so
+    // argmin still lands on the original 6
     val ghosts = (0 until 40).map(g => model.centroids(g % 6).map(_ + 1000.0 * (g + 1)))
     val big    = Ivf.Model(model.centroids ++ ghosts)
-    assert(big.centroids.length > 32)
-    val viaExpr = corpus.withColumn("list_id", Ivf.assignExpr(big, "vec"))
-      .select("id", "list_id").as[(Long, Int)].collect().toMap
-    val viaLoop = Ivf.withListId(corpus, big, "vec")
-      .select("id", "list_id").as[(Long, Int)].collect().toMap
-    assert(viaLoop == viaExpr)
-    // and the small-model path is the expression itself (plan, not loop)
-    val small = Ivf.withListId(corpus, model, "vec")
-    assert(!small.queryExecution.optimizedPlan.toString.contains("SerializeFromObject"),
-      "small models must stay on the codegen'd expression path")
+    for (m <- Seq(model, big)) {
+      def lists(df: org.apache.spark.sql.DataFrame) = df.select("id", "list_id").as[(Long, Int)].collect().toMap
+      assert(lists(Ivf.withListId(corpus, m, "vec")) == lists(builtinArgmin(corpus, m, "vec")),
+        s"${m.centroids.length} lists")
+    }
+  }
+
+  test("operators/Ivf.scala is the only file in src/main/scala that picks a list") {
+    import java.nio.file.{Files, Paths}
+    val files = Files.walk(Paths.get("src/main/scala")).toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
+      .filter(_.toString.endsWith(".scala"))
+    def has(p: java.nio.file.Path, mark: String) = new String(Files.readAllBytes(p), "UTF-8").contains(mark)
+    val nearest = files.filter(p => !p.endsWith(Paths.get("graft/operators/Ivf.scala")) && has(p, ".nearest("))
+    val mllib   = files.filter(has(_, "setPredictionCol(\"list_id\")"))
+    assert(nearest.isEmpty, s"Model.nearest called outside operators/Ivf: ${nearest.mkString(", ")}")
+    assert(mllib.isEmpty, s"lists assigned by an MLlib model: ${mllib.mkString(", ")}")
   }
 
   test("int8-code stores are first-class: both assignment paths match the cast-double corpus") {
@@ -739,14 +758,14 @@ class IvfSpec extends AnyFunSuite with BeforeAndAfterAll {
     val viaDbl = Ivf.withListId(asDbl, model, "codes")
       .select("id", "list_id").as[(Long, Int)].collect().toMap
     assert(viaInt == viaDbl)
-    // the >32-list generic-Number loop path too
+    // and at 46 lists
     val ghosts = (0 until 40).map(g => model.centroids(g % 6).map(_ + 1000.0 * (g + 1)))
     val big    = Ivf.Model(model.centroids ++ ghosts)
-    val loopInt = Ivf.withListId(codes, big, "codes")
+    val bigInt = Ivf.withListId(codes, big, "codes")
       .select("id", "list_id").as[(Long, Int)].collect().toMap
-    val loopDbl = Ivf.withListId(asDbl, big, "codes")
+    val bigDbl = Ivf.withListId(asDbl, big, "codes")
       .select("id", "list_id").as[(Long, Int)].collect().toMap
-    assert(loopInt == loopDbl)
+    assert(bigInt == bigDbl)
   }
 
   test("index handle holds no persisted corpus (store path + centroids only)") {

@@ -804,14 +804,18 @@ class ResidentSpec extends AnyFunSuite {
   }
 
   test("both builds run no Spark job: the rule's, from a handle, and an upsert's, from a path") {
-    val dir   = write(tmp("resident-nojob"))
-    val twin  = copyStore(dir, tmp("resident-nojob-path"))
-    val rel   = relOf(ext.read.parquet(dir))
-    val token = Store.token(spark.sparkContext.hadoopConfiguration, dir).get
-    val (fromRel, n1)  = jobs(Resident.load(ext, rel, token))
-    val (fromPath, n2) = jobs(Resident.writable(spark, twin))
-    assert(fromRel.isDefined && fromPath.isDefined)
-    assert(n1 == 0 && n2 == 0, s"build jobs: from a handle $n1, from a path $n2")
+    // 39 lists: the benchmark's store, past the default 32-path limit of
+    // listing partition directories on the driver
+    for (nList <- Seq(20, 39)) {
+      val dir   = write(tmp("resident-nojob"), nList = nList)
+      val twin  = copyStore(dir, tmp("resident-nojob-path"))
+      val rel   = relOf(ext.read.parquet(dir))
+      val token = Store.token(spark.sparkContext.hadoopConfiguration, dir).get
+      val (fromRel, n1)  = jobs(Resident.load(ext, rel, token))
+      val (fromPath, n2) = jobs(Resident.writable(spark, twin))
+      assert(fromRel.isDefined && fromPath.isDefined, s"nList $nList")
+      assert(n1 == 0 && n2 == 0, s"nList $nList: build jobs: from a handle $n1, from a path $n2")
+    }
   }
 
   test("after a cold applyDelta a reopened handle is served from the installed copy with no job") {
@@ -832,9 +836,11 @@ class ResidentSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     def near: Seq[Float] = Seq.fill(3)(rnd.nextFloat() * 4 - 2)
     def far: Seq[Float]  = Seq.fill(3)(rnd.nextFloat() * 4 + 5)
+    // the last row has a null element: no list, like a null vector
     val vs  = Seq(Some(Seq(1f, 1f, 0f)), Some(Seq(0f, 1f, 0f)), Some(Seq(0f, 0f, 0f)), None) ++
       Seq.fill(30)(Some(near)) ++ Seq.fill(30)(Some(far))
-    val df  = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
+    val df  = (vs.map(_.map(_.map(Option(_)))) :+ Some(Seq(Some(1f), None, Some(0f)))).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
     for (n <- Seq(8, 40)) {
       // c0 and c2 coincide, and (1, 1, 0) and (0, 0, 0) are as far from c0 as from c1
       val model  = Ivf.Model(Array(Array(1d, 0d, 0d), Array(0d, 1d, 0d), Array(1d, 0d, 0d)) ++
@@ -844,8 +850,36 @@ class ResidentSpec extends AnyFunSuite {
       val listOf = Ivf.listOf(model, 1, df.schema("vec").dataType)
       val driver = Resident.unsafeRows(df).map(r => r.getLong(0) -> Option(listOf(r))).toMap
       assert(driver == scan, s"nList $n")
-      assert(driver(0L).contains(0) && driver(1L).contains(1) && driver(2L).contains(0) && driver(3L).isEmpty, s"nList $n")
+      assert(driver(0L).contains(0) && driver(1L).contains(1) && driver(2L).contains(0) && driver(3L).isEmpty &&
+        driver(vs.length.toLong).isEmpty, s"nList $n")
       assert(driver.values.flatten.toSet.size > 3, s"nList $n: the far vectors take far lists")
     }
+  }
+
+  test("a vector with a null element fails every upsert loudly, at nList <= 32 and > 32, resident or scanned") {
+    import spark.implicits._
+    val rnd   = new scala.util.Random(11)
+    val base  = (0L until 120L).map(i => (i, Seq.fill(4)(rnd.nextDouble() * 4 - 2))).toDF("id", "vec")
+    val added = Seq((1000L, Seq(Some(1.0), None, Some(0.0), Some(0.0)))).toDF("id", "vec")
+    val none  = Seq.empty[Long].toDF("id")
+    val conf  = spark.sparkContext.hadoopConfiguration
+    def rejects(what: String, dir: String)(upsert: => Long): Unit = {
+      val before = Store.token(conf, dir)
+      val ex = intercept[IllegalArgumentException](upsert)
+      assert(ex.getMessage.contains("null vector have no partition"), s"$what: ${ex.getMessage}")
+      assert(Store.token(conf, dir) == before, s"$what: a rejected delta commits nothing")
+    }
+    for (nList <- Seq(8, 40); budget <- Seq(Resident.Budget, 0L)) withBudget(budget) {
+      val dir = tmp("resident-null-element")
+      val (assigned, model) = Ivf.assign(base, "vec", nList)
+      Ivf.writeIndexed(assigned, dir, model, "vec")
+      if (nList == 8)
+        assert(Ivf.withListId(added, model, "vec").select("list_id").head().isNullAt(0), "withListId")
+      rejects(s"nList $nList, budget $budget", dir)(Ivf.applyDelta(spark, dir, none, added, "id"))
+      assert(spark.read.parquet(dir).count() == 120L, s"nList $nList, budget $budget")
+    }
+    val pq = tmp("resident-null-element-pq")
+    graft.operators.Pq.writeStore(base, "vec", "id", pq, nList = 8, m = 2, ksub = 16)
+    rejects("Pq", pq)(graft.operators.Pq.applyDelta(spark, pq, none, added, "vec", "id"))
   }
 }

@@ -25,5 +25,7 @@ object TestSpark {
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
     .config("spark.ui.enabled", "false")
     .config(Engine.LocalFsConf._1, Engine.LocalFsConf._2)
+    // Engine.session's: a store of up to 2 048 lists opens with no listing job
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "2048")
     .getOrCreate()
 }
