@@ -4,7 +4,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.PCA
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Clustering + dimensionality reduction (SURVEY §2.6).
   *
@@ -20,13 +20,15 @@ import org.apache.spark.sql.DataFrame
   * is a [[Clusterer]] seam with a KMeans-family default. Noise semantics
   * (−1 labels) are reproduced by distance-threshold marking, and the
   * adaptive sizing thresholds (3/5/10 at 50/200 chunks,
-  * backend/main.py:795-801) live in [[adaptiveMinClusterSize]].
+  * backend/main.py:795-801) live in
+  * [[HdbscanClusterer.adaptiveMinClusterSize]].
+  *
+  * Every fit reads its rows through one rule ([[fitRows]]) and one of two
+  * samplers: [[driverRows]] (byte-budgeted) or [[cappedRows]] (row-capped).
+  * A fit that samples past its cap or budget (HDBSCAN, UMAP, PQ) collects
+  * a [[hashSample]].
   */
 object Ml {
-
-  /** The reference's adaptive min_cluster_size (backend/main.py:795-801). */
-  def adaptiveMinClusterSize(corpusSize: Long): Int =
-    if (corpusSize < 50) 3 else if (corpusSize < 200) 5 else 10
 
   /** Top-k principal components of a small in-memory sample: covariance +
     * breeze eigSym on the driver. Mirrors the reference's own in-proc
@@ -69,22 +71,30 @@ object Ml {
     }.toArray
   }
 
-  /** Shared driver-fit sampler: one cheap dim probe + one bounded
-    * limit(budget+1) collect of the vector column (position 0) plus any
-    * `extra` columns. Returns (dim, Some(rows)) when the whole input fits
-    * the byte budget (rows × dim × 8 ≤ maxBytes), (dim, None) when it
+  /** The one fit-input rule. A row with a null vector takes part in no fit
+    * (a null in the first row would fail the dim probe, a later one the fit
+    * loops). A clusterer passes its `idCol` too and so also drops a row with
+    * a null id: it labels by id, and [[clusterAndName]] joins the labels
+    * back on the id, which a null never matches. Both samplers below read
+    * through this rule, and so does every fit path that reads the frame
+    * itself (the MLlib fits).
+    */
+  private[operators] def fitRows(df: DataFrame, vecCol: String, idCol: Option[String] = None): DataFrame =
+    df.where(idCol.foldLeft(col(vecCol).isNotNull)((c, id) => c && col(id).isNotNull))
+
+  /** The byte-budgeted sampler over [[fitRows]]: one cheap dim probe + one
+    * bounded limit(budget+1) collect of the vector column (position 0) plus
+    * any `extra` columns. Returns (dim, Some(rows)) when the whole input
+    * fits the byte budget (rows × dim × 8 ≤ maxBytes), (dim, None) when it
     * doesn't — callers then take the distributed-fit path. A single
-    * definition keeps the fit sites (kmeans, IVF, PCA fit/project) from
-    * drifting apart.
+    * definition keeps the fit sites (kmeans, IVF, PQ, PCA) from drifting
+    * apart.
     */
   private[operators] def driverRows(
       df: DataFrame, vecCol: String, maxBytes: Long,
-      extra: Seq[org.apache.spark.sql.Column] = Nil,
-  ): (Int, Option[Array[org.apache.spark.sql.Row]]) = {
-    // null vectors are excluded throughout: a null in the first row would
-    // NPE the dim probe, and a null later would crash the fit loops — rows
-    // without a vector simply don't participate in fits
-    val nonNull = df.where(col(vecCol).isNotNull)
+      extra: Seq[Column] = Nil,
+  ): (Int, Option[Array[Row]]) = {
+    val nonNull = fitRows(df, vecCol)
     val head = nonNull.select(org.apache.spark.sql.functions.size(col(vecCol))).limit(1).collect()
     if (head.isEmpty) return (0, Some(Array.empty))
     val dim     = head(0).getInt(0)
@@ -98,31 +108,49 @@ object Ml {
     (dim, rows.map(_.map(_.getSeq[Double](0).toArray)))
   }
 
-  /** M3 — fit+transform to 3-D with the reference's zero-pad rule. Output:
-    * idCol, x, y, z.
-    *
-    * Corpora within the driver byte budget fit via [[pcFit]] (one bounded
-    * collect) and project DISTRIBUTED as codegen'd dot products; larger
-    * corpora fit via MLlib's treeAggregate covariance — same contract,
-    * scale-appropriate plan either way.
+  /** The row-capped sampler, for the driver fits whose cost grows with rows
+    * rather than bytes (HDBSCAN, UMAP). Reads [[fitRows]] with the id as
+    * `(__id long, __v array<double>)` and returns that frame, the fit rows
+    * sorted by id (so partition order can't perturb the fit), and whether
+    * they are the whole set. Up to `maxRows` rows that is one bounded
+    * collect; past it, a [[hashSample]] bucketed on the portable hash of
+    * the id (stable across runs and partitionings).
     */
-  def pca3d(df: DataFrame, vecCol: String, idCol: String, maxDriverFitBytes: Long = 64L << 20): DataFrame = {
-    import graft.functions.VectorExpressions.dotFast
-    driverVectors(df, vecCol, maxDriverFitBytes) match {
-      case (_, Some(pts)) if pts.isEmpty => df.sparkSession.emptyDataFrame
-      case (_, Some(pts)) =>
-        val cs = pcFit(pts, math.min(pts.length, 3))
-        val v  = col(vecCol).cast("array<double>")
-        def coord(i: Int) = if (i < cs.length) dotFast(v, typedLit(cs(i).toSeq)) else lit(0.0)
-        df.select(col(idCol), coord(0).as("x"), coord(1).as("y"), coord(2).as("z"))
-      case (_, None) =>
-        val withVec = df.withColumn("__v", array_to_vector(col(vecCol).cast("array<double>")))
-        val model   = new PCA().setK(3).setInputCol("__v").setOutputCol("__pca").fit(withVec)
-        val arr     = vector_to_array(col("__pca"))
-        model.transform(withVec)
-          .select(col(idCol), element_at(arr, 1).as("x"), element_at(arr, 2).as("y"), element_at(arr, 3).as("z"))
-    }
+  private[operators] def cappedRows(df: DataFrame, vecCol: String, idCol: String, maxRows: Int): (DataFrame, Array[Row], Boolean) = {
+    val input = fitRows(df, vecCol, Some(idCol))
+      .select(col(idCol).cast("long").as("__id"), col(vecCol).cast("array<double>").as("__v"))
+    val head = input.limit(maxRows + 1).collect()
+    if (head.length <= maxRows) return (input, head.sortBy(_.getLong(0)), true)
+    val sample = hashSample(input, Sampling.bucket(col("__id")), col("__id"), maxRows)
+    (input, sample.sortBy(_.getLong(0)), false)
   }
+
+  /** The one over-budget sample: about `maxRows` rows of `frame`, chosen
+    * by content, not by layout. `bucket` is a hash of the row into
+    * [0, NumBuckets) (the id's for [[cappedRows]], the vector's for
+    * `Pq.fit`); a count sets the kept share, the bucket filter keeps about
+    * `maxRows` rows, and an ORDERED limit on (bucket, key) cuts the rest.
+    * The filter runs before the limit because orderBy+limit is
+    * TakeOrderedAndProject, whose collect ships each partition's top
+    * `maxRows` rows to the driver: unfiltered, a frame in many small
+    * partitions would ship whole. A bare limit() would truncate in
+    * partition-arrival order, which varies run to run whenever the filter
+    * passes more than `maxRows` rows (certain past NumBuckets × maxRows,
+    * where the kept share floors at one bucket); bucket-first keeps the
+    * kept set hash-uniform instead of biased toward small keys.
+    */
+  private[operators] def hashSample(frame: DataFrame, bucket: Column, key: Column, maxRows: Int): Array[Row] = {
+    val keepBp = math.max(1L, maxRows.toLong * Sampling.NumBuckets / frame.count())
+    frame.where(bucket < keepBp).orderBy(bucket, key).limit(maxRows).collect()
+  }
+
+  /** M3 — fit+transform to 3-D with the reference's zero-pad rule: the fit
+    * and the projection of [[pcaProject]] over one frame. Output: idCol, x,
+    * y, z; a row with a null vector takes part in no fit and projects to
+    * null coordinates.
+    */
+  def pca3d(df: DataFrame, vecCol: String, idCol: String, maxDriverFitBytes: Long = 64L << 20): DataFrame =
+    pcaProject(df, df, vecCol, idCol, maxDriverFitBytes)
 
   /** 3-D projection seam for M5. The reference supports method='umap'
     * (dimensionality_reduction.py:101-105) but falls back to PCA when
@@ -162,43 +190,21 @@ object Ml {
       val spark = df.sparkSession
       import spark.implicits._
       require(params.nComponents == 3, "Reducer3D contract is 3 output dims")
-      val nonNull = df.where(col(vecCol).isNotNull && col(idCol).isNotNull)
-        .select(col(idCol).cast("long").as("__id"), col(vecCol).cast("array<double>").as("__v"))
-      val head = nonNull.limit(maxFitRows + 1).collect()
-      if (head.isEmpty) return df.sparkSession.emptyDataFrame
-      if (head.length < 3) return pca3d(df, vecCol, idCol) // reference tiny-input rule
-      def toFrame(ids: Array[Long], emb: Array[Array[Double]]) =
-        ids.zip(emb).toSeq.map { case (id, e) => (id, e(0), e(1), e(2)) }
-          .toDF("__id", "x", "y", "z")
-          .select(col("__id").as(idCol), col("x"), col("y"), col("z"))
-      if (head.length <= maxFitRows) {
-        val rows = head.sortBy(_.getLong(0))
-        val m    = Umap.fitModel(rows.map(_.getSeq[Double](1).toArray), params)
-        toFrame(rows.map(_.getLong(0)), m.embedding)
-      } else {
-        // over the cap: deterministic hash-sampled fit (same recipe as
-        // HdbscanClusterer), then a broadcast transform over every row.
-        // The cap cut is an ORDERED limit on (bucket, id) — a plain
-        // limit() truncates in partition-arrival order, which varies
-        // run-to-run whenever the bucket filter passes more than
-        // maxFitRows rows (certain for corpora past NumBuckets*maxFitRows,
-        // where keepBp floors at 1), silently breaking the determinism
-        // contract. orderBy+limit is TakeOrderedAndProject: a per-partition
-        // heap, never a full sort; bucket-first keeps the kept set
-        // hash-uniform instead of biased toward small ids.
-        val total  = nonNull.count()
-        val keepBp = math.max(1L, maxFitRows.toLong * Sampling.NumBuckets / total)
-        val sampled = nonNull.where(Sampling.bucket(col("__id")) < keepBp)
-          .orderBy(Sampling.bucket(col("__id")), col("__id"))
-          .limit(maxFitRows).collect().sortBy(_.getLong(0))
-        val model = Umap.fitModel(sampled.map(_.getSeq[Double](1).toArray), params)
-        val bc    = spark.sparkContext.broadcast(model)
-        nonNull.as[(Long, Seq[Double])].map { case (id, v) =>
-          val e = Umap.transform(bc.value, v.toArray)
-          (id, e(0), e(1), e(2))
-        }.toDF("__id", "x", "y", "z")
-          .select(col("__id").as(idCol), col("x"), col("y"), col("z"))
-      }
+      val (input, rows, whole) = cappedRows(df, vecCol, idCol, maxFitRows)
+      if (whole && rows.isEmpty) return spark.emptyDataFrame
+      if (rows.length < 3) return pca3d(fitRows(df, vecCol, Some(idCol)), vecCol, idCol) // reference tiny-input rule
+      val model = Umap.fitModel(rows.map(_.getSeq[Double](1).toArray), params)
+      val placed =
+        if (whole) rows.map(_.getLong(0)).zip(model.embedding).toSeq.map { case (id, e) => (id, e(0), e(1), e(2)) }.toDS()
+        else {
+          // over the cap: every row is placed by a broadcast transform
+          val bc = spark.sparkContext.broadcast(model)
+          input.as[(Long, Seq[Double])].map { case (id, v) =>
+            val e = Umap.transform(bc.value, v.toArray)
+            (id, e(0), e(1), e(2))
+          }
+        }
+      placed.toDF("__id", "x", "y", "z").select(col("__id").as(idCol), col("x"), col("y"), col("z"))
     }
   }
 
@@ -215,30 +221,36 @@ object Ml {
 
   /** M4 — project new vectors with an already-fitted model (the reference's
     * transform-single-query path): fit on `fitDf`, apply to `applyDf`.
+    *
+    * A fit within the driver byte budget runs [[pcFit]] on one bounded
+    * collect ([[driverRows]]); a larger one runs MLlib's treeAggregate
+    * covariance ([[fitPca]]). Either fit yields components, and one
+    * projection applies them as codegen'd dot products, so a row with a
+    * null vector projects to null coordinates on both paths.
     */
   def pcaProject(fitDf: DataFrame, applyDf: DataFrame, vecCol: String, idCol: String, maxDriverFitBytes: Long = 64L << 20): DataFrame = {
     import graft.functions.VectorExpressions.dotFast
-    driverVectors(fitDf, vecCol, maxDriverFitBytes) match {
-      case (_, Some(pts)) if pts.isEmpty => fitDf.sparkSession.emptyDataFrame
-      case (_, Some(pts)) =>
-        // min(n,3) like pca3d: with fewer samples than components the extra
-        // eigenvectors are null-space garbage — those coords zero-pad instead
-        val cs = pcFit(pts, math.min(pts.length, 3))
-        val v  = col(vecCol).cast("array<double>")
-        def coord(i: Int) = if (i < cs.length) dotFast(v, typedLit(cs(i).toSeq)) else lit(0.0)
-        applyDf.select(col(idCol), coord(0).as("x"), coord(1).as("y"), coord(2).as("z"))
-      case (_, None) =>
-        transformPca(fitPca(fitDf, vecCol, 3), applyDf, vecCol, idCol)
+    val cs = driverVectors(fitDf, vecCol, maxDriverFitBytes)._2 match {
+      case Some(pts) if pts.isEmpty => return fitDf.sparkSession.emptyDataFrame
+      // min(n,3): with fewer samples than components the extra
+      // eigenvectors are null-space garbage — those coords zero-pad instead
+      case Some(pts) => pcFit(pts, math.min(pts.length, 3))
+      case None =>
+        val pc = fitPca(fitDf, vecCol, 3).pc
+        Array.tabulate(pc.numCols)(j => Array.tabulate(pc.numRows)(pc(_, j)))
     }
+    val v = col(vecCol).cast("array<double>")
+    def coord(i: Int) = if (i < cs.length) dotFast(v, typedLit(cs(i).toSeq)) else lit(0.0)
+    applyDf.select(col(idCol), coord(0).as("x"), coord(1).as("y"), coord(2).as("z"))
   }
 
   /** M6 — model persistence (reference pickles the fitted reducer,
     * backend/dimensionality_reduction.py:160-187; MLlib writers are the
-    * native equivalent and cluster-readable).
+    * native equivalent and cluster-readable). The fit reads [[fitRows]].
     */
   def fitPca(df: DataFrame, vecCol: String, k: Int): org.apache.spark.ml.feature.PCAModel =
     new PCA().setK(k).setInputCol("__v").setOutputCol("__pca")
-      .fit(df.withColumn("__v", array_to_vector(col(vecCol).cast("array<double>"))))
+      .fit(fitRows(df, vecCol).withColumn("__v", array_to_vector(col(vecCol).cast("array<double>"))))
 
   def savePca(model: org.apache.spark.ml.feature.PCAModel, path: String): Unit =
     model.write.overwrite().save(path)
@@ -260,7 +272,8 @@ object Ml {
     def cluster(df: DataFrame, vecCol: String, idCol: String): DataFrame
   }
 
-  /** Nearest centroid + squared distance (shared by the driver-fit paths). */
+  /** Nearest centroid + squared distance (the driver fits' assignment, and
+    * HDBSCAN's over-cap nearest-fitted-point assignment). */
   private[operators] def nearestCentroid(p: Array[Double], cs: Array[Array[Double]]): (Int, Double) = {
     var best = 0; var bestD = Double.MaxValue; var c = 0
     while (c < cs.length) {
@@ -398,22 +411,6 @@ object Ml {
       .drop("__nl")
   }
 
-  /** Default KMeans-family clusterer (declared HDBSCAN deviation): k fixed,
-    * rows farther than `noiseQuantile` of the distance distribution from
-    * their centroid are marked −1 (noise), echoing HDBSCAN's outlier
-    * semantics without its density model.
-    *
-    * Two fit paths, same contract:
-    *  - corpora within the driver-fit BYTE budget (rows × dim × 8 ≤
-    *    `maxDriverFitBytes`, so a 768-d corpus collects 12× fewer rows than
-    *    a 64-d one — the budget is what actually bounds driver heap) fit
-    *    with seeded Lloyd's iterations on the driver — the reference's own
-    *    in-proc shape (SURVEY §2.6 option (c)); at 2k points MLlib's ~25
-    *    driver-roundtrip jobs cost ~8 s of pure scheduling, the local fit
-    *    microseconds;
-    *  - larger corpora fit distributed via MLlib KMeans, with assignment +
-    *    noise-marking as broadcast-centroid expressions (no collect).
-    */
   /** M1 at the reference's ACTUAL semantics: HDBSCAN* with EoM selection
     * (backend/clustering.py:50-60) via [[Hdbscan.fit]]. KMeansClusterer
     * stays the oracled default (closed-form noise contract); this closes
@@ -445,51 +442,41 @@ object Ml {
     override def cluster(df: DataFrame, vecCol: String, idCol: String): DataFrame = {
       val spark = df.sparkSession
       import spark.implicits._
-      val nonNull = df.where(col(vecCol).isNotNull && col(idCol).isNotNull)
-        .select(col(idCol).cast("long").as("__id"), col(vecCol).cast("array<double>").as("__v"))
-      val head = nonNull.limit(maxFitRows + 1).collect()
-      if (head.isEmpty) return df.select(col(idCol), lit(-1).as("label")).where(lit(false))
-      if (head.length <= maxFitRows) {
-        // whole corpus fits: exact HDBSCAN, id-sorted so partition order
-        // can't perturb the labeling
-        val rows   = head.sortBy(_.getLong(0))
-        val pts    = rows.map(_.getSeq[Double](1).toArray)
-        val labels = Hdbscan.fit(pts, minClusterSize, minSamples)
-        rows.map(_.getLong(0)).zip(labels).toSeq.toDF("__id", "label")
-          .select(col("__id").as(idCol), col("label"))
-      } else {
-        // over the cap: deterministic hash-sample of ~maxFitRows for the
-        // fit (portable hash of the id — stable across runs/partitioning).
-        // Ordered limit on (bucket, id), NOT a bare limit(): see
-        // UmapReducer — arrival-order truncation made the fit sample (and
-        // so labels and names) vary across runs of the identical corpus.
-        val total = nonNull.count()
-        val keepBp = math.max(1L, maxFitRows.toLong * Sampling.NumBuckets / total)
-        val sampled = nonNull.where(Sampling.bucket(col("__id")) < keepBp)
-          .orderBy(Sampling.bucket(col("__id")), col("__id"))
-          .limit(maxFitRows).collect().sortBy(_.getLong(0))
-        val pts    = sampled.map(_.getSeq[Double](1).toArray)
-        val labels = Hdbscan.fit(pts, minClusterSize, minSamples)
-        val fitted = pts.zip(labels)
-        val bc     = spark.sparkContext.broadcast(fitted)
-        nonNull.as[(Long, Seq[Double])].map { case (id, v) =>
-          val arr = v.toArray
-          var best = -1; var bestD = Double.MaxValue
-          var i = 0
-          while (i < bc.value.length) {
-            val q = bc.value(i)._1
-            var d = 0.0; var j = 0
-            while (j < arr.length) { val t = arr(j) - q(j); d += t * t; j += 1 }
-            if (d < bestD) { bestD = d; best = bc.value(i)._2 }
-            i += 1
+      val (input, rows, whole) = cappedRows(df, vecCol, idCol, maxFitRows)
+      if (whole && rows.isEmpty) return df.select(col(idCol), lit(-1).as("label")).where(lit(false))
+      val pts    = rows.map(_.getSeq[Double](1).toArray)
+      val labels = Hdbscan.fit(pts, minClusterSize, minSamples)
+      val labeled =
+        if (whole) rows.map(_.getLong(0)).zip(labels).toSeq.toDS()
+        else {
+          // over the cap: every row takes the label of its nearest fitted point
+          val bc = spark.sparkContext.broadcast((pts, labels))
+          input.as[(Long, Seq[Double])].map { case (id, v) =>
+            val (fitted, fittedLabels) = bc.value
+            val (i, d) = nearestCentroid(v.toArray, fitted)
+            (id, if (d == Double.MaxValue) -1 else fittedLabels(i))
           }
-          (id, best)
-        }.toDF("__id", "label")
-          .select(col("__id").as(idCol), col("label"))
-      }
+        }
+      labeled.toDF("__id", "label").select(col("__id").as(idCol), col("label"))
     }
   }
 
+  /** Default KMeans-family clusterer (declared HDBSCAN deviation): k fixed,
+    * rows farther than `noiseQuantile` of the distance distribution from
+    * their centroid are marked −1 (noise), echoing HDBSCAN's outlier
+    * semantics without its density model.
+    *
+    * Two fit paths, same contract:
+    *  - corpora within the driver-fit BYTE budget (rows × dim × 8 ≤
+    *    `maxDriverFitBytes`, so a 768-d corpus collects 12× fewer rows than
+    *    a 64-d one — the budget is what actually bounds driver heap) fit
+    *    with seeded Lloyd's iterations on the driver — the reference's own
+    *    in-proc shape (SURVEY §2.6 option (c)); at 2k points MLlib's ~25
+    *    driver-roundtrip jobs cost ~8 s of pure scheduling, the local fit
+    *    microseconds;
+    *  - larger corpora fit distributed via MLlib KMeans, with assignment +
+    *    noise-marking as broadcast-centroid expressions (no collect).
+    */
   final class KMeansClusterer(
       k: Int,
       seed: Long = 42L,
@@ -499,10 +486,11 @@ object Ml {
 
     override def cluster(df: DataFrame, vecCol: String, idCol: String): DataFrame = {
       val spark = df.sparkSession
+      val input = fitRows(df, vecCol, Some(idCol))
       // One bounded collect decides the fit path AND provides the data: if
       // limit(budget+1) comes back within budget, that IS the whole corpus
       // (no separate count job; the fit is collect-order-independent).
-      val sampled = Ml.driverRows(df, vecCol, maxDriverFitBytes, Seq(col(idCol).cast("long")))._2
+      val sampled = driverRows(input, vecCol, maxDriverFitBytes, Seq(col(idCol).cast("long")))._2
       if (sampled.exists(_.isEmpty)) return df.select(col(idCol), lit(-1).as("label")).where(lit(false))
       if (sampled.isDefined) {
         // Driver fit, driver assignment (the corpus is already small).
@@ -520,7 +508,7 @@ object Ml {
         assigned.toSeq.toDF("__id", "__c", "__d")
           .select(col("__id").as(idCol), when(col("__d") > cut, -1).otherwise(col("__c")).as("label"))
       } else {
-        val withVec = df.withColumn("__v", array_to_vector(col(vecCol).cast("array<double>")))
+        val withVec = input.withColumn("__v", array_to_vector(col(vecCol).cast("array<double>")))
         val model = new KMeans().setK(k).setSeed(seed).setFeaturesCol("__v").setPredictionCol("__label")
           .setDistanceMeasure("euclidean").fit(withVec)
         val assigned = model.transform(withVec)

@@ -79,7 +79,11 @@ object Pq {
   /** Fit m×ksub codebooks on a bounded driver sample. `dim % m == 0`
     * required — ragged subspaces silently skew the distance metric toward
     * the wider ones. Vectors are L2-normalized before slicing (cosine
-    * geometry); ksub caps at the sample size per [[Ml.lloydFit]].
+    * geometry); ksub caps at the sample size per [[Ml.lloydFit]]. Rows
+    * with a null vector take no part ([[Ml.fitRows]]). Over the byte
+    * budget the sample is an [[Ml.hashSample]] of about the budget's worth
+    * of vectors, bucketed on a seeded hash of the vector: the same rows, so
+    * the same codebooks, whatever the frame's partitioning.
     */
   def fit(
       df: DataFrame,
@@ -95,13 +99,8 @@ object Pq {
       // 256-per-list training budget — PQ codebooks are determined by a
       // small sample just as well
       val budgetRows = math.max(1L, maxDriverFitBytes / math.max(1, dim * 8L))
-      val total      = df.count()
-      val fraction   = math.min(1.0, budgetRows.toDouble / math.max(1L, total))
-      df.select(col(vecCol).cast("array<double>").as("__v"))
-        .where(col("__v").isNotNull)
-        .sample(withReplacement = false, fraction, seed)
-        .limit(budgetRows.toInt)
-        .collect()
+      val vecs       = Ml.fitRows(df, vecCol).select(col(vecCol).cast("array<double>").as("__v"))
+      Ml.hashSample(vecs, pmod(xxhash64(lit(seed), col("__v")), lit(Sampling.NumBuckets)), col("__v"), budgetRows.toInt)
         .map(_.getSeq[Double](0).toArray)
     }
     require(pts.nonEmpty, "Pq.fit needs a non-empty corpus")

@@ -1,8 +1,14 @@
 package graft
 
-import graft.operators.{Embedder, Ivf, Ml}
+import graft.operators.{Embedder, Ivf, Ml, Pq}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The distributed (MLlib) fit branches are the ones that actually run at
   * 100 TB, but every test corpus fits the default 64 MB driver budget and
@@ -15,6 +21,20 @@ class DistributedFitSpec extends AnyFunSuite {
 
   private lazy val df =
     (0L until 60L).map(i => (i, Embedder.default.embed(s"point $i group ${i % 3}"))).toDF("id", "vec")
+
+  /** Spark jobs `body` ran (the listener bus is async: let every job surface). */
+  private def jobs[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      Thread.sleep(500)
+      (out, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 
   test("KMeansClusterer over budget falls back to MLlib with the same label contract") {
     val labels = new Ml.KMeansClusterer(3, maxDriverFitBytes = 1L).cluster(df, "vec", "id")
@@ -43,19 +63,21 @@ class DistributedFitSpec extends AnyFunSuite {
   test("fit-path crossover is dim-aware: same rows + same byte budget, 768-d flips to MLlib") {
     // 600 rows under a 1 MB budget: 64-d = 307 KB (driver fit), 768-d =
     // 3.7 MB (distributed fit). The budget bounds BYTES, not rows — the
-    // 768-d corpus must flip ~12x earlier. Path observed from the plan:
-    // the driver path assigns from a collected LocalRelation; the MLlib
-    // path projects the model's __pca / __label columns.
+    // 768-d corpus must flip ~12x earlier. PCA's path is observed from the
+    // jobs the fit runs: the driver fit is the sampler's two collects, the
+    // MLlib fit adds its own. KMeans' path is observed from the plan: the
+    // driver path assigns from a collected LocalRelation; the MLlib path
+    // projects the model's __label column. The rows sit in one RDD
+    // partition: a collect over a local relation runs no job at all, and
+    // over one partition a bounded collect is exactly one.
     val budget = 1L << 20
-    def vecDf(dim: Int) = (0L until 600L)
-      .map(i => (i, Array.tabulate(dim)(j => math.sin(i * dim + j))))
+    def vecDf(dim: Int) = spark.sparkContext.parallelize((0L until 600L)
+      .map(i => (i, Array.tabulate(dim)(j => math.sin(i * dim + j)))), 1)
       .toDF("id", "vec")
-    val p64 = Ml.pca3d(vecDf(64), "vec", "id", maxDriverFitBytes = budget)
-      .queryExecution.analyzed.toString
-    assert(!p64.contains("__pca"), "64-d within budget must take the driver eigSym fit")
-    val p768 = Ml.pca3d(vecDf(768), "vec", "id", maxDriverFitBytes = budget)
-      .queryExecution.analyzed.toString
-    assert(p768.contains("__pca"), "768-d over budget must take the MLlib fit")
+    val j64 = jobs(Ml.pca3d(vecDf(64), "vec", "id", maxDriverFitBytes = budget))._2
+    assert(j64 == 2, s"64-d within budget must take the driver eigSym fit: $j64 jobs")
+    val j768 = jobs(Ml.pca3d(vecDf(768), "vec", "id", maxDriverFitBytes = budget))._2
+    assert(j768 > 2, s"768-d over budget must take the MLlib fit: $j768 jobs")
 
     // the MLlib branch scores distance-to-centroid as a __dist column; the
     // driver branch ships finished (id, label) rows and has no such column
@@ -66,6 +88,93 @@ class DistributedFitSpec extends AnyFunSuite {
       .cluster(vecDf(768), "vec", "id").queryExecution.analyzed.toString
     assert(k768.contains("__dist") && k768.contains("__label"),
       "768-d over budget must assign via the MLlib model")
+  }
+
+  test("a null id or a null vector takes part in no fit, on every fit path") {
+    // one rule for every fit: a clusterer returns the other 59 rows labelled,
+    // and PCA projects a null vector to null coordinates, within the driver
+    // budget and over it
+    val nullId  = df.withColumn("id", when(col("id") =!= 7L, col("id")))
+    val nullVec = df.withColumn("vec", when(col("id") =!= 7L, col("vec")))
+    val others  = (0L until 60L).filter(_ != 7L).toSet
+    def labelled(out: DataFrame, what: String): Unit = {
+      val rows = out.collect()
+      assert(rows.length == 59 && rows.map(_.getLong(0)).toSet == others, what)
+      assert(rows.forall(r => !r.isNullAt(1)), what)
+    }
+    for (in <- Seq(nullId, nullVec); name = if (in eq nullId) "null id" else "null vector") {
+      for (budget <- Seq(64L << 20, 1L))
+        labelled(new Ml.KMeansClusterer(3, maxDriverFitBytes = budget).cluster(in, "vec", "id"),
+          s"KMeans, $name, budget $budget")
+      for (cap <- Seq(4096, 20)) {
+        labelled(new Ml.HdbscanClusterer(3, 3, maxFitRows = cap).cluster(in, "vec", "id"), s"HDBSCAN, $name, cap $cap")
+        labelled(new Ml.UmapReducer(maxFitRows = cap).project(in, "vec", "id"), s"UMAP, $name, cap $cap")
+      }
+    }
+    for (budget <- Seq(64L << 20, 1L)) {
+      def coords(out: DataFrame) = out.collect().map(r => r.getLong(0) -> (1 to 3).map(r.get)).toMap
+      val all = coords(Ml.pca3d(nullVec, "vec", "id", maxDriverFitBytes = budget))
+      val sub = coords(Ml.pcaProject(nullVec, nullVec.where(col("id") < 10), "vec", "id", maxDriverFitBytes = budget))
+      assert(all.keySet == (0L until 60L).toSet && sub.keySet == (0L until 10L).toSet, s"budget $budget")
+      for (out <- Seq(all, sub)) {
+        assert(out(7L).forall(_ == null), s"budget $budget: ${out(7L)}")
+        assert((out - 7L).values.forall(_.forall(_ != null)), s"budget $budget")
+      }
+    }
+  }
+
+  test("Pq.fit over budget samples by content: the same codebooks from any partitioning") {
+    val frame  = (0L until 400L).map(i => (i, Array.tabulate(16)(j => math.sin(i * 16 + j)))).toDF("id", "vec")
+    val budget = 100L * 16 * 8 // 100 of the 400 rows
+    val a = Pq.fit(frame, "vec", m = 4, ksub = 8, maxDriverFitBytes = budget)
+    val b = Pq.fit(frame.repartition(7), "vec", m = 4, ksub = 8, maxDriverFitBytes = budget)
+    assert(a.flat.toSeq == b.flat.toSeq, "the fit sample depends on the partitioning")
+  }
+
+  test("Pq.fit over budget ships about one budget of rows to the driver, however small the partitions") {
+    // 2 000 rows in 250 partitions of 8, a 100-row budget. The sample's
+    // ordered limit collects each partition's top rows, so with partitions
+    // smaller than the budget every row that passes the hash filter before
+    // it reaches the driver: the filter's output is what is shipped.
+    val frame = spark.sparkContext.parallelize((0L until 2000L)
+      .map(i => (i, Array.tabulate(16)(j => math.sin(i * 16 + j)))), 250).toDF("id", "vec")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { Pq.fit(frame, "vec", m = 4, ksub = 8, maxDriverFitBytes = 100L * 16 * 8); Thread.sleep(500) }
+    finally spark.listenerManager.unregister(l)
+    val shipped = plans.asScala.toSeq.flatMap(_.collect { case t: TakeOrderedAndProjectExec =>
+      t.collect { case f: FilterExec => f.metrics("numOutputRows").value }.sum
+    })
+    assert(shipped.length == 1, s"one ordered-limit sample: $shipped")
+    assert(shipped.head > 0 && shipped.head <= 200, s"${shipped.head} of 2 000 rows shipped for a 100-row budget")
+  }
+
+  test("operators/Ml.scala runs collect() and count() only inside its samplers") {
+    def read(file: String) = new String(Files.readAllBytes(Paths.get(s"src/main/scala/graft/operators/$file")), "UTF-8")
+    // the span of `def name`'s body in src, from its "= {" to the matching brace
+    def body(src: String, name: String): Range = {
+      val at = src.indexOf(s"def $name(")
+      assert(at >= 0, s"no def $name")
+      val open = src.indexOf("= {", at) + 2
+      var depth = 0; var i = open
+      while ({ if (src(i) == '{') depth += 1 else if (src(i) == '}') depth -= 1; i += 1; depth > 0 }) ()
+      open until i
+    }
+    def calls(src: String) = Seq(".collect()", ".count()").flatMap { m =>
+      Iterator.iterate(src.indexOf(m))(i => src.indexOf(m, i + 1)).takeWhile(_ >= 0)
+    }
+    val ml       = read("Ml.scala")
+    val samplers = Seq("driverRows", "cappedRows", "hashSample").map(body(ml, _))
+    val outside  = calls(ml).filterNot(i => samplers.exists(_.contains(i))).map(i => ml.take(i).count(_ == '\n') + 1)
+    assert(calls(ml).nonEmpty && outside.isEmpty, s"Ml.scala lines reading rows outside the samplers: ${outside.mkString(", ")}")
+    // Pq.fit samples through Ml's samplers too, with no read of its own
+    val pq = read("Pq.scala")
+    val fit = body(pq, "fit")
+    assert(!calls(pq).exists(fit.contains), "Pq.fit reads rows outside Ml's samplers")
   }
 
   test("Ivf.assign over budget fits via MLlib KMeans and lists every row") {
